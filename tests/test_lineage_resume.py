@@ -2,10 +2,13 @@
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
-from work_order_pdf_extractor_spark.plans import lineage
+import pytest
+
+from work_order_pdf_extractor_spark.plans import ingest, lineage
 
 
 def _run(spark, transcripts_df, ref_orders_df, out_dir, **kw):
@@ -22,9 +25,18 @@ def test_full_run_then_noop_rerun(spark, transcripts_df, ref_orders_df, golden_p
     df1 = lineage.read_output(spark, str(out)).toPandas()
     assert len(df1) == len(golden_pd)
 
-    s2 = _run(spark, transcripts_df, ref_orders_df, out, run_id="r2")
+    # a fully committed rerun (and the done-set listing) launches no Spark job
+    sc = spark.sparkContext
+    sc.setJobGroup("noop-rerun", "fully committed rerun")
+    try:
+        assert lineage.completed_buckets(spark, str(out)) == set(range(8))
+        s2 = _run(spark, transcripts_df, ref_orders_df, out, run_id="r2")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("noop-rerun")) == []
     assert s2["buckets_done"] == 0, "rerun reprocessed committed buckets"
     assert s2["buckets_skipped"] == s1["buckets_done"]
+    assert s2["metrics"] == dict.fromkeys(s1["metrics"], 0)
 
     df2 = lineage.read_output(spark, str(out)).toPandas()
     a = df1.sort_values(["conv_id", "turn_idx"], ignore_index=True)
@@ -57,17 +69,79 @@ def test_crash_between_rename_and_lineage_repairs(spark, transcripts_df, ref_ord
     # bucket dir exists but its lineage row vanished (the crash window)
     victim = sorted(os.listdir(os.path.join(out, "data")))[0]
     b = int(victim.split("=")[1])
-    for f in os.listdir(os.path.join(out, "_lineage")):
-        if f.startswith(f"bucket-{b:05d}"):
-            os.remove(os.path.join(out, "_lineage", f))
+    lost = os.path.join(out, "_lineage", f"bucket-{b:05d}-r1.json")
+    with open(lost) as f:
+        first = json.load(f)
+    os.remove(lost)
 
     s2 = _run(spark, transcripts_df, ref_orders_df, out, run_id="r2")
     assert s2["buckets_done"] == 0, "visible bucket was reprocessed"
+    # the repair recorded the row the first run lost, from the committed data
+    with open(os.path.join(out, "_lineage", f"bucket-{b:05d}-r2.json")) as f:
+        assert json.load(f) == {**first, "run_id": "r2"}
+    assert len(os.listdir(os.path.join(out, "_lineage"))) == len(
+        os.listdir(os.path.join(out, "data"))
+    )
 
 
 def test_lineage_rows_have_failure_counts(spark, transcripts_df, ref_orders_df, golden_pd, tmp_path):
     out = tmp_path / "ckpt4"
-    _run(spark, transcripts_df, ref_orders_df, out, run_id="r1")
+    s = _run(spark, transcripts_df, ref_orders_df, out, run_id="r1")
     lin = lineage.read_lineage(spark, str(out)).toPandas()
     assert int(lin.rows_out.sum()) == len(golden_pd)
     assert int(lin.n_failed.sum()) == int((golden_pd.status != "ok").sum())
+    # the run's own counters, from observe() on the write job
+    assert s["metrics"] == {
+        "files_processed": len(golden_pd),
+        "successful": int((golden_pd.status == "ok").sum()),
+        "failed": int((golden_pd.status != "ok").sum()),
+        "matched": int(golden_pd.matched.sum()),
+        "not_matched": int((~golden_pd.matched).sum()),
+    }
+    assert int(lin.n_failed.sum()) == s["metrics"]["failed"]
+
+
+def _ingest_run(spark, out_dir, run_id):
+    docs = spark.createDataFrame(
+        [(i, f"doc {i} alpha bravo charlie delta {i % 7}") for i in range(40)],
+        "doc_id long, text string",
+    )
+    return ingest.ingest_with_checkpoint(
+        spark, docs.filter("doc_id < 20"), docs, str(out_dir), n_buckets=8,
+        run_id=run_id,
+    )
+
+
+@pytest.mark.parametrize("job", ["extract", "ingest"])
+def test_lineage_leftovers_never_break_resume(
+    spark, transcripts_df, ref_orders_df, tmp_path, job
+):
+    """Only lineage FILE NAMES written by the commit protocol and data dirs
+    mark a bucket done: a crashed append's ``.tmp``, a stray file and an
+    empty lineage file must not make resume raise or miscount."""
+    out = tmp_path / "ckpt5"
+
+    def run(run_id):
+        if job == "ingest":
+            return _ingest_run(spark, out, run_id)
+        return _run(spark, transcripts_df, ref_orders_df, out, run_id=run_id)
+
+    run("r1")
+    ld, dd = os.path.join(out, "_lineage"), os.path.join(out, "data")
+    for b in (3, 5):  # lose both buckets, data and lineage
+        shutil.rmtree(os.path.join(dd, f"bucket={b}"), ignore_errors=True)
+        for f in os.listdir(ld):
+            if f.startswith(f"bucket-{b:05d}-"):
+                os.remove(os.path.join(ld, f))
+    with open(os.path.join(ld, "bucket-00003-x.json.tmp"), "w") as f:
+        f.write('{"bucket": 3')
+    with open(os.path.join(ld, "notes.json"), "w") as f:
+        f.write('{"note": "not a lineage row"}\n')
+    open(os.path.join(ld, "bucket-00005-x.json"), "w").close()
+
+    done = {int(n.split("=")[1]) for n in os.listdir(dd)} | {5}
+    assert lineage.completed_buckets(spark, str(out)) == done
+    s2 = run("r2")
+    assert s2["buckets_skipped"] == len(done) and s2["buckets_done"] == 1
+    assert os.path.isdir(os.path.join(dd, "bucket=3"))
+    assert not os.path.exists(os.path.join(dd, "bucket=5"))

@@ -25,15 +25,12 @@ Plan shape at scale:
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup
 from ..operators.membership import K_DEFAULT, M_BITS_DEFAULT, bloom_build, bloom_probe
+from .lineage import run_bucketed
 
 
 def incremental_ingest(
@@ -173,98 +170,31 @@ def ingest_with_checkpoint(
     run_id: str | None = None,
     **ingest_kwargs,
 ) -> dict:
-    """Crash-resumable ingest commit, reusing the lineage layout of
-    ``plans.lineage``: batch docs hash into ``n_buckets`` stable buckets;
-    one job dispositions every not-yet-committed bucket; each bucket
-    directory is atomically renamed into the final layout, then its
-    lineage row is appended (rename BEFORE lineage, so a crash between
-    the two leaves a visible bucket that resume treats as done). A fully
+    """Crash-resumable ingest commit through the bucket-commit protocol of
+    ``plans.lineage`` (:func:`~.lineage.run_bucketed`): batch docs hash into
+    ``n_buckets`` stable buckets; one job dispositions every
+    not-yet-committed bucket; each bucket directory is atomically renamed
+    into the final layout, then its lineage row is appended. A fully
     committed output makes rerun a no-op — the batch is never
     re-dispositioned (the scale-grade version of the reference's
     destructive-rename skip)."""
-    run_id = run_id or uuid.uuid4().hex[:12]
-    os.makedirs(out_dir, exist_ok=True)
-    from . import lineage as L
-
-    done = L.completed_buckets(spark, out_dir)
-    bcol = F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(n_buckets)).cast(
-        "int"
-    )
-    withb = batch.withColumn("bucket", bcol)
-    todo = withb
-    if done:
-        done_df = spark.createDataFrame(
-            [(int(b),) for b in sorted(done)], "bucket int"
-        )
-        todo = withb.join(F.broadcast(done_df), "bucket", "left_anti")
-
     persisted: list = []
-    result = incremental_ingest(
-        corpus, todo.drop("bucket"), id_col=id_col,
-        persisted_out=persisted, **ingest_kwargs
-    ).withColumn("bucket", bcol)
-
-    tmp_dir = os.path.join(out_dir, f"_tmp-{run_id}")
-    result.write.mode("overwrite").partitionBy("bucket").parquet(tmp_dir)
-    for df in persisted:
-        df.unpersist()
-
-    wrote_any = os.path.isdir(tmp_dir) and any(
-        nm.startswith("bucket=") for nm in os.listdir(tmp_dir)
-    )
-    stats = (
-        []
-        if not wrote_any
-        else (
-            spark.read.parquet(tmp_dir)
-            .groupBy("bucket")
-            .agg(
-                F.count(F.lit(1)).alias("rows_out"),
-                F.sum(
-                    F.when(F.col("disposition") == "new", 0).otherwise(1)
-                ).alias("n_dups"),
-            )
-            .collect()
+    try:
+        return run_bucketed(
+            spark,
+            batch,
+            F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(n_buckets)).cast("int"),
+            out_dir,
+            n_buckets,
+            run_id,
+            lambda todo: incremental_ingest(
+                corpus, todo, id_col=id_col, persisted_out=persisted, **ingest_kwargs
+            ),
+            # one disposition row per batch document, so the output count is
+            # the true input count. Duplicates are a disposition, not a
+            # failure: they get their own field, and n_failed stays an honest 0.
+            {"n_dups": F.sum(F.when(F.col("disposition") == "new", 0).otherwise(1))},
         )
-    )
-    stats_by_bucket = {int(r["bucket"]): r for r in stats}
-
-    dd = os.path.join(out_dir, "data")
-    os.makedirs(dd, exist_ok=True)
-    done_now = 0
-    if wrote_any:
-        for name in sorted(os.listdir(tmp_dir)):
-            if not name.startswith("bucket="):
-                continue
-            b = int(name.split("=", 1)[1])
-            final = os.path.join(dd, name)
-            if os.path.exists(final):
-                continue
-            os.replace(os.path.join(tmp_dir, name), final)
-            s = stats_by_bucket.get(b)
-            # rows_in == rows_out holds BY CONSTRUCTION here (ingest emits
-            # exactly one disposition row per batch document, no filter or
-            # fan-out in between), so the output count is the true input
-            # count. Duplicates are a disposition, not a failure — they get
-            # their own field; deterministic parsing can't fail, n_failed
-            # stays an honest 0.
-            L._append_lineage_row(
-                out_dir,
-                {
-                    "bucket": b,
-                    "rows_in": int(s["rows_out"]) if s else 0,
-                    "rows_out": int(s["rows_out"]) if s else 0,
-                    "n_failed": 0,
-                    "n_dups": int(s["n_dups"]) if s else 0,
-                    "input_fingerprint": 0,
-                    "run_id": run_id,
-                },
-            )
-            done_now += 1
-    shutil.rmtree(tmp_dir, ignore_errors=True)
-    return {
-        "run_id": run_id,
-        "buckets_total": len(L.completed_buckets(spark, out_dir)),
-        "buckets_skipped": len(done),
-        "buckets_done": done_now,
-    }
+    finally:
+        for df in persisted:
+            df.unpersist()

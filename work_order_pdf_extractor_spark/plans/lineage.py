@@ -10,31 +10,45 @@ Here the same guarantee is data-engineering-grade:
   parquet-directory fallback (SURVEY §4, §7 risk 4);
 - one Spark job processes ALL incomplete buckets (no per-bucket job loop —
   at 1000 executors a bucket-at-a-time driver loop would serialize the
-  cluster), writing ``partitionBy("bucket")`` into a temp dir;
-- each bucket directory is then atomically renamed into the final layout
-  and a lineage row ``(bucket, rows_in, rows_out, n_failed,
-  input_fingerprint, run_id)`` is appended — rename BEFORE lineage, so a
-  crash between the two leaves a visible-but-unrecorded bucket that resume
-  repairs WITHOUT reprocessing;
-- resume = anti-join of buckets against the lineage table: completed
-  buckets are never re-read (their input rows are filtered out before the
-  expensive UDF runs).
+  cluster), writing ``partitionBy("bucket")`` into ``_tmp-<run_id>``;
+- each bucket directory is then atomically renamed to ``data/bucket=N``
+  and its lineage row ``(bucket, rows_in, rows_out, n_failed,
+  input_fingerprint, run_id)`` is written to
+  ``_lineage/bucket-%05d-<run_id>.json`` — rename BEFORE lineage;
+- the commit record is the set of FILE NAMES: a bucket is done when it has
+  a lineage file or a ``data/bucket=N`` directory, so resume is two
+  directory listings and never a Spark job. Not-done buckets are dropped
+  by an ``isin`` filter on the bucket expression before the expensive UDF
+  runs;
+- a crash between rename and lineage append leaves a visible-but-unrecorded
+  bucket. Resume repairs it WITHOUT reprocessing: it recomputes that
+  bucket's lineage row from the committed parquet (the only case that
+  reads committed data) and appends it.
+
+:func:`run_bucketed` is the protocol itself, shared with
+``plans.ingest.ingest_with_checkpoint``.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import uuid
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..core.pdfparse import DEFAULT_CROP
 from .pipeline import run_pipeline
 
 DEFAULT_N_BUCKETS = 64
+
+# ``_append_lineage_row``'s file name; ``.tmp`` leftovers and strays never match
+_LINEAGE_NAME = re.compile(r"bucket-(\d+)-.+\.json")
+_COUNTERS = ("files_processed", "successful", "failed", "matched", "not_matched")
 
 
 def bucket_col(n_buckets: int) -> F.Column:
@@ -49,30 +63,32 @@ def _data_dir(out_dir: str) -> str:
     return os.path.join(out_dir, "data")
 
 
+def _listdir(path: str) -> list[str]:
+    return os.listdir(path) if os.path.isdir(path) else []
+
+
+def _bucket_dirs(path: str) -> set[int]:
+    """Bucket ids of the ``bucket=N`` partition directories under ``path``."""
+    return {
+        int(n.split("=", 1)[1]) for n in _listdir(path) if n.startswith("bucket=")
+    }
+
+
+def _lineage_buckets(out_dir: str) -> set[int]:
+    names = (_LINEAGE_NAME.fullmatch(n) for n in _listdir(_lineage_dir(out_dir)))
+    return {int(m.group(1)) for m in names if m}
+
+
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    ld = _lineage_dir(out_dir)
-    if not os.path.isdir(ld) or not any(
-        f.endswith(".json") for f in os.listdir(ld)
-    ):
+    if not _lineage_buckets(out_dir):
         return None
-    return spark.read.json(os.path.join(ld, "*.json"))
+    return spark.read.json(os.path.join(_lineage_dir(out_dir), "bucket-*.json"))
 
 
 def completed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
-    lin = read_lineage(spark, out_dir)
-    recorded = (
-        {int(r["bucket"]) for r in lin.select("bucket").distinct().collect()}
-        if lin is not None
-        else set()
-    )
-    # repair pass: bucket dirs that were renamed into place but whose
-    # lineage append was lost in a crash count as complete too
-    dd = _data_dir(out_dir)
-    if os.path.isdir(dd):
-        for name in os.listdir(dd):
-            if name.startswith("bucket="):
-                recorded.add(int(name.split("=", 1)[1]))
-    return recorded
+    """Buckets with a lineage file or a committed data directory (listings
+    only, no Spark job; ``spark`` is kept for callers)."""
+    return _lineage_buckets(out_dir) | _bucket_dirs(_data_dir(out_dir))
 
 
 def _append_lineage_row(out_dir: str, row: dict) -> None:
@@ -83,6 +99,91 @@ def _append_lineage_row(out_dir: str, row: dict) -> None:
     with open(tmp, "w") as f:
         f.write(json.dumps(row) + "\n")
     os.replace(tmp, path)  # atomic on POSIX
+
+
+def _lineage_rows(
+    run_id: str, rows: DataFrame, buckets: list[int], aggs: dict
+) -> dict[int, dict]:
+    """One lineage row per bucket, its counts aggregated from ``rows`` (the
+    bucket's written output): ``rows_out`` plus ``aggs`` (field name →
+    aggregate column). Every output row is one input row, so ``rows_in``
+    is ``rows_out``; fields ``aggs`` leaves out are 0."""
+    stats = {
+        int(r["bucket"]): r.asDict()
+        for r in rows.groupBy("bucket")
+        .agg(
+            F.count(F.lit(1)).alias("rows_out"),
+            *[c.alias(k) for k, c in aggs.items()],
+        )
+        .collect()
+    }
+    out = {}
+    for b in buckets:
+        s = {k: int(v or 0) for k, v in stats.get(b, {}).items()}
+        n = s.get("rows_out", 0)
+        out[b] = {"bucket": b, "rows_in": n, "rows_out": n, "n_failed": 0,
+                  "input_fingerprint": 0, **s, "run_id": run_id}
+    return out
+
+
+def run_bucketed(
+    spark: SparkSession,
+    rows: DataFrame,
+    bucket: F.Column,
+    out_dir: str,
+    n_buckets: int,
+    run_id: str | None,
+    plan: Callable[[DataFrame], DataFrame],
+    aggs: dict,
+) -> dict:
+    """Bucket-commit protocol: repair unrecorded buckets, then write
+    ``plan(rows of not-done buckets)`` to ``_tmp-<run_id>`` partitioned by
+    ``bucket``, read back per-bucket stats, rename each bucket directory
+    into ``data/`` and append its lineage row. ``plan`` is not called when
+    every bucket is already committed, so that rerun runs no Spark job."""
+    run_id = run_id or uuid.uuid4().hex[:12]
+    os.makedirs(out_dir, exist_ok=True)
+    dd = _data_dir(out_dir)
+
+    # repair: record lineage for dirs present without rows (crash window)
+    unrecorded = sorted(_bucket_dirs(dd) - _lineage_buckets(out_dir))
+    if unrecorded:
+        committed = spark.read.option("basePath", dd).parquet(
+            *[os.path.join(dd, f"bucket={b}") for b in unrecorded]
+        )
+        for row in _lineage_rows(run_id, committed, unrecorded, aggs).values():
+            _append_lineage_row(out_dir, row)
+
+    done = completed_buckets(spark, out_dir)
+    done_now = 0
+    if not done.issuperset(range(n_buckets)):
+        # bucket ids are never NULL, so the negated isin (an InSet) equals
+        # the anti-join against the done set
+        todo = rows.where(~bucket.isin(sorted(done))) if done else rows
+        result = plan(todo).withColumn("bucket", bucket)
+        tmp_dir = os.path.join(out_dir, f"_tmp-{run_id}")
+        result.write.mode("overwrite").partitionBy("bucket").parquet(tmp_dir)
+        written = sorted(_bucket_dirs(tmp_dir))
+        if written:
+            # the schema is known, so the read-back infers nothing from footers
+            stats = spark.read.schema(result.schema).parquet(tmp_dir)
+            lineage_rows = _lineage_rows(run_id, stats, written, aggs)
+            os.makedirs(dd, exist_ok=True)
+            for b, row in lineage_rows.items():
+                final = os.path.join(dd, f"bucket={b}")
+                if os.path.exists(final):  # already committed by a racing/prior run
+                    continue
+                os.replace(os.path.join(tmp_dir, f"bucket={b}"), final)  # atomic rename first
+                _append_lineage_row(out_dir, row)
+                done_now += 1
+        shutil.rmtree(tmp_dir, ignore_errors=True)
+
+    return {
+        "run_id": run_id,
+        "buckets_total": len(completed_buckets(spark, out_dir)),
+        "buckets_skipped": len(done),
+        "buckets_done": done_now,
+    }
 
 
 def run_with_checkpoint(
@@ -96,84 +197,34 @@ def run_with_checkpoint(
 ) -> dict:
     """Process all not-yet-committed buckets; returns a summary dict
     ``{"run_id", "buckets_total", "buckets_skipped", "buckets_done",
-    "rows_out"}``. Safe to re-invoke after any crash; a fully committed
+    "metrics"}``, ``metrics`` being this run's counters
+    (``files_processed``, ``successful``, ``failed``, ``matched``,
+    ``not_matched``). Safe to re-invoke after any crash; a fully committed
     output is a no-op rerun (idempotency property test in the suite)."""
-    run_id = run_id or uuid.uuid4().hex[:12]
-    os.makedirs(out_dir, exist_ok=True)
-    done = completed_buckets(spark, out_dir)
+    obs: list[Observation] = []  # set only when the plan is built and run
 
-    withb = transcripts.withColumn("bucket", bucket_col(n_buckets))
-    todo = withb
-    if done:
-        # lineage anti-join (tiny build side: bucket ids)
-        done_df = spark.createDataFrame(
-            [(int(b),) for b in sorted(done)], "bucket int"
+    def plan(todo: DataFrame) -> DataFrame:
+        obs.append(Observation())
+        # one job for every remaining bucket; salting happens inside run_pipeline
+        return run_pipeline(
+            todo, reference_orders, crop=crop, salt=True, observation=obs[0]
+        ).withColumn(
+            # order-insensitive per-bucket input fingerprint (input-snapshot id)
+            "row_fp", F.xxhash64("conv_id", "turn_idx")
         )
-        todo = withb.join(F.broadcast(done_df), "bucket", "left_anti")
 
-    # one job for every remaining bucket; salting happens inside run_pipeline
-    result = run_pipeline(
-        todo, reference_orders, crop=crop, salt=True
-    ).withColumn("bucket", bucket_col(n_buckets)).withColumn(
-        # order-insensitive per-bucket input fingerprint (input-snapshot id)
-        "row_fp", F.xxhash64("conv_id", "turn_idx")
+    summary = run_bucketed(
+        spark, transcripts, bucket_col(n_buckets), out_dir, n_buckets, run_id,
+        plan,
+        {
+            "n_failed": F.sum(F.when(F.col("status") != "ok", 1).otherwise(0)),
+            "input_fingerprint": F.expr("bit_xor(row_fp)"),
+        },
     )
-
-    tmp_dir = os.path.join(out_dir, f"_tmp-{run_id}")
-    (
-        result.write.mode("overwrite").partitionBy("bucket").parquet(tmp_dir)
-    )
-
-    wrote_any = os.path.isdir(tmp_dir) and any(
-        n.startswith("bucket=") for n in os.listdir(tmp_dir)
-    )
-    # per-bucket stats for lineage (cheap scan of the just-written parquet)
-    stats = [] if not wrote_any else (
-        spark.read.parquet(tmp_dir)
-        .groupBy("bucket")
-        .agg(
-            F.count("*").alias("rows_out"),
-            F.sum(F.when(F.col("status") != "ok", 1).otherwise(0)).alias("n_failed"),
-            F.expr("bit_xor(row_fp)").alias("input_fingerprint"),
-        )
-        .collect()
-    )
-    stats_by_bucket = {int(r["bucket"]): r for r in stats}
-
-    dd = _data_dir(out_dir)
-    os.makedirs(dd, exist_ok=True)
-    done_now = 0
-    for name in sorted(os.listdir(tmp_dir)):
-        if not name.startswith("bucket="):
-            continue
-        b = int(name.split("=", 1)[1])
-        final = os.path.join(dd, name)
-        if os.path.exists(final):  # already committed by a racing/prior run
-            continue
-        os.replace(os.path.join(tmp_dir, name), final)  # atomic rename first
-        s = stats_by_bucket.get(b)
-        _append_lineage_row(
-            out_dir,
-            {
-                "bucket": b,
-                "rows_in": int(s["rows_out"]) if s else 0,
-                "rows_out": int(s["rows_out"]) if s else 0,
-                "n_failed": int(s["n_failed"]) if s else 0,
-                "input_fingerprint": int(s["input_fingerprint"]) if s else 0,
-                "run_id": run_id,
-            },
-        )
-        done_now += 1
-    shutil.rmtree(tmp_dir, ignore_errors=True)
-
-    # repair: record lineage for dirs present without rows (crash window)
-    lin_after = completed_buckets(spark, out_dir)
-    return {
-        "run_id": run_id,
-        "buckets_total": len(lin_after),
-        "buckets_skipped": len(done),
-        "buckets_done": done_now,
-    }
+    counters = obs[0].get if obs else {}
+    # sums over zero rows are NULL: a run that processed nothing counted 0
+    summary["metrics"] = {k: int(counters.get(k) or 0) for k in _COUNTERS}
+    return summary
 
 
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
