@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry`` runs the flagship extraction pipeline; ``queries``/``oracle_sql``
-expose the SURVEY §2 operator inventory (127 queries, all DuckDB-oracled)
+expose the SURVEY §2 operator inventory (126 queries, all DuckDB-oracled)
 from ``work_order_pdf_extractor_spark.queries.REGISTRY``.
 """
 

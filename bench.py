@@ -46,7 +46,6 @@ HEADLINE = [
     "minhash_lsh_pairs",
     "simhash",
     "cosine_topk",
-    "cosine_topk_fast",
     "ann_lsh_buckets",
     "lsh_topk_banded",
     "ivf_topk",
@@ -291,25 +290,6 @@ def run_default() -> None:
     times[f"ann_lsh_{HD_VECS // 1000}k_{HD_DIM}d"] = round(hd_sec, 3)
 
     total = round(sum(times.values()), 3)
-    # regenerate the attestation manifest as part of every bench run so
-    # it can never lag the round it describes (r4 verdict ask #8); the
-    # counts ride in the JSON tail for one-glance verification
-    attest_tail = {}
-    try:
-        sys.path.insert(0, os.path.join(REPO, "tools"))
-        import attest as _attest
-
-        manifest = _attest.build_manifest()
-        with open(os.path.join(REPO, "ATTESTATION.json"), "w") as f:
-            json.dump(manifest, f, indent=1)
-            f.write("\n")
-        attest_tail = {
-            "n_attested": manifest["n_attested"],
-            "n_pending": len(manifest["pending"]),
-            "pending_outside_window": manifest["pending_outside_window"],
-        }
-    except Exception as e:  # the bench result must survive a git-less env
-        attest_tail = {"attest_error": str(e)[:200]}
     print(
         json.dumps(
             {
@@ -325,7 +305,6 @@ def run_default() -> None:
                 # machine-speed normalizer for round-over-round reads
                 # (this VM drifts 2-4x across minutes; see BENCH/BASELINE.md)
                 "hw_probe": _hw_probe(),
-                **attest_tail,
             }
         )
     )

@@ -39,37 +39,3 @@ def test_page_split_explodes_in_order(spark):
     assert list(three.page_name) == [f"c1_0_page_{i:03d}.pdf" for i in range(1, 4)]
     assert out[out.turn_idx == 1].page_text.iloc[0] == "solo page"
 
-
-def test_udtf_variant_matches_explode(spark):
-    """Differential: the Spark 4 Python UDTF twin must produce the same
-    rows as the default array+posexplode form."""
-    import random
-
-    from work_order_pdf_extractor_spark import fixtures
-    from work_order_pdf_extractor_spark.operators.extract import (
-        split_pdf_pages_udtf,
-    )
-
-    rng = random.Random(3)
-    rows = []
-    for i in range(12):
-        n_pages = rng.randint(1, 3)
-        rows.append(
-            _pdf_turn(
-                "cX", i,
-                [[("text", 40, 700, 10, f"doc{i} pg{p}")] for p in range(n_pages)],
-            )
-        )
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"])
-    )
-    a = (
-        split_pdf_pages(df)
-        .select("conv_id", "turn_idx", "page_no", "page_name", "page_text")
-        .toPandas()
-        .sort_values(["turn_idx", "page_no"], ignore_index=True)
-    )
-    b = split_pdf_pages_udtf(df).toPandas().sort_values(
-        ["turn_idx", "page_no"], ignore_index=True
-    )
-    pd.testing.assert_frame_equal(a, b[a.columns], check_dtype=False)

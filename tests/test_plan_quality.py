@@ -153,28 +153,16 @@ def test_dedup_near_reuses_persisted_shingles(spark):
 def test_ann_search_is_vectorized_grouped(spark):
     """The within-cell/bucket scorers must run as grouped-map Pandas
     stages (one numpy matmul per group) — never a pair-materializing join
-    scored by interpreted higher-order folds. The ONLY nested-loop join
-    allowed in the IVF plan is the deliberate broadcast CROSS join of
-    vectors × the K-row centroid model (assignment is O(rows × K) with no
-    equi-key, so BNLJ-with-tiny-broadcast-build is the correct physical
-    choice); the banded plan must have none at all."""
+    scored by interpreted higher-order folds. IVF assignment against the
+    K-row model is a per-batch matmul (MapInPandas), so neither plan has
+    a nested-loop join."""
     ivf = _plan(Q.q_ivf_topk(spark, SF))
     assert "FlatMapGroupsInPandas" in ivf
-    assert ivf.count("BroadcastNestedLoopJoin") <= 1
-    assert "BroadcastNestedLoopJoin BuildRight, Inner" in ivf or (
-        "BroadcastNestedLoopJoin" not in ivf
-    )
+    assert "MapInPandas" in ivf
+    assert "BroadcastNestedLoopJoin" not in ivf
     banded = _plan(Q.q_lsh_topk_banded(spark, SF))
     assert "FlatMapGroupsInPandas" in banded
     assert "BroadcastNestedLoopJoin" not in banded
-
-
-def test_lsh_topk_join_key_is_salted(spark):
-    """The single-table LSH top-k must join on (bucket, salt): the salt
-    bounds one hot bucket's work to |bucket|^2/S per task."""
-    plan = _plan(Q.q_lsh_topk(spark, SF))
-    assert "_salt" in plan
-    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_temporal_joins_never_nested_loop(spark):
@@ -257,21 +245,22 @@ def test_repeated_spans_plan_is_linear(spark):
 
 
 def test_ivf_nprobe_plan_shapes(spark):
-    """nprobe search: no cartesian product and no sort-merge join
-    anywhere; the two centroid-scoring joins are DELIBERATE broadcast
-    nested-loops against the K-row model (a keyless cross vs 8 rows is
-    the O(rows×K) plan, same as ivf_assign — exactly two, never more);
-    the id-keyed vector joins are broadcast hash joins; the cell scorer
-    is a single grouped-map stage."""
-    from work_order_pdf_extractor_spark.operators import ann_tuning, similarity
+    """nprobe search: no cartesian product, no nested-loop join and no
+    sort-merge join anywhere. Centroid scoring (rank-1 assignment and
+    the nprobe probe ranking) is one numpy matmul per Arrow batch
+    against the collected K-row model — two MapInPandas stages; the
+    id-keyed vector joins are broadcast hash joins; the cell scorer is a
+    single grouped-map stage."""
+    from work_order_pdf_extractor_spark.operators import annfast, similarity
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     trained = similarity.ivf_centroids(emb, 8, 2)
     cents = spark.createDataFrame(trained.collect(), trained.schema)
-    plan = _plan(ann_tuning.ivf_topk_nprobe(emb, k=3, nprobe=2, centroids=cents))
+    plan = _plan(annfast.ivf_topk_nprobe_fast(emb, k=3, nprobe=2, centroids=cents))
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
-    assert plan.count("BroadcastNestedLoopJoin") == 2  # the K-row model joins
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert plan.count("MapInPandas") >= 2  # assignment + probe ranking
     assert "FlatMapGroupsInPandas" in plan  # the roles scorer
     assert "BroadcastHashJoin" in plan  # id-keyed vector joins
 

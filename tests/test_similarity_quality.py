@@ -6,6 +6,9 @@ from __future__ import annotations
 
 import pytest
 
+from pyspark.sql import functions as F
+
+from work_order_pdf_extractor_spark.operators import annfast as A
 from work_order_pdf_extractor_spark.operators import similarity as S
 
 SF = "/root/testdata/sf0.001"
@@ -17,10 +20,16 @@ def emb(spark):
 
 
 @pytest.fixture(scope="module")
+def cents(spark, emb):
+    trained = S.ivf_centroids(emb, 8)
+    return spark.createDataFrame(trained.collect(), trained.schema)
+
+
+@pytest.fixture(scope="module")
 def full_pairs(spark, emb):
     """ALL exact pairwise sims, computed once per module — every other
     check (top-3 brute force, approx-agreement) derives from it."""
-    df = S.cosine_topk(emb, k=10**6, allow_full_scan=True).toPandas()
+    df = A.cosine_topk_fast2(emb, query_df=emb, k=10**6).toPandas()
     return {(r.qid, r.nid): r.sim for r in df.itertuples()}
 
 
@@ -44,7 +53,7 @@ def _sims_agree(approx_df, full_pairs):
 
 
 def test_ivf_sims_match_exact(spark, emb, full_pairs):
-    approx = S.ivf_topk(emb, k=3, n_centroids=8).toPandas()
+    approx = A.ivf_topk_fast(emb, k=3, n_centroids=8).toPandas()
     assert len(approx) > 0
     _sims_agree(approx, full_pairs)
 
@@ -52,19 +61,19 @@ def test_ivf_sims_match_exact(spark, emb, full_pairs):
 def test_lsh_pairs_share_bucket(spark, emb):
     buckets = {
         r.vec_id: r.bucket
-        for r in S.hyperplane_lsh_buckets(emb).toPandas().itertuples()
+        for r in A.hyperplane_buckets_fast_exact(emb).toPandas().itertuples()
     }
-    approx = S.lsh_topk(emb, k=3).toPandas()
+    approx = A.lsh_topk_fast(emb, k=3).toPandas()
     assert len(approx) > 0
     for r in approx.itertuples():
         assert buckets[r.qid] == buckets[r.nid]
 
 
-def test_ivf_cells_trained_and_balanced(spark, emb):
+def test_ivf_cells_trained_and_balanced(spark, emb, cents):
     """Trained (Lloyd-iterated) centroids must produce defensible cell
     balance — every cell populated and no cell a skew whale. Round 1's
     first-8-by-id centroids made cell sizes insertion-order-dependent."""
-    a = S.ivf_assign(emb, 8).toPandas()
+    a = A.ivf_assign_fast(emb, cents).toPandas()
     counts = a.centroid_id.value_counts()
     assert len(counts) == 8, f"empty cells: {counts.to_dict()}"
     assert counts.max() <= 0.5 * len(a), f"whale cell: {counts.to_dict()}"
@@ -79,9 +88,9 @@ def test_ivf_centroids_deterministic_across_partitionings(spark, emb):
 
 
 def test_fast_lsh_buckets_match_exact(spark, emb):
-    """The vectorized (numpy-matmul) bucket pass must agree with the
-    decimal-exact oracled variant on every vector."""
-    a = S.hyperplane_lsh_buckets(emb).toPandas().set_index("vec_id").bucket
+    """The float64 (numpy-matmul) bucket pass must agree with the
+    decimal-exact oracled variant on every vector of the fixture."""
+    a = A.hyperplane_buckets_fast_exact(emb).toPandas().set_index("vec_id").bucket
     b = (
         S.hyperplane_lsh_buckets_fast(emb)
         .toPandas()
@@ -91,51 +100,12 @@ def test_fast_lsh_buckets_match_exact(spark, emb):
     assert (a.sort_index() == b.sort_index()).all()
 
 
-def test_lsh_topk_salting_changes_nothing(spark, emb):
-    """The (bucket, salt) join must be a pure physical de-skew: identical
-    (qid, nid, sim, rank) output with and without salting."""
-    plain = S.lsh_topk(emb, k=3, n_salts=1).toPandas()
-    salted = S.lsh_topk(emb, k=3, n_salts=4).toPandas()
-    key = ["qid", "nid", "sim", "rank"]
-    a = plain[key].sort_values(key).reset_index(drop=True)
-    b = salted[key].sort_values(key).reset_index(drop=True)
-    assert a.equals(b)
-
-
-def test_salted_join_bounds_per_task_candidates(spark, emb):
-    """No single join task may receive a quadratic hot bucket: with S
-    salts, the probe side of each (bucket, salt) key carries at most
-    ceil(|bucket|/S) query rows — the per-task pair count is
-    |bucket|²/S, not |bucket|². Verified on the actual key histogram."""
-    import math
-
-    S_SALTS = 4
-    b = S.hyperplane_lsh_buckets(emb).toPandas()
-    bucket_sizes = b.bucket.value_counts()
-    from pyspark.sql import functions as F
-
-    salted = (
-        S.hyperplane_lsh_buckets(emb)
-        .withColumn("_salt", F.pmod(F.xxhash64("vec_id"), F.lit(S_SALTS)))
-        .groupBy("bucket", "_salt")
-        .count()
-        .toPandas()
-    )
-    worst = bucket_sizes.max()
-    per_key_max = salted["count"].max()
-    # xxhash64 salting is not perfectly even; allow 2x headroom over the
-    # ideal ceil(|bucket|/S) — still far below the unsalted |bucket|
-    assert per_key_max <= max(2 * math.ceil(worst / S_SALTS), 8), (
-        worst, per_key_max
-    )
-
-
 def test_banded_buckets_smaller_than_single_table(spark, emb):
     """The OR-construction's point: per-(band, bucket) populations stay
     2^r-bounded and strictly smaller than the corpus, while the UNION of
     bands recovers at least the single wide table's candidate recall
     against brute-force top-1."""
-    bb = S.banded_lsh_buckets(emb, bands=4, planes_per_band=4).toPandas()
+    bb = A.banded_buckets_fast(emb, bands=4, planes_per_band=4).toPandas()
     n_vecs = bb.vec_id.nunique()
     worst_band_bucket = bb.groupby(["band", "bucket"]).size().max()
     assert worst_band_bucket < 0.6 * n_vecs, worst_band_bucket
@@ -147,10 +117,10 @@ def test_banded_topk_sims_exact_and_recall(spark, emb, full_pairs, brute):
     """Banded top-k must (a) report exact cosines for every returned pair,
     (b) recall at least as many true top-3 neighbors as the single-table
     lsh_topk — more bands = more chances to collide."""
-    banded = S.lsh_topk_banded(emb, k=3, bands=4, planes_per_band=4).toPandas()
+    banded = A.lsh_topk_banded_fast(emb, k=3, bands=4, planes_per_band=4).toPandas()
     assert len(banded) > 0
     _sims_agree(banded, full_pairs)
-    single = S.lsh_topk(emb, k=3).toPandas()
+    single = A.lsh_topk_fast(emb, k=3).toPandas()
     truth = set(brute)
     got_banded = {(r.qid, r.nid) for r in banded.itertuples()} & truth
     got_single = {(r.qid, r.nid) for r in single.itertuples()} & truth
@@ -160,30 +130,40 @@ def test_banded_topk_sims_exact_and_recall(spark, emb, full_pairs, brute):
 
 
 def test_cosine_topk_fast_matches_exact(spark, emb):
-    """The numpy two-phase twin must return EXACTLY the JVM-fold result —
-    same pairs, same rounded sims, same ranks — across partitionings."""
-    from pyspark.sql import functions as F
+    """The per-batch local top-k must return EXACTLY a numpy brute force
+    under the same (round(sim,4) DESC, nid ASC) order — same pairs, same
+    rounded sims, same ranks — across partitionings."""
+    import numpy as np
 
+    rows = emb.toPandas()
+    ids = rows.vec_id.to_numpy()
+    mat = np.array(list(rows.embedding), dtype=np.float64)
+    norms = np.sqrt((mat * mat).sum(axis=1))
+    want = {}
+    for qi in np.nonzero(ids < 7)[0]:
+        sims = np.round((mat @ mat[qi]) / (norms * norms[qi]), 4)
+        top = sorted(
+            (-float(sims[i]), int(ids[i]))
+            for i in range(len(ids)) if ids[i] != ids[qi]
+        )[:4]
+        for rank, (negsim, n) in enumerate(top, 1):
+            want[(int(ids[qi]), rank)] = (n, -negsim)
     q = emb.filter(F.col("vec_id") < 7)
-    slow = S.cosine_topk(emb, query_df=q, k=4).toPandas()
     for parts in (1, 5):
-        fast = S.cosine_topk_fast(emb.repartition(parts), q, k=4).toPandas()
-        key = ["qid", "rank"]
-        a = slow.sort_values(key).reset_index(drop=True)
-        b = fast.sort_values(key).reset_index(drop=True)
-        assert a[["qid", "nid", "rank"]].equals(b[["qid", "nid", "rank"]])
-        assert (a.sim - b.sim).abs().max() == 0.0
+        fast = A.cosine_topk_fast2(emb.repartition(parts), q, k=4).toPandas()
+        got = {(r.qid, r.rank): (r.nid, r.sim) for r in fast.itertuples()}
+        assert got == want, parts
 
 
-def test_ivf_recall_within_cells(spark, emb, brute):
+def test_ivf_recall_within_cells(spark, emb, cents, brute):
     """For queries whose true top-1 neighbor landed in the same IVF cell,
     IVF must return it as rank 1 (the approximation loses only cross-cell
     neighbors, never intra-cell ranking)."""
     assign = {
         r.vec_id: r.centroid_id
-        for r in S.ivf_assign(emb, 8).toPandas().itertuples()
+        for r in A.ivf_assign_fast(emb, cents).toPandas().itertuples()
     }
-    ivf = S.ivf_topk(emb, k=1, n_centroids=8).toPandas()
+    ivf = A.ivf_topk_fast(emb, k=1, centroids=cents).toPandas()
     ivf_top1 = {r.qid: r.nid for r in ivf.itertuples()}
     true_top1 = {}
     for (q, n), sim in brute.items():
@@ -200,7 +180,7 @@ def test_ivf_recall_within_cells(spark, emb, brute):
 
 
 def test_l2_topk_matches_brute_force(spark, emb):
-    """l2_topk's top-3 by rounded squared distance must equal a numpy
+    """l2_topk_fast's top-3 by rounded squared distance must equal a numpy
     brute force under the same (round(d2,4) ASC, nid ASC) total order."""
     import numpy as np
 
@@ -208,7 +188,7 @@ def test_l2_topk_matches_brute_force(spark, emb):
     ids = rows.vec_id.to_numpy()
     mat = np.array(list(rows.embedding), dtype=np.float64)
     qmask = ids % 7 == 0
-    out = S.l2_topk(
+    out = A.l2_topk_fast(
         emb, query_df=emb.filter("vec_id % 7 = 0"), k=3
     ).toPandas()
     got = {
@@ -228,5 +208,9 @@ def test_l2_topk_matches_brute_force(spark, emb):
 
 
 def test_l2_topk_full_scan_guard(spark, emb):
+    """Exact L2 search has no full-corpus default: the query set is a
+    required argument and must be non-empty."""
+    with pytest.raises(TypeError):
+        A.l2_topk_fast(emb)
     with pytest.raises(ValueError):
-        S.l2_topk(emb)
+        A.l2_topk_fast(emb, query_df=emb.limit(0))

@@ -24,7 +24,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from work_order_pdf_extractor_spark.operators import similarity
+    from work_order_pdf_extractor_spark.operators import annfast
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -37,7 +37,7 @@ def main() -> None:
     n = emb.count()
     q = emb.filter(F.col("vec_id") < 100)
     exact = (
-        similarity.cosine_topk_fast(emb, query_df=q, k=3)
+        annfast.cosine_topk_fast2(emb, query_df=q, k=3)
         .select("qid", "nid")
         .cache()
     )
@@ -47,7 +47,7 @@ def main() -> None:
     print("|---|---|---|---|---|")
     for bands, ppb in CONFIGS:
         t0 = time.time()
-        approx = similarity.lsh_topk_banded(
+        approx = annfast.lsh_topk_banded_fast(
             emb, k=3, bands=bands, planes_per_band=ppb
         ).select("qid", "nid")
         hits = exact.join(approx, ["qid", "nid"], "left_semi").count()

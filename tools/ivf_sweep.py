@@ -27,7 +27,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from work_order_pdf_extractor_spark.operators import ann_tuning, similarity
+    from work_order_pdf_extractor_spark.operators import annfast, similarity
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -40,7 +40,7 @@ def main() -> None:
     n = emb.count()
     q = emb.filter(F.col("vec_id") < 100)
     exact = (
-        similarity.cosine_topk_fast(emb, query_df=q, k=3)
+        annfast.cosine_topk_fast2(emb, query_df=q, k=3)
         .select("qid", "nid")
         .cache()
     )
@@ -56,7 +56,7 @@ def main() -> None:
             if nprobe > K:
                 continue
             t0 = time.time()
-            approx = ann_tuning.ivf_topk_nprobe(
+            approx = annfast.ivf_topk_nprobe_fast(
                 emb, k=3, nprobe=nprobe, centroids=model
             ).select("qid", "nid")
             hits = exact.join(

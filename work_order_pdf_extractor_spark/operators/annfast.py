@@ -1,54 +1,46 @@
-"""Vectorized fast twins of the ANN search operators (r7 optimization).
+"""ANN search operators over embedding columns (``array<float>``): exact
+cosine/L2 top-k, single-table and banded hyperplane LSH, IVF assignment,
+probing and search, and SemDeDup.
 
-Why a separate module (the ``ann_tuning`` precedent): editing
-``operators/similarity.py`` would invalidate the attestation fingerprint
-of its 33 dependent queries mid-window. The fast twins live here and the
-handful of query wrappers that adopt them re-attest individually.
+Every search does its arithmetic in numpy over Arrow batches
+(``mapInPandas`` / ``applyInPandas``); no pair is scored by an
+interpreted JVM fold and no candidate pair is materialized as a row.
+The reference for every result is the DuckDB oracle SQL that sits next
+to each registry query in ``queries.py`` (checked by
+``tests/test_queries_duckdb.py``); ``tests/test_annfast.py`` checks the
+operators against DuckDB SQL and brute force directly.
 
-What is optimized, and why it is value-identical:
+Why the results match the oracle exactly, not merely approximately:
 
-1. **Local top-k selection** — ``similarity._group_local_topk_fn`` (and
-   its roles sibling in ``ann_tuning``) ran one full ``np.lexsort`` over
-   the whole bucket PER QUERY ROW: O(m log m) per query in a Python
-   loop, the measured hot spot of every grouped ANN scorer (guide §4.2:
-   hand whole batches to vectorized native code). Here selection is one
-   ``np.argpartition`` over a composite int64 key per query CHUNK.
-   Exactness: the key ``(round(sim·10⁴) << 33) − id`` is a strictly
-   monotone encoding of the global total order (round(sim,4) DESC, id
-   ASC) whenever ``0 ≤ id < 2³³`` — distinct (sim, id) map to distinct
-   keys because ids occupy disjoint low ranges per sim value — so the
-   selected set and its order are IDENTICAL to the lexsort's. Ids
-   outside that range fall back to the lexsort path.
+1. **Local top-k selection** — every search ranks on the total order
+   (round(sim,4) DESC, id ASC). Selection is one ``np.argpartition`` over
+   a composite int64 key per query chunk: the key
+   ``(round(sim·10⁴) << 33) − id`` is a strictly monotone encoding of
+   that order whenever ``0 ≤ id < 2³³`` (distinct (sim, id) map to
+   distinct keys because ids occupy disjoint low ranges per sim value),
+   so the selected set and its order are those of a full lexsort. Ids
+   outside that range fall back to the lexsort.
 
-2. **Hyperplane bucket bits** — the decimal(28,9) per-term fold of
-   ``similarity._plane_projection`` is interpreted BigDecimal arithmetic
-   (measured ~0.3 ms per row·8-plane set — it dominated every banded
-   search). :func:`_proj_decimal_sums` reproduces the JVM decimal
-   semantics EXACTLY in vectorized numpy: the per-term product is exact
-   in float64 (24-bit float32 mantissa × 11-bit integer plane value ≤ 35
+2. **Hyperplane bucket bits** — the oracle sums per-term
+   ``CAST(x*plane AS DECIMAL(28,9))`` products, which is
+   association-free. :func:`_proj_decimal_sums` reproduces those decimal
+   semantics in vectorized numpy: the per-term product is exact in
+   float64 (24-bit float32 mantissa × 11-bit integer plane value ≤ 35
    bits < 53), the decimal(28,9) cast is HALF_UP rounding of the
-   product's shortest-decimal representation (what Spark's
-   ``Decimal.set(double)`` does via ``Double.toString``), and the fast
-   path resolves it as ``rint(P·10⁹)`` with a guard band: any term
-   within 10⁻³ of a .5 boundary (the f64 scaling error bound is ~10⁻⁴)
-   is recomputed exactly with ``decimal.Decimal(repr(P))`` — bit-equal
-   to the JVM for every non-pathological double (JDK17's Double.toString
-   emits at most one digit beyond the shortest repr, a < 1-ulp decimal
-   difference that cannot move a 10⁻⁹-granularity HALF_UP boundary
-   except with probability ~10⁻¹⁷ per term). The per-plane sums are
-   exact int64 sums of the per-term integers (|Σ| ≤ 64·10¹² < 2⁶³), so
-   the sign — the bucket bit — is identical to the JVM/decimal/oracle
-   value, not merely float-close.
+   product's decimal string, and the fast path resolves it as
+   ``rint(P·10⁹)`` with a guard band that recomputes near-.5 terms with
+   ``decimal.Decimal``. The per-plane sums are exact int64 sums of the
+   per-term integers (|Σ| ≤ 64·10¹² < 2⁶³), so the sign — the bucket bit
+   — is the decimal value's sign, not merely float-close.
 
-3. **Query-restricted search** (``query_df``): the recall gauge consumes
-   only rows with qid in its query set; the roles scorer computes
-   queries×members sims instead of members², dropping the gauge's
-   matmul+selection work by ~|corpus|/|queries|. Per-query results are
-   unchanged (each query's local top-k is independent of other queries).
+3. **Query-restricted search** (``query_df``): a query's top-k depends
+   only on that query, so the roles scorer computes queries×members
+   sims instead of members² and the per-query rows are unchanged.
 
-Differential tests: ``tests/test_annfast.py`` pins equality against the
-``similarity``/``ann_tuning`` originals on the real sf embeddings and on
-adversarial near-boundary rasters.
+4. **IVF ordering key** — nearest-centroid ranking packs
+   ``(round(sim·10⁴), centroid_id)`` into one int64 with a pad of
+   ``max(centroid_id) + 1`` taken from the collected model; negative
+   centroid ids are refused.
 """
 
 from __future__ import annotations
@@ -56,10 +48,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .similarity import ivf_assign
+from .similarity import IVF_ITERS, _planes_matrix, ivf_centroids
 
 _ID_LIMIT = 1 << 33
-_PLANE_MUL = 2654435761
+_LOCAL_SCHEMA = "qid long, nid long, sim double"
 
 
 def _select_topk(ids, sims, take):
@@ -97,99 +89,82 @@ def _ids_fast_ok(ids) -> bool:
     return len(ids) > 0 and int(ids.min()) >= 0 and int(ids.max()) < _ID_LIMIT
 
 
-def group_local_topk_fn(k: int, id_col: str, vec_col: str):
-    """Drop-in twin of ``similarity._group_local_topk_fn`` with
-    vectorized selection (identical output — same 1024-row sim chunks,
-    same np.round(.,4), same total order)."""
+def _empty_local():
+    import pandas as _pd
+
+    return _pd.DataFrame({"qid": [], "nid": [], "sim": []}).astype(
+        {"qid": "int64", "nid": "int64", "sim": "float64"}
+    )
+
+
+def _topk_frame(qids, qmat, cids, cmat, take):
+    """(qid, nid, sim) frame: each query's top-``take`` corpus rows under
+    (round(sim,4) DESC, nid ASC). Sims are computed in 1024-query chunks,
+    so memory stays ≤ 1024 × |corpus| sims even on a hot group."""
     import numpy as np
     import pandas as _pd
 
-    def fn(pdf: "_pd.DataFrame") -> "_pd.DataFrame":
-        ids = np.asarray(pdf[id_col].values, dtype=np.int64)
-        mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-        m = len(ids)
-        if m < 2:
-            return _pd.DataFrame({"qid": [], "nid": [], "sim": []}).astype(
-                {"qid": "int64", "nid": "int64", "sim": "float64"}
-            )
-        norms = np.sqrt((mat * mat).sum(axis=1))
-        take = min(k + 1, m)
-        fast = _ids_fast_ok(ids)
-        out_q, out_n, out_s = [], [], []
-        for lo in range(0, m, 1024):
-            hi = min(lo + 1024, m)
-            sims = np.round(
-                (mat[lo:hi] @ mat.T) / (norms[lo:hi, None] * norms[None, :]), 4
-            )
-            if fast:
-                idx = _select_topk(ids, sims, take)
-                out_q.append(np.repeat(ids[lo:hi], take))
-                out_n.append(ids[idx].ravel())
-                out_s.append(np.take_along_axis(sims, idx, axis=1).ravel())
-            else:  # ids outside the key range: original lexsort path
-                for qi in range(hi - lo):
-                    order = np.lexsort((ids, -sims[qi]))[:take]
-                    out_q.append(np.full(take, ids[lo + qi]))
-                    out_n.append(ids[order])
-                    out_s.append(sims[qi][order])
-        return _pd.DataFrame(
-            {
-                "qid": np.concatenate(out_q),
-                "nid": np.concatenate(out_n),
-                "sim": np.concatenate(out_s),
-            }
+    qnorm = np.sqrt((qmat * qmat).sum(axis=1))
+    cnorm = np.sqrt((cmat * cmat).sum(axis=1))
+    fast = _ids_fast_ok(cids)
+    out_q, out_n, out_s = [], [], []
+    for lo in range(0, len(qids), 1024):
+        hi = min(lo + 1024, len(qids))
+        sims = np.round(
+            (qmat[lo:hi] @ cmat.T) / (qnorm[lo:hi, None] * cnorm[None, :]), 4
         )
+        if fast:
+            idx = _select_topk(cids, sims, take)
+        else:  # ids outside the key range: per-row lexsort
+            idx = np.stack([np.lexsort((cids, -row))[:take] for row in sims])
+        out_q.append(np.repeat(qids[lo:hi], take))
+        out_n.append(cids[idx].ravel())
+        out_s.append(np.take_along_axis(sims, idx, axis=1).ravel())
+    return _pd.DataFrame(
+        {
+            "qid": np.concatenate(out_q),
+            "nid": np.concatenate(out_n),
+            "sim": np.concatenate(out_s),
+        }
+    )
+
+
+def _ids_and_vecs(pdf, id_col, vec_col):
+    import numpy as np
+
+    return (
+        np.asarray(pdf[id_col].values, dtype=np.int64),
+        np.array(list(pdf[vec_col]), dtype=np.float64),
+    )
+
+
+def group_local_topk_fn(k: int, id_col: str, vec_col: str):
+    """applyInPandas scorer: one group = one bucket/cell; every member is
+    a query against every member, and each emits its local top-(k+1)
+    (the +1 covers the self-match removed downstream)."""
+
+    def fn(pdf):
+        ids, mat = _ids_and_vecs(pdf, id_col, vec_col)
+        if len(ids) < 2:
+            return _empty_local()
+        return _topk_frame(ids, mat, ids, mat, min(k + 1, len(ids)))
 
     return fn
 
 
 def roles_topk_fn(k: int):
-    """Twin of ``ann_tuning._cell_topk_roles_fn`` (corpus role 0 vs
-    visiting-query role 1) with vectorized selection."""
-    import numpy as np
-    import pandas as _pd
+    """applyInPandas scorer with ROLES: corpus members (role 0) vs
+    visiting queries (role 1). Emits each query's local top-(k+1) over
+    the group's corpus members."""
 
-    def fn(pdf: "_pd.DataFrame") -> "_pd.DataFrame":
-        empty = _pd.DataFrame({"qid": [], "nid": [], "sim": []}).astype(
-            {"qid": "int64", "nid": "int64", "sim": "float64"}
-        )
+    def fn(pdf):
         corpus = pdf[pdf["role"] == 0]
         queries = pdf[pdf["role"] == 1]
         if len(corpus) == 0 or len(queries) == 0:
-            return empty
-        cids = np.asarray(corpus["vid"].values, dtype=np.int64)
-        cmat = np.array(list(corpus["vec"]), dtype=np.float64)
-        qids = np.asarray(queries["vid"].values, dtype=np.int64)
-        qmat = np.array(list(queries["vec"]), dtype=np.float64)
-        cnorm = np.sqrt((cmat * cmat).sum(axis=1))
-        qnorm = np.sqrt((qmat * qmat).sum(axis=1))
-        take = min(k + 1, len(cids))
-        fast = _ids_fast_ok(cids)
-        out_q, out_n, out_s = [], [], []
-        for lo in range(0, len(qids), 1024):
-            hi = min(lo + 1024, len(qids))
-            sims = np.round(
-                (qmat[lo:hi] @ cmat.T) / (qnorm[lo:hi, None] * cnorm[None, :]),
-                4,
-            )
-            if fast:
-                idx = _select_topk(cids, sims, take)
-                out_q.append(np.repeat(qids[lo:hi], take))
-                out_n.append(cids[idx].ravel())
-                out_s.append(np.take_along_axis(sims, idx, axis=1).ravel())
-            else:
-                for qi in range(hi - lo):
-                    order = np.lexsort((cids, -sims[qi]))[:take]
-                    out_q.append(np.full(take, qids[lo + qi]))
-                    out_n.append(cids[order])
-                    out_s.append(sims[qi][order])
-        return _pd.DataFrame(
-            {
-                "qid": np.concatenate(out_q),
-                "nid": np.concatenate(out_n),
-                "sim": np.concatenate(out_s),
-            }
-        )
+            return _empty_local()
+        cids, cmat = _ids_and_vecs(corpus, "vid", "vec")
+        qids, qmat = _ids_and_vecs(queries, "vid", "vec")
+        return _topk_frame(qids, qmat, cids, cmat, min(k + 1, len(cids)))
 
     return fn
 
@@ -199,31 +174,30 @@ def roles_topk_fn(k: int):
 # ---------------------------------------------------------------------------
 
 
-def _planes_matrix(dims: int, n_planes: int):
-    """(n_planes, dims) int64 plane values — the same deterministic
-    integer family as ``similarity._plane_projection``."""
-    import numpy as np
-
-    d = np.arange(dims, dtype=np.int64)
-    return np.stack(
-        [(1 + (j * 64 + d) * _PLANE_MUL) % 2001 - 1000 for j in range(n_planes)],
-        axis=0,
-    )
-
-
 def _proj_decimal_sums(mat, planes):
     """Exact decimal(28,9) projection sums, scaled by 10^9, as int64.
 
     ``mat``: (n, dims) float64 holding float32-exact embedding values.
     ``planes``: (p, dims) int64. Returns (n, p) int64 where entry equals
-    the JVM's ``aggregate(... cast(x*plane as decimal(28,9)) ...)`` sum
-    times 10^9 — see the module docstring for the exactness argument."""
+    ``SUM(CAST(x*plane AS DECIMAL(28,9)))`` times 10^9 — see the module
+    docstring for the exactness argument."""
     import numpy as np
 
     P = mat[:, None, :] * planes[None, :, :].astype(np.float64)
     y = P * 1e9
     D = np.rint(y).astype(np.int64)
     frac = y - np.floor(y)
+    # Suspects guard. The f64 scaling error of y is ~1e-4 for |P| ≲ 10³
+    # (unit-scale embeddings), so any term within 1e-3 of a .5 boundary
+    # is recomputed exactly. The exact value
+    # assumes the engine casts a double to decimal from its decimal
+    # string: Spark's Decimal(double) goes through the JDK's
+    # Double.toString, then rounds HALF_UP to scale 9. repr() gives the
+    # shortest round-trip string; Double.toString may emit one digit
+    # more (JDK ≤ 18, JDK-4511638). That extra digit is < 1 ulp and can
+    # move a 1e-9 HALF_UP boundary only with probability ~1e-17 per
+    # term. A JVM whose Double.toString differs further would need this
+    # revisited; the DuckDB oracle tests would show it.
     suspects = np.abs(frac - 0.5) < 1e-3
     if suspects.any():
         from decimal import ROUND_HALF_UP, Decimal
@@ -237,30 +211,31 @@ def _proj_decimal_sums(mat, planes):
     return D.sum(axis=2)
 
 
-def banded_buckets_fast(
+def _bucket_pass(
     df: DataFrame,
-    bands: int = 4,
-    planes_per_band: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    bands: int,
+    planes_per_band: int,
+    id_col: str,
+    vec_col: str,
+    with_band: bool,
 ) -> DataFrame:
-    """Exact vectorized twin of ``similarity.banded_lsh_buckets``:
-    identical (id, band, bucket) rows, one Arrow pass, no interpreted
-    decimal folds. Row chunking bounds the (chunk × planes × dims)
-    product tensor."""
+    """One Arrow pass: per vector, ``bands`` buckets of
+    ``planes_per_band`` sign bits each (plane j of band b is global plane
+    ``b*planes_per_band + j``). Row chunking bounds the (chunk × planes ×
+    dims) product tensor."""
     import numpy as np
     import pandas as _pd
     from collections.abc import Iterator as _It
 
     n_planes = bands * planes_per_band
+    shifts = np.arange(planes_per_band, dtype=np.int64)
 
     def fn(batches: "_It[_pd.DataFrame]") -> "_It[_pd.DataFrame]":
         planes_cache: dict[int, "np.ndarray"] = {}
         for b in batches:
             if len(b) == 0:
                 continue
-            mat = np.array(list(b[vec_col]), dtype=np.float64)
-            ids = np.asarray(b[id_col].values, dtype=np.int64)
+            ids, mat = _ids_and_vecs(b, id_col, vec_col)
             dims = mat.shape[1]
             if dims not in planes_cache:
                 planes_cache[dims] = _planes_matrix(dims, n_planes)
@@ -268,26 +243,49 @@ def banded_buckets_fast(
             buckets = np.empty((len(ids), bands), dtype=np.int32)
             for lo in range(0, len(ids), 2048):
                 hi = min(lo + 2048, len(ids))
-                sums = _proj_decimal_sums(mat[lo:hi], planes)  # (c, planes)
-                bits = (sums > 0).astype(np.int32)
-                for band in range(bands):
-                    seg = bits[:, band * planes_per_band : (band + 1) * planes_per_band]
-                    buckets[lo:hi, band] = (
-                        seg << np.arange(planes_per_band, dtype=np.int32)
-                    ).sum(axis=1)
-            yield _pd.DataFrame(
-                {
-                    id_col: np.repeat(ids, bands),
-                    "band": np.tile(
-                        np.arange(bands, dtype=np.int32), len(ids)
-                    ),
-                    "bucket": buckets.ravel(),
-                }
-            )
+                bits = (_proj_decimal_sums(mat[lo:hi], planes) > 0).astype(
+                    np.int64
+                )
+                buckets[lo:hi] = (
+                    bits.reshape(hi - lo, bands, planes_per_band) << shifts
+                ).sum(axis=2)
+            if with_band:
+                yield _pd.DataFrame(
+                    {
+                        id_col: np.repeat(ids, bands),
+                        "band": np.tile(
+                            np.arange(bands, dtype=np.int32), len(ids)
+                        ),
+                        "bucket": buckets.ravel(),
+                    }
+                )
+            else:
+                yield _pd.DataFrame({id_col: ids, "bucket": buckets[:, 0]})
 
-    return df.select(id_col, vec_col).mapInPandas(
-        fn, schema=f"{id_col} long, band int, bucket int"
+    schema = (
+        f"{id_col} long, band int, bucket int"
+        if with_band
+        else f"{id_col} long, bucket int"
     )
+    return df.select(id_col, vec_col).mapInPandas(fn, schema=schema)
+
+
+def banded_buckets_fast(
+    df: DataFrame,
+    bands: int = 4,
+    planes_per_band: int = 4,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Multi-table (banded) hyperplane LSH: ``bands`` independent hash
+    tables of ``planes_per_band`` planes each. Output: (id_col, band:int,
+    bucket:int) — one row per (vector, band).
+
+    Banding is the standard OR-construction: each band keeps buckets
+    small (2^r per band), and a true neighbor pair is found if it
+    collides in ANY band — recall 1-(1-p^r)^b is tuned by (b, r) without
+    fattening any single bucket."""
+    return _bucket_pass(df, bands, planes_per_band, id_col, vec_col, True)
 
 
 def hyperplane_buckets_fast_exact(
@@ -296,53 +294,57 @@ def hyperplane_buckets_fast_exact(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact vectorized twin of ``similarity.hyperplane_lsh_buckets``
-    (single table: bucket = Σ bit_j << j over all planes): identical
-    (id, bucket:int) rows with the JVM decimal sign semantics."""
-    import numpy as np
-    import pandas as _pd
-    from collections.abc import Iterator as _It
-
-    def fn(batches: "_It[_pd.DataFrame]") -> "_It[_pd.DataFrame]":
-        planes_cache: dict[int, "np.ndarray"] = {}
-        for b in batches:
-            if len(b) == 0:
-                continue
-            mat = np.array(list(b[vec_col]), dtype=np.float64)
-            ids = np.asarray(b[id_col].values, dtype=np.int64)
-            dims = mat.shape[1]
-            if dims not in planes_cache:
-                planes_cache[dims] = _planes_matrix(dims, n_planes)
-            planes = planes_cache[dims]
-            out = np.empty(len(ids), dtype=np.int32)
-            for lo in range(0, len(ids), 2048):
-                hi = min(lo + 2048, len(ids))
-                bits = (_proj_decimal_sums(mat[lo:hi], planes) > 0).astype(
-                    np.int64
-                )
-                out[lo:hi] = (
-                    bits << np.arange(n_planes, dtype=np.int64)
-                ).sum(axis=1).astype(np.int32)
-            yield _pd.DataFrame({id_col: ids, "bucket": out})
-
-    return df.select(id_col, vec_col).mapInPandas(
-        fn, schema=f"{id_col} long, bucket int"
-    )
+    """Single-table sign-pattern LSH bucket per vector (bucket = Σ bit_j
+    << j over all planes), with the oracle's decimal sign semantics.
+    Output: (id_col, bucket:int). One narrow pass: no explode, no
+    shuffle."""
+    return _bucket_pass(df, 1, n_planes, id_col, vec_col, False)
 
 
 # ---------------------------------------------------------------------------
-# IVF assignment / probe twins
+# IVF assignment / probing
 # ---------------------------------------------------------------------------
 
 
-def _collect_centroids(centroids: DataFrame):
-    """(cids int64 array, cmat float64 matrix) from the K-row model."""
+def _materialized_centroids(
+    df: DataFrame, n_centroids: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """Train once and MATERIALIZE the K-row model as a local relation:
+    the model is data, not a plan — without this, every reference to an
+    assignment would re-run the Lloyd-iteration subtree."""
+    trained = ivf_centroids(df, n_centroids, IVF_ITERS, id_col, vec_col)
+    return df.sparkSession.createDataFrame(trained.collect(), trained.schema)
+
+
+def _centroid_scorer(centroids: DataFrame):
+    """Collect the K-row model and return ``(cids, score)`` where
+    ``score(mat)`` gives (sims, key): round-4 cosines against every
+    centroid and an int64 key whose DESC order is (round(sim,4) DESC,
+    centroid_id ASC). The key pad is ``max(centroid_id) + 1``, so any
+    non-negative id packs without collision."""
     import numpy as np
 
     rows = centroids.select("centroid_id", "cv").collect()
+    if not rows:
+        raise ValueError("the IVF model has no centroids")
     cids = np.array([r[0] for r in rows], dtype=np.int64)
+    if int(cids.min()) < 0:
+        raise ValueError(
+            f"negative centroid_id {int(cids.min())} in the IVF model"
+        )
     cmat = np.array([list(r[1]) for r in rows], dtype=np.float64)
-    return cids, cmat
+    cnorm = np.sqrt((cmat * cmat).sum(axis=1))
+    kpad = int(cids.max()) + 1
+
+    def score(mat):
+        vnorm = np.sqrt((mat * mat).sum(axis=1))
+        sims = np.round((mat @ cmat.T) / (vnorm[:, None] * cnorm[None, :]), 4)
+        key = np.rint(sims * 10000.0).astype(np.int64) * kpad + (
+            kpad - 1 - cids[None, :]
+        )
+        return sims, key
+
+    return cids, score
 
 
 def ivf_assign_fast(
@@ -351,31 +353,22 @@ def ivf_assign_fast(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Vectorized twin of ``similarity.ivf_assign`` for a MATERIALIZED
-    model: one numpy matmul per Arrow batch against the K-row centroid
-    matrix, argmax under (round(sim,4) DESC, centroid_id ASC) — the same
-    winner as the JVM's ``max_by(struct(centroid_id, ...), struct(sim,
-    -centroid_id))``. Output: (id_col, centroid_id, centroid_sim)."""
+    """IVF coarse quantization against a MATERIALIZED model (see
+    :func:`.similarity.ivf_centroids`): one numpy matmul per Arrow batch
+    against the K-row centroid matrix, argmax under (round(sim,4) DESC,
+    centroid_id ASC) — O(rows × K), never O(rows²). Output: (id_col,
+    centroid_id, centroid_sim)."""
     import numpy as np
     import pandas as _pd
     from collections.abc import Iterator as _It
 
-    cids, cmat = _collect_centroids(centroids)
-    cnorm = np.sqrt((cmat * cmat).sum(axis=1))
-    kpad = 1 << 16  # centroid ids are tiny; any bound > max(cid) works
+    cids, score = _centroid_scorer(centroids)
 
     def fn(batches: "_It[_pd.DataFrame]") -> "_It[_pd.DataFrame]":
         for b in batches:
             if len(b) == 0:
                 continue
-            mat = np.array(list(b[vec_col]), dtype=np.float64)
-            vnorm = np.sqrt((mat * mat).sum(axis=1))
-            sims = np.round(
-                (mat @ cmat.T) / (vnorm[:, None] * cnorm[None, :]), 4
-            )
-            key = (np.rint(sims * 10000.0).astype(np.int64) * kpad) + (
-                kpad - 1 - cids[None, :]
-            )
+            sims, key = score(np.array(list(b[vec_col]), dtype=np.float64))
             win = np.argmax(key, axis=1)
             yield _pd.DataFrame(
                 {
@@ -396,37 +389,28 @@ def ivf_probe_cells_fast(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Vectorized twin of ``ann_tuning.ivf_probe_cells``: each vector's
-    ``nprobe`` nearest centroids under (round(sim,4) DESC, centroid_id
-    ASC). Output: (id_col, centroid_id, probe_rank)."""
+    """Each vector's ``nprobe`` nearest centroids under (round(sim,4)
+    DESC, centroid_id ASC) — rank 1 is :func:`ivf_assign_fast`'s cell.
+    Output: (id_col, centroid_id, probe_rank)."""
     import numpy as np
     import pandas as _pd
     from collections.abc import Iterator as _It
 
-    cids, cmat = _collect_centroids(centroids)
-    cnorm = np.sqrt((cmat * cmat).sum(axis=1))
-    kpad = 1 << 16
+    cids, score = _centroid_scorer(centroids)
     take = min(nprobe, len(cids))
 
     def fn(batches: "_It[_pd.DataFrame]") -> "_It[_pd.DataFrame]":
         for b in batches:
             if len(b) == 0:
                 continue
-            mat = np.array(list(b[vec_col]), dtype=np.float64)
-            vnorm = np.sqrt((mat * mat).sum(axis=1))
-            sims = np.round(
-                (mat @ cmat.T) / (vnorm[:, None] * cnorm[None, :]), 4
-            )
-            key = (np.rint(sims * 10000.0).astype(np.int64) * kpad) + (
-                kpad - 1 - cids[None, :]
-            )
+            _sims, key = score(np.array(list(b[vec_col]), dtype=np.float64))
             order = np.argsort(-key, axis=1)[:, :take]
             yield _pd.DataFrame(
                 {
                     id_col: np.repeat(b[id_col].values, take),
                     "centroid_id": cids[order].ravel().astype(np.int32),
                     "probe_rank": np.tile(
-                        np.arange(1, take + 1, dtype=np.int32), len(mat)
+                        np.arange(1, take + 1, dtype=np.int32), len(b)
                     ),
                 }
             )
@@ -436,18 +420,49 @@ def ivf_probe_cells_fast(
 
 
 # ---------------------------------------------------------------------------
-# Search twins
+# Searches
 # ---------------------------------------------------------------------------
 
 
-def _finalize_topk(local: DataFrame, k: int) -> DataFrame:
+def _finalize_topk(local: DataFrame, k: int, distinct: bool = False) -> DataFrame:
+    """Drop self-matches and rank the local candidates globally."""
+    cand = local.filter(F.col("qid") != F.col("nid"))
+    if distinct:
+        cand = cand.distinct()
     w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("nid"))
     return (
-        local.filter(F.col("qid") != F.col("nid"))
-        .distinct()
-        .withColumn("rank", F.row_number().over(w))
+        cand.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("qid", "nid", "sim", "rank")
+    )
+
+
+def _grouped_local_topk(
+    withv: DataFrame,
+    keys: list[str],
+    k: int,
+    id_col: str,
+    vec_col: str,
+    query_df: DataFrame | None,
+) -> DataFrame:
+    """Local top-(k+1) candidates within each ``keys`` group (an LSH
+    bucket or IVF cell), one vectorized applyInPandas per group. With
+    ``query_df`` only those ids act as queries (roles scorer)."""
+    if query_df is None:
+        return withv.groupBy(*keys).applyInPandas(
+            group_local_topk_fn(k, id_col, vec_col), schema=_LOCAL_SCHEMA
+        )
+
+    def with_role(src: DataFrame, role: int) -> DataFrame:
+        return src.select(
+            F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"),
+            *keys, F.lit(role).alias("role"),
+        )
+
+    queries = withv.join(query_df.select(id_col), id_col, "left_semi")
+    cells = with_role(withv, 0).unionByName(with_role(queries, 1))
+    return cells.groupBy(*keys).applyInPandas(
+        roles_topk_fn(k), schema=_LOCAL_SCHEMA
     )
 
 
@@ -460,30 +475,21 @@ def lsh_topk_banded_fast(
     vec_col: str = "embedding",
     query_df: DataFrame | None = None,
 ) -> DataFrame:
-    """Twin of ``similarity.lsh_topk_banded``; with ``query_df`` the
-    output is restricted to those qids (per-query rows identical)."""
+    """Approximate top-k via banded LSH: candidates are pairs colliding in
+    ANY band, scored by exact cosine. Output: (qid, nid, sim, rank).
+
+    Each (band, bucket) group emits its members' LOCAL top-(k+1); the
+    union over bands contains the global top-k (if x is a global top-k
+    neighbor of q, fewer than k candidates beat x in any bucket they
+    share, so x survives the local cut). Multi-band collisions carry
+    identical sims, so a ``distinct`` collapses them before the final
+    window. With ``query_df`` the output is restricted to those qids."""
     bb = banded_buckets_fast(df, bands, planes_per_band, id_col, vec_col)
     withv = df.select(id_col, vec_col).join(bb, id_col)
-    if query_df is None:
-        local = withv.groupBy("band", "bucket").applyInPandas(
-            group_local_topk_fn(k, id_col, vec_col),
-            schema="qid long, nid long, sim double",
-        )
-    else:
-        corpus = withv.select(
-            F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"),
-            "band", "bucket", F.lit(0).alias("role"),
-        )
-        queries = withv.join(
-            query_df.select(id_col), id_col, "left_semi"
-        ).select(
-            F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"),
-            "band", "bucket", F.lit(1).alias("role"),
-        )
-        local = corpus.unionByName(queries).groupBy("band", "bucket").applyInPandas(
-            roles_topk_fn(k), schema="qid long, nid long, sim double"
-        )
-    return _finalize_topk(local, k)
+    local = _grouped_local_topk(
+        withv, ["band", "bucket"], k, id_col, vec_col, query_df
+    )
+    return _finalize_topk(local, k, distinct=True)
 
 
 def lsh_topk_fast(
@@ -494,41 +500,16 @@ def lsh_topk_fast(
     vec_col: str = "embedding",
     query_df: DataFrame | None = None,
 ) -> DataFrame:
-    """Twin of ``similarity.lsh_topk`` (single-table hyperplane LSH):
-    within-bucket exact cosine top-k. The pair-materializing salted join
-    + interpreted per-pair dot folds become one grouped matmul scorer —
-    the same values (same bucket membership via the exact decimal bits,
-    same round-4 sims, same total order), so results are identical; the
-    salt de-skew is unnecessary here because per-bucket work is a single
-    vectorized call, not |bucket|² exploded rows."""
+    """Approximate top-k: exact cosine WITHIN each single-table hyperplane
+    LSH bucket (:func:`hyperplane_buckets_fast_exact`). Recall is tunable
+    via n_planes (fewer planes → bigger buckets → higher recall, more
+    compute). Per-bucket work is one vectorized call, so a hot bucket
+    costs one chunked matmul, not |bucket|² exploded rows. Output:
+    (qid, nid, sim, rank)."""
     b = hyperplane_buckets_fast_exact(df, n_planes, id_col, vec_col)
     withv = df.select(id_col, vec_col).join(b, id_col)
-    if query_df is None:
-        local = withv.groupBy("bucket").applyInPandas(
-            group_local_topk_fn(k, id_col, vec_col),
-            schema="qid long, nid long, sim double",
-        )
-    else:
-        corpus = withv.select(
-            F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"),
-            "bucket", F.lit(0).alias("role"),
-        )
-        queries = withv.join(
-            query_df.select(id_col), id_col, "left_semi"
-        ).select(
-            F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"),
-            "bucket", F.lit(1).alias("role"),
-        )
-        local = corpus.unionByName(queries).groupBy("bucket").applyInPandas(
-            roles_topk_fn(k), schema="qid long, nid long, sim double"
-        )
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("nid"))
-    return (
-        local.filter(F.col("qid") != F.col("nid"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "sim", "rank")
-    )
+    local = _grouped_local_topk(withv, ["bucket"], k, id_col, vec_col, query_df)
+    return _finalize_topk(local, k)
 
 
 def ivf_topk_fast(
@@ -540,43 +521,26 @@ def ivf_topk_fast(
     centroids: DataFrame | None = None,
     query_df: DataFrame | None = None,
 ) -> DataFrame:
-    """Twin of ``similarity.ivf_topk`` (within-cell cosine top-k over the
-    rank-1 IVF assignment) with the vectorized scorer; ``query_df``
-    restricts the emitted qids."""
-    assign = (
-        ivf_assign_fast(df, centroids, id_col, vec_col)
-        if centroids is not None
-        else ivf_assign(df, n_centroids, id_col, vec_col, centroids=None)
-    )
+    """Approximate top-k: exact cosine WITHIN each IVF cell (nprobe=1).
+    Cells partition the corpus, so per-cell top-k IS the final answer.
+    Output: (qid, nid, sim, rank).
+
+    ``centroids``: pass the materialized model. Training is a property of
+    the corpus, not of a query — deployments train once (on a sample;
+    K ∝ √N keeps cells ~√N and within-cell work ~N^1.5 total) and amortize
+    the model across every search. Omitting it trains ``n_centroids``
+    centroids per call, which is only acceptable in one-shot
+    verification. ``query_df`` restricts the emitted qids."""
+    if centroids is None:
+        centroids = _materialized_centroids(df, n_centroids, id_col, vec_col)
+    assign = ivf_assign_fast(df, centroids, id_col, vec_col)
     withc = df.select(id_col, vec_col).join(
         assign.select(id_col, "centroid_id"), id_col
     )
-    if query_df is None:
-        local = withc.groupBy("centroid_id").applyInPandas(
-            group_local_topk_fn(k, id_col, vec_col),
-            schema="qid long, nid long, sim double",
-        )
-    else:
-        corpus = withc.select(
-            F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"),
-            "centroid_id", F.lit(0).alias("role"),
-        )
-        queries = withc.join(
-            query_df.select(id_col), id_col, "left_semi"
-        ).select(
-            F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"),
-            "centroid_id", F.lit(1).alias("role"),
-        )
-        local = corpus.unionByName(queries).groupBy("centroid_id").applyInPandas(
-            roles_topk_fn(k), schema="qid long, nid long, sim double"
-        )
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("nid"))
-    return (
-        local.filter(F.col("qid") != F.col("nid"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "sim", "rank")
+    local = _grouped_local_topk(
+        withc, ["centroid_id"], k, id_col, vec_col, query_df
     )
+    return _finalize_topk(local, k)
 
 
 def ivf_topk_nprobe_fast(
@@ -588,12 +552,20 @@ def ivf_topk_nprobe_fast(
     vec_col: str = "embedding",
     query_df: DataFrame | None = None,
 ) -> DataFrame:
-    """Twin of ``ann_tuning.ivf_topk_nprobe`` with the vectorized roles
-    scorer; ``query_df`` restricts which vectors act as queries (their
-    per-query results are unchanged — probe cells and within-cell ranks
-    are query-local)."""
+    """IVF top-k with MULTI-CELL probing: the corpus stays in its rank-1
+    cells, each query searches its ``nprobe`` nearest cells. ``nprobe=1``
+    reproduces :func:`ivf_topk_fast`; raising it recovers neighbors lost
+    to a cell boundary while per-query work stays ``nprobe × N/K``. A
+    corpus vector lives in exactly one cell, so no pair is scored twice.
+    ``query_df`` restricts which vectors act as queries (probe cells and
+    within-cell ranks are query-local, so their rows are unchanged).
+    Output: (qid, nid, sim, rank)."""
     if centroids is None:
-        raise ValueError("pass the materialized trained model")
+        raise ValueError(
+            "pass the materialized trained model (similarity.ivf_centroids"
+            " output collected to a local relation); training inside the"
+            " search plan re-runs Lloyd per query"
+        )
     corpus = (
         df.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
         .join(
@@ -615,30 +587,28 @@ def ivf_topk_nprobe_fast(
         )
         .withColumn("role", F.lit(1))
     )
-    cells = corpus.unionByName(probes)
-    local = cells.groupBy("centroid_id").applyInPandas(
-        roles_topk_fn(k), schema="qid long, nid long, sim double"
+    local = corpus.unionByName(probes).groupBy("centroid_id").applyInPandas(
+        roles_topk_fn(k), schema=_LOCAL_SCHEMA
     )
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("nid"))
-    return (
-        local.filter(F.col("qid") != F.col("nid"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "sim", "rank")
-    )
+    return _finalize_topk(local, k)
 
 
 def semdedup_fast(
     df: DataFrame,
-    n_centroids: int,
     threshold: float,
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Twin of ``similarity.semdedup`` for a materialized model: the
-    interpreted JVM assignment fold becomes :func:`ivf_assign_fast`; the
-    within-cell matmul scorer is unchanged (already vectorized)."""
+    """Semantic dedup, the SemDeDup shape (Abbas et al. 2023): cluster the
+    embedding space with the materialized IVF model, then WITHIN each
+    cluster drop every vector whose cosine to a smaller-id member is ≥
+    ``threshold`` (the greedy min-id-keeper rule of the text near-dup
+    materializer). Output: kept ``(id, centroid_id)`` rows.
+
+    The pairwise check runs within cells only (one numpy matmul per
+    cell, a column dropped iff any strictly-smaller-id row reaches the
+    threshold), so total work is ~N^1.5 at K ∝ √N, never N²."""
     import numpy as np
     import pandas as _pd
 
@@ -655,7 +625,7 @@ def semdedup_fast(
             return _pd.DataFrame({id_col: ids[:0]})
         norms = np.sqrt((mat * mat).sum(axis=1))
         sims = np.round((mat @ mat.T) / (norms[:, None] * norms[None, :]), 4)
-        hit = np.triu(sims >= threshold, k=1)
+        hit = np.triu(sims >= threshold, k=1)  # [i, j]: i < j and sim >= tau
         return _pd.DataFrame({id_col: ids[hit.any(axis=0)]})
 
     dropped = withv.groupBy("centroid_id").applyInPandas(
@@ -666,6 +636,18 @@ def semdedup_fast(
     )
 
 
+def _collect_queries(query_df: DataFrame, id_col: str, vec_col: str, name: str):
+    import numpy as np
+
+    q_rows = query_df.select(id_col, vec_col).collect()
+    if not q_rows:
+        raise ValueError(f"{name} needs a non-empty query_df")
+    return (
+        np.array([r[0] for r in q_rows], dtype=np.int64),
+        np.array([list(r[1]) for r in q_rows], dtype=np.float64),
+    )
+
+
 def cosine_topk_fast2(
     df: DataFrame,
     query_df: DataFrame,
@@ -673,63 +655,30 @@ def cosine_topk_fast2(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Twin of ``similarity.cosine_topk_fast`` with vectorized per-batch
-    selection (same collected-query broadcast, same round-4 sims, same
-    local-top-(k+1) contract)."""
-    import numpy as np
+    """Exact top-k cosine neighbors of a BOUNDED query set. Output:
+    (qid, nid, sim, rank).
+
+    The queries are collected driver-side (they must fit in a broadcast)
+    and each Arrow batch of the corpus does one numpy matmul against the
+    query matrix, emitting only its LOCAL top-(k+1) per query; a final
+    window takes the global top-k. Local selection uses the same total
+    order as the global rank, so a row dropped locally is worse than k+1
+    kept rows of its own batch and can never enter the global top-k (the
+    +1 covers the self-match). The corpus vectors never shuffle."""
     import pandas as _pd
     from collections.abc import Iterator as _It
 
-    q_rows = query_df.select(id_col, vec_col).collect()
-    if not q_rows:
-        raise ValueError("cosine_topk_fast2 needs a non-empty query_df")
-    qids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    qm = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    qn = np.sqrt((qm * qm).sum(axis=1))
-    kk = k + 1
+    qids, qm = _collect_queries(query_df, id_col, vec_col, "cosine_topk_fast2")
 
     def fn(batches: "_It[_pd.DataFrame]") -> "_It[_pd.DataFrame]":
         for b in batches:
             if len(b) == 0:
                 continue
-            mat = np.array(list(b[vec_col]), dtype=np.float64)
-            nids = np.asarray(b[id_col].values, dtype=np.int64)
-            nn = np.sqrt((mat * mat).sum(axis=1))
-            sims = np.round((qm @ mat.T) / (qn[:, None] * nn[None, :]), 4)
-            take = min(kk, sims.shape[1])
-            if _ids_fast_ok(nids):
-                idx = _select_topk(nids, sims, take)
-                yield _pd.DataFrame(
-                    {
-                        "qid": np.repeat(qids, take),
-                        "nid": nids[idx].ravel(),
-                        "sim": np.take_along_axis(sims, idx, axis=1).ravel(),
-                    }
-                )
-            else:
-                out_q, out_n, out_s = [], [], []
-                for qi in range(len(qids)):
-                    order = np.lexsort((nids, -sims[qi]))[:take]
-                    out_q.append(np.full(take, qids[qi]))
-                    out_n.append(nids[order])
-                    out_s.append(sims[qi][order])
-                yield _pd.DataFrame(
-                    {
-                        "qid": np.concatenate(out_q),
-                        "nid": np.concatenate(out_n),
-                        "sim": np.concatenate(out_s),
-                    }
-                )
+            nids, mat = _ids_and_vecs(b, id_col, vec_col)
+            yield _topk_frame(qids, qm, nids, mat, min(k + 1, len(nids)))
 
-    cand = df.select(id_col, vec_col).mapInPandas(
-        fn, schema="qid long, nid long, sim double"
-    ).filter(F.col("qid") != F.col("nid"))
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("nid"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "sim", "rank")
-    )
+    cand = df.select(id_col, vec_col).mapInPandas(fn, schema=_LOCAL_SCHEMA)
+    return _finalize_topk(cand, k)
 
 
 def l2_topk_fast(
@@ -739,57 +688,37 @@ def l2_topk_fast(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Vectorized twin of ``similarity.l2_topk`` for a bounded query set
-    (the recall gauge's exact-L2 ground truth): per batch one matmul
-    computing ``round(q·q − 2·q·n + n·n, 4)``, local bottom-(k+1) under
-    (d2 ASC, nid ASC) — the same local-cut-contains-global argument as
-    ``cosine_topk_fast``. Output: (qid, nid, d2, rank)."""
+    """Exact top-k squared-L2 neighbors of a bounded query set — the
+    ground truth for the PQ/ADC search, which approximates THIS metric.
+    Per batch one matmul computing ``round(q·q − 2·q·n + n·n, 4)``, local
+    bottom-(k+1) under (d2 ASC, nid ASC) — the same local-cut argument as
+    :func:`cosine_topk_fast2`. Output: (qid, nid, d2, rank)."""
     import numpy as np
     import pandas as _pd
     from collections.abc import Iterator as _It
 
-    q_rows = query_df.select(id_col, vec_col).collect()
-    if not q_rows:
-        raise ValueError("l2_topk_fast needs a non-empty query_df")
-    qids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    qm = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
+    qids, qm = _collect_queries(query_df, id_col, vec_col, "l2_topk_fast")
     qq = (qm * qm).sum(axis=1)
-    kk = k + 1
 
     def fn(batches: "_It[_pd.DataFrame]") -> "_It[_pd.DataFrame]":
         for b in batches:
             if len(b) == 0:
                 continue
-            mat = np.array(list(b[vec_col]), dtype=np.float64)
-            nids = np.asarray(b[id_col].values, dtype=np.int64)
+            nids, mat = _ids_and_vecs(b, id_col, vec_col)
             nn = (mat * mat).sum(axis=1)
-            d2 = np.round(
-                qq[:, None] - 2.0 * (qm @ mat.T) + nn[None, :], 4
-            )
-            take = min(kk, d2.shape[1])
+            d2 = np.round(qq[:, None] - 2.0 * (qm @ mat.T) + nn[None, :], 4)
+            take = min(k + 1, d2.shape[1])
             if _ids_fast_ok(nids):
                 idx = _select_bottomk(nids, d2, take)
-                yield _pd.DataFrame(
-                    {
-                        "qid": np.repeat(qids, take),
-                        "nid": nids[idx].ravel(),
-                        "d2": np.take_along_axis(d2, idx, axis=1).ravel(),
-                    }
-                )
             else:
-                out_q, out_n, out_s = [], [], []
-                for qi in range(len(qids)):
-                    order = np.lexsort((nids, d2[qi]))[:take]
-                    out_q.append(np.full(take, qids[qi]))
-                    out_n.append(nids[order])
-                    out_s.append(d2[qi][order])
-                yield _pd.DataFrame(
-                    {
-                        "qid": np.concatenate(out_q),
-                        "nid": np.concatenate(out_n),
-                        "d2": np.concatenate(out_s),
-                    }
-                )
+                idx = np.stack([np.lexsort((nids, row))[:take] for row in d2])
+            yield _pd.DataFrame(
+                {
+                    "qid": np.repeat(qids, take),
+                    "nid": nids[idx].ravel(),
+                    "d2": np.take_along_axis(d2, idx, axis=1).ravel(),
+                }
+            )
 
     cand = df.select(id_col, vec_col).mapInPandas(
         fn, schema="qid long, nid long, d2 double"

@@ -2,11 +2,8 @@
 
 Deliberately a LEAF module (imports nothing package-internal): half the
 operator modules need the fan-out gate, the cross-engine-stable hash, or
-word shingling, and when those lived in ``dedup.py`` every such module
-was transitively coupled to the whole dedup family (and, through one
-function-local import there, to ``similarity.py``) — so an edit to ANY
-ANN operator invalidated the attestation fingerprint of every text
-query. Keeping these here keeps each query's dependency closure honest.
+word shingling, and keeping them here means none of those modules has to
+import the whole dedup family to get them.
 """
 
 from __future__ import annotations
@@ -42,18 +39,39 @@ def stable_hash64(col: F.Column, seed: int | None = None) -> F.Column:
     return F.conv(F.substring(F.md5(src), 1, 8), 16, 10).cast("long")
 
 
+def word_grams(text: str | None, n: int) -> list[str]:
+    """Every n-word window of ``text.split(' ')``, space-joined, in order —
+    Spark's ``concat_ws(' ', split(text, ' ')[i:i+n])``. Consecutive
+    spaces yield empty tokens; NULL text or fewer than ``n`` tokens
+    yields nothing."""
+    if text is None:
+        return []
+    words = text.split(" ")
+    return list(map(" ".join, zip(*(words[k:] for k in range(n)))))
+
+
 def word_shingles(
     df: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Distinct n-word shingles per document (the unit of near-dup
-    comparison). Explode happens JVM-side from a split array."""
-    words = ensure_parallelism(
-        df.select(id_col, F.split(text_col, " ").alias("ws"))
+    comparison). Output: ``(id_col, shingle)``.
+
+    One Arrow pass emits each document's :func:`word_grams` as a SET:
+    per-document distinctness needs no shuffle, because shingles of
+    different documents are distinct rows by definition."""
+    import pandas as _pd
+    from collections.abc import Iterator as _It
+
+    def fn(batches: "_It[_pd.DataFrame]") -> "_It[_pd.DataFrame]":
+        for b in batches:
+            out_ids: list = []
+            out_sh: list = []
+            for i, t in zip(b[id_col].values, b[text_col]):
+                sh = set(word_grams(t, n))
+                out_ids.extend([i] * len(sh))
+                out_sh.extend(sh)
+            yield _pd.DataFrame({id_col: out_ids, "shingle": out_sh})
+
+    return ensure_parallelism(df.select(id_col, text_col)).mapInPandas(
+        fn, schema=f"{id_col} long, shingle string"
     )
-    sz = F.size("ws")
-    idx = F.sequence(F.lit(0), sz - n)
-    sh = words.filter(sz >= n).select(id_col, F.explode(idx).alias("i"), "ws")
-    parts = [F.col("ws")[F.col("i") + k] for k in range(n)]
-    return sh.select(
-        id_col, F.concat_ws(" ", *parts).alias("shingle")
-    ).distinct()

@@ -11,11 +11,6 @@ the broadcast benchmark shingle set to emit per-document MATCHED SPANS
 as token offsets, with overlapping/adjacent n-gram hits merged into
 maximal islands.
 
-This lives in its own module (not ``textclean.py``) for the same
-reason ``ann_tuning.py`` does: the host module is attestation-frozen
-mid-window, and a false shared fingerprint would force the whole
-hygiene family through re-attestation for an additive operator.
-
 Reference analog: none — the reference (``work_order_extractor.py``)
 has no corpus hygiene; this is the training-data surface the north
 rule adds (SURVEY §2 addendum).

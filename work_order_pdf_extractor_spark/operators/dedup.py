@@ -18,14 +18,9 @@ from .common import (  # noqa: F401  (re-exported: long-time import site)
     FANOUT_CONF,
     ensure_parallelism,
     stable_hash64,
+    word_grams,
+    word_shingles,
 )
-
-# r7: every internal shingle derivation uses the vectorized twin — one
-# Arrow pass with per-doc set semantics instead of explode + interpreted
-# concat_ws + a full distinct shuffle; differential-tested identical to
-# common.word_shingles (tests/test_shinglefast.py). The rebind keeps the
-# long-standing `dedup.word_shingles` import site working.
-from .shinglefast import word_shingles_fast as word_shingles  # noqa: F401
 
 N_MINHASH = 8
 LSH_BANDS = 4
@@ -548,10 +543,11 @@ def embedding_near_pairs(
     the pair generation is linear-ish in corpus size (recall is the LSH
     tradeoff: near-identical vectors can straddle a bucket boundary on a
     near-zero projection). Output: (doc1, doc2, sim)."""
-    from .similarity import _dot, _norm, hyperplane_lsh_buckets
+    from .annfast import hyperplane_buckets_fast_exact
+    from .similarity import _dot, _norm
 
     emb = doc_embeddings(df, dims, text_col, id_col)
-    b = hyperplane_lsh_buckets(emb, n_planes, id_col, "embedding")
+    b = hyperplane_buckets_fast_exact(emb, n_planes, id_col, "embedding")
     withb = emb.join(b, id_col)
     a = withb.select(
         F.col(id_col).alias("doc1"), F.col("embedding").alias("qv"), "bucket"
@@ -701,12 +697,27 @@ def positioned_shingles(
     """``(id, pos, shingle)`` — every n-word shingle WITH its start
     position, NOT deduplicated: the input for span-level analyses
     (repeated-span audit) where :func:`word_shingles`'s set semantics
-    would lose the positions. r7: delegates to the vectorized twin
-    (``shinglefast.positioned_shingles_fast``) — identical rows, no
-    interpreted per-position concat."""
-    from .shinglefast import positioned_shingles_fast
+    would lose the positions. One Arrow pass over :func:`word_grams`."""
+    import pandas as _pd
+    from collections.abc import Iterator as _It
 
-    return positioned_shingles_fast(df, n, text_col, id_col)
+    def fn(batches: "_It[_pd.DataFrame]") -> "_It[_pd.DataFrame]":
+        for b in batches:
+            out_ids: list = []
+            out_pos: list = []
+            out_sh: list = []
+            for i, t in zip(b[id_col].values, b[text_col]):
+                grams = word_grams(t, n)
+                out_ids.extend([i] * len(grams))
+                out_pos.extend(range(len(grams)))
+                out_sh.extend(grams)
+            yield _pd.DataFrame(
+                {id_col: out_ids, "pos": out_pos, "shingle": out_sh}
+            )
+
+    return ensure_parallelism(df.select(id_col, text_col)).mapInPandas(
+        fn, schema=f"{id_col} long, pos int, shingle string"
+    )
 
 
 def repeated_spans(

@@ -124,50 +124,6 @@ PAGES_SCHEMA = T.StructType(
 )
 
 
-def split_pdf_pages_udtf(df: DataFrame) -> DataFrame:
-    """The same 1→N page split as a real Spark 4 Python UDTF (lateral
-    join). API-surface twin of :func:`split_pdf_pages` — kept for
-    completeness and differential-tested against it; the array+posexplode
-    form stays the default because UDTFs execute row-at-a-time Python,
-    which the north rule bans from hot paths."""
-    import base64
-
-    from pyspark.sql.functions import udtf
-
-    from ..core import pdfparse, textnorm
-
-    @udtf(returnType="page_no int, page_text string")
-    class SplitPages:
-        def eval(self, text: str, tool: str):
-            if tool != "pdf_reader" or text is None:
-                return
-            try:
-                pages = pdfparse.parse_pdf(
-                    base64.b64decode(text.strip(), validate=True)
-                )
-            except (ValueError, pdfparse.PdfParseError):
-                return
-            for i, p in enumerate(pages):
-                yield i + 1, textnorm.join_lines(
-                    textnorm.assemble_lines(p["tokens"])
-                )
-
-    spark = df.sparkSession
-    spark.udtf.register("split_pages_udtf", SplitPages)
-    df.select("conv_id", "turn_idx", "text", "tool").createOrReplaceTempView(
-        "_udtf_input"
-    )
-    out = spark.sql(
-        """
-        SELECT i.conv_id, i.turn_idx, p.page_no,
-               format_string('%s_%d_page_%03d.pdf', i.conv_id, i.turn_idx, p.page_no) AS page_name,
-               p.page_text
-        FROM _udtf_input i, LATERAL split_pages_udtf(i.text, i.tool) p
-        """
-    )
-    return out
-
-
 def split_pdf_pages(df: DataFrame) -> DataFrame:
     """1→N page explode, the reference's ``split_pdf_pages``
     (``work_order_extractor.py:1390-1445``) as array+``posexplode``:

@@ -1,19 +1,16 @@
-"""Similarity search over embedding columns (``array<float>``).
+"""Shared pieces of the ANN operators over embedding columns
+(``array<float>``).
 
-Two tiers, mirroring how ANN is deployed at scale:
+- :func:`ivf_centroids` trains the IVF model: hash-seeded init plus
+  Lloyd iterations, with decimal sums so the DuckDB oracle reproduces
+  the centroids bit for bit.
+- :func:`hyperplane_lsh_buckets_fast` is a float64 random-hyperplane
+  bucket pass for high-dimensional embeddings (no decimal emulation).
+- ``_dot``/``_norm`` are the JVM-side cosine pieces the text near-dup and
+  PQ operators use on small, already-bucketed pair sets.
 
-- :func:`cosine_topk` — exact brute force (cross join + JVM-side
-  ``zip_with``/``aggregate`` dot products). The BASELINE: correct for any
-  input, quadratic cost; right when the query set is small.
-- :func:`hyperplane_lsh_buckets` + :func:`lsh_topk` — random-hyperplane
-  LSH: each vector gets a small integer bucket from the sign pattern of
-  deterministic integer-valued hyperplane projections; candidates come
-  from equal (or near) buckets, so the join is linear-ish. The 100 TB
-  path: bucket first, brute-force only within buckets.
-
-Determinism: projections accumulate per-term ``DECIMAL`` so the sum is
-association-free; sims are ranked on ``round(sim, 4)`` with id tiebreaks —
-both choices make results identical across engines and partitionings.
+The searches themselves (exact cosine/L2 top-k, LSH, IVF, SemDeDup) live
+in :mod:`.annfast`.
 """
 
 from __future__ import annotations
@@ -22,6 +19,22 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 N_PLANES = 8
+_PLANE_MUL = 2654435761
+
+
+def _planes_matrix(dims: int, n_planes: int):
+    """(n_planes, dims) int64 hyperplane values: plane ``j`` at dimension
+    ``d`` is ``(1 + (j*64 + d) * 2654435761) % 2001 - 1000`` — the
+    deterministic integer family of the oracle's
+    ``queries._plane_val_sql``, reproducible everywhere with no stored
+    model."""
+    import numpy as np
+
+    d = np.arange(dims, dtype=np.int64)
+    return np.stack(
+        [(1 + (j * 64 + d) * _PLANE_MUL) % 2001 - 1000 for j in range(n_planes)],
+        axis=0,
+    )
 
 
 def _dot(a: str, b: str) -> F.Column:
@@ -42,257 +55,6 @@ def _norm(a: str) -> F.Column:
     )
 
 
-def cosine_topk(
-    df: DataFrame,
-    query_df: DataFrame | None = None,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    allow_full_scan: bool = False,
-) -> DataFrame:
-    """Exact top-k cosine neighbors of each query vector. Output:
-    (qid, nid, sim, rank).
-
-    This is the O(|query| × |corpus|) exact baseline; the scale paths are
-    :func:`lsh_topk` / :func:`ivf_topk`. ``query_df=None`` means every
-    vector queries the whole corpus — full-corpus × full-corpus — and is
-    refused unless ``allow_full_scan=True`` is passed explicitly, so the
-    quadratic usage is always a visible choice, never a silent default."""
-    if query_df is None and not allow_full_scan:
-        raise ValueError(
-            "cosine_topk without query_df is a full-corpus cross join; "
-            "pass a bounded query_df, or allow_full_scan=True for "
-            "small-corpus verification"
-        )
-    q = (query_df if query_df is not None else df).select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-    )
-    c = df.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"))
-    sim = F.round(_dot("qv", "nv") / (_norm("qv") * _norm("nv")), 4)
-    pairs = (
-        q.crossJoin(c)
-        .filter(F.col("qid") != F.col("nid"))
-        .select("qid", "nid", sim.alias("sim"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("nid"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "sim", "rank")
-    )
-
-
-def cosine_topk_fast(
-    df: DataFrame,
-    query_df: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Vectorized twin of :func:`cosine_topk` for a BOUNDED query set:
-    the queries are collected driver-side (they must fit in a broadcast —
-    same contract as any broadcast build side) and each Arrow batch of the
-    corpus does ONE numpy float64 matmul against the query matrix, emitting
-    only its LOCAL top-(k+1) per query; a final window takes the global
-    top-k. Per-batch output is ≤ |queries|×(k+1) rows, so the shuffle is
-    O(queries×k×partitions) — the corpus vectors never shuffle.
-
-    Exactness: local selection uses the SAME total order as the global
-    rank (round(sim,4) DESC, nid ASC), so a row dropped locally is
-    strictly worse than k+1 kept rows from its own batch and can never
-    enter the global top-k (the +1 covers the self-match removal).
-    Output: (qid, nid, sim, rank) — identical to cosine_topk."""
-    import numpy as np
-    import pandas as _pd
-    from collections.abc import Iterator as _It
-
-    q_rows = query_df.select(id_col, vec_col).collect()
-    if not q_rows:
-        raise ValueError("cosine_topk_fast needs a non-empty query_df")
-    qids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    qm = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    qn = np.sqrt((qm * qm).sum(axis=1))
-    kk = k + 1
-
-    def fn(batches: "_It[_pd.DataFrame]") -> "_It[_pd.DataFrame]":
-        for b in batches:
-            if len(b) == 0:
-                continue
-            mat = np.array(list(b[vec_col]), dtype=np.float64)
-            nids = np.asarray(b[id_col].values, dtype=np.int64)
-            nn = np.sqrt((mat * mat).sum(axis=1))
-            sims = np.round((qm @ mat.T) / (qn[:, None] * nn[None, :]), 4)
-            take = min(kk, sims.shape[1])
-            out_q, out_n, out_s = [], [], []
-            for qi in range(len(qids)):
-                order = np.lexsort((nids, -sims[qi]))[:take]
-                out_q.append(np.full(take, qids[qi]))
-                out_n.append(nids[order])
-                out_s.append(sims[qi][order])
-            yield _pd.DataFrame(
-                {
-                    "qid": np.concatenate(out_q),
-                    "nid": np.concatenate(out_n),
-                    "sim": np.concatenate(out_s),
-                }
-            )
-
-    cand = df.select(id_col, vec_col).mapInPandas(
-        fn, schema="qid long, nid long, sim double"
-    ).filter(F.col("qid") != F.col("nid"))
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("nid"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "sim", "rank")
-    )
-
-
-def l2_topk(
-    df: DataFrame,
-    query_df: DataFrame | None = None,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    allow_full_scan: bool = False,
-) -> DataFrame:
-    """Exact top-k squared-L2 neighbors of each query vector — the
-    ground truth for the PQ/ADC search, which approximates THIS metric
-    (not cosine). Output: (qid, nid, d2, rank), rank ascending by
-    ``round(q·q − 2·q·n + n·n, 4)`` with nid tiebreak — the same
-    one-final-round determinism contract as :func:`cosine_topk`, and the
-    same explicit full-scan guard."""
-    if query_df is None and not allow_full_scan:
-        raise ValueError(
-            "l2_topk without query_df is a full-corpus cross join; pass "
-            "a bounded query_df, or allow_full_scan=True for "
-            "small-corpus verification"
-        )
-    q = (query_df if query_df is not None else df).select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-    )
-    c = df.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"))
-    d2 = F.round(
-        _dot("qv", "qv") - F.lit(2.0) * _dot("qv", "nv") + _dot("nv", "nv"),
-        4,
-    )
-    pairs = (
-        q.crossJoin(c)
-        .filter(F.col("qid") != F.col("nid"))
-        .select("qid", "nid", d2.alias("d2"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("d2").asc(), F.col("nid"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "d2", "rank")
-    )
-
-
-def semdedup(
-    df: DataFrame,
-    n_centroids: int,
-    threshold: float,
-    centroids: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Semantic dedup, the SemDeDup shape (Abbas et al. 2023): cluster
-    the embedding space (IVF coarse quantization — trained centroids,
-    same train-once model as the ANN path), then WITHIN each cluster
-    drop every vector whose cosine to a smaller-id member is ≥
-    ``threshold`` (the greedy min-id-keeper rule shared with the text
-    near-dup materializer). Output: kept ``(id, centroid_id)`` rows.
-
-    Scale shape: the pairwise check runs within clusters only — K ∝ √N
-    keeps cells ~√N so total work is ~N^1.5 of narrow rows, never the
-    corpus-wide N² — and the comparison happens on ids + vectors already
-    co-partitioned by the assignment join. At the billions-of-embeddings
-    scale one subdivides clusters recursively; the within-cell machinery
-    is identical."""
-    import numpy as np
-    import pandas as _pd
-
-    assign = ivf_assign(
-        df, n_centroids, id_col=id_col, vec_col=vec_col, centroids=centroids
-    ).select(id_col, "centroid_id")
-    withv = assign.join(df.select(id_col, vec_col), id_col)
-
-    # within-cell scoring is VECTORIZED (the repo rule: pairwise cosines
-    # never go through interpreted zip_with folds — that shape measured
-    # 4x slower at a mere 5k x 64): one numpy matmul per cell, round-4
-    # sims (bit-matched to the SQL oracle everywhere tested), a column
-    # is dropped iff any strictly-smaller-id row reaches the threshold
-    # (upper-triangle any). Cells are ~N/K rows; at billion-vector scale
-    # one subdivides cells (recursive IVF) before this stage, keeping
-    # the per-group matrix bounded.
-    def fn(pdf: "_pd.DataFrame") -> "_pd.DataFrame":
-        pdf = pdf.sort_values(id_col)
-        ids = pdf[id_col].to_numpy()
-        mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-        if len(ids) < 2:
-            return _pd.DataFrame({id_col: ids[:0]})
-        norms = np.sqrt((mat * mat).sum(axis=1))
-        sims = np.round((mat @ mat.T) / (norms[:, None] * norms[None, :]), 4)
-        hit = np.triu(sims >= threshold, k=1)  # [i, j]: i < j and sim >= tau
-        return _pd.DataFrame({id_col: ids[hit.any(axis=0)]})
-
-    dropped = withv.groupBy("centroid_id").applyInPandas(
-        fn, schema=f"{id_col} long"
-    )
-    return assign.join(dropped, id_col, "left_anti").select(
-        id_col, "centroid_id"
-    )
-
-
-def _plane_projection(vec_col: str, j: int) -> F.Column:
-    """Projection of a vector onto deterministic integer plane ``j``,
-    computed per row with higher-order functions: ``transform`` (with the
-    element-index lambda) builds the per-term DECIMAL(28,9) products and
-    ``aggregate`` folds them in index order. Exact decimal arithmetic makes
-    the sum identical to any other summation order, so the value matches
-    the groupBy-SUM formulation the DuckDB oracle uses."""
-    terms = F.transform(
-        F.col(vec_col),
-        lambda x, d: (
-            x.cast("double")
-            * (
-                ((F.lit(1) + (F.lit(j) * 64 + d) * F.lit(2654435761)) % 2001)
-                - 1000
-            ).cast("double")
-        ).cast("decimal(28,9)"),
-    )
-    return F.aggregate(
-        terms,
-        F.lit(0).cast("decimal(28,9)"),
-        lambda acc, v: (acc + v).cast("decimal(28,9)"),
-    )
-
-
-def hyperplane_lsh_buckets(
-    df: DataFrame,
-    n_planes: int = N_PLANES,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Sign-pattern LSH bucket per vector. Hyperplanes are integer-valued
-    pseudo-random functions of (plane, dim) — reproducible everywhere, no
-    stored model. Output: (id_col, bucket:int).
-
-    Plan shape: ONE narrow projection — all ``n_planes`` projections are
-    unrolled as per-row higher-order-function expressions (n_planes is a
-    plan-time constant), so there is no explode and no shuffle. The
-    earlier formulation (posexplode dims × explode planes → two groupBy
-    shuffles) multiplied rows by dims×planes before shuffling — an 8192×
-    blow-up at 1024-dim — and was the one scale-killer flagged in round 1."""
-    bucket = F.lit(0)
-    for j in range(n_planes):
-        bucket = bucket + F.when(
-            _plane_projection(vec_col, j) > 0, F.lit(1 << j)
-        ).otherwise(F.lit(0))
-    return df.select(id_col, bucket.cast("int").alias("bucket"))
-
-
 IVF_ITERS = 2
 
 
@@ -302,16 +64,18 @@ def hyperplane_lsh_buckets_fast(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Vectorized twin of :func:`hyperplane_lsh_buckets` for HIGH-DIM
-    embeddings: one Arrow-batched pass doing a single numpy float64 matmul
-    per batch against the (dims × n_planes) plane matrix — C-speed, still
-    zero shuffle and deterministic (row-local, fixed-order float64 dot).
+    """Random-hyperplane LSH bucket per vector for HIGH-DIM embeddings:
+    one Arrow-batched pass doing a single numpy float64 matmul per batch
+    against the (dims × n_planes) plane matrix — zero shuffle and
+    deterministic (row-local, fixed-order float64 dot). Output:
+    (id_col, bucket:int).
 
-    The decimal-exact variant exists so the DuckDB oracle's groupBy-SUM
-    matches bit-for-bit; at 256-dim+ the JVM decimal fold costs ~10× more
-    than this matmul, so production uses this path. The two agree unless a
-    projection sits within float64 rounding of zero (asserted empirically
-    in tests over the bench fixture)."""
+    The planes are the integer family of :func:`_planes_matrix`, but
+    the projection is rounded in float64, not summed as per-term
+    decimal(28,9) the way the oracled ``annfast.hyperplane_buckets_fast_exact``
+    does — so the two agree except where a projection sits within float64
+    rounding of zero. This is its own approximate operator: at 256-dim+
+    the decimal emulation costs more than the matmul."""
     import numpy as np
     import pandas as _pd
     from collections.abc import Iterator as _It
@@ -326,15 +90,8 @@ def hyperplane_lsh_buckets_fast(
             mat = np.array(list(b[vec_col]), dtype=np.float64)
             dims = mat.shape[1]
             if dims not in planes_cache:
-                d = np.arange(dims, dtype=np.int64)
-                planes_cache[dims] = np.stack(
-                    [
-                        ((1 + (j * 64 + d) * 2654435761) % 2001 - 1000).astype(
-                            np.float64
-                        )
-                        for j in range(n_planes)
-                    ],
-                    axis=1,
+                planes_cache[dims] = _planes_matrix(dims, n_planes).T.astype(
+                    np.float64
                 )  # (dims, n_planes)
             proj = mat @ planes_cache[dims]
             bits = (proj > 0).astype(np.int64)
@@ -436,261 +193,3 @@ def ivf_centroids(
             )
         )
     return cents
-
-
-def ivf_assign(
-    df: DataFrame,
-    n_centroids: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
-) -> DataFrame:
-    """IVF coarse quantization: assign every vector to its nearest trained
-    centroid (:func:`ivf_centroids`). The assignment join is a broadcast
-    cross-join against n_centroids rows — O(rows × centroids), never
-    O(rows²). Output: (id_col, centroid_id, centroid_sim)."""
-    if centroids is not None:
-        cents = centroids
-    else:
-        # train once, MATERIALIZE the model (n_centroids rows), broadcast:
-        # without this, every downstream reference to the assignment (e.g.
-        # ivf_topk's self-join) would re-execute the whole Lloyd-iteration
-        # subtree — the model is data, not a plan
-        trained = ivf_centroids(df, n_centroids, IVF_ITERS, id_col, vec_col)
-        cents = df.sparkSession.createDataFrame(
-            trained.collect(), trained.schema
-        )
-    v = df.select(id_col, F.col(vec_col).alias("vv"))
-    sim = F.round(_dot("vv", "cv") / (_norm("vv") * _norm("cv")), 4)
-    scored = v.join(F.broadcast(cents)).select(
-        id_col, "centroid_id", sim.alias("centroid_sim")
-    )
-    # argmax via max_by (hash agg, no sort) — winner identical to the
-    # oracle's row_number(ORDER BY centroid_sim DESC, centroid_id)
-    return (
-        scored.groupBy(id_col)
-        .agg(
-            F.max_by(
-                F.struct("centroid_id", "centroid_sim"),
-                F.struct(
-                    F.col("centroid_sim"),
-                    (-F.col("centroid_id")).alias("nc"),
-                ),
-            ).alias("w")
-        )
-        .select(
-            id_col,
-            F.col("w.centroid_id").alias("centroid_id"),
-            F.col("w.centroid_sim").alias("centroid_sim"),
-        )
-    )
-
-
-def _group_local_topk_fn(k: int, id_col: str, vec_col: str):
-    """applyInPandas scorer: one group = one bucket/cell; computes the
-    group's cosine matrix with CHUNKED numpy matmuls (bounded memory even
-    on a hot group) and emits each member's local top-``k`` neighbors
-    under the GLOBAL total order (round(sim,4) DESC, nid ASC). Replaces
-    the pair-materializing join + interpreted ``zip_with`` fold — at 10k
-    vectors that fold was scoring 10^7 exploded pairs element-by-element;
-    here the pairs never materialize and the arithmetic is one BLAS call
-    per chunk."""
-    import numpy as np
-    import pandas as _pd
-
-    def fn(pdf: "_pd.DataFrame") -> "_pd.DataFrame":
-        ids = np.asarray(pdf[id_col].values, dtype=np.int64)
-        mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-        m = len(ids)
-        if m < 2:
-            return _pd.DataFrame({"qid": [], "nid": [], "sim": []}).astype(
-                {"qid": "int64", "nid": "int64", "sim": "float64"}
-            )
-        norms = np.sqrt((mat * mat).sum(axis=1))
-        take = min(k + 1, m)  # +1: the self-match is removed downstream
-        out_q, out_n, out_s = [], [], []
-        for lo in range(0, m, 1024):  # chunk queries: memory ≤ 1024×m sims
-            hi = min(lo + 1024, m)
-            sims = np.round(
-                (mat[lo:hi] @ mat.T) / (norms[lo:hi, None] * norms[None, :]), 4
-            )
-            for qi in range(hi - lo):
-                order = np.lexsort((ids, -sims[qi]))[:take]
-                out_q.append(np.full(take, ids[lo + qi]))
-                out_n.append(ids[order])
-                out_s.append(sims[qi][order])
-        return _pd.DataFrame(
-            {
-                "qid": np.concatenate(out_q),
-                "nid": np.concatenate(out_n),
-                "sim": np.concatenate(out_s),
-            }
-        )
-
-    return fn
-
-
-def ivf_topk(
-    df: DataFrame,
-    k: int = 3,
-    n_centroids: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
-) -> DataFrame:
-    """Approximate top-k: brute-force cosine WITHIN each IVF cell (nprobe=1).
-    The cluster-scale shape: assignment is linear; search is one vectorized
-    applyInPandas per cell (chunked numpy matmul — pairs never materialize,
-    only each query's local top-k rows leave the cell). Cells partition the
-    corpus, so per-cell top-k IS the final answer; a light window attaches
-    ranks. Output: (qid, nid, sim, rank).
-
-    ``centroids``: pass the materialized model from :func:`ivf_centroids`.
-    Training is a property of the corpus, not of a query — deployments
-    train once (on a sample: K ∝ √N centroids is the standard sizing, so
-    cells stay ~√N and within-cell work stays ~N^1.5 total, never N²)
-    and amortize the model across every search. Omitting it re-trains
-    per call, which is only acceptable in one-shot verification."""
-    assign = ivf_assign(df, n_centroids, id_col, vec_col, centroids=centroids)
-    withc = df.select(id_col, vec_col).join(
-        assign.select(id_col, "centroid_id"), id_col
-    )
-    local = withc.groupBy("centroid_id").applyInPandas(
-        _group_local_topk_fn(k, id_col, vec_col),
-        schema="qid long, nid long, sim double",
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("nid"))
-    return (
-        local.filter(F.col("qid") != F.col("nid"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "sim", "rank")
-    )
-
-
-def lsh_topk(
-    df: DataFrame,
-    k: int = 5,
-    n_planes: int = N_PLANES,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_salts: int = 4,
-) -> DataFrame:
-    """Approximate top-k: brute-force cosine WITHIN each LSH bucket.
-    Recall is tunable via n_planes (fewer planes → bigger buckets →
-    higher recall, more compute). Output: (qid, nid, sim, rank).
-
-    De-skew (r2 judge finding): parallelism of a plain bucket join caps at
-    #buckets (256 at 8 planes), and one hot bucket does |bucket|² work in a
-    single task. The query side therefore gets a deterministic salt
-    (``pmod(xxhash64(qid), n_salts)``) and the candidate side is replicated
-    across all salts, so the join key is ``(bucket, salt)``: per-task work
-    drops to |bucket|²/n_salts and task count rises to #buckets × n_salts,
-    with bit-identical results (every (q, c) pair still meets exactly
-    once). ``n_salts=1`` disables the replication."""
-    b = hyperplane_lsh_buckets(df, n_planes, id_col, vec_col)
-    withb = df.join(b, id_col)
-    a = withb.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"), "bucket"
-    )
-    c = withb.select(
-        F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"), "bucket"
-    )
-    if n_salts > 1:
-        a = a.withColumn("_salt", F.pmod(F.xxhash64("qid"), F.lit(n_salts)))
-        c = c.withColumn(
-            "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-        ).withColumn("_salt", F.col("_salt").cast("long"))
-        join_keys = ["bucket", "_salt"]
-    else:
-        join_keys = ["bucket"]
-    sim = F.round(_dot("qv", "nv") / (_norm("qv") * _norm("nv")), 4)
-    pairs = (
-        a.join(c, join_keys)
-        .filter(F.col("qid") != F.col("nid"))
-        .select("qid", "nid", sim.alias("sim"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("nid"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "sim", "rank")
-    )
-
-
-def banded_lsh_buckets(
-    df: DataFrame,
-    bands: int = 4,
-    planes_per_band: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Multi-table (banded) hyperplane LSH: ``bands`` independent hash
-    tables of ``planes_per_band`` planes each (plane j of band b is global
-    plane ``b*planes_per_band + j`` from the same deterministic integer
-    family). Output: (id_col, band:int, bucket:int) — one row per (vector,
-    band).
-
-    Why banded beats one wide table at scale (r2 judge finding #4): a
-    single table's bucket count is fixed at 2^planes — more planes shrink
-    buckets but crater recall; fewer planes give hot |bucket|² joins.
-    Banding is the standard OR-construction: each band keeps buckets small
-    (2^r per band), and a true neighbor pair is found if it collides in
-    ANY band — recall 1-(1-p^r)^b is tuned by (b, r) without fattening any
-    single bucket. The plan stays ONE narrow projection (all b×r
-    projections unrolled per row) + one explode to b rows per vector."""
-    per_band = []
-    for band in range(bands):
-        bucket = F.lit(0)
-        for p in range(planes_per_band):
-            j = band * planes_per_band + p
-            bucket = bucket + F.when(
-                _plane_projection(vec_col, j) > 0, F.lit(1 << p)
-            ).otherwise(F.lit(0))
-        per_band.append(
-            F.struct(
-                F.lit(band).cast("int").alias("band"),
-                bucket.cast("int").alias("bucket"),
-            )
-        )
-    return df.select(
-        id_col, F.explode(F.array(*per_band)).alias("bb")
-    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-
-
-def lsh_topk_banded(
-    df: DataFrame,
-    k: int = 3,
-    bands: int = 4,
-    planes_per_band: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k via banded LSH: candidates = pairs colliding in
-    ANY band (deduped), then exact cosine + rank over candidates only.
-    Output: (qid, nid, sim, rank).
-
-    Plan: one vectorized applyInPandas per (band, bucket) group emits each
-    member's LOCAL top-(k+1) under the global total order; the union over
-    bands provably contains the global top-k (if x is a global top-k
-    neighbor of q, then in ANY bucket both share, fewer than k candidates
-    beat x — they would be global top-k too — so x survives the local
-    cut). Duplicate pairs from multi-band collisions carry bit-identical
-    sims (same deterministic matmul on the same two vectors), so a
-    ``distinct`` collapses them before the final window. Pairs never
-    materialize; Arrow traffic is ``bands`` copies of the vectors and the
-    shuffle carries O(rows × bands × k) candidate rows."""
-    bb = banded_lsh_buckets(df, bands, planes_per_band, id_col, vec_col)
-    withv = df.select(id_col, vec_col).join(bb, id_col)
-    local = withv.groupBy("band", "bucket").applyInPandas(
-        _group_local_topk_fn(k, id_col, vec_col),
-        schema="qid long, nid long, sim double",
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("nid"))
-    return (
-        local.filter(F.col("qid") != F.col("nid"))
-        .distinct()
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "sim", "rank")
-    )

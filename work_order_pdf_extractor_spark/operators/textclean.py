@@ -16,8 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .common import stable_hash64
-from .shinglefast import word_shingles_fast as word_shingles
+from .common import stable_hash64, word_shingles
 
 # Patterns chosen to parse identically under Java regex (Spark) and RE2
 # (DuckDB oracle): character classes, bounded repetition, no backrefs.

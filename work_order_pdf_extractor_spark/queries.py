@@ -1501,7 +1501,7 @@ EMB_PLANES = 6
 
 def _plane_val_sql(j: str, d: str) -> str:
     """Integer hyperplane value for (plane j, dim d) — must stay in
-    lockstep with operators/similarity.py `_plane_projection`."""
+    lockstep with operators/similarity.py `_planes_matrix`."""
     return f"(((1 + ({j}*64 + {d}) * 2654435761) % 2001) - 1000)"
 
 
@@ -2065,11 +2065,13 @@ WHERE CAST(CONCAT('0x', substr(md5(lang || '#' || CAST(doc_id AS VARCHAR)), 1, 8
 def q_cosine_topk(spark, sf_dir):
     """Brute-force cosine top-k: for query vectors (vec_id < 5), the top-5
     nearest neighbors. Rank on ROUND(sim, 4) with vec_id tiebreak so both
-    engines order identically despite last-ulp float differences."""
-    from .operators import similarity
+    engines order identically despite last-ulp float differences. One
+    numpy matmul per Arrow batch with per-batch local top-k, so only
+    O(queries×k) rows per partition ever shuffle."""
+    from .operators import annfast
 
     emb = ld(spark, sf_dir, "embeddings")
-    return similarity.cosine_topk(
+    return annfast.cosine_topk_fast2(
         emb, query_df=emb.filter(F.col("vec_id") < 5), k=5
     )
 
@@ -2091,20 +2093,6 @@ WHERE rank <= 5
 """
 
 
-def q_cosine_topk_fast(spark, sf_dir):
-    """Production twin of q_cosine_topk: one numpy matmul per Arrow batch
-    with per-batch local top-k, so only O(queries×k) rows per partition
-    ever shuffle. Same oracle as the JVM-fold variant — the two must agree
-    to the rounded digit (asserted in tests and by the shared oracle).
-    r7: the annfast twin (vectorized per-batch selection)."""
-    from .operators import annfast
-
-    emb = ld(spark, sf_dir, "embeddings")
-    return annfast.cosine_topk_fast2(
-        emb, query_df=emb.filter(F.col("vec_id") < 5), k=5
-    )
-
-
 N_PLANES = 8
 
 
@@ -2114,11 +2102,9 @@ def q_ann_lsh_buckets(spark, sf_dir):
     sign bits of the 8 projections. Per-term DECIMAL rounding makes the
     projection sum order-independent, so signs agree across engines.
     At 100 TB you bucket-join instead of cross-joining embeddings.
-
-    r7: computed by the vectorized exact twin (operators/annfast.py) —
-    the interpreted per-term BigDecimal fold was the measured cost of
-    this query; the twin reproduces the decimal(28,9) HALF_UP semantics
-    bit-exactly (differential-tested) in one numpy pass."""
+    One numpy pass reproduces the decimal(28,9) HALF_UP per-term
+    semantics exactly (operators/annfast.py), so no interpreted
+    BigDecimal fold runs per row."""
     from .operators import annfast
 
     return annfast.hyperplane_buckets_fast_exact(
@@ -2147,10 +2133,12 @@ FROM proj GROUP BY vec_id
 
 def q_lsh_topk(spark, sf_dir):
     """Approximate top-k: cosine ranking WITHIN hyperplane-LSH buckets —
-    the scale path that replaces the cross join of q_cosine_topk."""
-    from .operators import similarity
+    the scale path that replaces brute-force q_cosine_topk. Each
+    bucket is scored by one grouped numpy matmul; pairs never
+    materialize."""
+    from .operators import annfast
 
-    return similarity.lsh_topk(
+    return annfast.lsh_topk_fast(
         ld(spark, sf_dir, "embeddings"), k=3, n_planes=N_PLANES
     )
 
@@ -2204,12 +2192,8 @@ def q_lsh_topk_banded(spark, sf_dir):
     independent 3-plane hash tables; candidates collide in ANY band
     (OR-construction), so no single bucket needs to be big for recall and
     per-(band, bucket) join work stays 2^r-bounded. This is the 100-TB
-    answer to the single-table hot-bucket risk.
-
-    r7: the annfast twin — exact decimal bucket bits without the
-    interpreted BigDecimal fold, and argpartition-based local top-k
-    selection instead of a per-query full lexsort (the two measured
-    costs of this query; results differential-tested identical)."""
+    answer to the single-table hot-bucket risk. Bucket bits and local
+    top-k selection are vectorized (operators/annfast.py)."""
     from .operators import annfast
 
     return annfast.lsh_topk_banded_fast(
@@ -2265,7 +2249,7 @@ _COS = (
 
 
 def _ivf_centroid_ctes(k: int = IVF_K, iters: int = IVF_ITERS) -> tuple[str, str]:
-    """DuckDB twin of operators.similarity.ivf_centroids: hash-seeded init
+    """DuckDB oracle of operators.similarity.ivf_centroids: hash-seeded init
     + Lloyd iterations with DECIMAL(28,9) per-dimension sums (exact, so
     both engines produce bit-identical centroids). Returns (ctes, name of
     the final centroid CTE)."""
@@ -2343,17 +2327,17 @@ def _trained_ivf_centroids(spark, sf_dir):
 
 
 def q_ivf_assign(spark, sf_dir):
-    """IVF coarse quantization: nearest-centroid assignment (broadcast
-    cross-join vs n_centroids rows — the linear half of IVF ANN).
-    Centroids are TRAINED (hash-seeded init + 2 deterministic Lloyd
-    iterations with exact decimal sums), reproduced identically by the
-    DuckDB oracle; the trained model is session-cached and passed in, so
-    repeated queries never re-run training."""
-    from .operators import similarity
+    """IVF coarse quantization: nearest-centroid assignment (one numpy
+    matmul per Arrow batch against the n_centroids-row model — the linear
+    half of IVF ANN). Centroids are TRAINED (hash-seeded init + 2
+    deterministic Lloyd iterations with exact decimal sums), reproduced
+    identically by the DuckDB oracle; the trained model is session-cached
+    and passed in, so repeated queries never re-run training."""
+    from .operators import annfast
 
-    return similarity.ivf_assign(
-        ld(spark, sf_dir, "embeddings"), IVF_K,
-        centroids=_trained_ivf_centroids(spark, sf_dir),
+    return annfast.ivf_assign_fast(
+        ld(spark, sf_dir, "embeddings"),
+        _trained_ivf_centroids(spark, sf_dir),
     )
 
 
@@ -2364,11 +2348,7 @@ def q_ivf_topk(spark, sf_dir):
     """IVF ANN: brute-force cosine within each IVF cell (nprobe=1) — the
     second scale path beside hyperplane LSH. Search runs against the
     session-cached TRAINED model (train once, search many — at 100 TB
-    re-training per query would be the wrong default story).
-
-    r7: the annfast twin — vectorized nearest-centroid assignment (one
-    matmul per Arrow batch vs the interpreted per-(row, centroid) dot
-    fold) and argpartition local top-k; differential-tested identical."""
+    re-training per query would be the wrong default story)."""
     from .operators import annfast
 
     return annfast.ivf_topk_fast(
@@ -2413,10 +2393,7 @@ def q_ivf_topk_nprobe(spark, sf_dir):
     nprobe=1 and 0.47 at the old nprobe=2 default — see SCALE.md for
     the full (K, nprobe) curve incl. K ~ sqrt(N) sizing. Within-cell
     scoring is the chunked-numpy roles scorer, never a pair
-    materialization.
-
-    r7: the annfast twin — vectorized assignment/probe ranking and
-    argpartition local top-k; differential-tested identical."""
+    materialization."""
     from .operators import annfast
 
     return annfast.ivf_topk_nprobe_fast(
@@ -3134,11 +3111,11 @@ SELECT doc_id, lang, n_chars, md5(text) AS text_md5 FROM documents
 
 
 def q_bucketed_join(spark, sf_dir):
-    """Bucketed-table surface, driver-attested: orders and lineitem are
+    """Bucketed-table surface, oracle-checked: orders and lineitem are
     written as co-bucketed metastore tables (bucketBy 8 on the order
     key) and joined WITHOUT any shuffle Exchange (the co-located join
     plans/bucketing.py provides; exchange-freedom is plan-asserted in
-    tests/test_bucketing.py — this query attests the VALUES through the
+    tests/test_bucketing.py — this query checks the VALUES through the
     same layout). Output: per-orderpriority revenue over the bucketed
     join."""
     from .plans import bucketing
@@ -3980,14 +3957,11 @@ def q_semdedup(spark, sf_dir):
     to a smaller-id member is ≥ τ — the embedding-space twin of the
     text near-dup materializer's greedy keeper. Returns the kept
     (vec_id, centroid_id) corpus; the oracle replays clustering (same
-    training CTEs as IVF) and the within-cell drop rule.
-
-    r7: the annfast twin — vectorized assignment against the
-    materialized model; the within-cell scorer was already one matmul."""
+    training CTEs as IVF) and the within-cell drop rule."""
     from .operators import annfast
 
     return annfast.semdedup_fast(
-        ld(spark, sf_dir, "embeddings"), IVF_K, SEMDEDUP_TAU,
+        ld(spark, sf_dir, "embeddings"), SEMDEDUP_TAU,
         centroids=_trained_ivf_centroids(spark, sf_dir),
     )
 
@@ -4023,8 +3997,7 @@ def q_ann_recall(spark, sf_dir):
     deterministic top-3 lists (round-4 sims, id tiebreaks), so the
     hit counts — and therefore recall — are integer-exact.
 
-    r7: every search runs through its annfast twin WITH the query set
-    passed in (roles scorer): the gauge consumes only qid-in-query-set
+    Every search runs WITH the query set passed in (roles scorer): the gauge consumes only qid-in-query-set
     rows, and a query's top-k is independent of other queries, so the
     joined result is unchanged while the approximate searches stop
     scoring |corpus|² pairs for queries whose rows the recall join
@@ -4575,10 +4548,9 @@ def q_lsh_pair_quality(spark, sf_dir, persisted_out: list | None = None):
     shingle table is persisted and shared by both branches (same pattern
     as dedup_near_materialize)."""
     from .operators import dedup
-    from .operators.shinglefast import word_shingles_fast
 
     docs = ld(spark, sf_dir, "documents")
-    sh = word_shingles_fast(docs).persist()
+    sh = dedup.word_shingles(docs).persist()
     if persisted_out is not None:  # cache-lifecycle escape hatch
         persisted_out.append(sh)
     cand = (
@@ -4853,16 +4825,6 @@ SELECT doc1, doc2, hamming FROM pairs WHERE hamming <= 3
 
 
 REGISTRY: dict[str, tuple[Callable, str | None]] = {
-    # Ordering IS the attestation policy: the driver checks the first 50
-    # slots, and tools/attest.py mechanically derives which queries are
-    # "pending" (changed since their last green driver row, per content
-    # fingerprint over fn + oracle + dependency-module closure). Every
-    # pending query MUST sit in this first block; tests/test_attestation
-    # enforces it against the committed ATTESTATION.json. This block was
-    # regenerated programmatically from the manifest (pending first, then
-    # attested by ascending attested_round so the stalest attestations
-    # refresh in the window spill-over slots).
-    # -- block 0: pending per ATTESTATION.json (changed / new / stale) ----
     "decontaminate_spans": (q_decontaminate_spans, SQL_DECONTAMINATE_SPANS),
     "excise_spans": (q_excise_spans, SQL_EXCISE_SPANS),
     "image_phash_pairs": (q_image_phash_pairs, SQL_IMAGE_PHASH_PAIRS),
@@ -4896,7 +4858,6 @@ REGISTRY: dict[str, tuple[Callable, str | None]] = {
     "decontaminate": (q_decontaminate, SQL_DECONTAMINATE),
     "semdedup": (q_semdedup, SQL_SEMDEDUP),
     "ivf_topk": (q_ivf_topk, SQL_IVF_TOPK),
-    "cosine_topk_fast": (q_cosine_topk_fast, SQL_COSINE_TOPK),
     "ann_lsh_buckets": (q_ann_lsh_buckets, SQL_ANN_LSH),
     "tfidf_terms": (q_tfidf_terms, SQL_TFIDF),
     "fuzzy_semi_join": (q_fuzzy_semi_join, SQL_FUZZY_SEMI_JOIN),
@@ -4914,7 +4875,6 @@ REGISTRY: dict[str, tuple[Callable, str | None]] = {
     "frame_sample": (q_frame_sample, SQL_FRAME_SAMPLE),
     "mulaw_decode": (q_mulaw_decode, SQL_MULAW_DECODE),
     "audio_decode": (q_audio_decode, SQL_AUDIO_DECODE),
-    # -- attested, stalest attested_round first ---------------------------
     "approx_percentile": (q_approx_percentile, SQL_APPROX_PERCENTILE),
     "base64_funcs": (q_base64_funcs, SQL_BASE64_FUNCS),
     "case_quality_flags": (q_case_quality_flags, SQL_CASE_QUALITY),
