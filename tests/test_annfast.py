@@ -114,6 +114,55 @@ def test_select_bottomk_matches_lexsort_with_ties():
         assert list(ids[idx[qi]]) == list(ids[ref])
 
 
+def _decimal_sums_reference(mat, planes):
+    """SUM(CAST(x*plane AS DECIMAL(28,9))) * 10^9 per (row, plane), term
+    by term in Python ``decimal``: the double's shortest decimal string
+    rounded HALF_UP to scale 9 (Spark's double->decimal cast)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    q9 = Decimal("1.000000000")
+    return np.array(
+        [
+            [
+                sum(
+                    int(
+                        Decimal(repr(float(x) * float(p))).quantize(
+                            q9, rounding=ROUND_HALF_UP
+                        )
+                        * 10**9
+                    )
+                    for x, p in zip(row, plane)
+                )
+                for plane in planes
+            ]
+            for row in mat
+        ],
+        dtype=object,
+    )
+
+
+@pytest.mark.parametrize("scale", [1e1, 1e2, 1e3, 1e4, 1e5])
+def test_proj_decimal_sums_exact_at_large_magnitudes(scale):
+    """Past |x*plane| ~ 10^4 the float64 error of x*plane*10^9 exceeds a
+    fixed 10^-3 guard band; the band must widen with the magnitude so
+    every term still rounds like the engine's decimal cast."""
+    rng = np.random.default_rng(int(scale))
+    mat = rng.uniform(-scale, scale, (40, 16)).astype(np.float32)
+    mat = mat.astype(np.float64)
+    planes = similarity._planes_matrix(16, 6)
+    got = annfast._proj_decimal_sums(mat, planes)
+    want = _decimal_sums_reference(mat, planes)
+    assert got.dtype == np.int64
+    assert (got.astype(object) == want).all()
+
+
+def test_proj_decimal_sums_raise_past_int64():
+    mat = np.full((2, 16), 1e9, dtype=np.float64)
+    planes = similarity._planes_matrix(16, 2)
+    with pytest.raises(OverflowError):
+        annfast._proj_decimal_sums(mat, planes)
+
+
 def test_banded_buckets_fast_exact_equality(spark, emb):
     _matches_oracle(annfast.banded_buckets_fast(emb, 8, 3), _buckets_sql("embeddings", 8, 3))
 

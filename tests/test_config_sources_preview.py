@@ -1,35 +1,12 @@
-"""Config store round-trip (S3/S9), sources readers (S1/S2), preview
-entry point (SURVEY §3.2)."""
+"""Sources readers (S1/S2) and the preview entry point (SURVEY §3.2)."""
 
 from __future__ import annotations
 
 import pytest
 
-from work_order_pdf_extractor_spark import config as C
 from work_order_pdf_extractor_spark import fixtures
 from work_order_pdf_extractor_spark.plans import pipeline
 from work_order_pdf_extractor_spark.sources import transcripts as S
-
-
-def test_config_defaults_and_roundtrip(tmp_path):
-    cfg = C.JobConfig(crop_x2=0.6, n_buckets=32)
-    p = str(tmp_path / "config.json")
-    C.save_config(cfg, p)
-    loaded = C.load_config(p)
-    assert loaded == cfg
-    assert loaded.crop == (0.0, 0.0, 0.6, 0.5)
-
-
-def test_config_missing_file_gives_defaults(tmp_path):
-    cfg = C.load_config(str(tmp_path / "nope.json"))
-    assert cfg == C.JobConfig()
-
-
-def test_config_ignores_unknown_keys(tmp_path):
-    p = str(tmp_path / "config.json")
-    with open(p, "w") as f:
-        f.write('{"crop_x1": 0.1, "api_key": "should-not-crash"}')
-    assert C.load_config(p).crop_x1 == 0.1
 
 
 def test_read_transcripts_parquet_fallback(spark, tmp_path, tiny_transcripts_pd):

@@ -148,8 +148,11 @@ def test_progressive_decode_equals_baseline_property(w, h, seed, lossy):
     rng = np.random.RandomState(seed)
     samples = rng.randint(0, 256, size=w * h).tolist()
     quant = J.STD_LUMA_QUANT if lossy else None
-    base = J.decode_baseline(J.encode_baseline_gray(w, h, samples, quant=quant))
-    prog = J.decode_baseline(
-        J.encode_progressive_gray(w, h, samples, quant=quant)
+    bw, bh, base = J.decode_rgb_arrays(
+        J.encode_baseline(w, h, [samples], luma_quant=quant)
     )
-    assert base == prog
+    pw, ph, prog = J.decode_rgb_arrays(
+        J.encode_progressive(w, h, [samples], luma_quant=quant)
+    )
+    assert (bw, bh) == (pw, ph) == (w, h)
+    assert all(np.array_equal(b, q) for b, q in zip(base, prog))

@@ -21,10 +21,23 @@ import pytest
 from work_order_pdf_extractor_spark.core import jpegcodec as J
 
 
-def _gray_pair(w, h, samples, quant=None):
-    base = J.decode_baseline(J.encode_baseline_gray(w, h, samples, quant=quant))
-    prog = J.decode_baseline(J.encode_progressive_gray(w, h, samples, quant=quant))
+def _decode(payload):
+    """(width, height, [(r, g, b), ...]) from the one decoder."""
+    w, h, rgb = J.decode_rgb_arrays(payload)
+    return w, h, list(zip(*(c.tolist() for c in rgb)))
+
+
+def _pair(w, h, planes, sampling=(1, 1), quant=None, chroma_quant=None):
+    """Decoded baseline and progressive encodings of the same planes."""
+    base = _decode(J.encode_baseline(w, h, planes, sampling, quant, chroma_quant))
+    prog = _decode(
+        J.encode_progressive(w, h, planes, sampling, quant, chroma_quant)
+    )
     return base, prog
+
+
+def _gray_pair(w, h, samples, quant=None):
+    return _pair(w, h, [samples], quant=quant)
 
 
 @pytest.mark.parametrize("w,h", [(8, 8), (16, 8), (24, 16), (17, 13), (40, 33)])
@@ -44,14 +57,7 @@ def test_color444_progressive_equals_baseline(w, h, quant):
     cb = rng.randint(0, 256, size=w * h).tolist()
     cr = rng.randint(0, 256, size=w * h).tolist()
     cq = J.STD_CHROMA_QUANT if quant else None
-    base = J.decode_baseline(
-        J.encode_baseline_ycbcr(w, h, y, cb, cr, luma_quant=quant, chroma_quant=cq)
-    )
-    prog = J.decode_baseline(
-        J.encode_progressive_ycbcr(
-            w, h, y, cb, cr, luma_quant=quant, chroma_quant=cq, subsampling="444"
-        )
-    )
+    base, prog = _pair(w, h, [y, cb, cr], (1, 1), quant, cq)
     assert base == prog
 
 
@@ -64,10 +70,7 @@ def test_color420_progressive_equals_baseline(w, h):
     y = rng.randint(0, 256, size=w * h).tolist()
     cb = rng.randint(0, 256, size=cw * ch).tolist()
     cr = rng.randint(0, 256, size=cw * ch).tolist()
-    base = J.decode_baseline(J.encode_baseline_ycbcr420(w, h, y, cb, cr))
-    prog = J.decode_baseline(
-        J.encode_progressive_ycbcr(w, h, y, cb, cr, subsampling="420")
-    )
+    base, prog = _pair(w, h, [y, cb, cr], (2, 2))
     assert base == prog
 
 
@@ -124,13 +127,13 @@ def test_constant_blocks_bit_exact_round_trip():
     # decoded samples equal the input exactly (DC-only, near-lossless)
     w, h = 24, 16
     samples = [((x // 8) + 2 * (y // 8) + 7) % 256 for y in range(h) for x in range(w)]
-    _, _, rgb = J.decode_baseline(J.encode_progressive_gray(w, h, samples))
+    _, _, rgb = _decode(J.encode_progressive(w, h, [samples]))
     assert [r for r, _g, _b in rgb] == samples
 
 
 def test_progressive_stream_structure():
     # SOF2 marker present; multiple SOS scans; per-scan DHT segments
-    payload = J.encode_progressive_gray(16, 16, list(range(256)))
+    payload = J.encode_progressive(16, 16, [list(range(256))])
     assert payload[:2] == b"\xff\xd8" and payload[-2:] == b"\xff\xd9"
     markers = []
     i = 2
@@ -142,21 +145,15 @@ def test_progressive_stream_structure():
     assert markers.count(0xDA) == len(J._SCRIPT_GRAY)
 
 
-def test_decode_baseline_dispatches_sof2():
-    samples = [7] * 64
-    prog = J.encode_progressive_gray(8, 8, samples)
-    assert J.decode_baseline(prog) == J.decode_progressive(prog)
-
-
 def test_progressive_rejects_restart_intervals():
     # DRI inside a progressive stream is outside the documented subset
-    prog = bytearray(J.encode_progressive_gray(8, 8, [7] * 64))
+    prog = bytearray(J.encode_progressive(8, 8, [[7] * 64]))
     # splice a DRI segment right after APP0 (SOI + APP0 header = 2 + 18)
     dri = b"\xff\xdd\x00\x04\x00\x04"
     idx = 2 + 2 + 16 + 2  # SOI + APP0(len 16) + next marker start
     spliced = bytes(prog[: idx - 2]) + dri + bytes(prog[idx - 2 :])
     with pytest.raises(NotImplementedError):
-        J.decode_progressive(spliced)
+        J.decode_rgb_arrays(spliced)
 
 
 def test_optimal_huffman_tables_are_canonical():
@@ -223,12 +220,7 @@ def test_property_color420_progressive_equals_baseline(w, h, seed):
     y = rng.randint(0, 256, size=w * h).tolist()
     cb = rng.randint(0, 256, size=cw * ch).tolist()
     cr = rng.randint(0, 256, size=cw * ch).tolist()
-    base = J.decode_baseline(
-        J.encode_baseline_ycbcr420(w, h, y, cb, cr)
-    )
-    prog = J.decode_baseline(
-        J.encode_progressive_ycbcr(w, h, y, cb, cr, subsampling="420")
-    )
+    base, prog = _pair(w, h, [y, cb, cr], (2, 2))
     assert base == prog
 
 
@@ -247,10 +239,7 @@ def test_property_color411_progressive_equals_baseline(w, h, seed):
     y = rng.randint(0, 256, size=w * h).tolist()
     cb = rng.randint(0, 256, size=cw * h).tolist()
     cr = rng.randint(0, 256, size=cw * h).tolist()
-    base = J.decode_baseline(J.encode_baseline_ycbcr411(w, h, y, cb, cr))
-    prog = J.decode_baseline(
-        J.encode_progressive_ycbcr(w, h, y, cb, cr, subsampling="411")
-    )
+    base, prog = _pair(w, h, [y, cb, cr], (4, 1))
     assert base == prog
 
 
@@ -266,8 +255,5 @@ def test_property_color422_progressive_equals_baseline(w, h, seed):
     y = rng.randint(0, 256, size=w * h).tolist()
     cb = rng.randint(0, 256, size=cw * h).tolist()
     cr = rng.randint(0, 256, size=cw * h).tolist()
-    base = J.decode_baseline(J.encode_baseline_ycbcr422(w, h, y, cb, cr))
-    prog = J.decode_baseline(
-        J.encode_progressive_ycbcr(w, h, y, cb, cr, subsampling="422")
-    )
+    base, prog = _pair(w, h, [y, cb, cr], (2, 1))
     assert base == prog

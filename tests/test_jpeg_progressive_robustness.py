@@ -1,4 +1,5 @@
-"""Corrupt-stream behavior of the progressive decoder.
+"""Corrupt-stream behavior of the JPEG decoder, for progressive and
+baseline (gray, 4:4:4, 4:2:0, 4:1:1, 4:2:2) streams alike.
 
 A bad payload must become a clean exception (which image_features turns
 into a status='decode_failed' row), never a hang, a wrong answer, or an
@@ -6,55 +7,74 @@ unbounded loop — the same degradation contract as every other codec in
 the engine.
 """
 
+import struct
+
 import pytest
 
 from work_order_pdf_extractor_spark.core import jpegcodec as J
 
+_CORRUPT = (ValueError, IndexError, KeyError, NotImplementedError)
+
 
 def _prog():
-    return J.encode_progressive_gray(16, 16, list(range(256)))
+    return J.encode_progressive(16, 16, [list(range(256))])
+
+
+def _streams():
+    """One progressive and five baseline encodings of a 16×16 raster."""
+    y = list(range(256))
+    out = {"progressive_gray": _prog(), "baseline_gray": J.encode_baseline(16, 16, [y])}
+    for name, (sh, sv) in (
+        ("444", (1, 1)), ("420", (2, 2)), ("411", (4, 1)), ("422", (2, 1))
+    ):
+        n = -(-16 // sh) * -(-16 // sv)
+        cb = [(7 * i) % 256 for i in range(n)]
+        out[f"baseline_{name}"] = J.encode_baseline(
+            16, 16, [y, cb, cb[::-1]], (sh, sv)
+        )
+    return out
 
 
 def test_truncated_streams_raise():
-    p = _prog()
-    for cut in (len(p) // 4, len(p) // 2, len(p) - 3):
-        with pytest.raises((ValueError, IndexError, NotImplementedError)):
-            J.decode_progressive(p[:cut])
+    for name, p in _streams().items():
+        for cut in (len(p) // 4, len(p) // 2, len(p) - 3):
+            with pytest.raises(_CORRUPT):
+                J.decode_rgb_arrays(p[:cut])
+                pytest.fail(f"{name} cut at {cut} decoded")
 
 
 def test_flipped_entropy_bytes_never_hang():
     # flipping bytes inside scan data either still decodes (different
     # pixels) or raises — both acceptable; what must not happen is a
     # hang or a non-exception crash
-    p = bytearray(_prog())
-    sos = p.find(b"\xff\xda")
-    for off in (sos + 20, sos + 25, len(p) - 10):
-        q = bytearray(p)
-        q[off] ^= 0x5A
-        try:
-            J.decode_progressive(bytes(q))
-        except (ValueError, IndexError, KeyError, NotImplementedError):
-            pass
+    for p in _streams().values():
+        sos = p.find(b"\xff\xda")
+        for off in (sos + 20, sos + 25, len(p) - 10):
+            q = bytearray(p)
+            q[off] ^= 0x5A
+            try:
+                J.decode_rgb_arrays(bytes(q))
+            except _CORRUPT:
+                pass
 
 
 def test_missing_sof_raises():
-    p = bytearray(_prog())
-    i = p.find(b"\xff\xc2")
-    p[i + 1] = 0xC3  # lossless SOF: out of subset
-    with pytest.raises(NotImplementedError):
-        J.decode_progressive(bytes(p))
+    for p in _streams().values():
+        p = bytearray(p)
+        i = max(p.find(b"\xff\xc0"), p.find(b"\xff\xc2"))
+        p[i + 1] = 0xC3  # lossless SOF: out of subset
+        with pytest.raises(NotImplementedError):
+            J.decode_rgb_arrays(bytes(p))
 
 
 def test_scan_before_frame_raises():
-    # strip the SOF2 segment entirely: SOS then arrives before any frame
-    p = _prog()
-    i = p.find(b"\xff\xc2")
-    import struct
-
-    (seglen,) = struct.unpack_from(">H", p, i + 2)
-    stripped = p[:i] + p[i + 2 + seglen :]
-    with pytest.raises(ValueError):
-        J.decode_progressive(stripped)
+    # strip the SOF segment entirely: SOS then arrives before any frame
+    for p in _streams().values():
+        i = max(p.find(b"\xff\xc0"), p.find(b"\xff\xc2"))
+        (seglen,) = struct.unpack_from(">H", p, i + 2)
+        stripped = p[:i] + p[i + 2 + seglen :]
+        with pytest.raises(ValueError):
+            J.decode_rgb_arrays(stripped)
 
 
 def test_decode_failed_rows_not_task_failures(spark):

@@ -11,6 +11,14 @@ import pytest
 from work_order_pdf_extractor_spark.operators import multimodal as M
 
 
+def _decode_jpeg(payload: bytes):
+    """(width, height, [(r, g, b), ...]) from the JPEG decoder."""
+    from work_order_pdf_extractor_spark.core import jpegcodec as J
+
+    w, h, rgb = J.decode_rgb_arrays(payload)
+    return w, h, list(zip(*(c.tolist() for c in rgb)))
+
+
 @pytest.fixture(scope="module")
 def media_df(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -65,7 +73,7 @@ def test_remaining_codec_boundary_is_explicit():
     than mis-decoding."""
     from work_order_pdf_extractor_spark.core import jpegcodec as J
 
-    flat = J.encode_baseline_gray(8, 8, [7] * 64)
+    flat = J.encode_baseline(8, 8, [[7] * 64])
     # SOF0 -> SOF3 marker: lossless sequential, out of subset
     lossless = flat.replace(b"\xff\xc0", b"\xff\xc3", 1)
     with pytest.raises(NotImplementedError):
@@ -88,9 +96,9 @@ def test_jpeg_block_constant_roundtrip_bit_exact():
     img = [
         ((x // 8) + 2 * (y // 8) + 5) % 256 for y in range(h) for x in range(w)
     ]
-    dw, dh, lumas = J.decode_baseline_gray(J.encode_baseline_gray(w, h, img))
+    dw, dh, lumas = J.decode_gray_array(J.encode_baseline(w, h, [img]))
     assert (dw, dh) == (w, h)
-    assert lumas == img
+    assert lumas.tolist() == img
 
 
 def test_jpeg_flat_quant_near_lossless_and_std_quant_lossy():
@@ -104,12 +112,12 @@ def test_jpeg_flat_quant_near_lossless_and_std_quant_lossy():
     rng = random.Random(7)
     w, h = 19, 13  # non-multiple-of-8: exercises pad + crop
     img = [rng.randrange(256) for _ in range(w * h)]
-    p_flat = J.encode_baseline_gray(w, h, img)
-    dw, dh, flat = J.decode_baseline_gray(p_flat)
+    p_flat = J.encode_baseline(w, h, [img])
+    dw, dh, flat = J.decode_gray_array(p_flat)
     assert (dw, dh) == (w, h)
     assert max(abs(a - b) for a, b in zip(flat, img)) <= 1
-    p_std = J.encode_baseline_gray(w, h, img, quant=J.STD_LUMA_QUANT)
-    _, _, lossy = J.decode_baseline_gray(p_std)
+    p_std = J.encode_baseline(w, h, [img], luma_quant=J.STD_LUMA_QUANT)
+    _, _, lossy = J.decode_gray_array(p_std)
     assert len(p_std) < len(p_flat)
     assert abs(sum(lossy) / len(lossy) - sum(img) / len(img)) < 10
 
@@ -117,26 +125,26 @@ def test_jpeg_flat_quant_near_lossless_and_std_quant_lossy():
 def test_jpeg_rejects_subsampling_16bit_quant_and_truncated_sof():
     from work_order_pdf_extractor_spark.core import jpegcodec as J
 
-    flat = J.encode_baseline_gray(8, 8, list(range(64)))
+    flat = J.encode_baseline(8, 8, [list(range(64))])
     dqt_at = flat.index(b"\xff\xdb")
     wide = flat[: dqt_at + 4] + b"\x10" + flat[dqt_at + 5 :]
     with pytest.raises(NotImplementedError):
-        J.decode_baseline_gray(wide)
+        J.decode_rgb_arrays(wide)
     # a gray SOF0 claiming 3 components is corrupt (too short), not merely
     # unsupported — color itself is now decodable
     sof_at = flat.index(b"\xff\xc0")
     ncomp_at = sof_at + 4 + 5  # marker(2) + len(2) + precision(1) + dims(4)
     truncated = flat[:ncomp_at] + b"\x03" + flat[ncomp_at + 1 :]
     with pytest.raises(ValueError):
-        J.decode_baseline_gray(truncated)
+        J.decode_rgb_arrays(truncated)
     # sampling factor 3 -> explicit boundary (r6 moved the line: 1/2/4
     # with integer upsampling ratios are all decodable, incl. 4:1:1)
-    color = J.encode_baseline_ycbcr(8, 8, [7] * 64, [128] * 64, [128] * 64)
+    color = J.encode_baseline(8, 8, [[7] * 64, [128] * 64, [128] * 64])
     csof = color.index(b"\xff\xc0")
     # SOF0: marker(2) len(2) precision(1) dims(4) ncomp(1) id(1) -> sampling
     sampled = color[: csof + 11] + b"\x31" + color[csof + 12 :]
     with pytest.raises(NotImplementedError):
-        J.decode_baseline(sampled)
+        J.decode_rgb_arrays(sampled)
 
 
 def test_jpeg420_region_constant_bit_exact():
@@ -156,10 +164,10 @@ def test_jpeg420_region_constant_bit_exact():
             for x in range(w)
         ]
         cw, ch = (w + 1) // 2, (h + 1) // 2
-        p = J.encode_baseline_ycbcr420(
-            w, h, y, [cb0] * (cw * ch), [cr0] * (cw * ch)
+        p = J.encode_baseline(
+            w, h, [y, [cb0] * (cw * ch), [cr0] * (cw * ch)], (2, 2)
         )
-        dw, dh, rgb = J.decode_baseline(p)
+        dw, dh, rgb = _decode_jpeg(p)
         assert (dw, dh) == (w, h)
         yp = np.array(y, dtype=np.float64).reshape(h, w)
         dcb, dcr = cb0 - 128.0, cr0 - 128.0
@@ -186,10 +194,11 @@ def test_jpeg420_matches_444_on_constant_chroma():
     y = [(32 + 8 * ((x // 16) + (yy // 16) * 3)) % 256
          for yy in range(h) for x in range(w)]
     cw, ch = (w + 1) // 2, (h + 1) // 2
-    p420 = J.encode_baseline_ycbcr420(w, h, y, [140] * (cw * ch),
-                                      [120] * (cw * ch))
-    p444 = J.encode_baseline_ycbcr(w, h, y, [140] * (w * h), [120] * (w * h))
-    assert J.decode_baseline(p420) == J.decode_baseline(p444)
+    p420 = J.encode_baseline(
+        w, h, [y, [140] * (cw * ch), [120] * (cw * ch)], (2, 2)
+    )
+    p444 = J.encode_baseline(w, h, [y, [140] * (w * h), [120] * (w * h)])
+    assert _decode_jpeg(p420) == _decode_jpeg(p444)
     assert len(p420) < len(p444), "4:2:0 must be smaller (2 vs 6 chroma blocks per 16x16)"
 
 
@@ -202,8 +211,8 @@ def test_jpeg_color_neutral_chroma_bit_exact():
 
     w, h = 24, 16
     y = [((x // 8) + 2 * (yy // 8) + 9) % 256 for yy in range(h) for x in range(w)]
-    p = J.encode_baseline_ycbcr(w, h, y, [128] * (w * h), [128] * (w * h))
-    dw, dh, rgb = J.decode_baseline(p)
+    p = J.encode_baseline(w, h, [y, [128] * (w * h), [128] * (w * h)])
+    dw, dh, rgb = _decode_jpeg(p)
     assert (dw, dh) == (w, h)
     assert all(r == g == b for r, g, b in rgb)
     assert [r for r, _, _ in rgb] == y
@@ -222,8 +231,8 @@ def test_jpeg_color_content_roundtrip_close():
     yv = [rng.randrange(256) for _ in range(w * h)]
     cbv = [rng.randrange(64, 192) for _ in range(w * h)]
     crv = [rng.randrange(64, 192) for _ in range(w * h)]
-    p = J.encode_baseline_ycbcr(w, h, yv, cbv, crv)
-    _, _, rgb = J.decode_baseline(p)
+    p = J.encode_baseline(w, h, [yv, cbv, crv])
+    _, _, rgb = _decode_jpeg(p)
 
     def conv(yy, cbb, crr):
         r = min(255, max(0, round(yy + 1.402 * (crr - 128))))
@@ -236,8 +245,8 @@ def test_jpeg_color_content_roundtrip_close():
         for got, yy, cbb, crr in zip(rgb, yv, cbv, crv)
     )
     assert worst <= 4
-    p_std = J.encode_baseline_ycbcr(
-        w, h, yv, cbv, crv, J.STD_LUMA_QUANT, J.STD_CHROMA_QUANT
+    p_std = J.encode_baseline(
+        w, h, [yv, cbv, crv], (1, 1), J.STD_LUMA_QUANT, J.STD_CHROMA_QUANT
     )
     assert len(p_std) < len(p)
 
@@ -485,22 +494,27 @@ def test_jpeg_restart_markers_roundtrip():
     rng = random.Random(5)
     for (w, h, ri) in [(32, 24, 1), (19, 13, 2), (40, 8, 5), (16, 16, 100)]:
         img = [rng.randrange(256) for _ in range(w * h)]
-        assert J.decode_baseline_gray(
-            J.encode_baseline_gray(w, h, img, restart_interval=ri)
-        ) == J.decode_baseline_gray(J.encode_baseline_gray(w, h, img)), (w, h, ri)
+        assert _decode_jpeg(
+            J.encode_baseline(w, h, [img], restart_interval=ri)
+        ) == _decode_jpeg(J.encode_baseline(w, h, [img])), (w, h, ri)
     w, h = 24, 16
     y = [rng.randrange(256) for _ in range(w * h)]
     cb = [rng.randrange(256) for _ in range(w * h)]
     cr = [rng.randrange(256) for _ in range(w * h)]
-    p_ri = J.encode_baseline_ycbcr(w, h, y, cb, cr, restart_interval=2)
-    assert J.decode_baseline(p_ri) == J.decode_baseline(
-        J.encode_baseline_ycbcr(w, h, y, cb, cr)
+    p_ri = J.encode_baseline(w, h, [y, cb, cr], restart_interval=2)
+    assert _decode_jpeg(p_ri) == _decode_jpeg(
+        J.encode_baseline(w, h, [y, cb, cr])
     )
+    # subsampled MCUs (four Y blocks + Cb + Cr at 4:2:0) restart the same way
+    c420 = [cb[:96], cr[:96]]
+    assert _decode_jpeg(
+        J.encode_baseline(w, h, [y, *c420], (2, 2), restart_interval=1)
+    ) == _decode_jpeg(J.encode_baseline(w, h, [y, *c420], (2, 2)))
     bad = bytearray(p_ri)
     idx = bytes(bad).find(b"\xff\xd0")
     bad[idx + 1] = 0xD4
     with pytest.raises(ValueError):
-        J.decode_baseline(bytes(bad))
+        J.decode_rgb_arrays(bytes(bad))
 
 
 from hypothesis import given as _given, settings as _settings  # noqa: E402
@@ -534,11 +548,9 @@ def test_jpeg422_matches_444_on_constant_chroma():
         y = [(32 + 8 * ((x // 16) + (yy // 16) * 3)) % 256
              for yy in range(h) for x in range(w)]
         cw = (w + 1) // 2
-        p422 = J.encode_baseline_ycbcr422(
-            w, h, y, [140] * (cw * h), [120] * (cw * h)
+        p422 = J.encode_baseline(
+            w, h, [y, [140] * (cw * h), [120] * (cw * h)], (2, 1)
         )
-        p444 = J.encode_baseline_ycbcr(
-            w, h, y, [140] * (w * h), [120] * (w * h)
-        )
-        assert J.decode_baseline(p422) == J.decode_baseline(p444), (w, h)
+        p444 = J.encode_baseline(w, h, [y, [140] * (w * h), [120] * (w * h)])
+        assert _decode_jpeg(p422) == _decode_jpeg(p444), (w, h)
         assert len(p422) < len(p444)

@@ -7,6 +7,12 @@ from __future__ import annotations
 from work_order_pdf_extractor_spark.core import jpegcodec, pdfparse
 
 
+def _decode(payload: bytes):
+    """(width, height, [(r, g, b), ...]) from the JPEG decoder."""
+    w, h, rgb = jpegcodec.decode_rgb_arrays(payload)
+    return w, h, list(zip(*(c.tolist() for c in rgb)))
+
+
 def _with_fill_bytes(payload: bytes) -> bytes:
     """Insert T.81 B.1.1.2 fill bytes (extra 0xFF pads before a marker
     code) after SOI and before the final EOI — both legal placements a
@@ -17,18 +23,18 @@ def _with_fill_bytes(payload: bytes) -> bytes:
 
 def test_baseline_decode_skips_fill_bytes():
     samples = [(i * 7 + 13) % 256 for i in range(16 * 16)]
-    clean = jpegcodec.encode_baseline_gray(16, 16, samples)
-    w0, h0, px0 = jpegcodec.decode_baseline(clean)
-    w1, h1, px1 = jpegcodec.decode_baseline(_with_fill_bytes(clean))
+    clean = jpegcodec.encode_baseline(16, 16, [samples])
+    w0, h0, px0 = _decode(clean)
+    w1, h1, px1 = _decode(_with_fill_bytes(clean))
     assert (w0, h0) == (w1, h1) == (16, 16)
     assert px0 == px1
 
 
 def test_progressive_decode_skips_fill_bytes():
     samples = [(i * 11 + 5) % 256 for i in range(16 * 16)]
-    clean = jpegcodec.encode_progressive_gray(16, 16, samples)
-    w0, h0, px0 = jpegcodec.decode_progressive(clean)
-    w1, h1, px1 = jpegcodec.decode_progressive(_with_fill_bytes(clean))
+    clean = jpegcodec.encode_progressive(16, 16, [samples])
+    w0, h0, px0 = _decode(clean)
+    w1, h1, px1 = _decode(_with_fill_bytes(clean))
     assert (w0, h0) == (w1, h1) == (16, 16)
     assert px0 == px1
 
@@ -129,8 +135,8 @@ def _rgb_411(w, h, yfn, dcb, dcr):
     y = [yfn(x, yy) for yy in range(h) for x in range(w)]
     cb = [128 + dcb] * (cw * h)
     cr = [128 + dcr] * (cw * h)
-    return jpegcodec.decode_baseline(
-        jpegcodec.encode_baseline_ycbcr411(w, h, y, cb, cr)
+    return _decode(
+        jpegcodec.encode_baseline(w, h, [y, cb, cr], (4, 1))
     )
 
 
@@ -162,11 +168,11 @@ def test_jpeg411_neutral_chroma_matches_444():
     y = [(3 * (x // 8) + (yy // 8) + 5) % 256 for yy in range(h) for x in range(w)]
     neutral_full = [128] * (w * h)
     neutral_q = [128] * (((w + 3) // 4) * h)
-    a = jpegcodec.decode_baseline(
-        jpegcodec.encode_baseline_ycbcr(w, h, y, neutral_full, neutral_full)
+    a = _decode(
+        jpegcodec.encode_baseline(w, h, [y, neutral_full, neutral_full])
     )
-    b = jpegcodec.decode_baseline(
-        jpegcodec.encode_baseline_ycbcr411(w, h, y, neutral_q, neutral_q)
+    b = _decode(
+        jpegcodec.encode_baseline(w, h, [y, neutral_q, neutral_q], (4, 1))
     )
     assert a == b
 
@@ -177,10 +183,10 @@ def test_jpeg_sampling_factor_3_still_rejected():
     w, h = 32, 8
     y = [100] * (w * h)
     cq = [128] * (((w + 3) // 4) * h)
-    payload = bytearray(jpegcodec.encode_baseline_ycbcr411(w, h, y, cq, cq))
+    payload = bytearray(jpegcodec.encode_baseline(w, h, [y, cq, cq], (4, 1)))
     i = payload.index(bytes([2, 0x11, 1]))  # Cb component spec in SOF
     payload[i + 1] = 0x31  # hi=3, vi=1
     import pytest as _pytest
 
     with _pytest.raises(NotImplementedError):
-        jpegcodec.decode_baseline(bytes(payload))
+        jpegcodec.decode_rgb_arrays(bytes(payload))

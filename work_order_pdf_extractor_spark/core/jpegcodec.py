@@ -1,17 +1,21 @@
-"""Baseline-sequential JPEG (ITU-T T.81 / JFIF) codec, stdlib+numpy —
-grayscale AND YCbCr 4:4:4 color.
+"""JPEG (ITU-T T.81 / JFIF) codec, stdlib+numpy: one baseline-sequential
+encoder, one progressive encoder and one decoder for both frame types.
 
 Closes the last compressed-codec gap vs the reference's raster stage
 (``work_order_extractor.py:1121-1146``, pdf2image/poppler render): the
-engine can now emit AND parse a real entropy-coded DCT payload — markers,
-Annex K Huffman tables (luma + chroma pairs), FDCT/quantize/zigzag and
-interleaved 3-component MCUs on the encode side; marker walk,
-canonical-Huffman bitstream decode with per-component selectors and DC
-predictors, dequantize, float IDCT, JFIF YCbCr→RGB on the decode side.
-Same EMIT==PARSE philosophy as ``core/pdfparse.py``: the supported
-subset is explicit (baseline sequential, 8-bit, 1 or 3 components, no
-subsampling, no restart intervals) and everything outside it raises
-``NotImplementedError`` so callers degrade to status rows.
+engine can emit AND parse a real entropy-coded DCT payload. Encode side:
+markers, Annex K Huffman tables (luma + chroma pairs), FDCT/quantize/
+zigzag, interleaved MCUs for grayscale or YCbCr with luma sampling 1×1
+(4:4:4), 2×1 (4:2:2), 2×2 (4:2:0) or 4×1 (4:1:1), optional restart
+intervals, and progressive spectral selection + successive approximation.
+Decode side: one marker walk for SOF0 and SOF2, canonical-Huffman
+bitstream decode with per-component selectors and DC predictors,
+dequantize, float IDCT, replication upsampling, JFIF YCbCr→RGB. Same
+EMIT==PARSE philosophy as ``core/pdfparse.py``: the supported subset is
+explicit (8-bit, 1 or 3 components, sampling factors 1, 2 or 4, Huffman
+coding, restart intervals in baseline frames only) and everything outside
+it raises ``NotImplementedError`` so callers degrade to status rows;
+corrupt streams raise ``ValueError`` / ``IndexError`` / ``KeyError``.
 
 Oracle-exactness: JPEG is lossy in general, but an image whose 8x8 blocks
 are each CONSTANT has only a DC coefficient (AC analytically zero), and
@@ -261,36 +265,6 @@ AC_CHROMA_VALS = [
     0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
 ]
 
-
-def _pad_plane(
-    samples: list[int], width: int, height: int, align: int = 8
-) -> np.ndarray:
-    """Edge-replicate a plane out to a multiple of ``align`` (8 for 4:4:4
-    blocks, 16 for the luma plane of a 4:2:0 MCU grid)."""
-    img = np.asarray(samples, dtype=np.float64).reshape(height, width)
-    aw = (width + align - 1) // align * align
-    ah = (height + align - 1) // align * align
-    return np.pad(img, ((0, ah - height), (0, aw - width)), mode="edge")
-
-
-def _write_block(
-    w: _BitWriter,
-    block: np.ndarray,
-    qmat: np.ndarray,
-    dc_codes: dict,
-    ac_codes: dict,
-    prev_dc: int,
-) -> int:
-    """FDCT + quantize + zigzag + Huffman-encode one 8×8 block; returns
-    the new DC predictor. (r7: the numeric half lives in
-    :func:`_quant_plane_blocks` batched form at the encoder call sites;
-    this per-block form remains the reference twin.)"""
-    coef = _C @ (block - 128.0) @ _C.T
-    qcoef = np.round(coef / qmat).astype(np.int64)
-    zz = [int(qcoef.flat[ZIGZAG[i]]) for i in range(64)]
-    return _write_zz(w, zz, dc_codes, ac_codes, prev_dc)
-
-
 def _write_zz(
     w: _BitWriter,
     zz: list[int],
@@ -299,8 +273,8 @@ def _write_zz(
     prev_dc: int,
 ) -> int:
     """Huffman-encode one block's 64 zigzag-order quantized coefficients
-    (the entropy half of :func:`_write_block`); returns the new DC
-    predictor."""
+    (baseline DC difference + run-length AC with ZRL/EOB); returns the
+    new DC predictor."""
     size, bits = _magnitude(zz[0] - prev_dc)
     code, ln = dc_codes[size]
     w.write(code, ln)
@@ -334,663 +308,155 @@ def _zz_bytes(q: list[int]) -> bytes:
 _JFIF_APP0 = b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
 
 
-def encode_baseline_gray(
+# Huffman table id -> ((DC BITS, HUFFVAL), (AC BITS, HUFFVAL)); luma
+# components use table 0, chroma components table 1.
+_HUFF_SPECS = [
+    ((DC_LUMA_BITS, DC_LUMA_VALS), (AC_LUMA_BITS, AC_LUMA_VALS)),
+    ((DC_CHROMA_BITS, DC_CHROMA_VALS), (AC_CHROMA_BITS, AC_CHROMA_VALS)),
+]
+
+
+def _quant_plane_blocks(plane: np.ndarray, qmat: np.ndarray) -> np.ndarray:
+    """FDCT + quantize every 8×8 block of an (8-aligned) plane; returns
+    an (bh, bw, 64) int64 array in ZIGZAG coefficient order. One stacked
+    matmul over all blocks (bit-identical to the per-block
+    ``_C @ (block-128) @ _C.T`` product — same GEMM kernel per slice)."""
+    bh, bw = plane.shape[0] // 8, plane.shape[1] // 8
+    blocks = (
+        plane.reshape(bh, 8, bw, 8).transpose(0, 2, 1, 3).astype(np.float64)
+        - 128.0
+    )
+    coef = _C[None, None] @ blocks @ _C.T[None, None]
+    q = np.round(coef / qmat).astype(np.int64)
+    return q.reshape(bh, bw, 64)[:, :, ZIGZAG]
+
+
+def _components(width, height, planes, sampling, luma_quant, chroma_quant):
+    """Frame set-up shared by both encoders. ``planes`` is ``[y]`` or
+    ``[y, cb, cr]``, each row-major; with luma sampling ``(h, v)`` the
+    chroma planes come already downsampled to ``ceil(width/h) ×
+    ceil(height/v)``. Every plane is edge-padded to the interleaved MCU
+    grid (``8h × 8v`` pixels per MCU, the decoder crops) and FDCT-
+    quantized; luma uses quant/Huffman table 0, chroma table 1.
+    Returns (component dicts, (mcuy, mcux), quant tables)."""
+    if len(planes) not in (1, 3) or (
+        len(planes) == 1 and tuple(sampling) != (1, 1)
+    ):
+        raise ValueError("planes must be [y] (1x1 sampled) or [y, cb, cr]")
+    sh, sv = sampling
+    mcux, mcuy = -(-width // (8 * sh)), -(-height // (8 * sv))
+    quants = [list(luma_quant or FLAT_QUANT)]
+    if len(planes) == 3:
+        quants.append(list(chroma_quant or FLAT_QUANT))
+    qmats = [np.asarray(q, dtype=np.float64).reshape(8, 8) for q in quants]
+    comps = []
+    for i, samples in enumerate(planes):
+        hi, vi, tid = (sh, sv, 0) if i == 0 else (1, 1, 1)
+        pw, ph = -(-width * hi // sh), -(-height * vi // sv)
+        # edge replication out to the MCU grid, as one gather
+        rows = np.minimum(np.arange(mcuy * 8 * vi), ph - 1)
+        cols = np.minimum(np.arange(mcux * 8 * hi), pw - 1)
+        plane = np.asarray(samples, dtype=np.float64).reshape(ph, pw)
+        comps.append(
+            {
+                "cid": i + 1, "hi": hi, "vi": vi, "tid": tid,
+                "blocks": _quant_plane_blocks(
+                    plane[np.ix_(rows, cols)], qmats[tid]
+                ),
+                # non-interleaved progressive AC scans walk the
+                # component's OWN block dims (T.81 A.2.2), which for a
+                # subsampled frame is smaller than the padded MCU grid
+                "own_grid": ((ph + 7) // 8, (pw + 7) // 8),
+            }
+        )
+    return comps, (mcuy, mcux), quants
+
+
+def _header(sof_marker: int, width: int, height: int, comps, quants) -> bytes:
+    """SOI, JFIF APP0, DQT (one 8-bit table per id) and the frame header
+    both encoders open with."""
+    dqt = b"".join(bytes([t]) + _zz_bytes(q) for t, q in enumerate(quants))
+    sof = struct.pack(">BHHB", 8, height, width, len(comps)) + b"".join(
+        bytes([c["cid"], (c["hi"] << 4) | c["vi"], c["tid"]]) for c in comps
+    )
+    return (
+        b"\xff\xd8" + _seg(0xE0, _JFIF_APP0) + _seg(0xDB, dqt)
+        + _seg(sof_marker, sof)
+    )
+
+
+def encode_baseline(
     width: int,
     height: int,
-    samples: list[int],
-    quant: list[int] | None = None,
+    planes: list,
+    sampling: tuple[int, int] = (1, 1),
+    luma_quant: list[int] | None = None,
+    chroma_quant: list[int] | None = None,
     restart_interval: int = 0,
 ) -> bytes:
-    """Encode 8-bit grayscale ``samples`` (row-major, len == width*height)
-    as a baseline-sequential JFIF: real FDCT, quantization (row-major
-    ``quant``, default :data:`FLAT_QUANT`), zigzag, Annex-K Huffman with
-    DC prediction, run-length AC with EOB/ZRL, and byte stuffing. Edge
-    blocks are replicate-padded (the decoder crops). ``restart_interval``
-    > 0 emits a DRI segment and an RSTn marker (byte-aligned, DC
-    predictors reset) every that-many MCUs — the error-resilience
-    structure most camera/web JPEGs carry."""
-    q = list(quant or FLAT_QUANT)
-    padded = _pad_plane(samples, width, height)
-    qmat = np.asarray(q, dtype=np.float64).reshape(8, 8)
-    dc_codes = _build_codes(DC_LUMA_BITS, DC_LUMA_VALS)
-    ac_codes = _build_codes(AC_LUMA_BITS, AC_LUMA_VALS)
+    """Encode 8-bit planes (see :func:`_components` for ``planes`` and
+    ``sampling``) as a baseline-sequential JFIF: one interleaved scan of
+    MCUs carrying Hi×Vi blocks per component in raster order, Annex-K
+    Huffman with per-component DC prediction, run-length AC with
+    EOB/ZRL, and byte stuffing. Quant tables are row-major and default to
+    the near-lossless :data:`FLAT_QUANT`; pass :data:`STD_LUMA_QUANT` /
+    :data:`STD_CHROMA_QUANT` for a genuinely lossy stream.
+    ``restart_interval`` > 0 emits a DRI segment and an RSTn marker
+    (byte-aligned, DC predictors reset) every that-many MCUs — the
+    error-resilience structure most camera/web JPEGs carry."""
+    comps, (mcuy, mcux), quants = _components(
+        width, height, planes, sampling, luma_quant, chroma_quant
+    )
+    codes = [
+        (_build_codes(*dc), _build_codes(*ac))
+        for dc, ac in _HUFF_SPECS[: len(quants)]
+    ]
+    # per component: zigzag rows as nested lists, the Hi×Vi block offsets
+    # of one MCU in raster order, and its Huffman code pair
+    layout = [
+        (
+            c["blocks"].tolist(), c["hi"], c["vi"],
+            [(v, h) for v in range(c["vi"]) for h in range(c["hi"])],
+            *codes[c["tid"]],
+        )
+        for c in comps
+    ]
     w = _BitWriter()
-    prev_dc = 0
+    preds = [0] * len(comps)
     mcu = rst = 0
-    zzg = _quant_plane_blocks(padded, qmat)  # r7: batched FDCT+quant
-    for by in range((height + 7) // 8):
-        for bx in range((width + 7) // 8):
+    for my in range(mcuy):
+        for mx in range(mcux):
             if restart_interval and mcu and mcu % restart_interval == 0:
                 w.restart(rst)
                 rst = (rst + 1) & 7
-                prev_dc = 0
-            prev_dc = _write_zz(
-                w, zzg[by, bx].tolist(),
-                dc_codes, ac_codes, prev_dc,
-            )
+                preds = [0] * len(comps)
+            for ci, (rows, hi, vi, offsets, dcc, acc) in enumerate(layout):
+                for v, h in offsets:
+                    preds[ci] = _write_zz(
+                        w, rows[my * vi + v][mx * hi + h], dcc, acc, preds[ci]
+                    )
             mcu += 1
     w.flush()
-    dht = (
-        bytes([0x00]) + bytes(DC_LUMA_BITS) + bytes(DC_LUMA_VALS)
-        + bytes([0x10]) + bytes(AC_LUMA_BITS) + bytes(AC_LUMA_VALS)
+    dht = b"".join(
+        bytes([cls << 4 | t]) + bytes(bits) + bytes(vals)
+        for t in range(len(quants))
+        for cls, (bits, vals) in enumerate(_HUFF_SPECS[t])
     )
+    sos = bytes([len(comps)]) + b"".join(
+        bytes([c["cid"], c["tid"] * 0x11]) for c in comps
+    ) + bytes([0, 63, 0])
     return (
-        b"\xff\xd8"  # SOI
-        + _seg(0xE0, _JFIF_APP0)  # APP0
-        + _seg(0xDB, bytes([0x00]) + _zz_bytes(q))  # DQT, table 0, 8-bit
-        + _seg(  # SOF0: baseline, 8-bit, 1 component, 1x1 sampling
-            0xC0,
-            struct.pack(">BHHB", 8, height, width, 1) + bytes([1, 0x11, 0]),
-        )
-        + _seg(0xC4, dht)  # DHT: DC table 0 + AC table 0
+        _header(0xC0, width, height, comps, quants)
+        + _seg(0xC4, dht)
         + (
             _seg(0xDD, struct.pack(">H", restart_interval))
             if restart_interval
             else b""
         )
-        + _seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))  # SOS
-        + bytes(w.out)
-        + b"\xff\xd9"  # EOI
-    )
-
-
-def encode_baseline_ycbcr(
-    width: int,
-    height: int,
-    y: list[int],
-    cb: list[int],
-    cr: list[int],
-    luma_quant: list[int] | None = None,
-    chroma_quant: list[int] | None = None,
-    restart_interval: int = 0,
-) -> bytes:
-    """Encode three full-resolution planes as a baseline-sequential COLOR
-    JFIF (YCbCr, 4:4:4): interleaved MCUs of one Y + one Cb + one Cr
-    block, separate luma/chroma quantization tables (0/1) and Huffman
-    table pairs (0/0 and 1/1), one DC predictor per component — the
-    standard 3-component scan structure. Defaults to the near-lossless
-    flat quant table for both; pass :data:`STD_LUMA_QUANT` /
-    :data:`STD_CHROMA_QUANT` for a genuinely lossy stream."""
-    lq = list(luma_quant or FLAT_QUANT)
-    cq = list(chroma_quant or FLAT_QUANT)
-    planes = [
-        _pad_plane(y, width, height),
-        _pad_plane(cb, width, height),
-        _pad_plane(cr, width, height),
-    ]
-    qmats = [
-        np.asarray(lq, dtype=np.float64).reshape(8, 8),
-        np.asarray(cq, dtype=np.float64).reshape(8, 8),
-    ]
-    luma_codes = (
-        _build_codes(DC_LUMA_BITS, DC_LUMA_VALS),
-        _build_codes(AC_LUMA_BITS, AC_LUMA_VALS),
-    )
-    chroma_codes = (
-        _build_codes(DC_CHROMA_BITS, DC_CHROMA_VALS),
-        _build_codes(AC_CHROMA_BITS, AC_CHROMA_VALS),
-    )
-    # per component: (plane, qmat, (dc_codes, ac_codes))
-    comps = [
-        (planes[0], qmats[0], luma_codes),
-        (planes[1], qmats[1], chroma_codes),
-        (planes[2], qmats[1], chroma_codes),
-    ]
-    w = _BitWriter()
-    preds = [0, 0, 0]
-    mcu = rst = 0
-    # r7: batched FDCT+quant per component plane
-    zzgs = [
-        (_quant_plane_blocks(plane, qmat), dcc, acc)
-        for plane, qmat, (dcc, acc) in comps
-    ]
-    for by in range((height + 7) // 8):
-        for bx in range((width + 7) // 8):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                w.restart(rst)
-                rst = (rst + 1) & 7
-                preds = [0, 0, 0]
-            for ci, (zzg, dcc, acc) in enumerate(zzgs):
-                preds[ci] = _write_zz(
-                    w, zzg[by, bx].tolist(), dcc, acc, preds[ci]
-                )
-            mcu += 1
-    w.flush()
-    dht = (
-        bytes([0x00]) + bytes(DC_LUMA_BITS) + bytes(DC_LUMA_VALS)
-        + bytes([0x10]) + bytes(AC_LUMA_BITS) + bytes(AC_LUMA_VALS)
-        + bytes([0x01]) + bytes(DC_CHROMA_BITS) + bytes(DC_CHROMA_VALS)
-        + bytes([0x11]) + bytes(AC_CHROMA_BITS) + bytes(AC_CHROMA_VALS)
-    )
-    sof = struct.pack(">BHHB", 8, height, width, 3) + bytes(
-        [1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1]
-    )
-    sos = bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0])
-    return (
-        b"\xff\xd8"
-        + _seg(0xE0, _JFIF_APP0)
-        + _seg(0xDB, bytes([0x00]) + _zz_bytes(lq)
-               + bytes([0x01]) + _zz_bytes(cq))
-        + _seg(0xC0, sof)
-        + _seg(0xC4, dht)
-        + (
-            _seg(0xDD, struct.pack(">H", restart_interval))
-            if restart_interval
-            else b""
-        )
         + _seg(0xDA, sos)
         + bytes(w.out)
         + b"\xff\xd9"
     )
-
-
-def encode_baseline_ycbcr420(
-    width: int,
-    height: int,
-    y: list[int],
-    cb_half: list[int],
-    cr_half: list[int],
-    luma_quant: list[int] | None = None,
-    chroma_quant: list[int] | None = None,
-) -> bytes:
-    """Encode as baseline-sequential 4:2:0 COLOR JFIF — the single most
-    common JPEG variant in crawled corpora: luma at full resolution with
-    sampling factor 2×2, chroma planes at HALF resolution
-    (``ceil(w/2) × ceil(h/2)``, supplied already-downsampled) at 1×1.
-    Each MCU covers 16×16 pixels and carries four Y blocks (2×2 raster
-    order) + one Cb + one Cr. Same table layout as
-    :func:`encode_baseline_ycbcr` (luma/chroma quant 0/1, Huffman pairs
-    0 and 1, per-component DC predictors)."""
-    lq = list(luma_quant or FLAT_QUANT)
-    cq = list(chroma_quant or FLAT_QUANT)
-    cw, ch = (width + 1) // 2, (height + 1) // 2
-    yplane = _pad_plane(y, width, height, align=16)
-    cbp = _pad_plane(cb_half, cw, ch)
-    crp = _pad_plane(cr_half, cw, ch)
-    # chroma must cover the full MCU grid: mcux*8 × mcuy*8 samples
-    mcux, mcuy = (width + 15) // 16, (height + 15) // 16
-    cbp = np.pad(
-        cbp,
-        ((0, mcuy * 8 - cbp.shape[0]), (0, mcux * 8 - cbp.shape[1])),
-        mode="edge",
-    )
-    crp = np.pad(
-        crp,
-        ((0, mcuy * 8 - crp.shape[0]), (0, mcux * 8 - crp.shape[1])),
-        mode="edge",
-    )
-    qmats = [
-        np.asarray(lq, dtype=np.float64).reshape(8, 8),
-        np.asarray(cq, dtype=np.float64).reshape(8, 8),
-    ]
-    luma_codes = (
-        _build_codes(DC_LUMA_BITS, DC_LUMA_VALS),
-        _build_codes(AC_LUMA_BITS, AC_LUMA_VALS),
-    )
-    chroma_codes = (
-        _build_codes(DC_CHROMA_BITS, DC_CHROMA_VALS),
-        _build_codes(AC_CHROMA_BITS, AC_CHROMA_VALS),
-    )
-    w = _BitWriter()
-    preds = [0, 0, 0]
-    # r7: batched FDCT+quant per plane
-    yzz = _quant_plane_blocks(yplane, qmats[0])
-    cbzz = _quant_plane_blocks(cbp, qmats[1])
-    crzz = _quant_plane_blocks(crp, qmats[1])
-    for my in range(mcuy):
-        for mx in range(mcux):
-            for v in range(2):  # four Y blocks, 2x2 raster order
-                for h in range(2):
-                    preds[0] = _write_zz(
-                        w, yzz[my * 2 + v, mx * 2 + h].tolist(),
-                        *luma_codes, preds[0],
-                    )
-            preds[1] = _write_zz(
-                w, cbzz[my, mx].tolist(), *chroma_codes, preds[1]
-            )
-            preds[2] = _write_zz(
-                w, crzz[my, mx].tolist(), *chroma_codes, preds[2]
-            )
-    w.flush()
-    dht = (
-        bytes([0x00]) + bytes(DC_LUMA_BITS) + bytes(DC_LUMA_VALS)
-        + bytes([0x10]) + bytes(AC_LUMA_BITS) + bytes(AC_LUMA_VALS)
-        + bytes([0x01]) + bytes(DC_CHROMA_BITS) + bytes(DC_CHROMA_VALS)
-        + bytes([0x11]) + bytes(AC_CHROMA_BITS) + bytes(AC_CHROMA_VALS)
-    )
-    sof = struct.pack(">BHHB", 8, height, width, 3) + bytes(
-        [1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1]
-    )
-    sos = bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0])
-    return (
-        b"\xff\xd8"
-        + _seg(0xE0, _JFIF_APP0)
-        + _seg(0xDB, bytes([0x00]) + _zz_bytes(lq)
-               + bytes([0x01]) + _zz_bytes(cq))
-        + _seg(0xC0, sof)
-        + _seg(0xC4, dht)
-        + _seg(0xDA, sos)
-        + bytes(w.out)
-        + b"\xff\xd9"
-    )
-
-
-def encode_baseline_ycbcr411(
-    width: int,
-    height: int,
-    y: list[int],
-    cb_quarter: list[int],
-    cr_quarter: list[int],
-    luma_quant: list[int] | None = None,
-    chroma_quant: list[int] | None = None,
-) -> bytes:
-    """Encode as baseline-sequential 4:1:1 COLOR JFIF — the DV/camcorder
-    lineage variant with sampling factors BEYOND 2 (luma 4×1): chroma at
-    QUARTER horizontal resolution (``ceil(w/4) × h``, supplied
-    already-downsampled). Each MCU covers 32×8 pixels and carries four Y
-    blocks in a horizontal row + one Cb + one Cr. Same table layout as
-    the other color encoders. This is the encoder half of closing the
-    'sampling factors > 2' codec boundary; :func:`decode_baseline`
-    handles any integer-ratio factors up to 4."""
-    lq = list(luma_quant or FLAT_QUANT)
-    cq = list(chroma_quant or FLAT_QUANT)
-    cw = (width + 3) // 4
-    yplane = _pad_plane(y, width, height)
-    cbp = _pad_plane(cb_quarter, cw, height)
-    crp = _pad_plane(cr_quarter, cw, height)
-    mcux, mcuy = (width + 31) // 32, (height + 7) // 8
-    yplane = np.pad(
-        yplane,
-        ((0, mcuy * 8 - yplane.shape[0]), (0, mcux * 32 - yplane.shape[1])),
-        mode="edge",
-    )
-    cbp = np.pad(
-        cbp,
-        ((0, mcuy * 8 - cbp.shape[0]), (0, mcux * 8 - cbp.shape[1])),
-        mode="edge",
-    )
-    crp = np.pad(
-        crp,
-        ((0, mcuy * 8 - crp.shape[0]), (0, mcux * 8 - crp.shape[1])),
-        mode="edge",
-    )
-    qmats = [
-        np.asarray(lq, dtype=np.float64).reshape(8, 8),
-        np.asarray(cq, dtype=np.float64).reshape(8, 8),
-    ]
-    luma_codes = (
-        _build_codes(DC_LUMA_BITS, DC_LUMA_VALS),
-        _build_codes(AC_LUMA_BITS, AC_LUMA_VALS),
-    )
-    chroma_codes = (
-        _build_codes(DC_CHROMA_BITS, DC_CHROMA_VALS),
-        _build_codes(AC_CHROMA_BITS, AC_CHROMA_VALS),
-    )
-    w = _BitWriter()
-    preds = [0, 0, 0]
-    # r7: batched FDCT+quant per plane
-    yzz = _quant_plane_blocks(yplane, qmats[0])
-    cbzz = _quant_plane_blocks(cbp, qmats[1])
-    crzz = _quant_plane_blocks(crp, qmats[1])
-    for my in range(mcuy):
-        for mx in range(mcux):
-            for h in range(4):  # four Y blocks in a horizontal row
-                preds[0] = _write_zz(
-                    w, yzz[my, mx * 4 + h].tolist(), *luma_codes, preds[0]
-                )
-            preds[1] = _write_zz(
-                w, cbzz[my, mx].tolist(), *chroma_codes, preds[1]
-            )
-            preds[2] = _write_zz(
-                w, crzz[my, mx].tolist(), *chroma_codes, preds[2]
-            )
-    w.flush()
-    dht = (
-        bytes([0x00]) + bytes(DC_LUMA_BITS) + bytes(DC_LUMA_VALS)
-        + bytes([0x10]) + bytes(AC_LUMA_BITS) + bytes(AC_LUMA_VALS)
-        + bytes([0x01]) + bytes(DC_CHROMA_BITS) + bytes(DC_CHROMA_VALS)
-        + bytes([0x11]) + bytes(AC_CHROMA_BITS) + bytes(AC_CHROMA_VALS)
-    )
-    sof = struct.pack(">BHHB", 8, height, width, 3) + bytes(
-        [1, 0x41, 0, 2, 0x11, 1, 3, 0x11, 1]
-    )
-    sos = bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0])
-    return (
-        b"\xff\xd8"
-        + _seg(0xE0, _JFIF_APP0)
-        + _seg(0xDB, bytes([0x00]) + _zz_bytes(lq)
-               + bytes([0x01]) + _zz_bytes(cq))
-        + _seg(0xC0, sof)
-        + _seg(0xC4, dht)
-        + _seg(0xDA, sos)
-        + bytes(w.out)
-        + b"\xff\xd9"
-    )
-
-
-def encode_baseline_ycbcr422(
-    width: int,
-    height: int,
-    y: list[int],
-    cb_halfw: list[int],
-    cr_halfw: list[int],
-    luma_quant: list[int] | None = None,
-    chroma_quant: list[int] | None = None,
-) -> bytes:
-    """Encode as baseline-sequential 4:2:2 COLOR JFIF — the broadcast/
-    video-derived variant: luma at 2×1 sampling, chroma at HALF WIDTH and
-    full height (``ceil(w/2) × h``, supplied already-downsampled). Each
-    MCU covers 16×8 pixels: two horizontal Y blocks + one Cb + one Cr."""
-    lq = list(luma_quant or FLAT_QUANT)
-    cq = list(chroma_quant or FLAT_QUANT)
-    cw = (width + 1) // 2
-    yplane = _pad_plane(y, width, height)
-    # luma must cover 16-wide MCUs
-    mcux, mcuy = (width + 15) // 16, (height + 7) // 8
-    yplane = np.pad(
-        yplane,
-        ((0, mcuy * 8 - yplane.shape[0]), (0, mcux * 16 - yplane.shape[1])),
-        mode="edge",
-    )
-    cbp = _pad_plane(cb_halfw, cw, height)
-    crp = _pad_plane(cr_halfw, cw, height)
-    cbp = np.pad(
-        cbp,
-        ((0, mcuy * 8 - cbp.shape[0]), (0, mcux * 8 - cbp.shape[1])),
-        mode="edge",
-    )
-    crp = np.pad(
-        crp,
-        ((0, mcuy * 8 - crp.shape[0]), (0, mcux * 8 - crp.shape[1])),
-        mode="edge",
-    )
-    qmats = [
-        np.asarray(lq, dtype=np.float64).reshape(8, 8),
-        np.asarray(cq, dtype=np.float64).reshape(8, 8),
-    ]
-    luma_codes = (
-        _build_codes(DC_LUMA_BITS, DC_LUMA_VALS),
-        _build_codes(AC_LUMA_BITS, AC_LUMA_VALS),
-    )
-    chroma_codes = (
-        _build_codes(DC_CHROMA_BITS, DC_CHROMA_VALS),
-        _build_codes(AC_CHROMA_BITS, AC_CHROMA_VALS),
-    )
-    w = _BitWriter()
-    preds = [0, 0, 0]
-    # r7: batched FDCT+quant per plane
-    yzz = _quant_plane_blocks(yplane, qmats[0])
-    cbzz = _quant_plane_blocks(cbp, qmats[1])
-    crzz = _quant_plane_blocks(crp, qmats[1])
-    for my in range(mcuy):
-        for mx in range(mcux):
-            for h in range(2):  # two Y blocks side by side
-                preds[0] = _write_zz(
-                    w, yzz[my, mx * 2 + h].tolist(), *luma_codes, preds[0]
-                )
-            preds[1] = _write_zz(
-                w, cbzz[my, mx].tolist(), *chroma_codes, preds[1]
-            )
-            preds[2] = _write_zz(
-                w, crzz[my, mx].tolist(), *chroma_codes, preds[2]
-            )
-    w.flush()
-    dht = (
-        bytes([0x00]) + bytes(DC_LUMA_BITS) + bytes(DC_LUMA_VALS)
-        + bytes([0x10]) + bytes(AC_LUMA_BITS) + bytes(AC_LUMA_VALS)
-        + bytes([0x01]) + bytes(DC_CHROMA_BITS) + bytes(DC_CHROMA_VALS)
-        + bytes([0x11]) + bytes(AC_CHROMA_BITS) + bytes(AC_CHROMA_VALS)
-    )
-    sof = struct.pack(">BHHB", 8, height, width, 3) + bytes(
-        [1, 0x21, 0, 2, 0x11, 1, 3, 0x11, 1]
-    )
-    sos = bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0])
-    return (
-        b"\xff\xd8"
-        + _seg(0xE0, _JFIF_APP0)
-        + _seg(0xDB, bytes([0x00]) + _zz_bytes(lq)
-               + bytes([0x01]) + _zz_bytes(cq))
-        + _seg(0xC0, sof)
-        + _seg(0xC4, dht)
-        + _seg(0xDA, sos)
-        + bytes(w.out)
-        + b"\xff\xd9"
-    )
-
-
-def _batch_idct_grid(
-    zz_blocks, qmat: np.ndarray, grid_h: int, grid_w: int, bv: int, bh: int
-) -> np.ndarray:
-    """Dequantize + inverse-zigzag + IDCT a component's blocks IN BATCH
-    and assemble the plane (r7, guide §4.2). ``zz_blocks`` is an
-    (n_blocks, 64) array of zigzag-order quantized coefficients in
-    (mcu_y, mcu_x, v, h) emission order. Bit-identical to the per-block
-    ``_C.T @ (coef * qmat) @ _C`` loop: the stacked matmul runs the same
-    8×8 GEMM kernel per slice (asserted by differential test)."""
-    nb = grid_h * grid_w * bv * bh
-    coef = np.zeros((nb, 64), dtype=np.float64)
-    coef[:, ZIGZAG] = zz_blocks
-    blocks = coef.reshape(nb, 8, 8) * qmat[None]
-    out = _C.T[None] @ blocks @ _C[None]
-    return (
-        out.reshape(grid_h, grid_w, bv, bh, 8, 8)
-        .transpose(0, 2, 4, 1, 3, 5)
-        .reshape(grid_h * bv * 8, grid_w * bh * 8)
-    )
-
-
-def _planes_to_rgb_arrays(planes, height: int, width: int):
-    """Shared decode tail: level shift / JFIF YCbCr→RGB, clamp, crop —
-    returns (rr, gg, bb) int64 arrays of shape (height·width,)."""
-    if len(planes) == 1:
-        v = np.clip(np.round(planes[0] + 128.0), 0, 255).astype(np.int64)
-        v = v[:height, :width].ravel()
-        return v, v, v
-    yp = planes[0] + 128.0
-    cbp, crp = planes[1], planes[2]
-    rr = np.clip(np.round(yp + 1.402 * crp), 0, 255).astype(np.int64)
-    gg = np.clip(
-        np.round(yp - 0.344136 * cbp - 0.714136 * crp), 0, 255
-    ).astype(np.int64)
-    bb = np.clip(np.round(yp + 1.772 * cbp), 0, 255).astype(np.int64)
-    return (
-        rr[:height, :width].ravel(),
-        gg[:height, :width].ravel(),
-        bb[:height, :width].ravel(),
-    )
-
-
-def _read_block(r: _BitReader, dct: dict, act: dict, prev_dc: int):
-    """Huffman-decode one block's zigzag coefficients; returns (zz, dc)."""
-    zz = [0] * 64
-    size = r.read_symbol(dct)
-    prev_dc += _extend(r.read_bits(size), size)
-    zz[0] = prev_dc
-    i = 1
-    while i < 64:
-        sym = r.read_symbol(act)
-        if sym == 0x00:  # EOB
-            break
-        if sym == 0xF0:  # ZRL
-            i += 16
-            continue
-        i += sym >> 4
-        size = sym & 0x0F
-        if i > 63:
-            raise ValueError("AC run past block end")
-        zz[i] = _extend(r.read_bits(size), size)
-        i += 1
-    return zz, prev_dc
-
-
-def decode_baseline(payload: bytes) -> tuple[int, int, list[tuple[int, int, int]]]:
-    """Decode a baseline-sequential 8-bit JPEG to RGB triples (see
-    :func:`decode_rgb_arrays`, which this wraps — the tuple list is the
-    long-standing API; array consumers use the arrays directly)."""
-    width, height, (rr, gg, bb) = decode_rgb_arrays(payload)
-    return width, height, [
-        (int(a), int(b), int(c)) for a, b, c in zip(rr, gg, bb)
-    ]
-
-
-def decode_rgb_arrays(
-    payload: bytes,
-) -> tuple[int, int, tuple[np.ndarray, np.ndarray, np.ndarray]]:
-    """Decode a baseline-sequential 8-bit JPEG — grayscale (1 component)
-    or YCbCr color with integer-ratio sampling factors up to 4 (4:4:4,
-    4:2:2, 4:2:0 and 4:1:1 interleaved MCUs; per-component quant/Huffman
-    selectors and DC predictors; subsampled planes upsampled by sample
-    replication) — to
-    (rr, gg, bb) int64 arrays: marker walk (DQT/SOF0/DHT/DRI/SOS), restart-interval RSTn resync, canonical-Huffman
-    entropy decode, then batched dequantize / inverse zigzag / float
-    IDCT (r7: one stacked matmul per component instead of per-block
-    numpy calls — bit-identical, differential-tested), JFIF
-    YCbCr→RGB for color, level shift, clamp, crop. A progressive (SOF2)
-    frame dispatches to the progressive decoder. Outside the subset
-    (sampling factor 3 / non-integer upsampling ratios, 16-bit quant,
-    hierarchical/lossless/arithmetic SOFs) raises ``NotImplementedError``; corrupt streams raise
-    ``ValueError``."""
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("bad JPEG SOI")
-    pos = 2
-    restart_interval = 0
-    quants: dict[int, np.ndarray] = {}
-    dc_tables: dict[int, dict] = {}
-    ac_tables: dict[int, dict] = {}
-    width = height = None
-    comp_specs: list[tuple[int, int]] = []  # (component id, quant selector)
-    scan_sel: dict[int, tuple[int, int]] = {}  # id -> (dc sel, ac sel)
-    while pos + 4 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError("expected marker")
-        marker = payload[pos + 1]
-        if marker == 0xFF:  # T.81 B.1.1.2 fill byte before a marker
-            pos += 1
-            continue
-        if marker == 0xD9:  # EOI
-            break
-        (seglen,) = struct.unpack_from(">H", payload, pos + 2)
-        data = payload[pos + 4 : pos + 2 + seglen]
-        if marker == 0xDB:  # DQT (possibly several tables per segment)
-            off = 0
-            while off < len(data):
-                pq, tq = data[off] >> 4, data[off] & 0x0F
-                if pq != 0:
-                    raise NotImplementedError("16-bit quant tables unsupported")
-                tbl = np.zeros(64)
-                for i in range(64):
-                    tbl[ZIGZAG[i]] = data[off + 1 + i]
-                quants[tq] = tbl.reshape(8, 8)
-                off += 65
-        elif marker == 0xC2:  # progressive frame: hand off wholesale
-            return _decode_progressive_arrays(payload)
-        elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB):
-            raise NotImplementedError("only baseline (SOF0) / progressive (SOF2) JPEG")
-        elif marker == 0xC0:  # SOF0
-            precision, height, width, ncomp = struct.unpack_from(">BHHB", data, 0)
-            if precision != 8 or ncomp not in (1, 3):
-                raise NotImplementedError("only 8-bit, 1 or 3 components")
-            if len(data) < 6 + 3 * ncomp:
-                raise ValueError("truncated SOF0")
-            for c in range(ncomp):
-                cid, sampling, tq = data[6 + 3 * c : 9 + 3 * c]
-                hi, vi = sampling >> 4, sampling & 0x0F
-                if hi not in (1, 2, 4) or vi not in (1, 2, 4):
-                    raise NotImplementedError(
-                        "sampling factors must be 1, 2 or 4"
-                    )
-                if ncomp == 1 and sampling != 0x11:
-                    raise NotImplementedError("grayscale must be 1x1 sampled")
-                comp_specs.append((cid, tq, hi, vi))
-        elif marker == 0xDD:  # DRI — restart interval in MCUs
-            (restart_interval,) = struct.unpack_from(">H", data, 0)
-        elif marker == 0xC4:  # DHT (possibly several tables per segment)
-            off = 0
-            while off < len(data):
-                tc, th = data[off] >> 4, data[off] & 0x0F
-                bits = list(data[off + 1 : off + 17])
-                nvals = sum(bits)
-                vals = list(data[off + 17 : off + 17 + nvals])
-                tbl = _build_decode_table(bits, vals)
-                (dc_tables if tc == 0 else ac_tables)[th] = tbl
-                off += 17 + nvals
-        elif marker == 0xDA:  # SOS — entropy data follows the segment
-            ns = data[0]
-            if ns != len(comp_specs):
-                raise NotImplementedError("only single fully-interleaved scans")
-            for c in range(ns):
-                cid, sel = data[1 + 2 * c], data[2 + 2 * c]
-                scan_sel[cid] = (sel >> 4, sel & 0x0F)
-            pos = pos + 2 + seglen
-            break
-        pos += 2 + seglen
-    if width is None or not comp_specs:
-        raise ValueError("missing SOF0")
-
-    # interleaved MCU grid: Hmax×Vmax-sampled components contribute
-    # Hi×Vi blocks per MCU in raster order (4:4:4 degenerates to the
-    # one-block-per-component case; 4:2:0 is 4 Y + 1 Cb + 1 Cr per MCU)
-    hmax = max(h for _cid, _tq, h, _v in comp_specs)
-    vmax = max(v for _cid, _tq, _h, v in comp_specs)
-    for _cid, _tq, h, v in comp_specs:
-        if hmax % h or vmax % v:
-            raise NotImplementedError(
-                "non-integer chroma upsampling ratio unsupported"
-            )
-    mcux = (width + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (height + 8 * vmax - 1) // (8 * vmax)
-    # entropy decode (inherently sequential) collects each component's
-    # zigzag coefficient rows; the numeric pipeline then runs batched
-    comp_zz: list[list] = [[] for _ in comp_specs]
-    r = _BitReader(payload, pos)
-    preds = [0] * len(comp_specs)
-    mcu = rst = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                r.expect_restart(rst)
-                rst = (rst + 1) & 7
-                preds = [0] * len(comp_specs)
-            mcu += 1
-            for ci, (cid, tq, hi, vi) in enumerate(comp_specs):
-                dsel, asel = scan_sel[cid]
-                for _v in range(vi):
-                    for _h in range(hi):
-                        zz, preds[ci] = _read_block(
-                            r, dc_tables[dsel], ac_tables[asel], preds[ci]
-                        )
-                        comp_zz[ci].append(zz)
-    planes = [
-        _batch_idct_grid(
-            np.asarray(comp_zz[ci], dtype=np.float64),
-            quants[tq], mcuy, mcux, vi, hi,
-        )
-        for ci, (_cid, tq, hi, vi) in enumerate(comp_specs)
-    ]
-    # upsample subsampled planes to full resolution by sample replication
-    for ci, (_cid, _tq, hi, vi) in enumerate(comp_specs):
-        if hi != hmax or vi != vmax:
-            planes[ci] = np.repeat(
-                np.repeat(planes[ci], vmax // vi, axis=0), hmax // hi, axis=1
-            )
-    return width, height, _planes_to_rgb_arrays(planes, height, width)
-
-
-def decode_baseline_gray(payload: bytes) -> tuple[int, int, list[int]]:
-    """Luma view of :func:`decode_baseline`: integer BT.601 over the RGB
-    triples. For a grayscale stream this is exactly the decoded sample
-    (``(299+587+114)·v // 1000 == v``); for color it is the standard
-    luma reduction."""
-    width, height, lum = decode_gray_array(payload)
-    return width, height, [int(s) for s in lum]
-
-
-def decode_gray_array(payload: bytes) -> tuple[int, int, np.ndarray]:
-    """Array twin of :func:`decode_baseline_gray` (r7): the BT.601 luma
-    reduction computed vectorized over the decoded RGB arrays — the
-    per-pixel tuple materialization skipped entirely."""
-    width, height, (rr, gg, bb) = decode_rgb_arrays(payload)
-    return width, height, (299 * rr + 587 * gg + 114 * bb) // 1000
 
 
 # ===========================================================================
@@ -1001,13 +467,13 @@ def decode_gray_array(payload: bytes) -> tuple[int, int, np.ndarray]:
 # frame's quantized coefficients are transmitted over MULTIPLE scans —
 # first a coarse pass (DC, then low-frequency AC bands, each optionally
 # point-transformed by Al bits), then refinement scans that append one
-# bit of precision at a time. The decoder below reconstructs the exact
-# quantized coefficient array across scans and only then runs the same
-# dequant/IDCT/YCbCr machinery as the baseline path, so a progressive
-# stream of the same coefficients decodes bit-identically to its
-# baseline twin (differential-tested).
+# bit of precision at a time. The decoder below accumulates the exact
+# quantized coefficient grids across scans and then runs the same
+# dequant/IDCT/YCbCr tail as a baseline frame, so a progressive stream
+# of the same coefficients decodes bit-identically to its baseline
+# encoding (differential-tested).
 #
-# The fixture encoder emits the libjpeg default scan script (DC Al=1 →
+# The encoder emits the libjpeg default scan script (DC Al=1 →
 # AC bands Al=2/1 → AC refinements → DC refinement → final AC Al=0) with
 # per-scan OPTIMIZED Huffman tables (T.81 K.2 frequency algorithm) —
 # required because Annex K's example AC tables lack the EOBn (r<<4)
@@ -1112,33 +578,17 @@ class _SymWriter:
             self.w.write(v, n)
 
 
-def _quant_plane_blocks(plane: np.ndarray, qmat: np.ndarray) -> np.ndarray:
-    """FDCT + quantize every 8×8 block of an (8-aligned) plane; returns
-    an (bh, bw, 64) int64 array in ZIGZAG coefficient order. r7: one
-    stacked matmul over all blocks (bit-identical to the per-block
-    ``_C @ (block-128) @ _C.T`` loop — same GEMM kernel per slice;
-    differential-tested)."""
-    bh, bw = plane.shape[0] // 8, plane.shape[1] // 8
-    blocks = (
-        plane.reshape(bh, 8, bw, 8).transpose(0, 2, 1, 3).astype(np.float64)
-        - 128.0
-    )
-    coef = _C[None, None] @ blocks @ _C.T[None, None]
-    q = np.round(coef / qmat).astype(np.int64)
-    return q.reshape(bh, bw, 64)[:, :, ZIGZAG]
-
-
 def _ac_shift(v: int, al: int) -> int:
     """AC point transform: division by 2^Al truncating toward ZERO
     (T.81 G.1.2.2) — DC uses a plain arithmetic shift instead."""
     return (v >> al) if v >= 0 else -((-v) >> al)
 
 
-def _emit_dc_scan(sink, scan_comps, ah: int, al: int) -> None:
+def _emit_dc_scan(sink, scan_comps, mcu_grid, ah: int, al: int) -> None:
     """DC scan over the MCU-interleaved grid: first pass (Ah=0) codes the
     point-transformed DC differences with the component's DC table;
     refinement passes (Ah>0) are one raw bit per block."""
-    mcuy, mcux = scan_comps[0]["mcu_grid"]
+    mcuy, mcux = mcu_grid
     preds = [0] * len(scan_comps)
     for my in range(mcuy):
         for mx in range(mcux):
@@ -1151,7 +601,7 @@ def _emit_dc_scan(sink, scan_comps, ah: int, al: int) -> None:
                             val = dc >> al  # arithmetic shift (G.1.2.1)
                             size, bits = _magnitude(val - preds[ci])
                             preds[ci] = val
-                            sink.sym("dc", c["dc_tid"], size)
+                            sink.sym("dc", c["tid"], size)
                             sink.bits(bits, size)
                         else:
                             sink.bits((dc >> al) & 1, 1)
@@ -1168,7 +618,7 @@ def _emit_ac_scan(sink, comp, ss: int, se: int, ah: int, al: int) -> None:
     THAT symbol; bits in the zero tail of a block attach to the pending
     EOB run and flush with its EOBn symbol (two separate buffers, the
     BE/BR split of T.81 figure G.7)."""
-    tid = comp["ac_tid"]
+    tid = comp["tid"]
     eobrun = 0
     be: list[int] = []  # correction bits tied to the pending EOB run
 
@@ -1276,31 +726,38 @@ _SCRIPT_COLOR = [
 ]
 
 
-def _assemble_progressive(
+def encode_progressive(
     width: int,
     height: int,
-    comps: list[dict],
-    quant_segments: bytes,
-    script: list[tuple],
+    planes: list,
+    sampling: tuple[int, int] = (1, 1),
+    luma_quant: list[int] | None = None,
+    chroma_quant: list[int] | None = None,
 ) -> bytes:
-    """Emit the SOF2 frame: per scan, count symbols (pass 1), generate
-    optimal tables, write DHT + SOS + entropy data (pass 2)."""
-    sof = struct.pack(">BHHB", 8, height, width, len(comps)) + b"".join(
-        bytes([c["cid"], (c["hi"] << 4) | c["vi"], c["qid"]]) for c in comps
+    """Encode the same frame :func:`encode_baseline` would as a
+    PROGRESSIVE (SOF2) JFIF using libjpeg's default scan script
+    (:data:`_SCRIPT_GRAY` or :data:`_SCRIPT_COLOR`): DC first (interleaved
+    for color), then AC bands per component, then successive-
+    approximation refinements, each scan with Huffman tables optimized
+    for it (count symbols in pass 1, write in pass 2). The union of scans
+    transmits every coefficient bit, so the stream decodes
+    bit-identically to the baseline encoding of the same planes."""
+    comps, mcu_grid, quants = _components(
+        width, height, planes, sampling, luma_quant, chroma_quant
     )
-    out = bytearray(
-        b"\xff\xd8"
-        + _seg(0xE0, _JFIF_APP0)
-        + _seg(0xDB, quant_segments)
-        + _seg(0xC2, sof)
-    )
+    script = _SCRIPT_GRAY if len(comps) == 1 else _SCRIPT_COLOR
+    out = bytearray(_header(0xC2, width, height, comps, quants))
     for comp_idx, ss, se, ah, al in script:
         scan_comps = [comps[i] for i in comp_idx]
+
+        def emit(sink):
+            if ss == 0:
+                _emit_dc_scan(sink, scan_comps, mcu_grid, ah, al)
+            else:
+                _emit_ac_scan(sink, scan_comps[0], ss, se, ah, al)
+
         counter = _SymCounter()
-        if ss == 0:
-            _emit_dc_scan(counter, scan_comps, ah, al)
-        else:
-            _emit_ac_scan(counter, scan_comps[0], ss, se, ah, al)
+        emit(counter)
         dht = bytearray()
         codes: dict[tuple[str, int], dict] = {}
         for (kind, tid), freq in sorted(counter.freq.items()):
@@ -1309,14 +766,10 @@ def _assemble_progressive(
             cls = 0x00 if kind == "dc" else 0x10
             dht += bytes([cls | tid]) + bytes(bits) + bytes(vals)
         writer = _SymWriter(codes)
-        if ss == 0:
-            _emit_dc_scan(writer, scan_comps, ah, al)
-        else:
-            _emit_ac_scan(writer, scan_comps[0], ss, se, ah, al)
+        emit(writer)
         writer.w.flush()
         sos = bytes([len(scan_comps)]) + b"".join(
-            bytes([c["cid"], (c["dc_tid"] << 4) | c["ac_tid"]])
-            for c in scan_comps
+            bytes([c["cid"], c["tid"] * 0x11]) for c in scan_comps
         ) + bytes([ss, se, (ah << 4) | al])
         if dht:
             out += _seg(0xC4, bytes(dht))
@@ -1325,115 +778,32 @@ def _assemble_progressive(
     return bytes(out)
 
 
-def encode_progressive_gray(
-    width: int, height: int, samples: list[int], quant: list[int] | None = None
-) -> bytes:
-    """Encode 8-bit grayscale as a PROGRESSIVE (SOF2) JFIF using the
-    libjpeg default scan script — spectral selection (DC, AC 1–5,
-    AC 6–63) and successive approximation (Al=2→1→0) with per-scan
-    optimized Huffman tables. The union of scans transmits every
-    coefficient bit, so the stream decodes bit-identically to the
-    baseline encoding of the same samples under the same quant table."""
-    q = list(quant or FLAT_QUANT)
-    qmat = np.asarray(q, dtype=np.float64).reshape(8, 8)
-    blocks = _quant_plane_blocks(_pad_plane(samples, width, height), qmat)
-    bh, bw = blocks.shape[0], blocks.shape[1]
-    comps = [
-        {
-            "cid": 1, "hi": 1, "vi": 1, "qid": 0, "dc_tid": 0, "ac_tid": 0,
-            "blocks": blocks, "mcu_grid": (bh, bw), "own_grid": (bh, bw),
-        }
-    ]
-    return _assemble_progressive(
-        width, height, comps, bytes([0x00]) + _zz_bytes(q), _SCRIPT_GRAY
-    )
+# ===========================================================================
+# Decoder — one marker walk for baseline (SOF0) and progressive (SOF2)
+# ===========================================================================
 
 
-def encode_progressive_ycbcr(
-    width: int,
-    height: int,
-    y: list[int],
-    cb: list[int],
-    cr: list[int],
-    luma_quant: list[int] | None = None,
-    chroma_quant: list[int] | None = None,
-    subsampling: str = "444",
-) -> bytes:
-    """Encode three YCbCr planes as a PROGRESSIVE (SOF2) color JFIF —
-    ``subsampling="444"`` (full-resolution chroma), ``"420"`` (chroma at
-    half resolution, ``ceil(w/2) × ceil(h/2)``, luma sampled 2×2) or
-    ``"422"`` (chroma at half horizontal
-    resolution, ``ceil(w/2) × h``, luma 2×1) or ``"411"`` (chroma at
-    quarter horizontal resolution, ``ceil(w/4) × h``, luma 4×1) — the
-    last two added r6, completing the subsampling matrix the baseline
-    encoders already cover. Uses the libjpeg default color scan script: interleaved DC
-    first, per-component AC band scans, successive-approximation
-    refinements, with per-scan optimized Huffman tables."""
-    lq, cq = list(luma_quant or FLAT_QUANT), list(chroma_quant or FLAT_QUANT)
-    lqm = np.asarray(lq, dtype=np.float64).reshape(8, 8)
-    cqm = np.asarray(cq, dtype=np.float64).reshape(8, 8)
-    if subsampling == "444":
-        planes = [
-            (_pad_plane(y, width, height), lqm, 1, 1),
-            (_pad_plane(cb, width, height), cqm, 1, 1),
-            (_pad_plane(cr, width, height), cqm, 1, 1),
-        ]
-        mcuy, mcux = (height + 7) // 8, (width + 7) // 8
-    elif subsampling == "420":
-        cw, ch = (width + 1) // 2, (height + 1) // 2
-        mcux, mcuy = (width + 15) // 16, (height + 15) // 16
-        yp = _pad_plane(y, width, height, align=16)
-        cbp = _pad_plane(cb, cw, ch)
-        crp = _pad_plane(cr, cw, ch)
-        cbp = np.pad(cbp, ((0, mcuy * 8 - cbp.shape[0]), (0, mcux * 8 - cbp.shape[1])), mode="edge")
-        crp = np.pad(crp, ((0, mcuy * 8 - crp.shape[0]), (0, mcux * 8 - crp.shape[1])), mode="edge")
-        planes = [(yp, lqm, 2, 2), (cbp, cqm, 1, 1), (crp, cqm, 1, 1)]
-    elif subsampling == "422":
-        cw = (width + 1) // 2
-        mcux, mcuy = (width + 15) // 16, (height + 7) // 8
-        yp = _pad_plane(y, width, height)
-        yp = np.pad(yp, ((0, mcuy * 8 - yp.shape[0]), (0, mcux * 16 - yp.shape[1])), mode="edge")
-        cbp = _pad_plane(cb, cw, height)
-        crp = _pad_plane(cr, cw, height)
-        cbp = np.pad(cbp, ((0, mcuy * 8 - cbp.shape[0]), (0, mcux * 8 - cbp.shape[1])), mode="edge")
-        crp = np.pad(crp, ((0, mcuy * 8 - crp.shape[0]), (0, mcux * 8 - crp.shape[1])), mode="edge")
-        planes = [(yp, lqm, 2, 1), (cbp, cqm, 1, 1), (crp, cqm, 1, 1)]
-    elif subsampling == "411":
-        cw = (width + 3) // 4
-        mcux, mcuy = (width + 31) // 32, (height + 7) // 8
-        yp = _pad_plane(y, width, height)
-        yp = np.pad(yp, ((0, mcuy * 8 - yp.shape[0]), (0, mcux * 32 - yp.shape[1])), mode="edge")
-        cbp = _pad_plane(cb, cw, height)
-        crp = _pad_plane(cr, cw, height)
-        cbp = np.pad(cbp, ((0, mcuy * 8 - cbp.shape[0]), (0, mcux * 8 - cbp.shape[1])), mode="edge")
-        crp = np.pad(crp, ((0, mcuy * 8 - crp.shape[0]), (0, mcux * 8 - crp.shape[1])), mode="edge")
-        planes = [(yp, lqm, 4, 1), (cbp, cqm, 1, 1), (crp, cqm, 1, 1)]
-    else:
-        raise NotImplementedError(f"subsampling {subsampling!r}")
-    hmax = max(p[2] for p in planes)
-    vmax = max(p[3] for p in planes)
-    comps = []
-    for i, (plane, qm, hi, vi) in enumerate(planes):
-        blocks = _quant_plane_blocks(plane, qm)
-        # non-interleaved AC scans walk the component's OWN block dims
-        # (T.81 A.2.2: ceil of the scaled sample dims), which for a
-        # subsampled frame is smaller than the padded interleaved grid
-        ow = (-(-width * hi // hmax) + 7) // 8
-        oh = (-(-height * vi // vmax) + 7) // 8
-        comps.append(
-            {
-                "cid": i + 1, "hi": hi, "vi": vi,
-                "qid": 0 if i == 0 else 1,
-                "dc_tid": 0 if i == 0 else 1,
-                "ac_tid": 0 if i == 0 else 1,
-                "blocks": blocks, "mcu_grid": (mcuy, mcux),
-                "own_grid": (oh, ow),
-            }
-        )
-    quant_segs = bytes([0x00]) + _zz_bytes(lq) + bytes([0x01]) + _zz_bytes(cq)
-    return _assemble_progressive(
-        width, height, comps, quant_segs, _SCRIPT_COLOR
-    )
+def _read_block(r: _BitReader, dct: dict, act: dict, prev_dc: int):
+    """Huffman-decode one block's zigzag coefficients; returns (zz, dc)."""
+    zz = [0] * 64
+    size = r.read_symbol(dct)
+    prev_dc += _extend(r.read_bits(size), size)
+    zz[0] = prev_dc
+    i = 1
+    while i < 64:
+        sym = r.read_symbol(act)
+        if sym == 0x00:  # EOB
+            break
+        if sym == 0xF0:  # ZRL
+            i += 16
+            continue
+        i += sym >> 4
+        size = sym & 0x0F
+        if i > 63:
+            raise ValueError("AC run past block end")
+        zz[i] = _extend(r.read_bits(size), size)
+        i += 1
+    return zz, prev_dc
 
 
 def _next_marker(data: bytes, pos: int) -> int:
@@ -1564,40 +934,116 @@ def _decode_prog_scan(
     return _next_marker(payload, r.pos)
 
 
-def decode_progressive(payload: bytes) -> tuple[int, int, list[tuple[int, int, int]]]:
-    """Decode a PROGRESSIVE (SOF2) 8-bit JPEG to RGB triples (tuple-list
-    wrapper over :func:`_decode_progressive_arrays` — the long-standing
-    API)."""
-    width, height, (rr, gg, bb) = _decode_progressive_arrays(payload)
-    return width, height, [
-        (int(a), int(b), int(c)) for a, b, c in zip(rr, gg, bb)
+def _decode_baseline_scan(
+    r: _BitReader,
+    comps: list[dict],
+    scan_sel: dict[int, tuple[int, int]],
+    dc_tables: dict,
+    ac_tables: dict,
+    restart_interval: int,
+    mcu_grid: tuple[int, int],
+) -> list[np.ndarray]:
+    """Decode a baseline frame's one interleaved scan (Hi×Vi blocks per
+    component per MCU, raster order; RSTn resync every
+    ``restart_interval`` MCUs) into the per-component
+    (Vi·mcuy, Hi·mcux, 64) zigzag coefficient grids the progressive scans
+    fill. Entropy decode is inherently sequential; the grids are float64
+    because a corrupt DC table can extend a predictor past int64."""
+    mcuy, mcux = mcu_grid
+    comp_zz: list[list] = [[] for _ in comps]
+    preds = [0] * len(comps)
+    mcu = rst = 0
+    for my in range(mcuy):
+        for mx in range(mcux):
+            if restart_interval and mcu and mcu % restart_interval == 0:
+                r.expect_restart(rst)
+                rst = (rst + 1) & 7
+                preds = [0] * len(comps)
+            mcu += 1
+            for ci, c in enumerate(comps):
+                dsel, asel = scan_sel[c["cid"]]
+                dct, act = dc_tables[dsel], ac_tables[asel]
+                for _ in range(c["vi"] * c["hi"]):
+                    zz, preds[ci] = _read_block(r, dct, act, preds[ci])
+                    comp_zz[ci].append(zz)
+    return [
+        np.asarray(zz, dtype=np.float64)
+        .reshape(mcuy, mcux, c["vi"], c["hi"], 64)
+        .transpose(0, 2, 1, 3, 4)
+        .reshape(mcuy * c["vi"], mcux * c["hi"], 64)
+        for zz, c in zip(comp_zz, comps)
     ]
 
 
-def _decode_progressive_arrays(
+def _idct_plane(grid: np.ndarray, qmat: np.ndarray) -> np.ndarray:
+    """Dequantize + inverse-zigzag + IDCT a (gh, gw, 64) grid of zigzag
+    coefficients in one stacked matmul and assemble the (8·gh, 8·gw)
+    plane — bit-identical to the per-block ``_C.T @ (coef * qmat) @ _C``
+    product (the stacked matmul runs the same 8×8 GEMM per slice)."""
+    gh, gw = grid.shape[0], grid.shape[1]
+    if not grid.size:
+        raise ValueError("zero-size frame")
+    coef = np.zeros((gh * gw, 64), dtype=np.float64)
+    coef[:, ZIGZAG] = grid.reshape(gh * gw, 64)
+    out = _C.T[None] @ (coef.reshape(gh * gw, 8, 8) * qmat[None]) @ _C[None]
+    return out.reshape(gh, gw, 8, 8).transpose(0, 2, 1, 3).reshape(gh * 8, gw * 8)
+
+
+def _planes_to_rgb_arrays(planes, height: int, width: int):
+    """Shared decode tail: level shift / JFIF YCbCr→RGB, clamp, crop —
+    returns (rr, gg, bb) int64 arrays of shape (height·width,)."""
+    if len(planes) == 1:
+        v = np.clip(np.round(planes[0] + 128.0), 0, 255).astype(np.int64)
+        v = v[:height, :width].ravel()
+        return v, v, v
+    yp = planes[0] + 128.0
+    cbp, crp = planes[1], planes[2]
+    rr = np.clip(np.round(yp + 1.402 * crp), 0, 255).astype(np.int64)
+    gg = np.clip(
+        np.round(yp - 0.344136 * cbp - 0.714136 * crp), 0, 255
+    ).astype(np.int64)
+    bb = np.clip(np.round(yp + 1.772 * cbp), 0, 255).astype(np.int64)
+    return (
+        rr[:height, :width].ravel(),
+        gg[:height, :width].ravel(),
+        bb[:height, :width].ravel(),
+    )
+
+
+def decode_rgb_arrays(
     payload: bytes,
 ) -> tuple[int, int, tuple[np.ndarray, np.ndarray, np.ndarray]]:
-    """Decode a PROGRESSIVE (SOF2) 8-bit JPEG to (rr, gg, bb) arrays:
-    multi-scan marker walk (tables may be redefined between scans),
-    spectral selection and successive approximation for DC and AC
-    (EOBRUN, ZRL-in-refinement, buffered correction bits), coefficients
-    accumulated across scans, then the same (r7: batched) dequant /
-    inverse zigzag / float IDCT / replication upsample / JFIF YCbCr→RGB
-    finish as the baseline decoder. Restart intervals inside progressive
-    scans and arithmetic coding raise ``NotImplementedError``."""
+    """Decode an 8-bit baseline (SOF0) or progressive (SOF2) JPEG —
+    grayscale or YCbCr color with sampling factors 1, 2 or 4 — to
+    (width, height, (rr, gg, bb)) int64 arrays of ``width·height``
+    samples.
+
+    One marker walk reads DQT/DHT/DRI/SOF segments. A baseline frame's
+    single interleaved scan (with restart-interval RSTn resync) and each
+    progressive scan (spectral selection + successive approximation,
+    EOBRUN, tables redefinable between scans) fill the same
+    per-component coefficient grids; both frame types then share one
+    tail: batched dequantize / inverse zigzag / float IDCT, replication
+    upsampling, JFIF YCbCr→RGB for color, level shift, clamp, crop.
+    Outside the subset (16-bit quant, hierarchical/lossless/arithmetic
+    SOFs, sampling factor 3, DRI in a progressive frame) raises
+    ``NotImplementedError``; corrupt streams raise ``ValueError`` (also an
+    SOS before any frame header), ``IndexError`` or ``KeyError``."""
     if payload[:2] != b"\xff\xd8":
         raise ValueError("bad JPEG SOI")
     pos = 2
+    restart_interval = 0
     quants: dict[int, np.ndarray] = {}
     dc_tables: dict[int, dict] = {}
     ac_tables: dict[int, dict] = {}
-    width = height = None
-    comp_specs: list[dict] = []
+    progressive = None  # frame type, set by SOF0 (False) / SOF2 (True)
+    comps: list[dict] = []
     coefs: list[np.ndarray] = []
-    mcu_grid = (0, 0)
-    restart_interval = 0
-    hmax = vmax = 1
-    while pos + 2 <= len(payload):
+    scan_sel: dict[int, tuple[int, int]] = {}  # baseline: id -> (dc, ac)
+    # A baseline walk needs a whole segment header (4 bytes) to go on; a
+    # progressive walk, re-entered after every scan, also reads a bare
+    # 2-byte marker there.
+    while pos + (2 if progressive else 4) <= len(payload):
         if payload[pos] != 0xFF:
             raise ValueError("expected marker")
         marker = payload[pos + 1]
@@ -1608,7 +1054,7 @@ def _decode_progressive_arrays(
             break
         (seglen,) = struct.unpack_from(">H", payload, pos + 2)
         data = payload[pos + 4 : pos + 2 + seglen]
-        if marker == 0xDB:
+        if marker == 0xDB:  # DQT (possibly several tables per segment)
             off = 0
             while off < len(data):
                 pq, tq = data[off] >> 4, data[off] & 0x0F
@@ -1619,62 +1065,75 @@ def _decode_progressive_arrays(
                     tbl[ZIGZAG[i]] = data[off + 1 + i]
                 quants[tq] = tbl.reshape(8, 8)
                 off += 65
-        elif marker == 0xC4:
+        elif marker == 0xC4:  # DHT (possibly several tables per segment)
             off = 0
             while off < len(data):
                 tc, th = data[off] >> 4, data[off] & 0x0F
                 bits = list(data[off + 1 : off + 17])
                 nvals = sum(bits)
                 vals = list(data[off + 17 : off + 17 + nvals])
-                (dc_tables if tc == 0 else ac_tables)[th] = _build_decode_table(
-                    bits, vals
-                )
+                tbl = _build_decode_table(bits, vals)
+                (dc_tables if tc == 0 else ac_tables)[th] = tbl
                 off += 17 + nvals
-        elif marker == 0xDD:
+        elif marker == 0xDD:  # DRI — restart interval in MCUs
             (restart_interval,) = struct.unpack_from(">H", data, 0)
-        elif marker == 0xC2:  # SOF2
+        elif marker in (0xC0, 0xC2):  # SOF0 baseline / SOF2 progressive
+            if comps:
+                raise NotImplementedError("one frame header per stream")
+            progressive = marker == 0xC2
             precision, height, width, ncomp = struct.unpack_from(">BHHB", data, 0)
             if precision != 8 or ncomp not in (1, 3):
                 raise NotImplementedError("only 8-bit, 1 or 3 components")
-            for cn in range(ncomp):
-                cid, sampling, tq = data[6 + 3 * cn : 9 + 3 * cn]
+            if len(data) < 6 + 3 * ncomp:
+                raise ValueError("truncated frame header")
+            for c in range(ncomp):
+                cid, sampling, tq = data[6 + 3 * c : 9 + 3 * c]
                 hi, vi = sampling >> 4, sampling & 0x0F
                 if hi not in (1, 2, 4) or vi not in (1, 2, 4):
                     raise NotImplementedError(
                         "sampling factors must be 1, 2 or 4"
                     )
-                comp_specs.append(
-                    {"cid": cid, "tq": tq, "hi": hi, "vi": vi}
-                )
-            hmax = max(c["hi"] for c in comp_specs)
-            vmax = max(c["vi"] for c in comp_specs)
-            for c in comp_specs:
-                if hmax % c["hi"] or vmax % c["vi"]:
-                    raise NotImplementedError(
-                        "non-integer chroma upsampling ratio unsupported"
-                    )
-            mcux = (width + 8 * hmax - 1) // (8 * hmax)
-            mcuy = (height + 8 * vmax - 1) // (8 * vmax)
-            mcu_grid = (mcuy, mcux)
-            for c in comp_specs:
+                # a one-component scan is non-interleaved (T.81 A.2.2);
+                # the baseline scan decoder walks MCUs only
+                if ncomp == 1 and sampling != 0x11 and not progressive:
+                    raise NotImplementedError("grayscale must be 1x1 sampled")
+                comps.append({"cid": cid, "tq": tq, "hi": hi, "vi": vi})
+            # interleaved MCU grid: Hmax×Vmax-sampled components contribute
+            # Hi×Vi blocks per MCU (factors 1/2/4 always divide the max,
+            # so every upsampling ratio is an integer)
+            hmax = max(c["hi"] for c in comps)
+            vmax = max(c["vi"] for c in comps)
+            mcu_grid = (
+                (height + 8 * vmax - 1) // (8 * vmax),
+                (width + 8 * hmax - 1) // (8 * hmax),
+            )
+            for c in comps:
                 c["own_grid"] = (
                     (-(-height * c["vi"] // vmax) + 7) // 8,
                     (-(-width * c["hi"] // hmax) + 7) // 8,
                 )
                 c["dc_tid"] = c["ac_tid"] = 0  # set per scan from SOS
-                coefs.append(
-                    np.zeros(
-                        (mcuy * c["vi"], mcux * c["hi"], 64), dtype=np.int64
+                if progressive:
+                    coefs.append(
+                        np.zeros(
+                            (mcu_grid[0] * c["vi"], mcu_grid[1] * c["hi"], 64),
+                            dtype=np.int64,
+                        )
                     )
-                )
-        elif marker in (0xC0, 0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB):
-            raise NotImplementedError(
-                "decode_progressive handles SOF2 only (baseline goes "
-                "through decode_baseline)"
-            )
-        elif marker == 0xDA:
-            if not comp_specs:
-                raise ValueError("SOS before SOF2")
+        elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB):
+            raise NotImplementedError("only baseline (SOF0) / progressive (SOF2) JPEG")
+        elif marker == 0xDA:  # SOS — entropy data follows the segment
+            if progressive is None:
+                raise ValueError("SOS before frame header")
+            if not progressive:
+                ns = data[0]
+                if ns != len(comps):
+                    raise NotImplementedError("only single fully-interleaved scans")
+                for c in range(ns):
+                    cid, sel = data[1 + 2 * c], data[2 + 2 * c]
+                    scan_sel[cid] = (sel >> 4, sel & 0x0F)
+                pos = pos + 2 + seglen
+                break  # the scan runs from pos; bytes after it are ignored
             if restart_interval:
                 raise NotImplementedError(
                     "restart intervals inside progressive scans unsupported"
@@ -1683,7 +1142,7 @@ def _decode_progressive_arrays(
             scan = []
             for cn in range(ns):
                 cid, sel = data[1 + 2 * cn], data[2 + 2 * cn]
-                for idx, c in enumerate(comp_specs):
+                for idx, c in enumerate(comps):
                     if c["cid"] == cid:
                         c["dc_tid"], c["ac_tid"] = sel >> 4, sel & 0x0F
                         scan.append((idx, c))
@@ -1700,25 +1159,29 @@ def _decode_progressive_arrays(
             )
             continue
         pos += 2 + seglen
-    if width is None or not comp_specs:
-        raise ValueError("missing SOF2 frame header")
-
-    # finish: batched dequant + inverse zigzag + IDCT (r7), then the
-    # same upsample/color tail as the baseline decoder
-    planes = []
-    for ci, c in enumerate(comp_specs):
-        grid = coefs[ci]
-        gh, gw = grid.shape[0], grid.shape[1]
-        plane = _batch_idct_grid(
-            grid.reshape(gh * gw, 64).astype(np.float64),
-            quants[c["tq"]], gh, gw, 1, 1,
+    if progressive is None:
+        raise ValueError("missing SOF0/SOF2 frame header")
+    if not progressive:
+        coefs = _decode_baseline_scan(
+            _BitReader(payload, pos), comps, scan_sel, dc_tables, ac_tables,
+            restart_interval, mcu_grid,
         )
+    planes = []
+    for c, grid in zip(comps, coefs):
+        plane = _idct_plane(grid, quants[c["tq"]])
         if c["hi"] != hmax or c["vi"] != vmax:
+            # upsample a subsampled plane to full resolution by replication
             plane = np.repeat(
-                np.repeat(plane, vmax // c["vi"], axis=0),
-                hmax // c["hi"],
-                axis=1,
+                np.repeat(plane, vmax // c["vi"], axis=0), hmax // c["hi"], axis=1
             )
         planes.append(plane)
     return width, height, _planes_to_rgb_arrays(planes, height, width)
 
+
+def decode_gray_array(payload: bytes) -> tuple[int, int, np.ndarray]:
+    """Luma view of :func:`decode_rgb_arrays`: integer BT.601 over the
+    decoded RGB arrays. For a grayscale stream this is exactly the decoded
+    sample (``(299+587+114)·v // 1000 == v``); for color it is the
+    standard luma reduction."""
+    width, height, (rr, gg, bb) = decode_rgb_arrays(payload)
+    return width, height, (299 * rr + 587 * gg + 114 * bb) // 1000

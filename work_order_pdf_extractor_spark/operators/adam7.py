@@ -27,13 +27,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from .common import ensure_parallelism
 from .multimodal import (
-    MEDIA_SCHEMA,
     _feature_rows,
     _luma,
     _paeth,
     _png_chunk,
+    media_from_doc_ids,
 )
 
 # (x0, y0, dx, dy) per pass, PNG spec §8.2
@@ -255,26 +254,10 @@ def _doc_adam7_pixel(doc_id: int):
 def media_png_adam7_from_documents(docs: DataFrame) -> DataFrame:
     """Synthesize a deterministic Adam7-interlaced gray PNG per document
     (pixel (x,y) = (3x + 2y + doc_id) mod 256)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            payloads = []
-            for did in b["doc_id"]:
-                did = int(did)
-                w, h = _doc_adam7_dims(did)
-                payloads.append(build_png_adam7(w, h, _doc_adam7_pixel(did)))
-            yield pd.DataFrame(
-                {
-                    "media_id": b["doc_id"].values,
-                    "kind": "image",
-                    "payload": payloads,
-                    "mime": "image/png",
-                    "n_bytes": pd.array(
-                        [len(p) for p in payloads], dtype="int32"
-                    ),
-                }
-            )
-
-    return ensure_parallelism(docs.select("doc_id")).mapInPandas(
-        fn, schema=MEDIA_SCHEMA
+    return media_from_doc_ids(
+        docs, "image", "image/png",
+        lambda ids: [
+            build_png_adam7(*_doc_adam7_dims(d), _doc_adam7_pixel(d))
+            for d in ids
+        ],
     )

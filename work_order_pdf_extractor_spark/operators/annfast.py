@@ -28,10 +28,12 @@ Why the results match the oracle exactly, not merely approximately:
    float64 (24-bit float32 mantissa × 11-bit integer plane value ≤ 35
    bits < 53), the decimal(28,9) cast is HALF_UP rounding of the
    product's decimal string, and the fast path resolves it as
-   ``rint(P·10⁹)`` with a guard band that recomputes near-.5 terms with
-   ``decimal.Decimal``. The per-plane sums are exact int64 sums of the
-   per-term integers (|Σ| ≤ 64·10¹² < 2⁶³), so the sign — the bucket bit
-   — is the decimal value's sign, not merely float-close.
+   ``rint(P·10⁹)`` with a guard band, scaled to the float64 error of
+   ``P·10⁹``, that recomputes near-.5 terms with ``decimal.Decimal``.
+   The per-plane sums are exact int64 sums of the per-term integers
+   (inputs whose sums could pass 2⁶³ raise ``OverflowError``), so the
+   sign — the bucket bit — is the decimal value's sign, not merely
+   float-close.
 
 3. **Query-restricted search** (``query_df``): a query's top-k depends
    only on that query, so the roles scorer computes queries×members
@@ -185,11 +187,21 @@ def _proj_decimal_sums(mat, planes):
 
     P = mat[:, None, :] * planes[None, :, :].astype(np.float64)
     y = P * 1e9
+    ymax = float(np.abs(y).max(initial=0.0))
+    if ymax * P.shape[2] >= 2.0**63:
+        raise OverflowError(
+            "decimal(28,9) projection sums do not fit int64 "
+            f"(max |x*plane| = {ymax / 1e9:.3g})"
+        )
     D = np.rint(y).astype(np.int64)
     frac = y - np.floor(y)
-    # Suspects guard. The f64 scaling error of y is ~1e-4 for |P| ≲ 10³
-    # (unit-scale embeddings), so any term within 1e-3 of a .5 boundary
-    # is recomputed exactly. The exact value
+    # Suspects guard. y differs from 10^9 times the engine's decimal
+    # value by the f64 rounding of P*1e9 plus the decimal-string
+    # rounding of P: under 4 ulps of y in total. Any term that close to a
+    # .5 boundary is recomputed exactly. The band is 1e-3 (an ulp of y
+    # is ~1e-4 at |x*plane| = 10^3, so unit-scale embeddings keep the
+    # cheap scalar band) widened to 8 ulps for larger magnitudes; from
+    # |y| >= 2^52 every term is a suspect. The exact value
     # assumes the engine casts a double to decimal from its decimal
     # string: Spark's Decimal(double) goes through the JDK's
     # Double.toString, then rounds HALF_UP to scale 9. repr() gives the
@@ -198,7 +210,10 @@ def _proj_decimal_sums(mat, planes):
     # move a 1e-9 HALF_UP boundary only with probability ~1e-17 per
     # term. A JVM whose Double.toString differs further would need this
     # revisited; the DuckDB oracle tests would show it.
-    suspects = np.abs(frac - 0.5) < 1e-3
+    band = 1e-3
+    if 8 * np.spacing(ymax) > band:
+        band = np.maximum(band, 8 * np.spacing(np.abs(y)))
+    suspects = np.abs(frac - 0.5) < band
     if suspects.any():
         from decimal import ROUND_HALF_UP, Decimal
 

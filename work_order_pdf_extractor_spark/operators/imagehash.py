@@ -41,13 +41,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .common import ensure_parallelism
 from .multimodal import (
-    MEDIA_SCHEMA,
     _decode_bmp,
     _decode_png,
     _decode_ppm,
     build_bmp,
+    media_from_doc_ids,
 )
 
 AHASH_SIDE = 16  # fixture raster side → 2×2 px per 8×8-grid cell
@@ -427,43 +426,27 @@ def _gray_bmp16_payloads(v):
 
 def media_bmp16_from_documents(docs: DataFrame) -> DataFrame:
     """One deterministic 16×16 gray BMP per document (see
-    :func:`_doc_ahash_pixel` for the near-dup group structure).
-
-    r7: the raster batch is generated with vectorized numpy (the same
+    :func:`_doc_ahash_pixel` for the near-dup group structure). Each
+    batch's rasters are generated with vectorized numpy (the same
     closed-form pattern) and serialized through a shared header slice of
-    the scalar ``build_bmp`` — payload bytes identical (tested), the
-    per-pixel Python loop gone."""
+    the scalar ``build_bmp`` — payload bytes identical (tested)."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def payloads(ids):
         import numpy as np
 
         xs = np.arange(AHASH_SIDE, dtype=np.int64)
-        for b in batches:
-            d = np.asarray(b["doc_id"].values, dtype=np.int64)
-            gid = (d % 25)[:, None, None]
-            v = (
-                xs[None, None, :] * (3 + gid)
-                + xs[None, :, None] * (5 + 2 * gid)
-            ) % 256
-            idx = np.arange(len(d))
-            px, py = d % 16, (d // 16) % 16
-            v[idx, py, px] = (v[idx, py, px] + 128) % 256
-            payloads = _gray_bmp16_payloads(v)
-            yield pd.DataFrame(
-                {
-                    "media_id": b["doc_id"].values,
-                    "kind": "image",
-                    "payload": payloads,
-                    "mime": "image/bmp",
-                    "n_bytes": pd.array(
-                        [len(p) for p in payloads], dtype="int32"
-                    ),
-                }
-            )
+        d = np.asarray(ids, dtype=np.int64)
+        gid = (d % 25)[:, None, None]
+        v = (
+            xs[None, None, :] * (3 + gid)
+            + xs[None, :, None] * (5 + 2 * gid)
+        ) % 256
+        idx = np.arange(len(d))
+        px, py = d % 16, (d // 16) % 16
+        v[idx, py, px] = (v[idx, py, px] + 128) % 256
+        return _gray_bmp16_payloads(v)
 
-    return ensure_parallelism(docs.select("doc_id")).mapInPandas(
-        fn, schema=MEDIA_SCHEMA
-    )
+    return media_from_doc_ids(docs, "image", "image/bmp", payloads)
 
 # ===========================================================================
 # DCT perceptual hash (pHash) — r6
@@ -659,13 +642,11 @@ _PHASH_SURFACES: dict[int, object] = {}
 
 def media_bmp16_smooth_from_documents(docs: DataFrame) -> DataFrame:
     """One deterministic smooth 16×16 gray BMP per document (see
-    :func:`_doc_phash_pixel` for the group/shift/dipole structure).
+    :func:`_doc_phash_pixel` for the group/shift/dipole structure). The
+    25 group base surfaces are computed once per worker and the per-doc
+    shift/dipole applied in numpy; byte-identical payloads (tested)."""
 
-    r7: vectorized — the 25 group base surfaces are computed once per
-    task and the per-doc shift/dipole applied in numpy; byte-identical
-    payloads (tested)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def payloads(ids):
         import numpy as np
 
         for g in range(_PHASH_GROUPS):
@@ -674,28 +655,14 @@ def media_bmp16_smooth_from_documents(docs: DataFrame) -> DataFrame:
         bases = np.stack(
             [_PHASH_SURFACES[g] for g in range(_PHASH_GROUPS)]
         )  # (25, 16, 16)
-        for b in batches:
-            d = np.asarray(b["doc_id"].values, dtype=np.int64)
-            gid = d % _PHASH_GROUPS
-            shift = _PHASH_SHIFT_STEP * ((d // _PHASH_GROUPS) % 6)
-            v = bases[gid] + shift[:, None, None]
-            idx = np.arange(len(d))
-            px, py = d % 15, (d // 16) % 16
-            v[idx, py, px] += _PHASH_DIPOLE
-            v[idx, py, px + 1] -= _PHASH_DIPOLE
-            payloads = _gray_bmp16_payloads(v)
-            yield pd.DataFrame(
-                {
-                    "media_id": b["doc_id"].values,
-                    "kind": "image",
-                    "payload": payloads,
-                    "mime": "image/bmp",
-                    "n_bytes": pd.array(
-                        [len(p) for p in payloads], dtype="int32"
-                    ),
-                }
-            )
+        d = np.asarray(ids, dtype=np.int64)
+        gid = d % _PHASH_GROUPS
+        shift = _PHASH_SHIFT_STEP * ((d // _PHASH_GROUPS) % 6)
+        v = bases[gid] + shift[:, None, None]
+        idx = np.arange(len(d))
+        px, py = d % 15, (d // 16) % 16
+        v[idx, py, px] += _PHASH_DIPOLE
+        v[idx, py, px + 1] -= _PHASH_DIPOLE
+        return _gray_bmp16_payloads(v)
 
-    return ensure_parallelism(docs.select("doc_id")).mapInPandas(
-        fn, schema=MEDIA_SCHEMA
-    )
+    return media_from_doc_ids(docs, "image", "image/bmp", payloads)

@@ -12,11 +12,12 @@ Decoders are stdlib-only and cover exactly the formats the builders emit
 - image: uncompressed 24-bit BI_RGB BMP (bottom-up, row-padded), binary
   P6 PPM, non-interlaced 8-bit RGB PNG (zlib inflate + full filter
   reconstruction), and JPEG — baseline-sequential (grayscale, YCbCr
-  4:4:4, 4:2:0 chroma-subsampled, restart intervals) AND progressive
+  4:4:4 / 4:2:2 / 4:2:0 / 4:1:1, restart intervals) AND progressive
   SOF2 (spectral selection + successive approximation) — real Huffman
   entropy decode + dequant + IDCT + chroma upsampling + JFIF YCbCr→RGB,
-  ``core/jpegcodec.py``. Sampling factors > 2 are the remaining
-  documented :class:`NotImplementedError` boundary.
+  ``core/jpegcodec.py``. Sampling factor 3, lossless/hierarchical and
+  arithmetic-coded JPEGs are the documented
+  :class:`NotImplementedError` boundary.
 - audio: RIFF/WAVE PCM16 mono/stereo header + sample parse.
 - video: :func:`frame_sample_plan` is pure plan arithmetic (the per-frame
   decode would be the image path above).
@@ -359,14 +360,12 @@ def _decode_png(payload: bytes) -> tuple[int, int, list[int]]:
 
 
 def decode_image(payload: bytes) -> dict:
-    """Decode a BMP / P6 PPM / PNG / baseline-grayscale JPEG payload into
-    exact features.
+    """Decode a BMP / P6 PPM / PNG / JPEG payload into exact features.
 
     ``sum_luma``/``n_px`` are integers (oracle-exact); ``mean_luma`` and the
     16-dim 4×4 block-mean ``embedding`` are the float conveniences derived
-    from them. JPEG covers baseline (gray/4:4:4/4:2:2/4:2:0, restart
-    intervals) AND progressive SOF2; sampling factors > 2 remain the
-    documented boundary (``core/jpegcodec.py``)."""
+    from them. JPEG covers baseline (gray/4:4:4/4:2:2/4:2:0/4:1:1,
+    restart intervals) AND progressive SOF2 (``core/jpegcodec.py``)."""
     import numpy as np
 
     if payload[:2] == b"BM":
@@ -381,13 +380,13 @@ def decode_image(payload: bytes) -> dict:
     elif payload[:2] == b"\xff\xd8":
         from ..core.jpegcodec import decode_gray_array
 
-        # grayscale: decoded sample IS the luma (r7: array twin — the
-        # per-pixel tuple list is never materialized)
+        # BT.601 luma straight from the decoded arrays (for grayscale
+        # the decoded sample IS the luma)
         width, height, arr = decode_gray_array(payload)
     else:
         raise NotImplementedError(
-            "only BMP/PPM/PNG/baseline-grayscale-JPEG payloads are "
-            "decodable without image libraries"
+            "only BMP/PPM/PNG/JPEG payloads are decodable without image "
+            "libraries"
         )
     n_px = width * height
     # r7: integer feature reductions vectorized (identical values — the
@@ -571,25 +570,25 @@ def _doc_pixel(doc_id: int):
     return px
 
 
-def media_bmp_from_documents(docs: DataFrame) -> DataFrame:
-    """Synthesize a deterministic gray BMP per document (pixel (x,y) =
-    (x + 3y + doc_id) mod 256) via one Arrow-batched pass — the binary
-    column genuinely round-trips through a real encoder before the real
-    decoder sees it."""
+def media_from_doc_ids(
+    docs: DataFrame, kind: str, mime: str, payloads_of
+) -> DataFrame:
+    """One synthesized media row per document, built in one Arrow-batched
+    pass over ``doc_id``: ``payloads_of(doc_ids)`` maps one batch's ids
+    (a list of ints) to their payload bytes in the same order. Every
+    fixture generator below is this pass plus its payload formula, so
+    the binary column genuinely round-trips through a real encoder
+    before the real decoder sees it."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            payloads = []
-            for did in b["doc_id"]:
-                did = int(did)
-                w, h = _doc_image_dims(did)
-                payloads.append(build_bmp(w, h, _doc_pixel(did)))
+            payloads = payloads_of(b["doc_id"].tolist())
             yield pd.DataFrame(
                 {
                     "media_id": b["doc_id"].values,
-                    "kind": "image",
+                    "kind": kind,
                     "payload": payloads,
-                    "mime": "image/bmp",
+                    "mime": mime,
                     "n_bytes": pd.array(
                         [len(p) for p in payloads], dtype="int32"
                     ),
@@ -598,6 +597,17 @@ def media_bmp_from_documents(docs: DataFrame) -> DataFrame:
 
     return ensure_parallelism(docs.select("doc_id")).mapInPandas(
         fn, schema=MEDIA_SCHEMA
+    )
+
+
+def media_bmp_from_documents(docs: DataFrame) -> DataFrame:
+    """A deterministic gray BMP per document (pixel (x,y) =
+    (x + 3y + doc_id) mod 256)."""
+    return media_from_doc_ids(
+        docs, "image", "image/bmp",
+        lambda ids: [
+            build_bmp(*_doc_image_dims(d), _doc_pixel(d)) for d in ids
+        ],
     )
 
 
@@ -613,32 +623,15 @@ def _doc_png_pixel(doc_id: int):
 
 
 def media_png_from_documents(docs: DataFrame) -> DataFrame:
-    """Synthesize a deterministic gray PNG per document (same dims formula
-    as the BMP fixture, pixel (x,y) = (2x + y + doc_id) mod 256) — a
-    genuinely COMPRESSED payload: the decoder must inflate the IDAT and
+    """A deterministic gray PNG per document (same dims formula as the
+    BMP fixture, pixel (x,y) = (2x + y + doc_id) mod 256) — a genuinely
+    COMPRESSED payload: the decoder must inflate the IDAT and
     reconstruct scanline filters to recover the raster."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            payloads = []
-            for did in b["doc_id"]:
-                did = int(did)
-                w, h = _doc_image_dims(did)
-                payloads.append(build_png(w, h, _doc_png_pixel(did)))
-            yield pd.DataFrame(
-                {
-                    "media_id": b["doc_id"].values,
-                    "kind": "image",
-                    "payload": payloads,
-                    "mime": "image/png",
-                    "n_bytes": pd.array(
-                        [len(p) for p in payloads], dtype="int32"
-                    ),
-                }
-            )
-
-    return ensure_parallelism(docs.select("doc_id")).mapInPandas(
-        fn, schema=MEDIA_SCHEMA
+    return media_from_doc_ids(
+        docs, "image", "image/png",
+        lambda ids: [
+            build_png(*_doc_image_dims(d), _doc_png_pixel(d)) for d in ids
+        ],
     )
 
 
@@ -656,39 +649,20 @@ def _doc_palette(did: int) -> list[tuple[int, int, int]]:
 
 
 def media_png_palette_from_documents(docs: DataFrame) -> DataFrame:
-    """Synthesize a deterministic PALETTED (color type 3) PNG per
-    document — the icon/screenshot shape of crawled-web images: same
-    dims formula as the gray PNG fixture, a per-doc 16-entry PLTE, pixel
-    index (x, y) = (x + 2y + doc_id) mod 16. Still a genuinely
-    compressed payload: inflate + unfilter + palette lookup to read."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            payloads = []
-            for did in b["doc_id"]:
-                did = int(did)
-                w, h = _doc_image_dims(did)
-                pal = _doc_palette(did)
-                payloads.append(
-                    build_png_palette(
-                        w, h, pal,
-                        lambda x, y, d=did: (x + 2 * y + d) % PNG_PALETTE_N,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": b["doc_id"].values,
-                    "kind": "image",
-                    "payload": payloads,
-                    "mime": "image/png",
-                    "n_bytes": pd.array(
-                        [len(p) for p in payloads], dtype="int32"
-                    ),
-                }
+    """A deterministic PALETTED (color type 3) PNG per document — the
+    icon/screenshot shape of crawled-web images: same dims formula as the
+    gray PNG fixture, a per-doc 16-entry PLTE, pixel index (x, y) =
+    (x + 2y + doc_id) mod 16. Still a genuinely compressed payload:
+    inflate + unfilter + palette lookup to read."""
+    return media_from_doc_ids(
+        docs, "image", "image/png",
+        lambda ids: [
+            build_png_palette(
+                *_doc_image_dims(d), _doc_palette(d),
+                lambda x, y, d=d: (x + 2 * y + d) % PNG_PALETTE_N,
             )
-
-    return ensure_parallelism(docs.select("doc_id")).mapInPandas(
-        fn, schema=MEDIA_SCHEMA
+            for d in ids
+        ],
     )
 
 
@@ -696,10 +670,8 @@ def _grid_samples(
     w: int, h: int, xdiv: int, ydiv: int, xmul: int, ymul: int, base: int
 ):
     """Block-constant fixture raster ``(xmul·(x//xdiv) + ymul·(y//ydiv)
-    + base) mod 256`` as a flat int64 array — the vectorized twin of the
-    per-pixel list comprehensions the JPEG fixture generators used (r7);
-    identical values, and the encoders consume ndarrays transparently
-    (``_pad_plane`` starts with ``np.asarray``)."""
+    + base) mod 256`` as a flat int64 array (the encoders take any
+    array-like plane)."""
     import numpy as np
 
     xs = xmul * (np.arange(w, dtype=np.int64) // xdiv)
@@ -707,172 +679,119 @@ def _grid_samples(
     return ((xs[None, :] + ys[:, None] + base) % 256).ravel()
 
 
+def _jpeg_gray(did: int) -> bytes:
+    from ..core.jpegcodec import encode_baseline
+
+    w, h = 8 * (1 + did % 4), 8 * (1 + (did // 4) % 3)
+    return encode_baseline(w, h, [_grid_samples(w, h, 8, 8, 1, 2, did)])
+
+
 def media_jpeg_from_documents(docs: DataFrame) -> DataFrame:
-    """Synthesize a deterministic baseline-sequential grayscale JPEG per
-    document: dims ``(8·(1 + doc_id mod 4), 8·(1 + (doc_id//4) mod 3))``,
-    every 8×8 block constant at ``(bx + 2·by + doc_id) mod 256`` — a real
+    """A deterministic baseline-sequential grayscale JPEG per document:
+    dims ``(8·(1 + doc_id mod 4), 8·(1 + (doc_id//4) mod 3))``, every 8×8
+    block constant at ``(bx + 2·by + doc_id) mod 256`` — a real
     entropy-coded DCT payload (Huffman + FDCT under a flat quant table)
     that round-trips bit-exactly BECAUSE the blocks are constant (AC
     coefficients are analytically zero), so the DuckDB oracle can predict
     ``sum_luma = 64·Σ block_value`` while the decoder does the full
     huffman→dequant→IDCT pipeline."""
-    from ..core.jpegcodec import encode_baseline_gray
+    return media_from_doc_ids(
+        docs, "image", "image/jpeg", lambda ids: [_jpeg_gray(d) for d in ids]
+    )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            payloads = []
-            for did in b["doc_id"]:
-                did = int(did)
-                w, h = 8 * (1 + did % 4), 8 * (1 + (did // 4) % 3)
-                samples = _grid_samples(w, h, 8, 8, 1, 2, did)
-                payloads.append(encode_baseline_gray(w, h, samples))
-            yield pd.DataFrame(
-                {
-                    "media_id": b["doc_id"].values,
-                    "kind": "image",
-                    "payload": payloads,
-                    "mime": "image/jpeg",
-                    "n_bytes": pd.array(
-                        [len(p) for p in payloads], dtype="int32"
-                    ),
-                }
-            )
 
-    return ensure_parallelism(docs.select("doc_id")).mapInPandas(
-        fn, schema=MEDIA_SCHEMA
+def _jpeg_color444(did: int) -> bytes:
+    from ..core.jpegcodec import encode_baseline
+
+    w, h = 8 * (1 + did % 3), 8 * (1 + (did // 3) % 4)
+    neutral = [128] * (w * h)
+    return encode_baseline(
+        w, h, [_grid_samples(w, h, 8, 8, 2, 1, did), neutral, neutral]
     )
 
 
 def media_color_jpeg_from_documents(docs: DataFrame) -> DataFrame:
-    """Synthesize a deterministic COLOR (YCbCr 4:4:4) baseline JPEG per
-    document: dims ``(8·(1 + doc_id mod 3), 8·(1 + (doc_id//3) mod 4))``,
-    Y plane 8×8-block-constant at ``(2·bx + by + doc_id) mod 256``,
-    neutral chroma (Cb=Cr=128). The 3-component interleaved scan is fully
+    """A deterministic COLOR (YCbCr 4:4:4) baseline JPEG per document:
+    dims ``(8·(1 + doc_id mod 3), 8·(1 + (doc_id//3) mod 4))``, Y plane
+    8×8-block-constant at ``(2·bx + by + doc_id) mod 256``, neutral
+    chroma (Cb=Cr=128). The 3-component interleaved scan is fully
     exercised (separate chroma quant/Huffman tables, per-component DC
     predictors) while neutral chroma keeps the round trip bit-exact —
     JFIF YCbCr→RGB of (Y, 0-offset, 0-offset) is (Y, Y, Y), so
     ``sum_luma = 64·Σ block_value`` stays analytically predictable."""
-    from ..core.jpegcodec import encode_baseline_ycbcr
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            payloads = []
-            for did in b["doc_id"]:
-                did = int(did)
-                w, h = 8 * (1 + did % 3), 8 * (1 + (did // 3) % 4)
-                y = _grid_samples(w, h, 8, 8, 2, 1, did)
-                neutral = [128] * (w * h)
-                payloads.append(
-                    encode_baseline_ycbcr(w, h, y, neutral, neutral)
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": b["doc_id"].values,
-                    "kind": "image",
-                    "payload": payloads,
-                    "mime": "image/jpeg",
-                    "n_bytes": pd.array(
-                        [len(p) for p in payloads], dtype="int32"
-                    ),
-                }
-            )
-
-    return ensure_parallelism(docs.select("doc_id")).mapInPandas(
-        fn, schema=MEDIA_SCHEMA
+    return media_from_doc_ids(
+        docs, "image", "image/jpeg",
+        lambda ids: [_jpeg_color444(d) for d in ids],
     )
 
 
+def _jpeg_subsampled(
+    did: int, w: int, h: int, sampling: tuple[int, int],
+    cb0: int, cr0: int, progressive: bool = False,
+) -> bytes:
+    """Y constant per MCU-sized region at ``(2·rx + ry + doc_id) mod
+    256`` (every 8×8 block stays constant across the edge-replicated pad
+    → bit-exact round trip under the flat quant table) and constant
+    chroma ``cb0``/``cr0`` at the luma ``sampling`` factor."""
+    from ..core.jpegcodec import encode_baseline, encode_progressive
+
+    sh, sv = sampling
+    y = _grid_samples(w, h, 8 * sh, 8 * sv, 2, 1, did)
+    n_chroma = -(-w // sh) * -(-h // sv)
+    planes = [y, [cb0] * n_chroma, [cr0] * n_chroma]
+    encode = encode_progressive if progressive else encode_baseline
+    return encode(w, h, planes, sampling)
+
+
 def media_jpeg420_from_documents(docs: DataFrame) -> DataFrame:
-    """Synthesize a deterministic 4:2:0 chroma-subsampled baseline JPEG
-    per document — the most common JPEG variant in crawled corpora.
-    Dims ``(16 + 4·(doc_id mod 3), 16 + 4·((doc_id//3) mod 4))`` (NOT
-    multiples of 16, so MCU padding + crop are exercised); Y constant
-    per 16×16 region at ``(2·rx + ry + doc_id) mod 256`` (so every 8×8
-    block stays constant across the edge-replicated pad → bit-exact
-    round trip under the flat quant table); chroma constant per doc at
-    ``cb = 128 + 3·(doc_id mod 5) − 6``, ``cr = 128 + 4·((doc_id//5)
-    mod 5) − 8`` — NON-neutral, so the chroma path and upsampling do
-    real work, with offsets chosen so no YCbCr→RGB product lands on an
-    exact .5 (numpy half-even and SQL half-away rounding provably
-    agree; validated for every offset in the set)."""
-    from ..core.jpegcodec import encode_baseline_ycbcr420
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            payloads = []
-            for did in b["doc_id"]:
-                did = int(did)
-                w = 16 + 4 * (did % 3)
-                h = 16 + 4 * ((did // 3) % 4)
-                y = _grid_samples(w, h, 16, 16, 2, 1, did)
-                cw, ch = (w + 1) // 2, (h + 1) // 2
-                cb = [128 + 3 * (did % 5) - 6] * (cw * ch)
-                cr = [128 + 4 * ((did // 5) % 5) - 8] * (cw * ch)
-                payloads.append(encode_baseline_ycbcr420(w, h, y, cb, cr))
-            yield pd.DataFrame(
-                {
-                    "media_id": b["doc_id"].values,
-                    "kind": "image",
-                    "payload": payloads,
-                    "mime": "image/jpeg",
-                    "n_bytes": pd.array(
-                        [len(p) for p in payloads], dtype="int32"
-                    ),
-                }
+    """A deterministic 4:2:0 chroma-subsampled baseline JPEG per document
+    — the most common JPEG variant in crawled corpora. Dims
+    ``(16 + 4·(doc_id mod 3), 16 + 4·((doc_id//3) mod 4))`` (NOT
+    multiples of 16, so MCU padding + crop are exercised); Y constant per
+    16×16 region at ``(2·rx + ry + doc_id) mod 256``; chroma constant
+    per doc at ``cb = 128 + 3·(doc_id mod 5) − 6``, ``cr = 128 +
+    4·((doc_id//5) mod 5) − 8`` — NON-neutral, so the chroma path and
+    upsampling do real work, with offsets chosen so no YCbCr→RGB product
+    lands on an exact .5 (numpy half-even and SQL half-away rounding
+    provably agree; validated for every offset in the set)."""
+    return media_from_doc_ids(
+        docs, "image", "image/jpeg",
+        lambda ids: [
+            _jpeg_subsampled(
+                d, 16 + 4 * (d % 3), 16 + 4 * ((d // 3) % 4), (2, 2),
+                128 + 3 * (d % 5) - 6, 128 + 4 * ((d // 5) % 5) - 8,
             )
-
-    return ensure_parallelism(docs.select("doc_id")).mapInPandas(
-        fn, schema=MEDIA_SCHEMA
+            for d in ids
+        ],
     )
 
 
 def media_jpeg411_from_documents(docs: DataFrame) -> DataFrame:
-    """Synthesize a deterministic 4:1:1 chroma-subsampled baseline JPEG
-    per document — the sampling-factor-4 variant (DV lineage) that
-    closes the 'sampling factors > 2' codec boundary. Dims
+    """A deterministic 4:1:1 chroma-subsampled baseline JPEG per document
+    — the sampling-factor-4 variant (DV lineage). Dims
     ``(32 + 4·(doc_id mod 3), 8 + 4·((doc_id//3) mod 4))`` (widths 36/40
     and heights 12/20 are NOT multiples of the 32×8 MCU, so padding +
     crop are exercised); Y constant per 32×8 region at
-    ``(2·rx + ry + doc_id) mod 256`` (every 8×8 block constant across
-    the edge-replicated pad → bit-exact round trip under the flat quant
-    table); chroma constant per doc at the SAME rounding-safe offsets as
-    the 4:2:0 fixture (``cb = 128 + 3·(doc_id mod 5) − 6``,
+    ``(2·rx + ry + doc_id) mod 256``; chroma constant per doc at the SAME
+    rounding-safe offsets as the 4:2:0 fixture
+    (``cb = 128 + 3·(doc_id mod 5) − 6``,
     ``cr = 128 + 4·((doc_id//5) mod 5) − 8``)."""
-    from ..core.jpegcodec import encode_baseline_ycbcr411
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            payloads = []
-            for did in b["doc_id"]:
-                did = int(did)
-                w = 32 + 4 * (did % 3)
-                h = 8 + 4 * ((did // 3) % 4)
-                y = _grid_samples(w, h, 32, 8, 2, 1, did)
-                cw = (w + 3) // 4
-                cb = [128 + 3 * (did % 5) - 6] * (cw * h)
-                cr = [128 + 4 * ((did // 5) % 5) - 8] * (cw * h)
-                payloads.append(encode_baseline_ycbcr411(w, h, y, cb, cr))
-            yield pd.DataFrame(
-                {
-                    "media_id": b["doc_id"].values,
-                    "kind": "image",
-                    "payload": payloads,
-                    "mime": "image/jpeg",
-                    "n_bytes": pd.array(
-                        [len(p) for p in payloads], dtype="int32"
-                    ),
-                }
+    return media_from_doc_ids(
+        docs, "image", "image/jpeg",
+        lambda ids: [
+            _jpeg_subsampled(
+                d, 32 + 4 * (d % 3), 8 + 4 * ((d // 3) % 4), (4, 1),
+                128 + 3 * (d % 5) - 6, 128 + 4 * ((d // 5) % 5) - 8,
             )
-
-    return ensure_parallelism(docs.select("doc_id")).mapInPandas(
-        fn, schema=MEDIA_SCHEMA
+            for d in ids
+        ],
     )
 
 
 def media_progressive_jpeg_from_documents(docs: DataFrame) -> DataFrame:
-    """Synthesize a PROGRESSIVE (SOF2) 4:2:0 color JPEG per document —
-    the other half of crawled-web JPEGs (multi-scan spectral selection +
-    successive approximation, per-scan optimized Huffman tables; see
+    """A PROGRESSIVE (SOF2) 4:2:0 color JPEG per document — the other
+    half of crawled-web JPEGs (multi-scan spectral selection + successive
+    approximation, per-scan optimized Huffman tables; see
     ``core/jpegcodec.py``). Same analytic-oracle construction as the
     baseline 4:2:0 fixture but with shifted per-doc constants: dims
     ``(16 + 4·((doc_id+1) mod 3), 16 + 4·((doc_id//3 + 1) mod 4))``
@@ -881,96 +800,40 @@ def media_progressive_jpeg_from_documents(docs: DataFrame) -> DataFrame:
     ``cb = 128 + 3·((doc_id+1) mod 5) − 6``, ``cr = 128 +
     4·((doc_id//5 + 2) mod 5) − 8`` (offsets from the same
     rounding-safe set the 4:2:0 fixture validated)."""
-    from ..core.jpegcodec import encode_progressive_ycbcr
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            payloads = []
-            for did in b["doc_id"]:
-                did = int(did)
-                w = 16 + 4 * ((did + 1) % 3)
-                h = 16 + 4 * ((did // 3 + 1) % 4)
-                y = _grid_samples(w, h, 16, 16, 2, 1, did)
-                cw, ch = (w + 1) // 2, (h + 1) // 2
-                cb = [128 + 3 * ((did + 1) % 5) - 6] * (cw * ch)
-                cr = [128 + 4 * ((did // 5 + 2) % 5) - 8] * (cw * ch)
-                payloads.append(
-                    encode_progressive_ycbcr(w, h, y, cb, cr, subsampling="420")
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": b["doc_id"].values,
-                    "kind": "image",
-                    "payload": payloads,
-                    "mime": "image/jpeg",
-                    "n_bytes": pd.array(
-                        [len(p) for p in payloads], dtype="int32"
-                    ),
-                }
+    return media_from_doc_ids(
+        docs, "image", "image/jpeg",
+        lambda ids: [
+            _jpeg_subsampled(
+                d, 16 + 4 * ((d + 1) % 3), 16 + 4 * ((d // 3 + 1) % 4),
+                (2, 2), 128 + 3 * ((d + 1) % 5) - 6,
+                128 + 4 * ((d // 5 + 2) % 5) - 8, progressive=True,
             )
-
-    return ensure_parallelism(docs.select("doc_id")).mapInPandas(
-        fn, schema=MEDIA_SCHEMA
+            for d in ids
+        ],
     )
 
 
+def _pcm_samples(did: int) -> list[int]:
+    """n = 16 + doc_id mod 50 samples, s[i] = (37i + 11·doc_id) mod 4096
+    − 2048."""
+    return [(37 * i + 11 * did) % 4096 - 2048 for i in range(16 + did % 50)]
+
+
 def media_mulaw_from_documents(docs: DataFrame) -> DataFrame:
-    """Synthesize a deterministic G.711 μ-law WAV per document — the
-    telephony/call-recording codec: the SAME linear sample formula as the
-    PCM16 fixture (n = 16 + doc_id mod 50; s[i] = (37i + 11·doc_id) mod
-    4096 − 2048) passed through the real μ-law encoder, so the decoder's
-    companding expansion does genuine work and the oracle reproduces the
+    """A deterministic G.711 μ-law WAV per document — the telephony/
+    call-recording codec: the SAME linear samples as the PCM16 fixture
+    passed through the real μ-law encoder, so the decoder's companding
+    expansion does genuine work and the oracle reproduces the
     quantization in closed form."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            payloads = []
-            for did in b["doc_id"]:
-                did = int(did)
-                n = 16 + did % 50
-                samples = [(37 * i + 11 * did) % 4096 - 2048 for i in range(n)]
-                payloads.append(build_wav_mulaw(samples))
-            yield pd.DataFrame(
-                {
-                    "media_id": b["doc_id"].values,
-                    "kind": "audio",
-                    "payload": payloads,
-                    "mime": "audio/basic",
-                    "n_bytes": pd.array(
-                        [len(p) for p in payloads], dtype="int32"
-                    ),
-                }
-            )
-
-    return ensure_parallelism(docs.select("doc_id")).mapInPandas(
-        fn, schema=MEDIA_SCHEMA
+    return media_from_doc_ids(
+        docs, "audio", "audio/basic",
+        lambda ids: [build_wav_mulaw(_pcm_samples(d)) for d in ids],
     )
 
 
 def media_wav_from_documents(docs: DataFrame) -> DataFrame:
-    """Synthesize a deterministic PCM16 WAV per document: n = 16 + doc_id
-    mod 50 samples, sample[i] = ((37i + 11·doc_id) mod 4096) − 2048."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            payloads = []
-            for did in b["doc_id"]:
-                did = int(did)
-                n = 16 + did % 50
-                samples = [(37 * i + 11 * did) % 4096 - 2048 for i in range(n)]
-                payloads.append(build_wav(samples))
-            yield pd.DataFrame(
-                {
-                    "media_id": b["doc_id"].values,
-                    "kind": "audio",
-                    "payload": payloads,
-                    "mime": "audio/wav",
-                    "n_bytes": pd.array(
-                        [len(p) for p in payloads], dtype="int32"
-                    ),
-                }
-            )
-
-    return ensure_parallelism(docs.select("doc_id")).mapInPandas(
-        fn, schema=MEDIA_SCHEMA
+    """A deterministic PCM16 WAV per document (:func:`_pcm_samples`)."""
+    return media_from_doc_ids(
+        docs, "audio", "audio/wav",
+        lambda ids: [build_wav(_pcm_samples(d)) for d in ids],
     )

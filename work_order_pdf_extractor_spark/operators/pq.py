@@ -21,7 +21,8 @@ Determinism (both engines bit-identical, same recipe as
   <b,b>`` and ROUNDed to 4 dp before any argmin/tiebreak.
 - means: per-dimension DECIMAL(28,9) sums (order-free) ÷ count.
 - ADC totals: per-subspace rounded terms summed as DECIMAL(18,4) —
-  order-free, so ranking never depends on float addition order.
+  order-free, so ranking never depends on float addition order
+  (:func:`pq_topk_fast` reproduces that sum exactly in int64).
 """
 
 from __future__ import annotations
@@ -181,21 +182,23 @@ def pq_topk_fast(
     vec_col: str = "embedding",
     codes: DataFrame | None = None,
 ) -> DataFrame:
-    """Vectorized twin of :func:`pq_topk` (r7): same LUT (computed by the
-    identical JVM fold and collected — m×ksub×|queries| rows, tiny), but
-    the ADC accumulation becomes one numpy integer gather-sum per Arrow
-    batch of the wide code table instead of a
-    |codes| × |queries| join + decimal aggregation over every (query,
-    corpus) pair.
+    """Asymmetric-distance top-k over the stored PQ codes: the query keeps
+    its exact subvectors, the corpus is represented ONLY by ``codes``
+    (``(sid, j, code)`` rows from :func:`pq_codes`, materialized once), so
+    the corpus embedding column is never read at search time — the PQ
+    storage win. Per query, an m×ksub LUT of rounded subspace distances
+    is built against the broadcast codebook by the same JVM fold as
+    training and collected (m×ksub×|queries| rows, tiny); the ADC
+    accumulation is then one numpy integer gather-sum per Arrow batch of
+    the wide code table.
 
-    Exactness: each LUT entry is ``round(d2, 4)`` — a double within
-    1e-12 of its 4-decimal value — so ``rint(dist·10⁴)`` recovers the
-    decimal(18,4) integer exactly (no HALF_UP boundary can be hit), the
-    int64 sum equals the decimal sum, and ``Σ/10⁴`` in float64 is the
-    correctly-rounded double of the exact decimal — the same value
-    Spark's ``cast(sum as double)`` produces. Ranking keys on the integer
-    sums directly. Output: (qid, nid, adist, rank) — identical rows
-    (differential-tested)."""
+    Exactness against the oracle's DECIMAL(18,4) sum: each LUT entry is
+    ``round(d2, 4)`` — a double within 1e-12 of its 4-decimal value — so
+    ``rint(dist·10⁴)`` recovers the decimal integer exactly (no HALF_UP
+    boundary can be hit), the int64 sum equals the decimal sum, and
+    ``Σ/10⁴`` in float64 is the correctly-rounded double of the exact
+    decimal — the value ``cast(sum as double)`` produces. Ranking keys on
+    the integer sums directly. Output: (qid, nid, adist, rank)."""
     import numpy as np
     import pandas as _pd
     from collections.abc import Iterator as _It
@@ -285,57 +288,6 @@ def pq_topk_fast(
     w = Window.partitionBy("qid").orderBy(F.col("adist").asc(), F.col("nid"))
     return (
         cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "adist", F.col("rank").cast("int").alias("rank"))
-    )
-
-
-def pq_topk(
-    df: DataFrame | None,
-    codebooks: DataFrame,
-    queries: DataFrame,
-    k: int = 3,
-    m: int = PQ_M,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    codes: DataFrame | None = None,
-) -> DataFrame:
-    """Asymmetric-distance top-k: the query keeps its exact subvectors,
-    the corpus is represented ONLY by codes. Per query: an m×ksub LUT of
-    rounded subspace distances (built against the broadcast codebook),
-    then one join on (j, code) + an order-free DECIMAL sum, rank, top-k.
-
-    Pass precomputed ``codes`` (``(sid, j, code)`` rows, the amortized
-    deployment path) and ``df`` may be ``None`` — the corpus embedding
-    column is then never read at all, which is the PQ storage win;
-    without ``codes`` the corpus is encoded inline from ``df``."""
-    first = queries.select(F.size(vec_col).alias("d")).first()
-    dims = int(first["d"]) if first is not None else 0
-    dsub = dims // m
-    if codes is None:
-        codes = pq_codes(df, codebooks, m, id_col, vec_col)
-    qsub = _subvectors(queries, m, dsub, id_col, vec_col).select(
-        F.col("sid").alias("qid"), "j", F.col("sv").alias("qv")
-    )
-    lut = qsub.join(F.broadcast(codebooks), "j").select(
-        "qid", "j", "code_id", _d2("qv", "cv").alias("dist")
-    )
-    adist = (
-        codes.join(
-            F.broadcast(lut),
-            (codes["j"] == lut["j"]) & (codes["code"] == lut["code_id"]),
-        )
-        .filter(F.col("qid") != F.col("sid"))
-        .groupBy("qid", F.col("sid").alias("nid"))
-        .agg(
-            F.sum(F.col("dist").cast("decimal(18,4)"))
-            .cast("double")
-            .alias("adist")
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("adist").asc(), F.col("nid"))
-    return (
-        adist.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("qid", "nid", "adist", F.col("rank").cast("int").alias("rank"))
     )
