@@ -1,20 +1,28 @@
 """Round-5 session-3 operators: Adam7 interlaced PNG + bigram LM score.
 
-Adam7 is value-tested at the decoder level (round-trip through a real
-zlib stream, every filter type, empty passes at tiny dims, placement
-sensitivity of pos_sum) and at the distributed level (corrupt payloads
-degrade to status rows). The LM score is hand-computed on a corpus small
-enough to do the add-one-smoothed arithmetic on paper.
+Adam7 streams come from the builder in ``operators/adam7.py`` and are read
+by the one PNG decoder in ``operators/multimodal.py``. They are
+value-tested at the decoder level (round-trip through a real zlib stream,
+every filter type, empty passes at tiny dims, placement sensitivity of
+pos_sum) and at the distributed level (corrupt payloads degrade to status
+rows). The LM score is hand-computed on a corpus small enough to do the
+add-one-smoothed arithmetic on paper.
 """
 
 from __future__ import annotations
+
+import struct
+import zlib
 
 import pandas as pd
 import pytest
 
 from work_order_pdf_extractor_spark.operators import adam7 as A
 from work_order_pdf_extractor_spark.operators import lm as L
+from work_order_pdf_extractor_spark.operators import multimodal as M
 from work_order_pdf_extractor_spark.operators.multimodal import _luma
+
+_KEYS = ("width", "height", "n_px", "sum_luma", "pos_sum")
 
 
 def _brute(w, h, px):
@@ -28,6 +36,22 @@ def _brute(w, h, px):
     }
 
 
+def _features(payload):
+    d = M.decode_image(payload)
+    return {k: d[k] for k in _KEYS}
+
+
+def _idat_raw(payload):
+    """The inflated IDAT stream of a PNG payload."""
+    pos, idat = 8, bytearray()
+    while pos + 8 <= len(payload):
+        (clen,) = struct.unpack_from(">I", payload, pos)
+        if payload[pos + 4 : pos + 8] == b"IDAT":
+            idat += payload[pos + 8 : pos + 8 + clen]
+        pos += 12 + clen
+    return zlib.decompress(bytes(idat))
+
+
 @pytest.mark.parametrize(
     "w,h",
     [(1, 1), (2, 2), (3, 3), (4, 5), (5, 4), (8, 8), (9, 10), (16, 13)],
@@ -37,48 +61,38 @@ def test_adam7_roundtrip_exact(w, h):
     that leave various subsets of the seven passes empty (1x1 populates
     only pass 1; 2x2 passes {1,4,6,7}; >=8x8 all seven)."""
     px = lambda x, y: ((11 * x + 23 * y) % 256, (x * y + 5) % 256, (x + 7 * y) % 256)
-    got = A.decode_image_adam7(A.build_png_adam7(w, h, px))
-    assert got == _brute(w, h, px)
+    assert _features(A.build_png_adam7(w, h, px)) == _brute(w, h, px)
 
 
 def test_adam7_filter_cycle_covers_all_types():
     """The builder's (row_in_pass + pass_no) % 5 cycling must actually
-    exercise Sub/Up/Average/Paeth — assert by rebuilding with filters
-    forced to None-able raw (ftype 0) and checking streams differ, and
-    that a 16x13 build emits every filter id at least once."""
+    exercise Sub/Up/Average/Paeth: a 16x13 build emits every filter id at
+    least once."""
     w, h = 16, 13
     px = lambda x, y: ((3 * x + 2 * y + 9) % 256,) * 3
-    payload = A.build_png_adam7(w, h, px)
-    import struct as _struct
-    import zlib as _zlib
-
-    # walk chunks, collect the raw filter bytes
-    pos, idat = 8, bytearray()
-    while pos + 8 <= len(payload):
-        (clen,) = _struct.unpack_from(">I", payload, pos)
-        if payload[pos + 4 : pos + 8] == b"IDAT":
-            idat += payload[pos + 8 : pos + 8 + clen]
-        pos += 12 + clen
-    raw = _zlib.decompress(bytes(idat))
+    raw = _idat_raw(A.build_png_adam7(w, h, px))
     seen, off = set(), 0
-    for p in range(7):
-        pw, ph = A._pass_dims(w, h, p)
+    for p in A.ADAM7:
+        pw, ph = A._pass_dims(w, h, *p)
         for _ in range(ph):
             seen.add(raw[off])
             off += 1 + pw * A._BPP
+    assert off == len(raw)
     assert seen == {0, 1, 2, 3, 4}
 
 
 def test_adam7_pos_sum_detects_misplacement():
-    """Swapping the (dx-shifted) contents of passes 2 and 3 keeps the
-    pixel multiset (so sum_luma can collide) but must change pos_sum for
-    an asymmetric image — the property the oracle leans on."""
+    """Transposing the decoded raster keeps the pixel multiset (so
+    sum_luma collides) but must change pos_sum for an asymmetric image —
+    the property the oracle leans on."""
     w, h = 8, 8
     px = lambda x, y: ((x * 31 + y) % 256,) * 3
-    base = A.decode_image_adam7(A.build_png_adam7(w, h, px))
+    payload = A.build_png_adam7(w, h, px)
+    base = M.decode_image(payload)
 
     # decode then re-place with x/y transposed: same lumas, wrong spots
-    W, H, lumas = A.decode_png_adam7(A.build_png_adam7(w, h, px))
+    W, H, lumas = M._decode_png(payload)
+    lumas = lumas.tolist()
     transposed = [lumas[x * W + y] for y in range(H) for x in range(W)]
     assert sorted(transposed) == sorted(lumas)
     pos_t = sum(v * (k + 1) for k, v in enumerate(transposed))
@@ -87,38 +101,28 @@ def test_adam7_pos_sum_detects_misplacement():
 
 def test_adam7_truncated_and_trailing_raise():
     p = A.build_png_adam7(6, 6, lambda x, y: (x, y, 0))
-    import struct as _struct
-    import zlib as _zlib
-
-    # reinflate, truncate one byte, re-deflate into a fresh stream
-    pos, idat = 8, bytearray()
-    spans = []
-    while pos + 8 <= len(p):
-        (clen,) = _struct.unpack_from(">I", p, pos)
-        if p[pos + 4 : pos + 8] == b"IDAT":
-            idat += p[pos + 8 : pos + 8 + clen]
-            spans.append((pos, clen))
-        pos += 12 + clen
-    raw = _zlib.decompress(bytes(idat))
-    from work_order_pdf_extractor_spark.operators.multimodal import _png_chunk
-
-    head = p[: spans[0][0]]
-    tail = _png_chunk(b"IEND", b"")
+    raw = _idat_raw(p)
+    head = p[: p.index(b"IDAT") - 4]
+    tail = M._png_chunk(b"IEND", b"")
     for bad in (raw[:-1], raw + b"\x00"):
-        mangled = head + _png_chunk(b"IDAT", _zlib.compress(bytes(bad))) + tail
+        mangled = head + M._png_chunk(b"IDAT", zlib.compress(bytes(bad))) + tail
         with pytest.raises(ValueError):
-            A.decode_png_adam7(mangled)
+            M._decode_png(mangled)
 
 
-def test_adam7_rejects_noninterlaced():
-    from work_order_pdf_extractor_spark.operators.multimodal import build_png
-
-    with pytest.raises(NotImplementedError):
-        A.decode_png_adam7(build_png(4, 4, lambda x, y: (x, y, 1)))
+def test_png_interlace_flag_must_match_raster():
+    """An IHDR that claims the other interlace mode describes a raster
+    length the IDAT stream does not have: ValueError, never a misread."""
+    px = lambda x, y: (x, y, 1)
+    for payload, flag in ((M.build_png(4, 4, px), 1), (A.build_png_adam7(4, 4, px), 0)):
+        i = payload.index(b"IHDR") + 4 + 12  # the interlace byte
+        flipped = payload[:i] + bytes([flag]) + payload[i + 1 :]
+        with pytest.raises(ValueError, match="raster length"):
+            M._decode_png(flipped)
 
 
 def test_adam7_distributed_and_corrupt(spark):
-    """image_features_adam7: good payloads match the local decoder,
+    """image_features on Adam7 payloads: good payloads match brute force,
     corrupt payloads degrade to status='decode_failed' null rows."""
     px = lambda did: A._doc_adam7_pixel(did)
     rows = []
@@ -129,7 +133,7 @@ def test_adam7_distributed_and_corrupt(spark):
     df = spark.createDataFrame(
         pd.DataFrame(rows, columns=["media_id", "kind", "payload", "mime"])
     )
-    out = {r.media_id: r for r in A.image_features_adam7(df).collect()}
+    out = {r.media_id: r for r in M.image_features(df).collect()}
     assert len(out) == 4
     for did in (0, 1, 17):
         w, h = A._doc_adam7_dims(did)
@@ -139,7 +143,7 @@ def test_adam7_distributed_and_corrupt(spark):
         assert (r.width, r.height, r.n_px) == (w, h, w * h)
         assert (r.sum_luma, r.pos_sum) == (want["sum_luma"], want["pos_sum"])
     assert out[99].status == "decode_failed"
-    assert out[99].sum_luma is None
+    assert out[99].sum_luma is None and out[99].pos_sum is None
 
 
 # --------------------------------------------------------------------------
@@ -215,23 +219,17 @@ def test_adam7_roundtrip_property(w, h, seed):
         (x + y * 3 + seed * 5) % 256,
         (x * 11 + seed) % 256,
     )
-    assert A.decode_image_adam7(A.build_png_adam7(w, h, px)) == _brute(w, h, px)
+    assert _features(A.build_png_adam7(w, h, px)) == _brute(w, h, px)
 
 
 @settings(max_examples=40, deadline=None)
 @given(w=st.integers(1, 16), h=st.integers(1, 16), seed=st.integers(0, 10_000))
 def test_adam7_matches_noninterlaced_decode(w, h, seed):
-    """Cross-codec differential: the same image through the interlaced
-    builder/decoder and through the sequential PNG path (multimodal)
-    yields identical dims and sum_luma — two independent filter/layout
-    implementations agreeing on pixel values."""
-    from work_order_pdf_extractor_spark.operators import multimodal as M
-
+    """Cross-layout differential: the same image through the interlaced
+    and the sequential builder decodes to the identical raster — seven
+    independently filtered passes against one pass of filter-0 rows."""
     px = lambda x, y: ((x * 3 + y * 5 + seed) % 256,) * 3
-    a = A.decode_image_adam7(A.build_png_adam7(w, h, px))
-    s = M.decode_image(M.build_png(w, h, px))
-    assert (a["width"], a["height"], a["sum_luma"]) == (
-        s["width"],
-        s["height"],
-        s["sum_luma"],
-    )
+    aw, ah, a = M._decode_png(A.build_png_adam7(w, h, px))
+    sw, sh, s = M._decode_png(M.build_png(w, h, px))
+    assert (aw, ah) == (sw, sh) == (w, h)
+    assert a.tolist() == s.tolist()

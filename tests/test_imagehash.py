@@ -109,3 +109,46 @@ def test_plan_payload_never_shuffles_no_cartesian(spark):
     # nothing above the hash pass carries payload bytes
     pre, _, _post = p.partition("MapInPandas")
     assert "payload" not in pre
+
+
+def test_hash_passes_skip_undecodable_payloads(spark):
+    """One garbage payload among good ones yields no hash row (it can pair
+    with nothing) instead of failing the task; image_features still
+    reports it as decode_failed."""
+    from work_order_pdf_extractor_spark.operators import multimodal as M
+
+    good = {
+        1: build_bmp(16, 16, IH._doc_phash_pixel(1)),
+        2: build_png(16, 16, IH._doc_phash_pixel(2)),
+        3: build_bmp(16, 16, IH._doc_phash_pixel(3)),
+    }
+    bad = {7: b"\x89PNG\r\n\x1a\nGARBAGE", 8: b"not an image", 9: good[1][:60]}
+    media = spark.createDataFrame(
+        pd.DataFrame(
+            {"media_id": list(good) + list(bad), "payload": list(good.values()) + list(bad.values())}
+        ),
+        "media_id long, payload binary",
+    ).coalesce(1)
+    for hasher, bands in ((IH.image_ahash, IH.ahash_bands), (IH.image_phash, IH.phash_bands)):
+        rows = {
+            r.media_id: (r.b0, r.b1, r.b2, r.b3) for r in hasher(media).collect()
+        }
+        assert rows == {mid: bands(p) for mid, p in good.items()}
+    status = {r.media_id: r.status for r in M.image_features(media).collect()}
+    assert status == {1: "ok", 2: "ok", 3: "ok", 7: "decode_failed", 8: "decode_failed", 9: "decode_failed"}
+
+
+def test_near_pairs_plan_no_broadcast_when_disabled(spark):
+    """The class tables grow with the number of distinct hashes, so the
+    pair search carries no broadcast hint: with automatic broadcasting
+    off, no join in the plan broadcasts."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        for name in ("image_ahash_pairs", "image_phash_pairs"):
+            df = Q.REGISTRY[name][0](spark, SF)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "Broadcast" not in plan, (name, plan)
+    finally:
+        spark.conf.set(key, old)

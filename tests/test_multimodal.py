@@ -4,7 +4,6 @@ Arrow batch path, frame-sample fan-out."""
 from __future__ import annotations
 
 import hashlib
-import struct
 
 import pytest
 
@@ -79,7 +78,7 @@ def test_remaining_codec_boundary_is_explicit():
     with pytest.raises(NotImplementedError):
         M.decode_image(lossless)
     # truncated garbage after SOI is corrupt, not "unsupported"
-    with pytest.raises((ValueError, IndexError, KeyError, struct.error)):
+    with pytest.raises((ValueError, IndexError, KeyError)):
         M.decode_image(b"\xff\xd8\xff\xe0rest-of-jpeg")
     with pytest.raises(NotImplementedError):
         M.decode_audio(b"ID3\x03rest")
@@ -470,7 +469,7 @@ def test_png_palette_roundtrip_and_bounds():
     p = M.build_png_palette(w, h, pal, lambda x, y: (x + 2 * y + did) % 16)
     W, H, lumas = M._decode_png(p)
     assert (W, H) == (w, h)
-    assert lumas == [
+    assert lumas.tolist() == [
         M._luma(*pal[(x + 2 * y + did) % 16])
         for y in range(h)
         for x in range(w)

@@ -34,42 +34,6 @@ def test_duplicates_suppressed_across_batches(spark, arrivals, tiny_transcripts_
     assert not res.duplicated(["conv_id", "turn_idx"]).any()
 
 
-def test_tws_twin_matches_applyinpandaswithstate(
-    spark, arrivals, tiny_transcripts_pd, tmp_path
-):
-    """The transformWithStateInPandas implementation (newer Spark 4
-    stateful API + RocksDB state store) must emit the IDENTICAL row set
-    as the applyInPandasWithState one on the same replayed arrivals.
-    Skipped where the TWS protocol can't run (its driver worker imports
-    google.protobuf, absent in this container)."""
-    if not stateful.tws_available():
-        pytest.skip("transformWithState needs google.protobuf (not installed)")
-    old_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    out_a, ckpt_a = str(tmp_path / "out_a"), str(tmp_path / "ckpt_a")
-    out_b, ckpt_b = str(tmp_path / "out_b"), str(tmp_path / "ckpt_b")
-    try:
-        stateful.dedup_turns_stateful(
-            spark, arrivals, out_a, ckpt_a, max_files_per_batch=1
-        )
-        stateful.dedup_turns_tws(
-            spark, arrivals, out_b, ckpt_b, max_files_per_batch=1
-        )
-    finally:
-        if old_provider:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", old_provider
-            )
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    key = ["conv_id", "turn_idx"]
-    a = spark.read.parquet(out_a).toPandas().sort_values(key).reset_index(drop=True)
-    b = spark.read.parquet(out_b).toPandas().sort_values(key).reset_index(drop=True)
-    assert len(b) == len(tiny_transcripts_pd)
-    assert a[key + ["role", "tool"]].equals(b[key + ["role", "tool"]])
-
-
 def test_state_survives_restart(spark, arrivals, tiny_transcripts_pd, tmp_path):
     import os
 

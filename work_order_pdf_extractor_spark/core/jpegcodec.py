@@ -1052,6 +1052,8 @@ def decode_rgb_arrays(
             continue
         if marker == 0xD9:  # EOI
             break
+        if pos + 4 > len(payload):
+            raise ValueError("truncated segment header")
         (seglen,) = struct.unpack_from(">H", payload, pos + 2)
         data = payload[pos + 4 : pos + 2 + seglen]
         if marker == 0xDB:  # DQT (possibly several tables per segment)
@@ -1076,11 +1078,15 @@ def decode_rgb_arrays(
                 (dc_tables if tc == 0 else ac_tables)[th] = tbl
                 off += 17 + nvals
         elif marker == 0xDD:  # DRI — restart interval in MCUs
+            if len(data) < 2:
+                raise ValueError("truncated DRI segment")
             (restart_interval,) = struct.unpack_from(">H", data, 0)
         elif marker in (0xC0, 0xC2):  # SOF0 baseline / SOF2 progressive
             if comps:
                 raise NotImplementedError("one frame header per stream")
             progressive = marker == 0xC2
+            if len(data) < 6:
+                raise ValueError("truncated frame header")
             precision, height, width, ncomp = struct.unpack_from(">BHHB", data, 0)
             if precision != 8 or ncomp not in (1, 3):
                 raise NotImplementedError("only 8-bit, 1 or 3 components")

@@ -49,10 +49,9 @@ SCALES = {
 }
 
 # Share of PDF payloads emitted in the PDF 1.5 xref-stream form. 0.4 is
-# the production mix; the env override exists ONLY for the interleaved
-# fixture-mix attribution protocol (tools/attr_extract.py) — bench.py
-# never sets it, so BENCH_r*.json always measures the registered mix.
-XREF_STREAM_SHARE = float(os.environ.get("SPARK_GRAFT_XREF_SHARE", "0.4"))
+# the production mix; the fixture-mix attribution protocol
+# (tools/attr_extract.py) assigns this attribute to compare forms.
+XREF_STREAM_SHARE = 0.4
 
 
 def _sentence(rng: random.Random, lo: int = 6, hi: int = 14) -> str:
@@ -117,10 +116,8 @@ def build_pdf_payload(
     # ~XREF_STREAM_SHARE of payloads use the PDF 1.5 form (cross-reference
     # stream + object streams) — the layout most post-2004 PDFs actually
     # use — so the flagship pipeline and goldens exercise both parser
-    # paths. The share is a PRE-REGISTERED experiment knob (env
-    # SPARK_GRAFT_XREF_SHARE, r6 extract_pipeline attribution —
-    # BENCH/BASELINE.md): the rng draw is consumed either way, so two
-    # shares yield byte-identical corpora except for the xref form.
+    # paths. The rng draw is consumed whatever the share, so two shares
+    # yield byte-identical corpora except for the xref form.
     data = pdfparse.build_pdf(
         pages, (PAGE_W, PAGE_H), compress=compress,
         xref_stream=rng.random() < XREF_STREAM_SHARE,

@@ -3,11 +3,14 @@
 The multimodal twin of the text near-dup family: crawled corpora carry
 re-encoded / slightly-retouched copies of the same image, and byte-level
 sha256 dedup misses all of them. The standard cheap answer is a
-perceptual hash — here the classic 8×8 AVERAGE HASH (aHash): decode the
-raster (through the same real stdlib codecs as
-:mod:`.multimodal`), pool to an 8×8 grid of integer cell sums, and set
-bit k when cell k's mean exceeds the global mean. Near-duplicates are
-pairs within a small Hamming distance.
+perceptual hash — here the classic 8×8 AVERAGE HASH (aHash) and the DCT
+hash (pHash): decode the raster through the one raster decoder,
+:func:`.multimodal.decode_lumas`, pool to an 8×8 grid of integer cell
+sums, and set bit k when cell k's mean exceeds the global mean.
+Near-duplicates are pairs within a small Hamming distance. Each hash has
+one batch kernel (:func:`_ahash_bands_batch`, :func:`_phash_bands_batch`)
+that holds all of its arithmetic; the per-payload entry points are the
+same kernel on a batch of one.
 
 Cross-engine exactness: every step is integer arithmetic —
 ``cell_sum * 64 > total_sum`` replaces the float mean comparison, and
@@ -36,54 +39,22 @@ import math
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .multimodal import (
-    _decode_bmp,
-    _decode_png,
-    _decode_ppm,
+    RASTER_MAGIC,
+    _bmp24_batch_lumas,
     build_bmp,
+    decode_lumas,
     media_from_doc_ids,
 )
 
 AHASH_SIDE = 16  # fixture raster side → 2×2 px per 8×8-grid cell
 N_BANDS = 4  # 64 bits / 16 bits per band; complete for hamming <= 3
-
-
-def ahash_bands(payload: bytes) -> tuple[int, int, int, int]:
-    """Decode a BMP/PNG/PPM payload and return the 64-bit average hash
-    as four 16-bit band integers (band j holds bits 16j..16j+15, bit
-    k = cy*8+cx set when cell (cx, cy)'s sum * 64 > the raster total).
-
-    Requires dimensions divisible by 8 so the pooling grid is exact
-    (integer cell sums — no fractional-cell float averaging)."""
-    if payload[:2] == b"BM":
-        w, h, lumas = _decode_bmp(payload)
-    elif payload[:8] == b"\x89PNG\r\n\x1a\n":
-        w, h, lumas = _decode_png(payload)
-    elif payload[:2] == b"P6":
-        w, h, lumas = _decode_ppm(payload)
-    else:
-        raise ValueError("unsupported payload for ahash")
-    if w % 8 or h % 8:
-        raise ValueError(f"ahash needs dims divisible by 8, got {w}x{h}")
-    cw, ch = w // 8, h // 8
-    sums = [0] * 64
-    for y in range(h):
-        row_cell = (y // ch) * 8
-        base = y * w
-        for x in range(w):
-            sums[row_cell + x // cw] += lumas[base + x]
-    total = sum(sums)
-    bands = [0, 0, 0, 0]
-    for k, s in enumerate(sums):
-        if s * 64 > total:
-            bands[k // 16] |= 1 << (k % 16)
-    return bands[0], bands[1], bands[2], bands[3]
-
 
 AHASH_SCHEMA = T.StructType(
     [
@@ -96,58 +67,9 @@ AHASH_SCHEMA = T.StructType(
 )
 
 
-def _bmp24_batch_lumas(payloads: list):
-    """Vectorized batch decode of uniform uncompressed 24-bit BMPs:
-    returns an (n, h, w) int64 top-down luma array, or ``None`` when the
-    batch is not uniformly fast-path decodable (mixed formats, mixed
-    dims — the caller then uses the per-image codec path). The byte →
-    luma arithmetic is the identical integer BT.601 formula, so the fast
-    path is value-exact, not approximate."""
-    import struct
-
-    import numpy as np
-
-    if not payloads:
-        return None
-    first = payloads[0]
-    if len(first) < 54 or first[:2] != b"BM":
-        return None
-    header = first[:54]
-    _, _size, _, _, offset = struct.unpack_from("<2sIHHI", first, 0)
-    dib_size, width, height, _planes, bpp, compression = struct.unpack_from(
-        "<IiiHHI", first, 14
-    )
-    if dib_size < 40 or bpp != 24 or compression != 0:
-        return None
-    # uniformity: identical header bytes ⇒ identical geometry/offset
-    n_bytes = len(first)
-    for p in payloads:
-        if len(p) != n_bytes or p[:54] != header:
-            return None
-    bottom_up = height > 0
-    h = abs(height)
-    stride = (width * 3 + 3) & ~3
-    if offset + h * stride > n_bytes:
-        return None
-    raw = np.frombuffer(
-        b"".join(p[offset : offset + h * stride] for p in payloads),
-        dtype=np.uint8,
-    ).reshape(len(payloads), h, stride)
-    pix = raw[:, :, : width * 3].reshape(len(payloads), h, width, 3)
-    b_ = pix[..., 0].astype(np.int64)
-    g_ = pix[..., 1].astype(np.int64)
-    r_ = pix[..., 2].astype(np.int64)
-    lum = (299 * r_ + 587 * g_ + 114 * b_) // 1000
-    if bottom_up:
-        lum = lum[:, ::-1, :]
-    return lum
-
-
 def _pack_bands(bits):
     """(n, 64) bool bit array → (n, 4) int32 16-bit bands (bit k goes to
-    band k//16 at position k%16 — the same layout as the scalar path)."""
-    import numpy as np
-
+    band k//16 at position k%16)."""
     weights = (1 << np.arange(16, dtype=np.int64))[None, None, :]
     return (
         (bits.reshape(-1, 4, 16).astype(np.int64) * weights)
@@ -157,10 +79,10 @@ def _pack_bands(bits):
 
 
 def _ahash_bands_batch(lum):
-    """(n, h, w) lumas (dims divisible by 8) → (n, 4) int32 aHash bands;
-    identical integer arithmetic to :func:`ahash_bands`."""
-    import numpy as np
-
+    """(n, h, w) lumas (dims divisible by 8) → (n, 4) int32 aHash bands:
+    pool each raster to an 8×8 grid of integer cell sums and set bit
+    k = cy*8+cx when cell (cx, cy)'s sum * 64 > the raster total — the
+    integer form of "cell mean > global mean"."""
     n, h, w = lum.shape
     if h % 8 or w % 8:
         raise ValueError(f"ahash needs dims divisible by 8, got {w}x{h}")
@@ -172,11 +94,9 @@ def _ahash_bands_batch(lum):
 
 
 def _phash_bands_batch(lum):
-    """(n, 16, 16) lumas → (n, 4) int32 pHash bands; the identical
-    integer DCT (shared PHASH_BASIS), 8×8 low block, exact 63-AC-median
-    threshold as :func:`phash_bands`, batched as one einsum."""
-    import numpy as np
-
+    """(n, 16, 16) lumas → (n, 4) int32 pHash bands: the integer DCT-II
+    (shared ``PHASH_BASIS``) as one einsum, the 8×8 low block, and the
+    exact 63-AC-median threshold (see :func:`phash_bands`)."""
     n, h, w = lum.shape
     if (w, h) != (AHASH_SIDE, AHASH_SIDE):
         raise ValueError(
@@ -190,45 +110,72 @@ def _phash_bands_batch(lum):
     return _pack_bands(bits)
 
 
-def image_ahash(df: DataFrame) -> DataFrame:
+def _bands_of(payload: bytes, kernel) -> tuple[int, int, int, int]:
+    """One payload through :func:`.multimodal.decode_lumas` and a batch
+    kernel as a batch of one."""
+    if not payload.startswith(RASTER_MAGIC):
+        raise ValueError("unsupported payload for image hashing")
+    w, h, lum = decode_lumas(payload)
+    return tuple(map(int, kernel(lum.reshape(1, h, w))[0]))
+
+
+def ahash_bands(payload: bytes) -> tuple[int, int, int, int]:
+    """Decode an image payload and return the 64-bit average hash as four
+    16-bit band integers (band j holds bits 16j..16j+15; see
+    :func:`_ahash_bands_batch`).
+
+    Requires dimensions divisible by 8 so the pooling grid is exact
+    (integer cell sums — no fractional-cell float averaging)."""
+    return _bands_of(payload, _ahash_bands_batch)
+
+
+def _hash_pass(df: DataFrame, kernel) -> DataFrame:
     """media rows → (media_id, b0..b3) in one Arrow-batched pass: the
     payload bytes are consumed inside the scan stage and never shuffle —
     only four small ints per image leave it.
 
-    r7: uniform 24-bit-BMP batches decode and hash vectorized (numpy
-    byte-slicing + one reshape-sum per batch — guide §4.2) instead of a
-    per-image pure-Python pixel loop; mixed batches fall back to the
-    per-image codec path. Identical integer arithmetic either way
-    (differential-tested)."""
+    A uniform batch of same-header 24-bit BMPs decodes as one numpy array
+    (:func:`.multimodal._bmp24_batch_lumas`); any other batch decodes
+    image by image through :func:`.multimodal.decode_lumas`. Either way
+    ``kernel`` does the hash arithmetic. A payload that does not decode
+    (``image_features`` reports it as decode_failed), or whose raster the
+    kernel refuses, yields no row instead of failing the task: it can
+    pair with nothing."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             payloads = list(b["payload"])
             lum = _bmp24_batch_lumas(payloads)
-            if lum is not None and lum.shape[1] % 8 == 0 and lum.shape[2] % 8 == 0:
-                bands = _ahash_bands_batch(lum)
-                yield pd.DataFrame(
-                    {
-                        "media_id": b["media_id"].values,
-                        "b0": bands[:, 0],
-                        "b1": bands[:, 1],
-                        "b2": bands[:, 2],
-                        "b3": bands[:, 3],
-                    }
-                )
-                continue
-            out = [ahash_bands(p) for p in payloads]
-            yield pd.DataFrame(
-                {
-                    "media_id": b["media_id"].values,
-                    "b0": pd.array([o[0] for o in out], dtype="int32"),
-                    "b1": pd.array([o[1] for o in out], dtype="int32"),
-                    "b2": pd.array([o[2] for o in out], dtype="int32"),
-                    "b3": pd.array([o[3] for o in out], dtype="int32"),
-                }
-            )
+            if lum is not None:
+                rasters = [(list(range(len(payloads))), lum)]
+            else:
+                rasters = []
+                for i, p in enumerate(payloads):
+                    try:
+                        w, h, one = decode_lumas(bytes(p))
+                    except Exception:
+                        continue
+                    rasters.append(([i], one.reshape(1, h, w)))
+            keep, bands = [], [np.empty((0, N_BANDS), np.int32)]
+            for rows, raster in rasters:
+                try:
+                    bands.append(kernel(raster))
+                except ValueError:  # a raster shape the hash cannot pool
+                    continue
+                keep += rows
+            bands = np.concatenate(bands)
+            out = pd.DataFrame({"media_id": b["media_id"].to_numpy()[keep]})
+            for j in range(N_BANDS):
+                out[f"b{j}"] = bands[:, j]
+            yield out
 
     return df.select("media_id", "payload").mapInPandas(fn, schema=AHASH_SCHEMA)
+
+
+def image_ahash(df: DataFrame) -> DataFrame:
+    """media rows → (media_id, b0..b3) average hash (see
+    :func:`_hash_pass`)."""
+    return _hash_pass(df, _ahash_bands_batch)
 
 
 def ahash_near_pairs(hashes: DataFrame, max_hamming: int = 3) -> DataFrame:
@@ -253,7 +200,10 @@ def ahash_near_pairs(hashes: DataFrame, max_hamming: int = 3) -> DataFrame:
     output. Classes are split into ≤``chunk``-member sorted sub-arrays
     before expansion and the chunk-pair table is round-robin
     repartitioned, so one hot class (a popular hash) expands across many
-    tasks instead of serializing the generate in one (guide §2.5)."""
+    tasks instead of serializing the generate in one (guide §2.5). The
+    class-table joins carry no broadcast hint: the class table grows with
+    the number of distinct hashes, so the planner (and AQE, from runtime
+    sizes) picks the join strategy."""
     if max_hamming >= N_BANDS:
         raise ValueError(
             f"banded blocking with {N_BANDS} bands is only complete for "
@@ -315,12 +265,12 @@ def ahash_near_pairs(hashes: DataFrame, max_hamming: int = 3) -> DataFrame:
     ch1 = cls_ch.select(F.col("cid").alias("c1"), F.col("sub").alias("sub1"))
     ch2 = cls_ch.select(F.col("cid").alias("c2"), F.col("sub").alias("sub2"))
     cross = (
-        cp.join(F.broadcast(m1), "c1")
-        .join(F.broadcast(m2), "c2")
+        cp.join(m1, "c1")
+        .join(m2, "c2")
         .withColumn("hamming", ham)
         .filter(F.col("hamming") <= max_hamming)
-        .join(F.broadcast(ch1), "c1")
-        .join(F.broadcast(ch2), "c2")
+        .join(ch1, "c1")
+        .join(ch2, "c2")
         .repartition(par)
         .select(F.explode("sub1").alias("d1"), "sub2", "hamming")
         .select("d1", F.explode("sub2").alias("d2"), "hamming")
@@ -415,8 +365,6 @@ def _bmp16_header() -> bytes:
 def _gray_bmp16_payloads(v):
     """(n, 16, 16) int top-down gray values → list of BMP byte payloads
     (BGR bottom-up rows; 16·3 = 48 bytes/row needs no padding)."""
-    import numpy as np
-
     hdr = _bmp16_header()
     data = np.repeat(
         v[:, ::-1, :, None].astype(np.uint8), 3, axis=3
@@ -432,8 +380,6 @@ def media_bmp16_from_documents(docs: DataFrame) -> DataFrame:
     the scalar ``build_bmp`` — payload bytes identical (tested)."""
 
     def payloads(ids):
-        import numpy as np
-
         xs = np.arange(AHASH_SIDE, dtype=np.int64)
         d = np.asarray(ids, dtype=np.int64)
         gid = (d % 25)[:, None, None]
@@ -469,7 +415,7 @@ PHASH_BASIS: list[list[int]] = [
 
 
 def phash_bands(payload: bytes) -> tuple[int, int, int, int]:
-    """Decode a BMP/PNG/PPM payload and return the 64-bit DCT perceptual
+    """Decode an image payload and return the 64-bit DCT perceptual
     hash as four 16-bit band integers.
 
     The classic pHash recipe (Zauner, "Implementation and Benchmarking
@@ -486,69 +432,13 @@ def phash_bands(payload: bytes) -> tuple[int, int, int, int]:
     63-AC median, so bit 0 is pinned at 1 and a brightness shift (which
     moves only DC) cannot change any bit — and to exact contrast
     scaling (all coefficients and their median scale together)."""
-    if payload[:2] == b"BM":
-        w, h, lumas = _decode_bmp(payload)
-    elif payload[:8] == b"\x89PNG\r\n\x1a\n":
-        w, h, lumas = _decode_png(payload)
-    elif payload[:2] == b"P6":
-        w, h, lumas = _decode_ppm(payload)
-    else:
-        raise ValueError("unsupported payload for phash")
-    if (w, h) != (AHASH_SIDE, AHASH_SIDE):
-        raise ValueError(
-            f"phash expects a {AHASH_SIDE}x{AHASH_SIDE} raster, got {w}x{h}"
-        )
-    import numpy as np
-
-    L = np.asarray(lumas, dtype=np.int64).reshape(AHASH_SIDE, AHASH_SIDE)
-    B = np.asarray(PHASH_BASIS, dtype=np.int64)
-    C = B @ L @ B.T
-    low = C[:8, :8].ravel()
-    med = int(np.partition(low[1:], 31)[31])
-    bands = [0, 0, 0, 0]
-    for k in range(64):
-        if int(low[k]) > med:
-            bands[k // 16] |= 1 << (k % 16)
-    return bands[0], bands[1], bands[2], bands[3]
+    return _bands_of(payload, _phash_bands_batch)
 
 
 def image_phash(df: DataFrame) -> DataFrame:
-    """media rows → (media_id, b0..b3) DCT perceptual hash, one
-    Arrow-batched pass; same narrow-output discipline as
-    :func:`image_ahash` (payload bytes never leave the scan stage).
-
-    r7: uniform 16×16 24-bit-BMP batches decode vectorized and run the
-    integer DCT as one batched einsum; mixed batches fall back to the
-    per-image path. Identical integers either way."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            payloads = list(b["payload"])
-            lum = _bmp24_batch_lumas(payloads)
-            if lum is not None and lum.shape[1:] == (AHASH_SIDE, AHASH_SIDE):
-                bands = _phash_bands_batch(lum)
-                yield pd.DataFrame(
-                    {
-                        "media_id": b["media_id"].values,
-                        "b0": bands[:, 0],
-                        "b1": bands[:, 1],
-                        "b2": bands[:, 2],
-                        "b3": bands[:, 3],
-                    }
-                )
-                continue
-            out = [phash_bands(p) for p in payloads]
-            yield pd.DataFrame(
-                {
-                    "media_id": b["media_id"].values,
-                    "b0": pd.array([o[0] for o in out], dtype="int32"),
-                    "b1": pd.array([o[1] for o in out], dtype="int32"),
-                    "b2": pd.array([o[2] for o in out], dtype="int32"),
-                    "b3": pd.array([o[3] for o in out], dtype="int32"),
-                }
-            )
-
-    return df.select("media_id", "payload").mapInPandas(fn, schema=AHASH_SCHEMA)
+    """media rows → (media_id, b0..b3) DCT perceptual hash; the same pass
+    as :func:`image_ahash` (:func:`_hash_pass`) with the pHash kernel."""
+    return _hash_pass(df, _phash_bands_batch)
 
 
 # pHash fixture: md5-seeded SMOOTH rasters (bilinear interpolation of a
@@ -616,8 +506,6 @@ def _phash_base_surface(gid: int):
     """(16, 16) int64 bilinear base surface for one pHash fixture group —
     the exact integer arithmetic of :func:`_doc_phash_pixel` without the
     per-doc shift/dipole, vectorized (25 groups total, cached)."""
-    import numpy as np
-
     ctrl = np.asarray(_phash_control(gid), dtype=np.int64)  # [j][i]
     xs = np.arange(AHASH_SIDE, dtype=np.int64)
     i = np.minimum(xs // 5, 2)
@@ -647,8 +535,6 @@ def media_bmp16_smooth_from_documents(docs: DataFrame) -> DataFrame:
     shift/dipole applied in numpy; byte-identical payloads (tested)."""
 
     def payloads(ids):
-        import numpy as np
-
         for g in range(_PHASH_GROUPS):
             if g not in _PHASH_SURFACES:
                 _PHASH_SURFACES[g] = _phash_base_surface(g)

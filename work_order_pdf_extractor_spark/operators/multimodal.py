@@ -6,25 +6,35 @@ the payload is consumed on the scan side and never shuffles (same rule as
 the text pipeline). Mirrors the role of the reference's payload→pixels
 boundary (``work_order_extractor.py:1121-1146`` pdf2image render).
 
-Decoders are stdlib-only and cover exactly the formats the builders emit
-(the same EMIT==PARSE philosophy as ``core/pdfparse.py``):
+This module is the engine's one raster decoder: :func:`decode_lumas`
+turns any supported image payload into an integer luma raster, and every
+image consumer (the feature pass here, the perceptual hashes in
+:mod:`.imagehash`) reads pixels through it. The decoders are numpy plus
+the stdlib and cover exactly the formats the builders emit (the same
+EMIT==PARSE philosophy as ``core/pdfparse.py``):
 
 - image: uncompressed 24-bit BI_RGB BMP (bottom-up, row-padded), binary
-  P6 PPM, non-interlaced 8-bit RGB PNG (zlib inflate + full filter
-  reconstruction), and JPEG — baseline-sequential (grayscale, YCbCr
-  4:4:4 / 4:2:2 / 4:2:0 / 4:1:1, restart intervals) AND progressive
-  SOF2 (spectral selection + successive approximation) — real Huffman
-  entropy decode + dequant + IDCT + chroma upsampling + JFIF YCbCr→RGB,
-  ``core/jpegcodec.py``. Sampling factor 3, lossless/hierarchical and
-  arithmetic-coded JPEGs are the documented
+  P6 PPM, 8-bit RGB and paletted PNG, sequential or Adam7-interlaced
+  (zlib inflate + all five scanline filters per pass; the interlaced
+  builder lives in :mod:`.adam7`), and JPEG — baseline-sequential
+  (grayscale, YCbCr 4:4:4 / 4:2:2 / 4:2:0 / 4:1:1, restart intervals)
+  AND progressive SOF2 (spectral selection + successive approximation)
+  — real Huffman entropy decode + dequant + IDCT + chroma upsampling +
+  JFIF YCbCr→RGB, ``core/jpegcodec.py``. Sampling factor 3,
+  lossless/hierarchical and arithmetic-coded JPEGs are the documented
   :class:`NotImplementedError` boundary.
-- audio: RIFF/WAVE PCM16 mono/stereo header + sample parse.
+- audio: RIFF/WAVE PCM16 or G.711 μ-law header + sample parse.
 - video: :func:`frame_sample_plan` is pure plan arithmetic (the per-frame
   decode would be the image path above).
 
+Untrusted bytes: every header is checked against the payload before a
+raster is allocated, and a corrupt payload raises ``ValueError``,
+``IndexError`` or ``KeyError`` (``NotImplementedError`` outside the
+subset) — which the feature passes turn into status='decode_failed' rows.
+
 Features are integer-exact where the DuckDB oracle checks them
-(width/height/n_px/sum_luma; n_samples/sum_abs/peak) so the driver's
-value-hash compare is never at the mercy of float rounding.
+(width/height/n_px/sum_luma/pos_sum; n_samples/sum_abs/peak) so a
+value-hash compare against the oracle never depends on float rounding.
 """
 
 from __future__ import annotations
@@ -34,11 +44,13 @@ import struct
 import zlib
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..core.jpegcodec import decode_gray_array
 from .common import ensure_parallelism
 
 MEDIA_SCHEMA = T.StructType(
@@ -59,6 +71,7 @@ IMAGE_FEATURES_SCHEMA = T.StructType(
         T.StructField("height", T.IntegerType()),
         T.StructField("n_px", T.IntegerType()),
         T.StructField("sum_luma", T.LongType()),
+        T.StructField("pos_sum", T.LongType()),
         T.StructField("mean_luma", T.DoubleType()),
         T.StructField("embedding", T.ArrayType(T.FloatType())),
         T.StructField("status", T.StringType()),  # ok | decode_failed
@@ -216,58 +229,107 @@ def build_wav_mulaw(samples: list[int], sample_rate: int = 8000) -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# Decoders (stdlib-only)
+# Decoders (stdlib + numpy): payload bytes -> (width, height, int64 lumas)
 # ---------------------------------------------------------------------------
 
-def _luma(r: int, g: int, b: int) -> int:
-    """Integer BT.601 luma — exact, so sums are cross-engine-checkable."""
+def _luma(r, g, b):
+    """Integer BT.601 luma — exact, so sums are cross-engine-checkable.
+    Works elementwise on int64 arrays as well as on ints."""
     return (299 * r + 587 * g + 114 * b) // 1000
 
 
-def _decode_bmp(payload: bytes) -> tuple[int, int, list[int]]:
+def _rgb_lumas(px):
+    """(..., 3) uint8 RGB samples → (...) int64 lumas."""
+    px = px.astype(np.int64)
+    return _luma(px[..., 0], px[..., 1], px[..., 2])
+
+
+def _bmp_header(payload: bytes) -> tuple[int, int, int, int]:
+    """(pixel offset, width, signed height, row stride) of an uncompressed
+    24-bit BI_RGB BMP. Checks that every row the header claims is in the
+    payload before anything is allocated for them."""
     if len(payload) < 54:
         raise ValueError("truncated BMP header")
-    _, _size, _, _, offset = struct.unpack_from("<2sIHHI", payload, 0)
-    (
-        dib_size, width, height, _planes, bpp, compression,
-        *_rest,
-    ) = struct.unpack_from("<IiiHHI", payload, 14)
+    (offset,) = struct.unpack_from("<I", payload, 10)
+    dib_size, width, height, _planes, bpp, compression = struct.unpack_from(
+        "<IiiHHI", payload, 14
+    )
     if dib_size < 40 or bpp != 24 or compression != 0:
         raise NotImplementedError(
             "only uncompressed 24-bit BI_RGB BMP is supported"
         )
-    bottom_up = height > 0
-    height = abs(height)
-    row_stride = (width * 3 + 3) & ~3
-    lumas = [0] * (width * height)
-    for row in range(height):
-        y = (height - 1 - row) if bottom_up else row  # to top-down
-        base = offset + row * row_stride
-        for x in range(width):
-            b, g, r = payload[base + 3 * x : base + 3 * x + 3]
-            lumas[y * width + x] = _luma(r, g, b)
-    return width, height, lumas
+    stride = (width * 3 + 3) & ~3
+    if width <= 0 or height == 0:
+        raise ValueError("empty BMP raster")
+    # the last row needs its pixels, not its padding
+    if offset + (abs(height) - 1) * stride + 3 * width > len(payload):
+        raise ValueError("BMP raster runs past the payload")
+    return offset, width, height, stride
 
 
-def _decode_ppm(payload: bytes) -> tuple[int, int, list[int]]:
+def _bmp_lumas(
+    payloads: list, offset: int, width: int, height: int, stride: int
+):
+    """Same-geometry 24-bit BMP payloads → (n, |height|, width) int64
+    top-down lumas (rows are BGR on disk, bottom-up when height > 0)."""
+    h = abs(height)
+    rows = np.stack(
+        [
+            np.ndarray((h, 3 * width), np.uint8, p, offset, (stride, 1))
+            for p in payloads
+        ]
+    )
+    lum = _rgb_lumas(rows.reshape(len(payloads), h, width, 3)[..., ::-1])
+    return lum[:, ::-1] if height > 0 else lum
+
+
+def _decode_bmp(payload: bytes) -> tuple[int, int, np.ndarray]:
+    offset, width, height, stride = _bmp_header(payload)
+    lum = _bmp_lumas([payload], offset, width, height, stride)
+    return width, abs(height), lum.ravel()
+
+
+def _bmp24_batch_lumas(payloads: list):
+    """One batch of uncompressed 24-bit BMPs sharing one header → an
+    (n, h, w) int64 top-down luma array, or ``None`` when the batch is
+    not uniform (mixed formats or geometry: the caller then decodes image
+    by image). Identical header bytes and payload length mean identical
+    geometry, so the first payload's header parse covers the batch."""
+    if not payloads or payloads[0][:2] != b"BM":
+        return None
+    first = payloads[0]
+    try:
+        geometry = _bmp_header(first)
+    except (ValueError, NotImplementedError):
+        return None
+    n_bytes, header = len(first), first[:54]
+    if any(len(p) != n_bytes or p[:54] != header for p in payloads):
+        return None
+    return _bmp_lumas(payloads, *geometry)
+
+
+def _decode_ppm(payload: bytes) -> tuple[int, int, np.ndarray]:
     # header: P6 <ws> width <ws> height <ws> maxval <single ws> data
-    fields, pos = [], 2
+    fields, pos, end = [], 2, len(payload)
     while len(fields) < 3:
         while payload[pos : pos + 1].isspace():
             pos += 1
         start = pos
-        while not payload[pos : pos + 1].isspace():
+        while pos < end and not payload[pos : pos + 1].isspace():
             pos += 1
-        fields.append(int(payload[start:pos]))
+        fields.append(int(payload[start:pos]))  # b"" at the end: ValueError
     pos += 1  # the single whitespace before the raster
     width, height, maxval = fields
     if maxval != 255:
         raise NotImplementedError("only maxval=255 P6 PPM is supported")
-    lumas = [0] * (width * height)
-    for i in range(width * height):
-        r, g, b = payload[pos + 3 * i : pos + 3 * i + 3]
-        lumas[i] = _luma(r, g, b)
-    return width, height, lumas
+    if width <= 0 or height <= 0:
+        raise ValueError("empty PPM raster")
+    n = width * height
+    if pos + 3 * n > end:
+        raise ValueError("PPM raster runs past the payload")
+    return width, height, _rgb_lumas(
+        np.frombuffer(payload, np.uint8, 3 * n, pos).reshape(n, 3)
+    )
 
 
 def _paeth(a: int, b: int, c: int) -> int:
@@ -278,36 +340,62 @@ def _paeth(a: int, b: int, c: int) -> int:
     return b if pb <= pc else c
 
 
-def _decode_png(payload: bytes) -> tuple[int, int, list[int]]:
-    """Non-interlaced 8-bit RGB (color type 2) or PALETTED (color type 3)
-    PNG: walk chunks, inflate IDAT, reconstruct all five scanline filters
+_PNG_SIG = b"\x89PNG\r\n\x1a\n"
+# (x0, y0, dx, dy) per interlace pass: one pass over the whole raster, or
+# the seven Adam7 passes of PNG spec §8.2
+_SEQUENTIAL = [(0, 0, 1, 1)]
+ADAM7 = [
+    (0, 0, 8, 8),
+    (4, 0, 8, 8),
+    (0, 4, 4, 8),
+    (2, 0, 4, 4),
+    (0, 2, 2, 4),
+    (1, 0, 2, 2),
+    (0, 1, 1, 2),
+]
+
+
+def _pass_dims(
+    width: int, height: int, x0: int, y0: int, dx: int, dy: int
+) -> tuple[int, int]:
+    """(width, height) of one interlace pass's sub-image; 0 when empty."""
+    pw = (width - x0 + dx - 1) // dx if width > x0 else 0
+    ph = (height - y0 + dy - 1) // dy if height > y0 else 0
+    return pw, ph
+
+
+def _decode_png(payload: bytes) -> tuple[int, int, np.ndarray]:
+    """8-bit RGB (color type 2) or PALETTED (color type 3) PNG, sequential
+    or Adam7-interlaced: walk chunks, inflate IDAT, check the raster
+    length against every pass, reconstruct all five scanline filters
     (None/Sub/Up/Average/Paeth) per the PNG spec — the filter byte offset
-    is the pixel width (3 for RGB, 1 for indices) — then map indices
-    through the PLTE table for type 3. A real decoder for any conforming
-    image of these types, not only the builders' filter-0 output."""
-    if payload[:8] != b"\x89PNG\r\n\x1a\n":
+    is the pixel width (3 for RGB, 1 for indices) and ``prev`` is the
+    previous line of the same pass — map indices through the PLTE table
+    for type 3, then place each pass's pixels at their raster positions.
+    A real decoder for any conforming image of these types, not only the
+    builders' output."""
+    if payload[:8] != _PNG_SIG:
         raise ValueError("bad PNG signature")
-    pos, width, height, idat = 8, None, None, bytearray()
-    color_type, plte = None, None
+    pos, width, idat, plte = 8, None, bytearray(), None
     while pos + 8 <= len(payload):
         (clen,) = struct.unpack_from(">I", payload, pos)
         ctype = payload[pos + 4 : pos + 8]
         data = payload[pos + 8 : pos + 8 + clen]
         if ctype == b"IHDR":
+            if len(data) != 13:
+                raise ValueError("bad IHDR length")
             width, height, bit_depth, color_type, _c, _f, interlace = (
                 struct.unpack(">IIBBBBB", data)
             )
-            if bit_depth != 8 or color_type not in (2, 3) or interlace != 0:
+            if bit_depth != 8 or color_type not in (2, 3) or interlace > 1:
                 raise NotImplementedError(
-                    "only non-interlaced 8-bit RGB/paletted PNG is supported"
+                    "only 8-bit RGB/paletted PNG (sequential or Adam7) is "
+                    "supported"
                 )
         elif ctype == b"PLTE":
             if len(data) % 3 or len(data) > 256 * 3:
                 raise ValueError("bad PLTE length")
-            plte = [
-                (data[i], data[i + 1], data[i + 2])
-                for i in range(0, len(data), 3)
-            ]
+            plte = data
         elif ctype == b"IDAT":
             idat += data
         elif ctype == b"IEND":
@@ -317,80 +405,107 @@ def _decode_png(payload: bytes) -> tuple[int, int, list[int]]:
         raise ValueError("missing IHDR/IDAT")
     if color_type == 3 and plte is None:
         raise ValueError("paletted PNG without PLTE")
-    raw = zlib.decompress(bytes(idat))
+    if not width or not height:
+        raise ValueError("empty PNG raster")
+    passes = ADAM7 if interlace else _SEQUENTIAL
+    dims = [_pass_dims(width, height, *p) for p in passes]
     bpp = 3 if color_type == 2 else 1
-    stride = width * bpp
-    if len(raw) != height * (stride + 1):
+    try:
+        raw = zlib.decompress(bytes(idat))
+    except zlib.error as e:
+        raise ValueError(f"corrupt IDAT stream: {e}") from e
+    # an empty pass has no scanlines, not even filter bytes
+    if len(raw) != sum(ph * (1 + pw * bpp) for pw, ph in dims if pw):
         raise ValueError("bad raster length")
-    lumas = [0] * (width * height)
-    prev = bytearray(stride)
-    for y in range(height):
-        ftype = raw[y * (stride + 1)]
-        line = bytearray(raw[y * (stride + 1) + 1 : (y + 1) * (stride + 1)])
-        if ftype == 1:  # Sub
-            for i in range(bpp, stride):
-                line[i] = (line[i] + line[i - bpp]) & 0xFF
-        elif ftype == 2:  # Up
-            for i in range(stride):
-                line[i] = (line[i] + prev[i]) & 0xFF
-        elif ftype == 3:  # Average
-            for i in range(stride):
-                left = line[i - bpp] if i >= bpp else 0
-                line[i] = (line[i] + (left + prev[i]) // 2) & 0xFF
-        elif ftype == 4:  # Paeth
-            for i in range(stride):
-                left = line[i - bpp] if i >= bpp else 0
-                ul = prev[i - bpp] if i >= bpp else 0
-                line[i] = (line[i] + _paeth(left, prev[i], ul)) & 0xFF
-        elif ftype != 0:
-            raise ValueError(f"unknown PNG filter {ftype}")
-        if color_type == 2:
-            for x in range(width):
-                lumas[y * width + x] = _luma(
-                    line[3 * x], line[3 * x + 1], line[3 * x + 2]
-                )
-        else:
-            for x in range(width):
-                idx = line[x]
-                if idx >= len(plte):
-                    raise ValueError("palette index out of range")
-                lumas[y * width + x] = _luma(*plte[idx])
-        prev = line
-    return width, height, lumas
+    samples, off = bytearray(), 0
+    for pw, ph in dims:
+        stride = pw * bpp
+        prev = bytearray(stride)
+        for _ in range(ph if pw else 0):
+            ftype = raw[off]
+            line = bytearray(raw[off + 1 : off + 1 + stride])
+            off += 1 + stride
+            if ftype == 1:  # Sub
+                for i in range(bpp, stride):
+                    line[i] = (line[i] + line[i - bpp]) & 0xFF
+            elif ftype == 2:  # Up
+                for i in range(stride):
+                    line[i] = (line[i] + prev[i]) & 0xFF
+            elif ftype == 3:  # Average
+                for i in range(stride):
+                    left = line[i - bpp] if i >= bpp else 0
+                    line[i] = (line[i] + (left + prev[i]) // 2) & 0xFF
+            elif ftype == 4:  # Paeth
+                for i in range(stride):
+                    left = line[i - bpp] if i >= bpp else 0
+                    ul = prev[i - bpp] if i >= bpp else 0
+                    line[i] = (line[i] + _paeth(left, prev[i], ul)) & 0xFF
+            elif ftype != 0:
+                raise ValueError(f"unknown PNG filter {ftype}")
+            samples += line
+            prev = line
+    if color_type == 2:
+        lum = _rgb_lumas(np.frombuffer(samples, np.uint8).reshape(-1, 3))
+    else:
+        idx = np.frombuffer(samples, np.uint8)
+        if idx.max() >= len(plte) // 3:
+            raise ValueError("palette index out of range")
+        lum = _rgb_lumas(np.frombuffer(plte, np.uint8).reshape(-1, 3))[idx]
+    raster = np.empty((height, width), np.int64)
+    k = 0
+    for (x0, y0, dx, dy), (pw, ph) in zip(passes, dims):
+        raster[y0::dy, x0::dx] = lum[k : k + pw * ph].reshape(ph, pw)
+        k += pw * ph
+    return width, height, raster.ravel()
+
+
+_RASTER_CODECS = (
+    (b"BM", _decode_bmp),
+    (b"P6", _decode_ppm),
+    (_PNG_SIG, _decode_png),
+    (b"\xff\xd8", decode_gray_array),
+)
+RASTER_MAGIC = tuple(magic for magic, _ in _RASTER_CODECS)
+
+
+def decode_lumas(payload: bytes) -> tuple[int, int, np.ndarray]:
+    """The one raster decoder: a BMP / P6 PPM / PNG / JPEG payload →
+    ``(width, height, lumas)``, lumas a flat int64 array in top-down
+    raster order (for JPEG the BT.601 luma of the decoded RGB; for
+    grayscale that IS the decoded sample). Unknown leading bytes raise
+    ``NotImplementedError``; a corrupt payload raises ``ValueError``,
+    ``IndexError`` or ``KeyError``, and a header is checked against the
+    payload before any raster is allocated."""
+    for magic, decode in _RASTER_CODECS:
+        if payload.startswith(magic):
+            return decode(payload)
+    raise NotImplementedError(
+        "only BMP/PPM/PNG/JPEG payloads are decodable without image "
+        "libraries"
+    )
+
+
+def _pos_sum(lumas: np.ndarray) -> int:
+    """Σ luma · (raster index + 1), exact in int64: a decoder that lands
+    the right pixels in the wrong places keeps ``sum_luma`` but changes
+    this. Raises rather than wrap once the worst case 255·n(n+1)/2
+    could reach 2⁶³."""
+    n = lumas.size
+    if 255 * n * (n + 1) // 2 >= 1 << 63:
+        raise ValueError(f"pos_sum over {n} pixels could overflow int64")
+    return int(np.dot(lumas, np.arange(1, n + 1, dtype=np.int64)))
 
 
 def decode_image(payload: bytes) -> dict:
     """Decode a BMP / P6 PPM / PNG / JPEG payload into exact features.
 
-    ``sum_luma``/``n_px`` are integers (oracle-exact); ``mean_luma`` and the
-    16-dim 4×4 block-mean ``embedding`` are the float conveniences derived
-    from them. JPEG covers baseline (gray/4:4:4/4:2:2/4:2:0/4:1:1,
-    restart intervals) AND progressive SOF2 (``core/jpegcodec.py``)."""
-    import numpy as np
-
-    if payload[:2] == b"BM":
-        width, height, lumas = _decode_bmp(payload)
-        arr = np.asarray(lumas, dtype=np.int64)
-    elif payload[:2] == b"P6":
-        width, height, lumas = _decode_ppm(payload)
-        arr = np.asarray(lumas, dtype=np.int64)
-    elif payload[:8] == b"\x89PNG\r\n\x1a\n":
-        width, height, lumas = _decode_png(payload)
-        arr = np.asarray(lumas, dtype=np.int64)
-    elif payload[:2] == b"\xff\xd8":
-        from ..core.jpegcodec import decode_gray_array
-
-        # BT.601 luma straight from the decoded arrays (for grayscale
-        # the decoded sample IS the luma)
-        width, height, arr = decode_gray_array(payload)
-    else:
-        raise NotImplementedError(
-            "only BMP/PPM/PNG/JPEG payloads are decodable without image "
-            "libraries"
-        )
+    ``sum_luma``/``n_px``/``pos_sum`` are integers (oracle-exact);
+    ``mean_luma`` and the 16-dim 4×4 block-mean ``embedding`` are the
+    float conveniences derived from them. JPEG covers baseline
+    (gray/4:4:4/4:2:2/4:2:0/4:1:1, restart intervals) AND progressive
+    SOF2 (``core/jpegcodec.py``)."""
+    width, height, arr = decode_lumas(payload)
     n_px = width * height
-    # r7: integer feature reductions vectorized (identical values — the
-    # sums are exact int64 arithmetic either way)
     sum_luma = int(arr.sum())
     grid = arr.reshape(height, width)
     emb = []
@@ -410,13 +525,15 @@ def decode_image(payload: bytes) -> dict:
         "height": height,
         "n_px": n_px,
         "sum_luma": sum_luma,
+        "pos_sum": _pos_sum(arr),
         "mean_luma": round(sum_luma / n_px / 255.0, 6),
         "embedding": emb,
     }
 
 
 def decode_audio(payload: bytes) -> dict:
-    """Decode a RIFF/WAVE PCM16 payload into exact features."""
+    """Decode a RIFF/WAVE PCM16 or G.711 μ-law payload into exact
+    features."""
     if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise NotImplementedError("only RIFF/WAVE audio is supported")
     pos, fmt, data = 12, None, None
@@ -424,6 +541,8 @@ def decode_audio(payload: bytes) -> dict:
         cid = payload[pos : pos + 4]
         (clen,) = struct.unpack_from("<I", payload, pos + 4)
         if cid == b"fmt ":
+            if pos + 24 > len(payload):
+                raise ValueError("truncated fmt chunk")
             fmt = struct.unpack_from("<HHIIHH", payload, pos + 8)
         elif cid == b"data":
             data = payload[pos + 8 : pos + 8 + clen]
@@ -431,6 +550,8 @@ def decode_audio(payload: bytes) -> dict:
     if fmt is None or data is None:
         raise ValueError("missing fmt/data chunk")
     audio_format, channels, rate, _br, _ba, bits = fmt
+    if not channels:
+        raise ValueError("zero-channel WAV")
     if audio_format == 1 and bits == 16:
         samples = struct.unpack(f"<{len(data) // 2}h", data[: len(data) & ~1])
     elif audio_format == 7 and bits == 8:
@@ -452,78 +573,52 @@ def decode_audio(payload: bytes) -> dict:
 # Distributed passes
 # ---------------------------------------------------------------------------
 
-def _feature_rows(payloads, decoder, null_template: dict) -> list[dict]:
-    """Decode each payload, degrading corrupt/unsupported ones into a
-    null-feature row with status='decode_failed' — a bad payload must
-    become data, never a task failure that kills a 100 TB job (the same
-    rule as the text pipeline's status='extraction_failed' rows)."""
-    rows = []
-    for p in payloads:
-        try:
-            d = decoder(bytes(p))
-            d["status"] = "ok"
-        except Exception:
-            d = dict(null_template)
-            d["sha256"] = hashlib.sha256(bytes(p)).hexdigest()
-            d["status"] = "decode_failed"
-        rows.append(d)
-    return rows
-
-
-_IMG_NULL = {
-    "sha256": None, "width": None, "height": None, "n_px": None,
-    "sum_luma": None, "mean_luma": None, "embedding": None,
-}
-_AUD_NULL = {
-    "sha256": None, "channels": None, "sample_rate": None,
-    "n_samples": None, "sum_abs": None, "peak": None,
-}
-
-
-def image_features(df: DataFrame) -> DataFrame:
-    """media rows → per-image features via one Arrow-batched pass.
-
-    The payload column is consumed inside the pass and dropped from the
-    output (same no-payload-shuffle rule as the text pipeline); decode
-    failures degrade to status='decode_failed' rows."""
+def _features_pass(df: DataFrame, decode, schema: T.StructType) -> DataFrame:
+    """media rows → one ``schema`` row per payload via one Arrow-batched
+    pass. The payload column is consumed inside the pass and dropped from
+    the output (same no-payload-shuffle rule as the text pipeline). A
+    corrupt or unsupported payload becomes a null-feature row with
+    status='decode_failed' — a bad payload must become data, never a
+    task failure that kills a 100 TB job (the same rule as the text
+    pipeline's status='extraction_failed' rows)."""
+    cols = schema.fieldNames()[1:]
+    null_row = dict.fromkeys(cols)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            feats = _feature_rows(b["payload"], decode_image, _IMG_NULL)
+            rows = []
+            for p in b["payload"]:
+                p = bytes(p)
+                try:
+                    rows.append(dict(decode(p), status="ok"))
+                except Exception:
+                    rows.append(
+                        dict(
+                            null_row,
+                            sha256=hashlib.sha256(p).hexdigest(),
+                            status="decode_failed",
+                        )
+                    )
             # dtype=object keeps int features as Python ints when a
             # failed row introduces None (float64+NaN would force an
             # unsafe float->int Arrow cast)
-            out = pd.DataFrame(
-                feats,
-                columns=[f.name for f in IMAGE_FEATURES_SCHEMA][1:],
-                dtype=object,
-            )
+            out = pd.DataFrame(rows, columns=cols, dtype=object)
             out.insert(0, "media_id", b["media_id"].values)
             yield out
 
-    return df.select("media_id", "payload").mapInPandas(
-        fn, schema=IMAGE_FEATURES_SCHEMA
-    )
+    return df.select("media_id", "payload").mapInPandas(fn, schema=schema)
+
+
+def image_features(df: DataFrame) -> DataFrame:
+    """media rows → per-image features (:func:`decode_image`);
+    undecodable payloads become status='decode_failed' rows."""
+    return _features_pass(df, decode_image, IMAGE_FEATURES_SCHEMA)
 
 
 def audio_features(df: DataFrame) -> DataFrame:
-    """media rows → per-clip audio features via one Arrow-batched pass;
-    decode failures degrade to status='decode_failed' rows."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            feats = _feature_rows(b["payload"], decode_audio, _AUD_NULL)
-            out = pd.DataFrame(
-                feats,
-                columns=[f.name for f in AUDIO_FEATURES_SCHEMA][1:],
-                dtype=object,
-            )
-            out.insert(0, "media_id", b["media_id"].values)
-            yield out
-
-    return df.select("media_id", "payload").mapInPandas(
-        fn, schema=AUDIO_FEATURES_SCHEMA
-    )
+    """media rows → per-clip audio features (:func:`decode_audio`);
+    undecodable payloads become status='decode_failed' rows."""
+    return _features_pass(df, decode_audio, AUDIO_FEATURES_SCHEMA)
 
 
 def frame_sample_plan(
@@ -672,8 +767,6 @@ def _grid_samples(
     """Block-constant fixture raster ``(xmul·(x//xdiv) + ymul·(y//ydiv)
     + base) mod 256`` as a flat int64 array (the encoders take any
     array-like plane)."""
-    import numpy as np
-
     xs = xmul * (np.arange(w, dtype=np.int64) // xdiv)
     ys = ymul * (np.arange(h, dtype=np.int64) // ydiv)
     return ((xs[None, :] + ys[:, None] + base) % 256).ravel()

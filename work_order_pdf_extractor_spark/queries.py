@@ -4414,18 +4414,18 @@ SELECT * FROM actions UNION ALL SELECT * FROM meta
 # ===========================================================================
 
 def q_png_adam7_decode(spark, sf_dir):
-    """ADAM7-INTERLACED PNG decode end-to-end — the last PNG shape a
-    crawled corpus hits that the non-interlaced decoder rejects: seven
-    independently-filtered passes deinterlaced back to the full raster
-    (operators/adam7.py; reference analog: poppler renders anything,
+    """ADAM7-INTERLACED PNG decode end-to-end: seven independently-
+    filtered passes (built by operators/adam7.py) deinterlaced back to
+    the full raster by the one PNG decoder in operators/multimodal.py
+    (reference analog: poppler renders anything,
     work_order_extractor.py:1121-1146). ``pos_sum`` weights each luma by
     its raster position, so the oracle checks pixel PLACEMENT — a
     deinterlacer that lands right pixels in wrong places keeps sum_luma
     but breaks pos_sum."""
-    from .operators import adam7
+    from .operators import adam7, multimodal
 
     media = adam7.media_png_adam7_from_documents(ld(spark, sf_dir, "documents"))
-    return adam7.image_features_adam7(media).select(
+    return multimodal.image_features(media).select(
         "media_id", "width", "height", "n_px", "sum_luma", "pos_sum"
     )
 

@@ -66,96 +66,6 @@ def _dedup_group(
     state.update((sorted(seen),))
 
 
-def tws_available() -> bool:
-    """True iff the transformWithState Python protocol can run here (its
-    driver worker imports google.protobuf at startup)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def dedup_turns_tws(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    max_files_per_batch: int | None = None,
-):
-    """Twin of :func:`dedup_turns_stateful` on the NEWER Spark 4 stateful
-    API (``transformWithStateInPandas`` + ``StatefulProcessor``): typed
-    per-key state handles (a ValueState of the seen turn list) instead of
-    a single opaque state tuple, and the RocksDB state store provider,
-    which is what the new operator requires and what large state at 10^12
-    turns needs anyway (spillable, incremental-checkpointing state).
-    Same exactly-once-per-(conv_id, turn_idx) contract — the test asserts
-    both implementations emit the identical row set.
-
-    Environment gate: the transformWithState protocol talks to the Python
-    driver worker over protobuf, so it needs ``google.protobuf``
-    importable — probe with :func:`tws_available` before calling (this
-    sandbox lacks protobuf; the applyInPandasWithState implementation
-    above is the one exercised end-to-end here)."""
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas needs google.protobuf in the "
-            "Python environment; use dedup_turns_stateful instead"
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class Dedup(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._seen = handle.getValueState(
-                "seen", T.StructType([T.StructField("seen", T.ArrayType(T.IntegerType()))])
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            seen: set[int] = (
-                set(self._seen.get()[0]) if self._seen.exists() else set()
-            )
-            for pdf in rows:
-                pdf = pdf.sort_values("turn_idx")
-                fresh = pdf[
-                    ~pdf["turn_idx"].isin(seen) & ~pdf["turn_idx"].duplicated()
-                ]
-                seen.update(int(t) for t in fresh["turn_idx"])
-                if len(fresh):
-                    yield fresh[["conv_id", "turn_idx", "role", "text", "tool"]]
-            self._seen.update((sorted(seen),))
-
-        def close(self) -> None:
-            pass
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    reader = spark.readStream.schema(TRANSCRIPT_SCHEMA).format("parquet")
-    if max_files_per_batch:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_batch)
-    stream = reader.load(input_dir)
-    deduped: DataFrame = stream.groupBy("conv_id").transformWithStateInPandas(
-        statefulProcessor=Dedup(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )
-    q = (
-        deduped.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
 def dedup_turns_stateful(
     spark: SparkSession,
     input_dir: str,
