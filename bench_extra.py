@@ -50,8 +50,8 @@ def main() -> None:
     if "--all" in args:
         args = list(HEADLINE)
 
-    cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    n_req = int(cores) if str(cores).isdigit() else 32
+    cores = os.environ.get("SPARK_GRAFT_CPUS", "")
+    n_req = int(cores) if cores.isdigit() else len(os.sched_getaffinity(0))
     threads = TUNED_THREADS.get(n_req, n_req)
     spark = get_spark(app_name="bench_extra", cores=threads)
     spark.range(0, 1_000_000, 1, threads).selectExpr("sum(id)").collect()

@@ -76,7 +76,11 @@ def test_jaccard_over_rare_shingles(spark, hot_corpus):
     # finds NO pair >= 0.6 (tails are disjoint); without the cut every
     # pair scores high on shared boilerplate
     hot = dedup.ngram_jaccard_pairs(hot_corpus, threshold=0.6).count()
-    cut = dedup.ngram_jaccard_pairs(hot_corpus, threshold=0.6, max_df=5).count()
+    cut = dedup.ngram_jaccard_pairs(
+        hot_corpus,
+        threshold=0.6,
+        shingles=dedup.df_cut_shingles(dedup.word_shingles(hot_corpus), 5),
+    ).count()
     assert hot > 0
     assert cut == 0
 

@@ -8,6 +8,21 @@ native ``hash()`` so results are reproducible anywhere and oracle-checkable.
 Scale notes per operator are in the docstrings — the common theme: never
 join or shuffle raw text; join on hashes/signatures/buckets whose size is
 independent of document length.
+
+The near-dup family has one implementation of each step:
+
+- :func:`_lsh_candidates` — the band-bucket candidate join (a self-join
+  for in-corpus pairs, or batch vs corpus);
+- :func:`_shingle_overlap` — shingle-set sizes and intersection for
+  candidate pairs, or for all co-occurring pairs through the chunked
+  posting-list expander :func:`.common.sorted_id_pairs`;
+- :func:`_lsh_verified_pairs` — the persisted-shingles LSH → Jaccard
+  verify chain.
+
+:func:`ngram_jaccard_pairs` and :func:`containment_pairs` are scoring on
+top of the overlap; :func:`minhash_lsh_pairs` is the candidate join;
+:func:`deduplicate_near`, the clustering queries and
+``plans.ingest.incremental_ingest`` compose the chain.
 """
 
 from __future__ import annotations
@@ -17,6 +32,7 @@ from pyspark.sql import DataFrame, functions as F
 from .common import (  # noqa: F401  (re-exported: long-time import site)
     FANOUT_CONF,
     ensure_parallelism,
+    sorted_id_pairs,
     stable_hash64,
     word_grams,
     word_shingles,
@@ -99,58 +115,92 @@ def df_cut_shingles(sh: DataFrame, max_df: int) -> DataFrame:
     return sh.join(keep, "shingle", "left_semi")
 
 
-def _cooccurring_pairs(sh: DataFrame, id_col: str) -> DataFrame:
-    """One (doc1, doc2) row per unordered co-occurrence per shingle —
-    doc1 < doc2, from sorted per-shingle posting lists (r7). Hot
-    shingles (corpus-wide phrases) are split into ≤1024-member chunks
-    and every chunk pair is generated ROW-LOCALLY from the posting row
-    (k = k1·nch + k2 index arithmetic — no self-join), then round-robin
-    repartitioned, so a df-10⁴ shingle expands across many tasks
-    instead of serializing 10⁸ pairs in one (guide §2.5). Sorted chunks
-    make cross-chunk expansion ordered without a filter."""
-    chunk = 1024
-    par = sh.sparkSession.sparkContext.defaultParallelism
-    lists = (
-        sh.groupBy("shingle")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-        .filter(F.size("ids") > 1)
+def _sizes(sh: DataFrame, id_col: str, doc: str, n: str) -> DataFrame:
+    """``(doc, n)``: shingle-set size per document of one shingle table."""
+    return (
+        sh.groupBy(id_col)
+        .agg(F.count(F.lit(1)).alias("n_sh"))
+        .select(F.col(id_col).alias(doc), F.col("n_sh").alias(n))
     )
-    nch = F.ceil(F.size("ids") / chunk).cast("int")
-    cp = (
-        lists.select(
-            "ids",
-            nch.alias("nch"),
-            F.explode(F.sequence(F.lit(0), nch * nch - 1)).alias("kk"),
+
+
+def _shingle_overlap(
+    left: DataFrame,
+    right: DataFrame,
+    id_col: str,
+    candidates: DataFrame | None = None,
+    min_ratio: float | None = None,
+) -> DataFrame:
+    """``(doc1, doc2, n1, n2, n_common)`` — the ONE shingle-overlap step
+    of the near-dup family: the shingle-set sizes of ``doc1`` (from
+    ``left``) and ``doc2`` (from ``right``) and the size of their
+    intersection. Both tables are ``(id_col, shingle)``, distinct per
+    pair (the :func:`word_shingles` contract); every Jaccard and
+    containment score, and ingest's batch-vs-corpus verify, is scoring
+    on top of this.
+
+    With ``candidates`` (a ``(doc1, doc2)`` table, e.g. LSH pairs): only
+    those pairs, each doc1 shingle joined back on ``(doc2, shingle)`` —
+    cost Σ|shingles(doc1)| over candidates, never a shingle cross
+    product. This is the 100 TB path (LSH prunes, the overlap verifies).
+    ``min_ratio`` (candidate pairs only) is the LENGTH-RATIO PREFILTER,
+    the classic size filter of the similarity-join literature: Jaccard ≤
+    min(n1,n2)/max(n1,n2), so a pair with min < min_ratio·max can never
+    reach Jaccard ``min_ratio`` and is dropped BEFORE the candidate ×
+    shingle expansion join (the measured 10× row amplification of the
+    verify stage). The 1e-9 slack makes float rounding err on the
+    over-keep side only, so any closing ``score >= min_ratio`` filter
+    returns identical rows.
+    n1/n2 ride the aggregation keys (functionally determined by the
+    pair), so no size re-join follows the aggregation.
+
+    With ``candidates=None``: every co-occurring pair of ``left`` with
+    itself (``right`` must be ``left``), doc1 < doc2, from each
+    shingle's sorted posting list through :func:`.common.sorted_id_pairs`
+    in ≤1024-member chunks — each unordered co-occurrence generated once
+    with bounded per-task fan-out: no join build, no hot-shingle
+    straggler (a df-10⁴ shingle expands across many tasks instead of
+    serializing 10⁸ pairs in one)."""
+    sa = _sizes(left, id_col, "doc1", "n1")
+    sb = _sizes(right, id_col, "doc2", "n2")
+    cols = ["doc1", "doc2", "n1", "n2", "n_common"]
+    if candidates is None:
+        lists = left.groupBy("shingle").agg(
+            F.sort_array(F.collect_list(id_col)).alias("ids")
         )
-        .select(
-            "ids",
-            F.expr("kk div nch").cast("int").alias("k1"),
-            F.pmod(F.col("kk"), F.col("nch")).cast("int").alias("k2"),
+        return (
+            sorted_id_pairs(lists, 1024)
+            .groupBy("doc1", "doc2")
+            .agg(F.count(F.lit(1)).alias("n_common"))
+            .join(sa, "doc1")
+            .join(sb, "doc2")
+            .select(*cols)
         )
-        .filter(F.col("k1") <= F.col("k2"))
-        .select(
-            F.slice("ids", F.col("k1") * chunk + 1, chunk).alias("sub1"),
-            F.slice("ids", F.col("k2") * chunk + 1, chunk).alias("sub2"),
-            (F.col("k1") == F.col("k2")).alias("same"),
+    c = candidates.select("doc1", "doc2").join(sa, "doc1").join(sb, "doc2")
+    if min_ratio is not None:
+        c = c.filter(
+            F.least("n1", "n2")
+            >= (F.lit(min_ratio) - F.lit(1e-9)) * F.greatest("n1", "n2")
         )
-        .repartition(par)
+    s1 = left.select(F.col(id_col).alias("doc1"), "shingle")
+    s2 = right.select(F.col(id_col).alias("doc2"), "shingle")
+    return (
+        c.join(s1, "doc1")
+        .join(s2, ["doc2", "shingle"])
+        .groupBy(*cols[:4])
+        .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    tri = (
-        cp.filter("same")
-        .select(F.posexplode("sub1").alias("i", "doc1"), "sub1")
-        .select(
-            "doc1",
-            F.explode(
-                F.slice("sub1", F.col("i") + 2, F.size("sub1"))
-            ).alias("doc2"),
-        )
+
+
+def _jaccard(overlap: DataFrame, threshold: float) -> DataFrame:
+    """``(doc1, doc2, jaccard)`` rows of :func:`_shingle_overlap` output
+    with |A∩B| / (|A|+|B|-|A∩B|), rounded to 6 places, ≥ threshold."""
+    j = F.col("n_common") / (F.col("n1") + F.col("n2") - F.col("n_common"))
+    return (
+        overlap.withColumn("jaccard", F.round(j, 6))
+        .filter(F.col("jaccard") >= threshold)
+        .select("doc1", "doc2", "jaccard")
     )
-    cross = (
-        cp.filter(~F.col("same"))
-        .select(F.explode("sub1").alias("doc1"), "sub2")
-        .select("doc1", F.explode("sub2").alias("doc2"))
-    )
-    return tri.unionByName(cross)
 
 
 def ngram_jaccard_pairs(
@@ -161,100 +211,28 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     candidates: DataFrame | None = None,
     shingles: DataFrame | None = None,
-    max_df: int | None = None,
 ) -> DataFrame:
     """n-gram Jaccard ≥ threshold — the VERIFICATION stage of a dedup
-    pipeline.
+    pipeline: :func:`_shingle_overlap` of the shingle table with itself,
+    scored.
 
-    With ``candidates=None``: all-pairs via shingle self-join — exact but
-    quadratic in the worst case, right only for small corpora or golden
-    checks. With ``candidates`` (a ``(doc1, doc2)`` DataFrame, e.g. from
-    :func:`minhash_lsh_pairs`): Jaccard is computed ONLY for those pairs —
-    cost is Σ|shingles(doc1)| over candidate pairs, joined back on
-    ``(doc2, shingle)``; never a shingle cross product. This is the 100 TB
-    path (LSH prunes, Jaccard verifies). ``shingles`` lets a composed
-    pipeline pass a shared (persisted/materialized) shingle table instead
-    of re-deriving it per stage. ``max_df`` applies
-    :func:`df_cut_shingles` first, making the score "Jaccard over rare
-    shingles" — sizes and intersections both count only surviving
-    shingles, so the metric stays a true Jaccard on the cut sets."""
+    With ``candidates=None``: all co-occurring pairs — exact, and
+    quadratic in a shingle's document frequency, so right only for small
+    corpora or golden checks. With ``candidates`` (a ``(doc1, doc2)``
+    DataFrame, e.g. from :func:`minhash_lsh_pairs`): Jaccard is computed
+    ONLY for those pairs, behind the length-ratio prefilter — the 100 TB
+    path. ``shingles`` lets a composed pipeline pass a shared
+    (persisted/materialized) shingle table instead of re-deriving it per
+    stage; passing ``df_cut_shingles(word_shingles(df, n), max_df)``
+    scores "Jaccard over rare shingles" (sizes and intersections both
+    count only surviving shingles, so it stays a true Jaccard on the cut
+    sets)."""
     sh = (
         shingles
         if shingles is not None
         else word_shingles(df, n, text_col, id_col)
     )
-    if max_df is not None:
-        sh = df_cut_shingles(sh, max_df)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    sa = sizes.select(F.col(id_col).alias("doc1"), F.col("n_sh").alias("n1"))
-    sb = sizes.select(F.col(id_col).alias("doc2"), F.col("n_sh").alias("n2"))
-    if candidates is not None:
-        # r7 LENGTH-RATIO PREFILTER (the classic size filter of the
-        # similarity-join literature): Jaccard ≤ min(n1,n2)/max(n1,n2),
-        # so J ≥ t requires min ≥ t·max — a candidate failing that can
-        # never verify and is dropped BEFORE the candidate × shingle
-        # expansion join (the measured 10× row amplification of the
-        # verify stage). The 1e-9 slack makes float rounding err on the
-        # over-keep side only; the closing jaccard filter is unchanged,
-        # so the output is provably identical.
-        c = (
-            candidates.select("doc1", "doc2")
-            .join(sa, "doc1")
-            .join(sb, "doc2")
-            .filter(
-                F.least("n1", "n2")
-                >= (F.lit(threshold) - F.lit(1e-9))
-                * F.greatest("n1", "n2")
-            )
-        )
-        s1 = sh.select(F.col(id_col).alias("doc1"), "shingle")
-        s2 = sh.select(F.col(id_col).alias("doc2"), "shingle")
-        # n1/n2 are functionally determined by (doc1, doc2) — carrying
-        # them through the aggregation keys skips the tail's two size
-        # re-joins entirely
-        common = (
-            c.join(s1, "doc1")
-            .join(s2, ["doc2", "shingle"])
-            .groupBy("doc1", "doc2", "n1", "n2")
-            .agg(F.count(F.lit(1)).alias("n_common"))
-        )
-        return (
-            common.withColumn(
-                "jaccard",
-                F.round(
-                    F.col("n_common")
-                    / (F.col("n1") + F.col("n2") - F.col("n_common")),
-                    6,
-                ),
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("doc1", "doc2", "jaccard")
-        )
-    else:
-        # r7 (guide §2.4/2.5): the all-pairs branch used a shingle
-        # self-join — two probe passes over the same table and a
-        # generated row per ORDERED pair that the a<b filter then
-        # halved. Chunked posting-list expansion generates each
-        # unordered co-occurrence exactly once with bounded per-task
-        # fan-out: half the rows into the pair aggregation, no join
-        # build, no hot-shingle straggler, identical counts.
-        common = (
-            _cooccurring_pairs(sh, id_col)
-            .groupBy("doc1", "doc2")
-            .agg(F.count(F.lit(1)).alias("n_common"))
-        )
-    return (
-        common.join(sa, "doc1")
-        .join(sb, "doc2")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common") / (F.col("n1") + F.col("n2") - F.col("n_common")), 6
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc1", "doc2", "jaccard")
-    )
+    return _jaccard(_shingle_overlap(sh, sh, id_col, candidates, threshold), threshold)
 
 
 def minhash_signatures(
@@ -298,8 +276,7 @@ def band_buckets(
     """(id, band, bucket) rows from a MinHash signature table — ONE pass
     over the signatures: bands come from array+explode, not a union of
     per-band selects (a union would re-execute the whole shingle→minhash
-    subtree once per band). Shared by the self-join candidate generator
-    and the batch-vs-corpus incremental-ingest join."""
+    subtree once per band). The input of :func:`_lsh_candidates`."""
     rows_per_band = n_hashes // bands
     band_structs = []
     for b in range(bands):
@@ -318,6 +295,35 @@ def band_buckets(
     ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
 
 
+def _lsh_candidates(
+    left: DataFrame,
+    right: DataFrame | None,
+    n_hashes: int,
+    bands: int,
+    id_col: str,
+) -> DataFrame:
+    """``(doc1, doc2)`` distinct pairs sharing at least one LSH band
+    bucket — the ONE band-bucket candidate join. ``left``/``right`` are
+    shingle tables; each becomes MinHash signatures and
+    :func:`band_buckets`. ``right=None`` is the self-join over ``left``
+    (doc1 < doc2); otherwise doc1 comes from ``left`` and doc2 from
+    ``right`` (batch vs corpus). The join key is a band hash — linear in
+    corpus size, never quadratic."""
+
+    def buckets(sh: DataFrame, doc: str) -> DataFrame:
+        sig = minhash_signatures(None, n_hashes, id_col=id_col, shingles=sh)
+        return band_buckets(sig, n_hashes, bands, id_col).withColumnRenamed(
+            id_col, doc
+        )
+
+    a = buckets(left, "doc1")
+    b = a.withColumnRenamed("doc1", "doc2") if right is None else buckets(right, "doc2")
+    pairs = a.join(b, ["band", "bucket"])
+    if right is None:
+        pairs = pairs.filter(F.col("doc1") < F.col("doc2"))
+    return pairs.select("doc1", "doc2").distinct()
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     n_hashes: int = N_MINHASH,
@@ -329,8 +335,8 @@ def minhash_lsh_pairs(
     max_df: int | None = None,
 ) -> DataFrame:
     """MinHash+LSH candidate pairs: signatures banded into ``bands`` groups;
-    docs sharing any band bucket become candidates. The join key is a band
-    hash — linear in corpus size, never quadratic.
+    docs sharing any band bucket become candidates
+    (:func:`_lsh_candidates`).
 
     ``max_df`` drops shingles with document frequency > max_df before
     signatures (:func:`df_cut_shingles`): without it a corpus-wide stop
@@ -344,21 +350,48 @@ def minhash_lsh_pairs(
     )
     if max_df is not None:
         sh = df_cut_shingles(sh, max_df)
-    sig = minhash_signatures(df, n_hashes, n, text_col, id_col, shingles=sh)
-    allb = band_buckets(sig, n_hashes, bands, id_col)
-    a, b_ = allb.alias("a"), allb.alias("b")
-    return (
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("doc1"), F.col(f"b.{id_col}").alias("doc2")
-        )
-        .distinct()
+    return _lsh_candidates(sh, None, n_hashes, bands, id_col)
+
+
+def _lsh_verified_pairs(
+    left: DataFrame,
+    right: DataFrame | None = None,
+    n: int = 3,
+    threshold: float = 0.6,
+    n_hashes: int = N_MINHASH,
+    bands: int = LSH_BANDS,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    persisted_out: list | None = None,
+) -> DataFrame:
+    """``(doc1, doc2, jaccard)``: the near-dup pair stage every composed
+    plan runs — shingles → LSH candidates (:func:`_lsh_candidates`) →
+    Jaccard ≥ threshold on the candidates only (:func:`_shingle_overlap`
+    with the length-ratio prefilter). ``right=None`` pairs documents of
+    ``left`` among themselves (doc1 < doc2, as
+    :func:`ngram_jaccard_pairs` over :func:`minhash_lsh_pairs`
+    candidates); otherwise doc1 is a ``left`` document and doc2 a
+    ``right`` one (batch vs corpus).
+
+    Each shingle table feeds its signature aggregate, its size dimension
+    and the verify join, so it is computed once and persisted — the
+    local-mode analog of the shingle table a 100 TB dedup keeps as its
+    own dataset. The persisted tables are appended to ``persisted_out``
+    when given; a repeated caller unpersists them once the returned plan
+    has been consumed (otherwise the cache blocks stay registered until
+    Spark's LRU evicts them)."""
+    sh_l = word_shingles(left, n, text_col, id_col).persist()
+    sh_r = (
+        sh_l
+        if right is None
+        else word_shingles(right, n, text_col, id_col).persist()
     )
+    if persisted_out is not None:
+        persisted_out.extend([sh_l] if right is None else [sh_l, sh_r])
+    cand = _lsh_candidates(
+        sh_l, None if right is None else sh_r, n_hashes, bands, id_col
+    )
+    return _jaccard(_shingle_overlap(sh_l, sh_r, id_col, cand, threshold), threshold)
 
 
 def simhash(
@@ -796,52 +829,41 @@ def containment_pairs(
     Output: ``(doc1, doc2, containment)`` where ``doc1`` is the
     CONTAINED document, both directions of every pair considered.
 
-    Same candidate discipline as :func:`ngram_jaccard_pairs`: pass
-    ``candidates`` (e.g. LSH pairs) at scale so the intersection join is
-    restricted; the all-pairs self-join fallback is for small corpora
-    and golden checks."""
+    Scoring on :func:`_shingle_overlap`, with the same candidate
+    discipline as :func:`ngram_jaccard_pairs`: pass ``candidates`` (e.g.
+    LSH pairs, mirrored here) at scale so the intersection join is
+    restricted; without them every co-occurring pair is counted once and
+    mirrored (the intersection is symmetric) — for small corpora and
+    golden checks."""
     sh = (
         shingles
         if shingles is not None
         else word_shingles(df, n, text_col, id_col)
     )
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     if candidates is not None:
         c = candidates.select("doc1", "doc2")
-        both = c.unionByName(
+        candidates = c.unionByName(
             c.select(F.col("doc2").alias("doc1"), F.col("doc1").alias("doc2"))
         ).distinct()
-        s1 = sh.select(F.col(id_col).alias("doc1"), "shingle")
-        s2 = sh.select(F.col(id_col).alias("doc2"), "shingle")
-        common = (
-            both.join(s1, "doc1")
-            .join(s2, ["doc2", "shingle"])
-            .groupBy("doc1", "doc2")
-            .agg(F.count(F.lit(1)).alias("n_common"))
-        )
-    else:
-        # r7: same chunked posting-list pair generation as the Jaccard
-        # all-pairs branch — count each unordered pair once, then mirror
-        # (the intersection is symmetric), instead of a self-join that
-        # aggregates both directions independently.
-        half = (
-            _cooccurring_pairs(sh, id_col)
-            .groupBy(
-                F.col("doc1").alias("d1"), F.col("doc2").alias("d2")
-            )
-            .agg(F.count(F.lit(1)).alias("n_common"))
-        )
-        common = half.select(
-            F.col("d1").alias("doc1"), F.col("d2").alias("doc2"), "n_common"
-        ).unionByName(
-            half.select(
-                F.col("d2").alias("doc1"), F.col("d1").alias("doc2"), "n_common"
-            )
-        )
-    sa = sizes.select(F.col(id_col).alias("doc1"), F.col("n_sh").alias("n1"))
+    ov = _shingle_overlap(sh, sh, id_col, candidates)
+    if candidates is None:
+        # both directions from each overlap row in one pass (a union of
+        # two selects would plan the whole overlap subtree twice)
+        ov = ov.select(
+            F.explode(
+                F.array(
+                    F.struct("doc1", "doc2", "n1", "n_common"),
+                    F.struct(
+                        F.col("doc2").alias("doc1"),
+                        F.col("doc1").alias("doc2"),
+                        F.col("n2").alias("n1"),
+                        "n_common",
+                    ),
+                )
+            ).alias("p")
+        ).select("p.*")
     return (
-        common.join(sa, "doc1")
-        .withColumn(
+        ov.withColumn(
             "containment", F.round(F.col("n_common") / F.col("n1"), 6)
         )
         .filter(F.col("containment") >= threshold)
@@ -861,10 +883,10 @@ def deduplicate_near(
     """End-to-end near-dup dedup — the query a training-data user actually
     runs. Three stages, each linear-ish at 100 TB:
 
-    1. CANDIDATES: :func:`minhash_lsh_pairs` — banded LSH join on band
-       hashes (constant-size signatures; never an all-pairs join).
-    2. VERIFY: :func:`ngram_jaccard_pairs` restricted to the candidates —
-       exact Jaccard only where LSH says "maybe".
+    1. CANDIDATES: banded MinHash-LSH join on band hashes
+       (constant-size signatures; never an all-pairs join).
+    2. VERIFY: exact Jaccard only where LSH says "maybe" — both stages
+       are :func:`_lsh_verified_pairs` over one persisted shingle table.
     3. KEEP: greedy keeper rule — drop every doc that is the larger id of
        a verified pair (``doc2``); keep the rest. Under a chain a~b~c this
        keeps only ``a`` — the standard greedy canonicalization. (Exact
@@ -872,22 +894,12 @@ def deduplicate_near(
        / connected components; greedy is one anti-join, deterministic, and
        what production dedup pipelines ship.)
 
-    Returns the deduped corpus with the original schema.
-
-    The shingle table feeds FOUR consumers here (minhash signatures, the
-    size dim, both sides of the verify join); it is computed once and
-    persisted — the local-mode analog of materializing the shingle/
-    signature table that a 100 TB dedup keeps as its own dataset rather
-    than re-deriving per stage. The cache block stays registered until
-    Spark's LRU evicts it (or the caller unpersists); at real scale the
-    materialization is an explicit intermediate TABLE with its own
-    lifecycle, not executor cache."""
-    sh = word_shingles(df, n, text_col, id_col).persist()
-    cand = minhash_lsh_pairs(
-        df, n_hashes, bands, n, text_col, id_col, shingles=sh
-    )
-    verified = ngram_jaccard_pairs(
-        df, n, threshold, text_col, id_col, candidates=cand, shingles=sh
+    Returns the deduped corpus with the original schema. The persisted
+    shingle table stays registered until Spark's LRU evicts it (or the
+    caller unpersists); at real scale the materialization is an explicit
+    intermediate TABLE with its own lifecycle, not executor cache."""
+    verified = _lsh_verified_pairs(
+        df, None, n, threshold, n_hashes, bands, text_col, id_col
     )
     dupes = verified.select(F.col("doc2").alias(id_col)).distinct()
     return df.join(dupes, id_col, "left_anti")

@@ -24,78 +24,51 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def deletion_variants(col: F.Column) -> F.Column:
-    """The key plus every single-character-deletion variant, distinct —
-    built row-locally (transform over a sequence; no explode yet)."""
-    dels = F.when(
-        F.length(col) >= 1,
-        F.transform(
-            # guard: Spark's sequence(1, 0) counts DOWN (step defaults to
-            # -1 when start > stop), so an empty key must short-circuit
-            F.sequence(F.lit(1), F.length(col)),
-            lambda i: F.concat(
-                F.substring(col, 1, i - 1),
-                col.substr(i + 1, F.length(col)),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(F.concat(F.array(col), dels))
-
-
 def fuzzy_semi_join(
     probe: DataFrame,
     ref: DataFrame,
     probe_key: str,
     ref_key: str,
     id_col: str,
-    max_dist: int = 1,
-    broadcast_ref: bool = True,
 ) -> DataFrame:
-    """For each probe row, the best reference key within ``max_dist``
-    edits (ties broken by smaller distance, then lexicographic key), or
-    no row if none. ``max_dist`` must be 1 — depth-1 deletion blocking
-    is complete exactly for distance ≤ 1 (deeper neighborhoods would be
-    needed beyond that, and the guarantee is the point). ``id_col`` must
-    identify probe rows uniquely (it keys the winner-per-probe window).
+    """For each probe id, the best reference key within ONE edit (ties
+    broken by smaller distance, then lexicographic reference key, then
+    lexicographic probe key), or no row if none. Distance 1 is the only
+    radius: depth-1 deletion blocking is complete exactly for distance
+    ≤ 1 (deeper neighborhoods would be needed beyond that, and the
+    guarantee is the point). Output: one row per probe id — a probe id
+    that repeats (several rows, same or different keys) still gets
+    exactly one row, its best match over all of its keys.
 
-    Plan shape: with ``broadcast_ref`` (the default — reference key sets
-    are dim-sized even when the probe side is the 100-TB fact) the
-    variant join is a BroadcastHashJoin, so the probe side is scanned
-    once with NO shuffle before the verify; the only Exchange in the
-    whole plan is the per-probe-id window at the end. Candidate pairs
-    that arise from several shared deletion variants are deliberately
-    NOT pre-deduplicated: a duplicate candidate costs one extra JVM
-    ``levenshtein`` on a short key, while deduplicating it costs a full
-    shuffle of the candidate set — the closing ``row_number() = 1``
-    window already collapses duplicates for free. Set
-    ``broadcast_ref=False`` only when the reference side is itself
-    fact-sized (both sides then shuffle on the variant key)."""
-    if max_dist != 1:
-        raise ValueError("deletion blocking at depth 1 covers max_dist=1 only")
+    Plan shape: reference key sets are dim-sized even when the probe
+    side is the 100-TB fact, so the reference side is always broadcast:
+    the exact-hit test and the variant join are BroadcastHashJoins, the
+    probe side is scanned once with NO shuffle before the verify, and
+    the only probe-side Exchange in the whole plan is the per-probe-id
+    winner window at the end. Candidate pairs that arise from several
+    shared deletion variants are deliberately NOT pre-deduplicated: a
+    duplicate candidate costs one extra JVM ``levenshtein`` on a short
+    key, while deduplicating it costs a full shuffle of the candidate
+    set — the closing ``row_number() = 1`` window already collapses
+    duplicates for free."""
     pv0 = probe.select(id_col, F.col(probe_key).alias("pkey"))
     rk = ref.select(F.col(ref_key).alias("rkey")).distinct()
 
-    # r7 EXACT-MATCH SHORT-CIRCUIT: a probe whose key exists verbatim in
-    # the reference set always wins its own window at dist 0 (dist-0
-    # candidates beat every dist-1 candidate, and only rkey == pkey can
-    # be dist 0 — unique after the rkey distinct), so those probes skip
-    # variant generation, candidate join, levenshtein AND the window
-    # entirely — one semi-join on the bare key decides them. Only the
-    # MISS minority (noisy keys — the realistic deployment shape) pays
-    # the fuzzy machinery. Output provably identical.
-    if broadcast_ref:
-        rk_probe = F.broadcast(rk)
-    else:
-        rk_probe = rk
-    exact_out = pv0.join(
-        rk_probe, pv0["pkey"] == rk["rkey"], "left_semi"
-    ).select(
-        id_col,
-        F.col("pkey").alias("probe_key"),
-        F.col("pkey").alias("matched_key"),
-        F.lit(0).cast("int").alias("dist"),
+    # r7 EXACT-MATCH SHORT-CIRCUIT: a probe key that exists verbatim in
+    # the reference set is its own dist-0 match (only rkey == pkey can be
+    # dist 0 — unique after the rkey distinct — and dist 0 beats every
+    # dist-1 candidate), so those rows skip variant generation, candidate
+    # join and levenshtein — one broadcast semi-join on the bare key
+    # decides them. Only the MISS minority (noisy keys — the realistic
+    # deployment shape) pays the fuzzy machinery. The exact rows still
+    # enter the closing winner window: it is what keeps the output at
+    # one row per probe id when an id repeats (with a hit and a miss, or
+    # the same hit twice).
+    rk_b = F.broadcast(rk)
+    exact = pv0.join(rk_b, pv0["pkey"] == rk["rkey"], "left_semi").select(
+        id_col, "pkey", F.col("pkey").alias("rkey"), F.lit(0).alias("dist")
     )
-    misses = pv0.join(rk_probe, pv0["pkey"] == rk["rkey"], "left_anti")
+    misses = pv0.join(rk_b, pv0["pkey"] == rk["rkey"], "left_anti")
 
     # NOTE (r7): the old pre-explode repartition(id) is gone — the Arrow
     # variant pass cannot advertise its partitioning to the planner, so
@@ -125,15 +98,15 @@ def fuzzy_semi_join(
     rv = _explode_variants(rk, "rkey").select(
         "rkey", F.xxhash64("v").alias("vh")
     )
-    if broadcast_ref:
-        rv = F.broadcast(rv)
-    cands = pv.join(rv, "vh").select(id_col, "pkey", "rkey")
-    verified = cands.withColumn(
-        "dist", F.levenshtein("pkey", "rkey")
-    ).filter(F.col("dist") <= max_dist)
-    w = Window.partitionBy(id_col).orderBy(F.col("dist").asc(), F.col("rkey").asc())
-    fuzzy_out = (
-        verified.withColumn("rn", F.row_number().over(w))
+    verified = (
+        pv.join(F.broadcast(rv), "vh")
+        .select(id_col, "pkey", "rkey", F.levenshtein("pkey", "rkey").alias("dist"))
+        .filter(F.col("dist") <= 1)
+    )
+    w = Window.partitionBy(id_col).orderBy("dist", "rkey", "pkey")
+    return (
+        exact.unionByName(verified)
+        .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select(
             id_col,
@@ -142,15 +115,14 @@ def fuzzy_semi_join(
             F.col("dist").cast("int").alias("dist"),
         )
     )
-    return exact_out.unionByName(fuzzy_out)
 
 
 def _explode_variants(df: DataFrame, key_col: str) -> DataFrame:
     """One row per (input row, depth-1 deletion variant incl. the key
-    itself, deduplicated within the key) — the vectorized twin of
-    ``explode(deletion_variants(key))``, emitting the identical (row, v)
-    multiset (NULL keys emit a single NULL variant, exactly like the
-    JVM path). All input columns pass through."""
+    itself, deduplicated within the key), in one Arrow pass. A NULL key
+    emits a single NULL variant (it hashes like any other but verifies
+    to a NULL distance, so it never matches). All input columns pass
+    through."""
     import pandas as _pd
     from collections.abc import Iterator as _It
 

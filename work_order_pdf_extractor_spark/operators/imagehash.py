@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .common import sorted_id_pairs
 from .multimodal import (
     RASTER_MAGIC,
     _bmp24_batch_lumas,
@@ -198,7 +199,8 @@ def ahash_near_pairs(hashes: DataFrame, max_hamming: int = 3) -> DataFrame:
     exactly once per qualifying class pair — identical pair set and
     hamming values, no distinct over O(pairs) rows, intermediate =
     output. Classes are split into ≤``chunk``-member sorted sub-arrays
-    before expansion and the chunk-pair table is round-robin
+    before expansion (within-class pairs through the shared
+    :func:`.common.sorted_id_pairs`) and the chunk-pair table is round-robin
     repartitioned, so one hot class (a popular hash) expands across many
     tasks instead of serializing the generate in one (guide §2.5). The
     class-table joins carry no broadcast hint: the class table grows with
@@ -280,50 +282,8 @@ def ahash_near_pairs(hashes: DataFrame, max_hamming: int = 3) -> DataFrame:
             "hamming",
         )
     )
-    # within-class chunk pairs generated ROW-LOCALLY from the class row
-    # (k = k1·nch + k2 index arithmetic — no chunk self-join; same trick
-    # as dedup._cooccurring_pairs)
-    nch = F.ceil(F.size("ids") / chunk).cast("int")
-    wpairs = (
-        cls.filter(F.size("ids") > 1)
-        .select(
-            "ids",
-            nch.alias("nch"),
-            F.explode(F.sequence(F.lit(0), nch * nch - 1)).alias("kk"),
-        )
-        .select(
-            "ids",
-            F.expr("kk div nch").cast("int").alias("k1"),
-            F.pmod(F.col("kk"), F.col("nch")).cast("int").alias("k2"),
-        )
-        .filter(F.col("k1") <= F.col("k2"))
-        .select(
-            F.col("k1"),
-            F.col("k2"),
-            F.slice("ids", F.col("k1") * chunk + 1, chunk).alias("sub1"),
-            F.slice("ids", F.col("k2") * chunk + 1, chunk).alias("sub2"),
-        )
-        .repartition(par)
-    )
-    within_same = (
-        wpairs.filter(F.col("k1") == F.col("k2"))
-        .select(F.posexplode("sub1").alias("i", "d1"), "sub1")
-        .select(
-            "d1",
-            F.explode(
-                F.slice("sub1", F.col("i") + 2, F.size("sub1"))
-            ).alias("d2"),
-        )
-    )
-    within_cross = (
-        wpairs.filter(F.col("k1") < F.col("k2"))
-        .select(F.explode("sub1").alias("d1"), "sub2")
-        .select("d1", F.explode("sub2").alias("d2"))
-    )
-    within = within_same.unionByName(within_cross).select(
-        F.col("d1").alias("doc1"),
-        F.col("d2").alias("doc2"),
-        F.lit(0).cast("int").alias("hamming"),
+    within = sorted_id_pairs(cls.select("ids"), chunk).select(
+        "doc1", "doc2", F.lit(0).cast("int").alias("hamming")
     )
     return cross.unionByName(within)
 

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .common import stable_hash64
+from .common import canon_text, stable_hash64
 
 M_BITS_DEFAULT = 1 << 17  # 131072 bits = 2048 bigint words (16 KiB)
 K_DEFAULT = 4
@@ -99,9 +99,8 @@ def bloom_dedup_incremental(
     exact check is computed for ALL batch rows here so the oracle can
     audit the FP behavior; production composition would filter to
     ``bloom_maybe`` first."""
-    canon = F.lower(F.trim(F.col(text_col)))
-    corp = corpus.select(canon.alias("canon"))
-    bat = batch.select(id_col, canon.alias("canon"))
+    corp = corpus.select(canon_text(text_col).alias("canon"))
+    bat = batch.select(id_col, canon_text(text_col).alias("canon"))
     bloom = bloom_build(corp, "canon", m_bits, k)
     maybe = bloom_probe(bat, bloom, "canon", id_col, m_bits, k)
     exact = (

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .common import ensure_parallelism, stable_hash64
+from .common import canon_text, ensure_parallelism, stable_hash64
 
 STOPWORDS = ("the", "a", "of", "and", "to")
 
@@ -137,7 +137,7 @@ def fingerprints(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Canonicalized content fingerprint (rolling-hash family)."""
-    canon = F.lower(F.trim(F.col(text_col)))
+    canon = canon_text(text_col)
     return df.select(
         id_col,
         F.substring(F.md5(canon), 1, 16).alias("fingerprint"),

@@ -1632,14 +1632,9 @@ def q_dedup_components(spark, sf_dir, persisted_out: list | None = None):
     from .operators import dedup
 
     docs = ld(spark, sf_dir, "documents")
-    sh = dedup.word_shingles(docs, 3).persist()
-    if persisted_out is not None:  # cache-lifecycle escape hatch
-        persisted_out.append(sh)
-    cand = dedup.minhash_lsh_pairs(
-        docs, N_MINHASH, LSH_BANDS, 3, shingles=sh
-    )
-    verified = dedup.ngram_jaccard_pairs(
-        docs, 3, 0.6, candidates=cand, shingles=sh
+    # persisted_out: the cache-lifecycle escape hatch for repeated callers
+    verified = dedup._lsh_verified_pairs(
+        docs, n_hashes=N_MINHASH, bands=LSH_BANDS, persisted_out=persisted_out
     )
     return dedup.connected_components(
         docs.select("doc_id"), verified.select("doc1", "doc2")
@@ -1983,12 +1978,9 @@ def q_cluster_sample(spark, sf_dir, persisted_out: list | None = None):
     from .operators import dedup
 
     docs = ld(spark, sf_dir, "documents")
-    sh = dedup.word_shingles(docs, 3).persist()
-    if persisted_out is not None:  # cache-lifecycle escape hatch
-        persisted_out.append(sh)
-    cand = dedup.minhash_lsh_pairs(docs, N_MINHASH, LSH_BANDS, 3, shingles=sh)
-    verified = dedup.ngram_jaccard_pairs(
-        docs, 3, 0.6, candidates=cand, shingles=sh
+    # persisted_out: the cache-lifecycle escape hatch for repeated callers
+    verified = dedup._lsh_verified_pairs(
+        docs, n_hashes=N_MINHASH, bands=LSH_BANDS, persisted_out=persisted_out
     )
     comp = dedup.connected_components(
         docs.select("doc_id"), verified.select("doc1", "doc2")
@@ -4319,6 +4311,7 @@ def q_ingest_merge(spark, sf_dir):
     ``incremental_ingest``, the inner plan's persisted shingle tables
     live for the session in this one-shot harness shape; repeated
     callers pass persisted_out and unpersist."""
+    from .operators.common import canon_text
     from .operators.membership import K_DEFAULT, M_BITS_DEFAULT, bloom_build
     from .plans import ingest
 
@@ -4353,7 +4346,7 @@ def q_ingest_merge(spark, sf_dir):
         F.sum(F.length("text")).cast("long").alias("sum_len"),
     )
     bloom = bloom_build(
-        merged.select(F.lower(F.trim(F.col("text"))).alias("canon")),
+        merged.select(canon_text("text").alias("canon")),
         "canon",
         M_BITS_DEFAULT,
         K_DEFAULT,

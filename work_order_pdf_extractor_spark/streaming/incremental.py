@@ -42,6 +42,39 @@ TRANSCRIPT_SCHEMA = T.StructType(
 )
 
 
+def _run_available_now(
+    spark: SparkSession,
+    schema,
+    input_dir: str,
+    checkpoint_dir: str,
+    max_files_per_batch: int | None,
+    sink,
+    plan=lambda stream: stream,
+):
+    """The one streaming harness: ``readStream`` of parquet arrivals in
+    ``input_dir`` with ``schema`` (at most ``max_files_per_batch`` files
+    per micro-batch when set) → ``plan`` → ``sink``, checkpointed in
+    ``checkpoint_dir``, run as ``trigger(availableNow=True)`` (process
+    the backlog, then stop) and awaited. ``sink`` is a foreachBatch
+    function ``(batch_df, batch_id)`` or a parquet output directory
+    (append mode). Returns the finished StreamingQuery."""
+    reader = spark.readStream.schema(schema).format("parquet")
+    if max_files_per_batch:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_batch)
+    w = plan(reader.load(input_dir)).writeStream
+    if callable(sink):
+        w = w.foreachBatch(sink)
+    else:
+        w = w.format("parquet").outputMode("append").option("path", sink)
+    q = (
+        w.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q
+
+
 def run_incremental(
     spark: SparkSession,
     input_dir: str,
@@ -66,14 +99,6 @@ def run_incremental(
     a replay rewrites identical data in place instead of appending
     duplicates.
     """
-    reader = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .format("parquet")
-    )
-    if max_files_per_batch:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_batch)
-    stream = reader.load(input_dir)
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         result = run_pipeline(
             batch_df, reference_orders, crop=crop, salt=False
@@ -85,14 +110,10 @@ def run_incremental(
             .parquet(out_dir)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _run_available_now(
+        spark, TRANSCRIPT_SCHEMA, input_dir, checkpoint_dir,
+        max_files_per_batch, process_batch,
     )
-    q.awaitTermination()
-    return q
 
 
 DOC_SCHEMA = "doc_id bigint, text string"
@@ -116,11 +137,6 @@ def run_stream_ingest(
     continuous deployment shape of the nightly ingest job."""
     from ..plans.ingest import incremental_ingest
 
-    reader = spark.readStream.schema(DOC_SCHEMA).format("parquet")
-    if max_files_per_batch:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_batch)
-    stream = reader.load(input_dir)
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         # collect the plan's persisted shingle tables and release them
         # after the batch write — a long-lived stream must not accumulate
@@ -140,11 +156,7 @@ def run_stream_ingest(
             for df in persisted:
                 df.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _run_available_now(
+        spark, DOC_SCHEMA, input_dir, checkpoint_dir,
+        max_files_per_batch, process_batch,
     )
-    q.awaitTermination()
-    return q

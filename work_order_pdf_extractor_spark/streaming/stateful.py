@@ -28,12 +28,12 @@ from __future__ import annotations
 from collections.abc import Iterable
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 import pyspark.sql.types as T
 
-from .incremental import TRANSCRIPT_SCHEMA
+from .incremental import TRANSCRIPT_SCHEMA, _run_available_now
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -77,27 +77,14 @@ def dedup_turns_stateful(
     exactly once across ALL micro-batches (keyed state survives batches
     and — via the checkpoint — restarts). availableNow semantics like
     :func:`..incremental.run_incremental`."""
-    reader = spark.readStream.schema(TRANSCRIPT_SCHEMA).format("parquet")
-    if max_files_per_batch:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_batch)
-    stream = reader.load(input_dir)
-
-    deduped: DataFrame = (
-        stream.groupBy("conv_id")
-        .applyInPandasWithState(
+    return _run_available_now(
+        spark, TRANSCRIPT_SCHEMA, input_dir, checkpoint_dir,
+        max_files_per_batch, out_dir,
+        lambda stream: stream.groupBy("conv_id").applyInPandasWithState(
             _dedup_group,
             outputStructType=OUTPUT_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        ),
     )
-    q = (
-        deduped.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .incremental import TRANSCRIPT_SCHEMA
+from .incremental import TRANSCRIPT_SCHEMA, _run_available_now
 
 
 def turns_per_window(
@@ -56,21 +56,11 @@ def run_windowed(
     Append mode: a window row is emitted only once its window is closed by
     the watermark (final batch flushes remaining state on availableNow
     termination only for windows the watermark passed)."""
-    reader = spark.readStream.schema(TRANSCRIPT_SCHEMA).format("parquet")
-    if max_files_per_batch:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_batch)
-    stream = reader.load(input_dir)
-    agg = turns_per_window(stream, window_size, late_threshold)
-    q = (
-        agg.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _run_available_now(
+        spark, TRANSCRIPT_SCHEMA, input_dir, checkpoint_dir,
+        max_files_per_batch, out_dir,
+        lambda stream: turns_per_window(stream, window_size, late_threshold),
     )
-    q.awaitTermination()
-    return q
 
 
 def dedup_within_watermark(
@@ -102,18 +92,8 @@ def run_stream_dedup(
 ):
     """availableNow run of the watermarked stream dedup over parquet
     arrivals (append sink; same harness shape as :func:`run_windowed`)."""
-    reader = spark.readStream.schema(TRANSCRIPT_SCHEMA).format("parquet")
-    if max_files_per_batch:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_batch)
-    stream = reader.load(input_dir)
-    out = dedup_within_watermark(stream, late_threshold=late_threshold)
-    q = (
-        out.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _run_available_now(
+        spark, TRANSCRIPT_SCHEMA, input_dir, checkpoint_dir,
+        max_files_per_batch, out_dir,
+        lambda stream: dedup_within_watermark(stream, late_threshold=late_threshold),
     )
-    q.awaitTermination()
-    return q
