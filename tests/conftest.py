@@ -10,13 +10,12 @@ from work_order_pdf_extractor_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    # the whole suite shares one driver JVM; its heap must fit the machine.
-    # get_spark's 16 g default on a 15 GB VM lets G1 grow the heap until the
-    # kernel OOM-kills the JVM mid-suite, failing every later test with
-    # "Connection refused" — so cap it at half the physical memory
-    phys_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 30
-    os.environ.setdefault("SPARK_DRIVER_MEM", f"{min(16, max(2, phys_gb // 2))}g")
     s = get_spark(app_name="tests", cores=8, shuffle_partitions=8)
+    # the whole suite shares one driver JVM; a heap larger than half the
+    # machine lets G1 grow until the kernel OOM-kills the JVM mid-suite,
+    # failing every later test with "Connection refused"
+    max_heap = s.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
+    assert max_heap <= os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2
     yield s
     s.stop()
 

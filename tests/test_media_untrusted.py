@@ -6,10 +6,8 @@ feature passes turn into status='decode_failed' rows."""
 from __future__ import annotations
 
 import random
-import signal
 import struct
 import tracemalloc
-from contextlib import contextmanager
 
 import numpy as np
 import pytest
@@ -18,33 +16,14 @@ from work_order_pdf_extractor_spark.core import jpegcodec as J
 from work_order_pdf_extractor_spark.operators import adam7 as A
 from work_order_pdf_extractor_spark.operators import multimodal as M
 
+from .deadline import deadline
+
 _CONTRACT = (ValueError, IndexError, KeyError, NotImplementedError)
-
-
-class _Deadline(Exception):
-    pass
-
-
-@contextmanager
-def _deadline(seconds: float):
-    """Raise ``_Deadline`` in the calling thread after ``seconds``: a
-    decoder that loops forever fails the test instead of hanging it."""
-
-    def fire(*_):
-        raise _Deadline(f"decode still running after {seconds}s")
-
-    old = signal.signal(signal.SIGALRM, fire)
-    signal.setitimer(signal.ITIMER_REAL, seconds)
-    try:
-        yield
-    finally:
-        signal.setitimer(signal.ITIMER_REAL, 0)
-        signal.signal(signal.SIGALRM, old)
 
 
 def test_ppm_header_ending_early_raises_promptly():
     for payload in (b"P6\n12", b"P6\n12 7", b"P6 3 2 255", b"P6", b"P6   "):
-        with _deadline(2.0), pytest.raises(ValueError):
+        with deadline(2.0), pytest.raises(ValueError):
             M.decode_image(payload)
 
 
@@ -159,7 +138,7 @@ def test_mutated_payloads_raise_only_contract_classes():
     for decode, seed in cases:
         for _ in range(400):
             payload = _mutate(rng, seed)
-            with _deadline(2.0):
+            with deadline(2.0):
                 try:
                     decode(payload)
                     outcomes["ok"] += 1

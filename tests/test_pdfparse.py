@@ -26,6 +26,41 @@ def test_roundtrip_escapes():
     assert page["tokens"][0][0] == s
 
 
+@pytest.mark.parametrize(
+    "literal, text",
+    [
+        (rb"(x\9)", "x9"),                  # not octal: backslash dropped
+        (rb"(a\qb)", "aqb"),                # unknown escape keeps the byte
+        (b"(a\\\r\nb)", "ab"),              # backslash + CRLF continues the line
+        (b"(a\\\rb)", "ab"),                # ... + CR
+        (b"(a\\\nb)", "ab"),                # ... + LF
+        (rb"(\400)", "\x00"),               # octal taken mod 256
+        (rb"(\101\0053\7)", "A\x053\x07"),  # 1-3 octal digits
+        (rb"(\n\t\(\)\\)", "\n\t()\\"),
+    ],
+)
+def test_string_escapes_follow_iso_32000(literal, text):
+    stream = b"BT /F1 10 Tf 1 0 0 1 100 700 Tm " + literal + b" Tj ET"
+    assert [t[0] for t in pdfparse.tokenize_content(stream)] == [text]
+
+
+@pytest.mark.parametrize(
+    "stream",
+    [
+        b"BT [(a) -10 (b) TJ ET",      # unterminated array
+        b"BT (a) ] TJ ET",             # unbalanced ]
+        b"BT [(a) /F1] TJ ET",         # name inside an array
+        b"BT [(a) Tj] TJ ET",          # operator inside an array
+        b"BT [[(a)]] TJ ET",           # nested array
+        b"BT (a) Tj \x00 ET",          # byte outside the grammar
+        b"BT (abc Tj ET",              # unterminated string
+    ],
+)
+def test_lexer_errors_raise_parse_error(stream):
+    with pytest.raises(pdfparse.PdfParseError):
+        pdfparse.tokenize_content(stream)
+
+
 def test_tj_array_concatenates_strings_and_tracks_kerning():
     page = _one_page([("textTJ", 50, 600, 10, ["Wo", -120, "rk", " Order"])])
     assert page["tokens"][0][0] == "Work Order"
@@ -34,13 +69,13 @@ def test_tj_array_concatenates_strings_and_tracks_kerning():
 
 def test_td_relative_moves():
     stream = b"BT /F1 10 Tf 1 0 0 1 100 700 Tm (a) Tj 0 -20 Td (b) Tj ET"
-    toks = pdfparse.tokenize_content(stream, 792)
+    toks = pdfparse.tokenize_content(stream)
     assert [(t[0], t[1], t[2]) for t in toks] == [("a", 100, 700), ("b", 100, 680)]
 
 
 def test_sequential_tj_advances_x():
     stream = b"BT /F1 10 Tf 1 0 0 1 100 700 Tm (ab) Tj (cd) Tj ET"
-    toks = pdfparse.tokenize_content(stream, 792)
+    toks = pdfparse.tokenize_content(stream)
     assert toks[0][:3] == ("ab", 100, 700)
     assert toks[1][1] == pytest.approx(100 + 0.5 * 10 * 2)
 

@@ -21,7 +21,6 @@ Routing mirrors the fixture payload families (FIXTURES.md §2):
 from __future__ import annotations
 
 import base64
-import binascii
 import datetime as _dt
 
 from . import fields as F
@@ -31,12 +30,31 @@ STATUS_OK = "ok"
 STATUS_FAILED = "extraction_failed"
 
 
-def _span_bbox(span: dict, lines: list[dict], line_ranges: list[tuple[int, int]]) -> dict:
-    """Attach the bbox of the line containing the span's start offset."""
-    for (s, e), ln in zip(line_ranges, lines):
-        if s <= span["start"] < e:
-            return {**span, "x0": ln["x0"], "y0": ln["y0"], "x1": ln["x1"], "y1": ln["y1"]}
-    return {**span, "x0": None, "y0": None, "x1": None, "y1": None}
+def parse_pdf_payload(text: str) -> list[dict] | None:
+    """Pages of a base64-encoded PDF payload (:func:`pdfparse.parse_pdf`),
+    or ``None`` when the payload does not decode or parse."""
+    try:
+        return pdfparse.parse_pdf(base64.b64decode(text.strip(), validate=True))
+    except ValueError:  # binascii.Error and PdfParseError are ValueErrors
+        return None
+
+
+def _with_bboxes(spans: list[dict], lines: list[dict]) -> list[dict]:
+    """Attach to each span the bbox of the line holding its start offset,
+    ``lines`` joined with '\\n' being the text the spans index; ``None``
+    where no line holds it (every span of a turn without lines)."""
+    out = []
+    for span in spans:
+        box = (None, None, None, None)
+        off = 0
+        for ln in lines:
+            end = off + len(ln["text"])
+            if off <= span["start"] < end:
+                box = (ln["x0"], ln["y0"], ln["x1"], ln["y1"])
+                break
+            off = end + 1  # '\n'
+        out.append({**span, "x0": box[0], "y0": box[1], "x1": box[2], "y1": box[3]})
+    return out
 
 
 def _parse_date(s: str | None) -> _dt.date | None:
@@ -57,12 +75,10 @@ def extract_turn(
     (the reference's null-result fallback, ``work_order_extractor.py:1677``)."""
     if text is None:
         return _result(None, [], {}, STATUS_FAILED)
-
+    lines: list[dict] = []
     if tool == "pdf_reader":
-        try:
-            data = base64.b64decode(text.strip(), validate=True)
-            pages = pdfparse.parse_pdf(data)
-        except (binascii.Error, ValueError, pdfparse.PdfParseError):
+        pages = parse_pdf_payload(text)
+        if pages is None:
             return _result(None, [], {}, STATUS_FAILED)
         page = pages[0]  # first-page-only, like the reference (:1125)
         toks = pdfparse.tokens_in_region(
@@ -70,35 +86,15 @@ def extract_turn(
         )
         lines = textnorm.assemble_lines(toks)
         extracted = textnorm.join_lines(lines)
-        flds, spans = F.extract_fields(extracted)
-        # char ranges of each line inside the joined text, for bbox lookup
-        ranges: list[tuple[int, int]] = []
-        off = 0
-        for ln in lines:
-            ranges.append((off, off + len(ln["text"])))
-            off += len(ln["text"]) + 1  # '\n'
-        spans = [_span_bbox(sp, lines, ranges) for sp in spans]
-        return _result(extracted, spans, flds, STATUS_OK)
-
-    if tool == "browser":
+    elif tool == "browser":
         extracted = htmlextract.extract_main_text(text)
-        flds, spans = F.extract_fields(extracted)
-        spans = [
-            {**sp, "x0": None, "y0": None, "x1": None, "y1": None} for sp in spans
-        ]
-        return _result(extracted, spans, flds, STATUS_OK)
-
-    # plain text
-    extracted = textnorm.normalize_plain_text(text)
-    json_fields = F.parse_json_fields(extracted)
-    if json_fields is not None:
-        flds, spans = json_fields, []
-    else:
-        flds, spans = F.extract_fields(extracted)
-        spans = [
-            {**sp, "x0": None, "y0": None, "x1": None, "y1": None} for sp in spans
-        ]
-    return _result(extracted, spans, flds, STATUS_OK)
+    else:  # plain text: fenced-JSON fields if present
+        extracted = textnorm.normalize_plain_text(text)
+        json_fields = F.parse_json_fields(extracted)
+        if json_fields is not None:
+            return _result(extracted, [], json_fields, STATUS_OK)
+    flds, spans = F.extract_fields(extracted)
+    return _result(extracted, _with_bboxes(spans, lines), flds, STATUS_OK)
 
 
 def _result(extracted, spans, flds, status) -> dict:

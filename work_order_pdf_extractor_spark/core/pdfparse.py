@@ -461,93 +461,77 @@ def _objects_via_xref_stream(data: bytes) -> dict[int, bytes] | None:
     return objs
 
 
-# master lexer: one compiled regex per token class, matched at position
-# (cProfile showed the original byte-at-a-time loop dominating parse time)
-_SKIP_RE = re.compile(rb"(?:[ \t\r\n]+|%[^\n]*)+")
-_NUM_RE = re.compile(rb"[+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?")
-_NAME_RE = re.compile(rb"/([^ \t\r\n()\[\]<>/%]*)")
-_OP_RE = re.compile(rb"[A-Za-z*'\"]+")
+# One-pass lexer: one compiled alternation matched at the current offset,
+# dispatched on the name of the group that matched. Each match first skips
+# whitespace and comments (atomic, so a long blank run before a bad byte
+# cannot backtrack), then takes one token; `end` matches trailing blanks.
+# Literal strings nest, so only their opening `(` is matched here and
+# `_lex_string` reads the body.
+_TOKEN_RE = re.compile(
+    rb"(?>(?:[ \t\r\n]+|%[^\n]*)*)(?:"
+    rb"(?P<num>[+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?)"
+    rb"|(?P<op>[A-Za-z*'\"]+)"
+    rb"|(?P<str>\()"
+    rb"|/(?P<name>[^ \t\r\n()\[\]<>/%]*)"
+    rb"|(?P<open>\[)"
+    rb"|(?P<close>\])"
+    rb"|(?P<end>\Z))"
+)
 
 
 def _lex_content(stream: bytes):
     """Yield tokens: ('num', float) | ('str', str) | ('name', str) |
-    ('arr', list) | ('op', str)."""
+    ('arr', list) | ('op', str). An array holds only strings and numbers;
+    anything else inside one, an unterminated array or a stray ``]``
+    raises :class:`PdfParseError`."""
+    match = _TOKEN_RE.match
+    arr: list | None = None  # the array being collected, if any
     i, n = 0, len(stream)
     while i < n:
-        m = _SKIP_RE.match(stream, i)
-        if m:
-            i = m.end()
-            if i >= n:
-                break
-        c = stream[i]
-        if c == 0x28:  # (
+        m = match(stream, i)
+        if m is None:
+            raise PdfParseError(f"unexpected byte in content stream at {i}")
+        kind = m.lastgroup
+        i = m.end()
+        if kind == "num":
+            tok = ("num", float(m.group(kind)))
+        elif kind == "str":
             s, i = _lex_string(stream, i)
-            yield ("str", s)
+            tok = ("str", s)
+        elif kind == "end":
+            break
+        elif kind == "close":
+            if arr is None:
+                raise PdfParseError("unbalanced ] in content stream")
+            tok, arr = ("arr", arr), None
+        elif arr is not None:
+            raise PdfParseError(f"unexpected {kind} token in TJ array")
+        elif kind == "open":
+            arr = []
             continue
-        if c == 0x5B:  # [
-            arr: list = []
-            i += 1
-            while True:
-                m = _SKIP_RE.match(stream, i)
-                if m:
-                    i = m.end()
-                if i >= n:
-                    raise PdfParseError("unterminated array in content stream")
-                c2 = stream[i]
-                if c2 == 0x5D:  # ]
-                    i += 1
-                    break
-                if c2 == 0x28:
-                    s, i = _lex_string(stream, i)
-                    arr.append(("str", s))
-                    continue
-                m = _NUM_RE.match(stream, i)
-                if m:
-                    arr.append(("num", float(m.group())))
-                    i = m.end()
-                    continue
-                raise PdfParseError(
-                    f"unexpected byte {stream[i:i + 1]!r} in TJ array"
-                )
-            yield ("arr", arr)
-            continue
-        if c == 0x5D:
-            raise PdfParseError("unbalanced ] in content stream")
-        m = _NAME_RE.match(stream, i)
-        if m:
-            yield ("name", m.group(1).decode("latin-1"))
-            i = m.end()
-            continue
-        m = _NUM_RE.match(stream, i)
-        if m:
-            yield ("num", float(m.group()))
-            i = m.end()
-            continue
-        m = _OP_RE.match(stream, i)
-        if m:
-            yield ("op", m.group().decode("latin-1"))
-            i = m.end()
-            continue
-        raise PdfParseError(
-            f"unexpected byte {stream[i:i + 1]!r} in content stream"
-        )
+        else:  # op or name
+            tok = (kind, m.group(kind).decode("latin-1"))
+        if arr is None:
+            yield tok
+        else:
+            arr.append(tok)
+    if arr is not None:
+        raise PdfParseError("unterminated array in content stream")
 
 
-_ESCAPES = {
-    b"n": "\n", b"r": "\r", b"t": "\t", b"b": "\b", b"f": "\f",
-    b"(": "(", b")": ")", b"\\": "\\",
-}
-
-
+# Literal-string escapes (ISO 32000-1 §7.3.4.2): an octal code of 1-3
+# digits taken mod 256; backslash + EOL (CR, LF or CRLF) continues the line
+# and yields nothing; before any other byte the backslash is dropped and the
+# byte kept, which covers `\\`, `\(` and `\)`.
+_ESCAPES = {b"n": "\n", b"r": "\r", b"t": "\t", b"b": "\b", b"f": "\f"}
+_ESCAPE_RE = re.compile(rb"\\(?:([0-7]{1,3})|\r\n?|\n|(.))", re.S)
 _PLAIN_RUN_RE = re.compile(rb"[^\\()]+")
 
 
 def _lex_string(stream: bytes, i: int) -> tuple[str, int]:
-    """Parse a PDF literal string starting at ``(``; supports nesting,
-    backslash escapes, and octal escapes. Plain character runs are consumed
-    with one regex match instead of byte-at-a-time."""
-    assert stream[i : i + 1] == b"("
-    i += 1
+    """Parse a PDF literal string whose body starts at ``i``, just past its
+    ``(``; supports nesting and the escapes above. Plain character runs are
+    consumed with one regex match instead of byte-at-a-time."""
     depth = 1
     out: list[str] = []
     n = len(stream)
@@ -558,25 +542,22 @@ def _lex_string(stream: bytes, i: int) -> tuple[str, int]:
             i = m.end()
             if i >= n:
                 break
-        c = stream[i : i + 1]
-        if c == b"\\":
-            nxt = stream[i + 1 : i + 2]
-            if nxt in _ESCAPES:
-                out.append(_ESCAPES[nxt])
-                i += 2
-            elif nxt.isdigit():
-                j = i + 1
-                while j < min(i + 4, n) and stream[j : j + 1].isdigit():
-                    j += 1
-                out.append(chr(int(stream[i + 1 : j], 8)))
-                i = j
-            else:
-                i += 2  # lone backslash: drop (PDF spec)
-        elif c == b"(":
+        c = stream[i]
+        if c == 0x5C:  # backslash
+            m = _ESCAPE_RE.match(stream, i)
+            if m is None:  # the stream ends after the backslash
+                break
+            octal, other = m.groups()
+            if octal:
+                out.append(chr(int(octal, 8) & 0xFF))
+            elif other:
+                out.append(_ESCAPES.get(other) or other.decode("latin-1"))
+            i = m.end()
+        elif c == 0x28:  # (
             depth += 1
             out.append("(")
             i += 1
-        elif c == b")":
+        else:  # )
             depth -= 1
             if depth == 0:
                 return "".join(out), i + 1
@@ -585,7 +566,7 @@ def _lex_string(stream: bytes, i: int) -> tuple[str, int]:
     raise PdfParseError("unterminated string in content stream")
 
 
-def tokenize_content(stream: bytes, page_h: float) -> list[tuple[str, float, float, float, float]]:
+def tokenize_content(stream: bytes) -> list[tuple[str, float, float, float, float]]:
     """Interpret a content stream's text operators into positioned tokens.
 
     Tracks ``Tf`` (font size), ``Tm`` (absolute line matrix, translation
@@ -602,68 +583,56 @@ def tokenize_content(stream: bytes, page_h: float) -> list[tuple[str, float, flo
     cx = 0.0        # current x within line
     in_text = False
 
-    def emit(s: str, x: float, y: float) -> float:
-        w = CHAR_WIDTH_FACTOR * size * len(s)
+    def show(parts: list) -> None:
+        """Emit one token for a Tj string or a TJ array; numbers in the
+        array are kerning, in thousandths of text space."""
+        nonlocal cx
+        x = lx + cx
+        buf: list[str] = []
+        for kind, v in parts:
+            if kind == "str":
+                buf.append(v)
+                cx += CHAR_WIDTH_FACTOR * size * len(v)
+            else:
+                cx -= v / 1000.0 * size
+        s = "".join(buf)
         if s:
-            tokens.append((s, x, y, x + w, y + size))
-        return w
+            tokens.append((s, x, ly, x + CHAR_WIDTH_FACTOR * size * len(s), ly + size))
 
     for tok in _lex_content(stream):
         kind = tok[0]
-        if kind in ("num", "str", "arr", "name"):
+        if kind != "op":
             stack.append(tok)
             continue
         op = tok[1]
         if op == "BT":
             in_text = True
             lx = ly = cx = 0.0
-            stack.clear()
         elif op == "ET":
             in_text = False
-            stack.clear()
         elif op == "Tf":
             if stack and stack[-1][0] == "num":
-                size = float(stack[-1][1])
-            stack.clear()
+                size = stack[-1][1]
         elif op == "Tm":
             if len(stack) >= 2 and stack[-1][0] == "num" and stack[-2][0] == "num":
-                lx, ly = float(stack[-2][1]), float(stack[-1][1])
+                lx, ly = stack[-2][1], stack[-1][1]
                 cx = 0.0
-            stack.clear()
         elif op in ("Td", "TD"):
             if len(stack) >= 2 and stack[-1][0] == "num" and stack[-2][0] == "num":
-                lx += float(stack[-2][1])
-                ly += float(stack[-1][1])
+                lx += stack[-2][1]
+                ly += stack[-1][1]
                 cx = 0.0
-            stack.clear()
         elif op == "T*":
             ly -= size * 1.2
             cx = 0.0
-            stack.clear()
         elif op == "Tj":
             if in_text and stack and stack[-1][0] == "str":
-                cx += emit(stack[-1][1], lx + cx, ly)
-            stack.clear()
+                show(stack[-1:])
         elif op == "TJ":
             if in_text and stack and stack[-1][0] == "arr":
-                parts = stack[-1][1]
-                buf: list[str] = []
-                start_x = lx + cx
-                for p in parts:
-                    if p[0] == "str":
-                        buf.append(p[1])
-                        cx += CHAR_WIDTH_FACTOR * size * len(p[1])
-                    else:  # kerning adjustment, thousandths of text space
-                        cx -= float(p[1]) / 1000.0 * size
-                s = "".join(buf)
-                if s:
-                    tokens.append(
-                        (s, start_x, ly, start_x + CHAR_WIDTH_FACTOR * size * len(s), ly + size)
-                    )
-            stack.clear()
-        else:
-            # Unknown operator: per PDF semantics, consume operands and move on.
-            stack.clear()
+                show(stack[-1][1])
+        # every operator, known or not, consumes its operands (PDF semantics)
+        stack.clear()
     return tokens
 
 
@@ -721,7 +690,7 @@ def parse_pdf(data: bytes) -> list[dict]:
         if cont is None:
             raise PdfParseError(f"missing contents object {cm.group(1)!r}")
         stream = _stream_bytes(cont)
-        pages.append({"width": w, "height": h, "tokens": tokenize_content(stream, h)})
+        pages.append({"width": w, "height": h, "tokens": tokenize_content(stream)})
     return pages
 
 

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..core.extractor import extract_turn
+from ..core.extractor import extract_turn, parse_pdf_payload
 from ..core.pdfparse import DEFAULT_CROP
 
 SPAN_TYPE = T.StructType(
@@ -129,29 +129,20 @@ def split_pdf_pages(df: DataFrame) -> DataFrame:
     (``work_order_extractor.py:1390-1445``) as array+``posexplode``:
     a pandas UDF returns the per-page array, then the built-in explode does
     the fan-out JVM-side (UDTF-shaped per SURVEY §2.9)."""
-    import base64
-
-    from ..core import pdfparse, textnorm
+    from ..core import textnorm
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             pages_col = []
             for text, tool in zip(pdf["text"], pdf["tool"]):
-                if tool != "pdf_reader":
-                    pages_col.append([])
-                    continue
-                try:
-                    pages = pdfparse.parse_pdf(base64.b64decode(text.strip(), validate=True))
-                except (ValueError, pdfparse.PdfParseError):
-                    pages_col.append([])
-                    continue
+                pages = parse_pdf_payload(text) if tool == "pdf_reader" else None
                 pages_col.append(
                     [
                         (
                             i + 1, p["width"], p["height"], len(p["tokens"]),
                             textnorm.join_lines(textnorm.assemble_lines(p["tokens"])),
                         )
-                        for i, p in enumerate(pages)
+                        for i, p in enumerate(pages or ())
                     ]
                 )
             yield pd.DataFrame(

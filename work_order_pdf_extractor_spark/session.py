@@ -14,6 +14,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """16 g, or half the physical memory on a smaller machine: a local-mode
+    heap larger than that lets the JVM grow until the kernel kills it. A
+    multiple of 64 MB, because the JVM rounds the heap up to whole regions
+    of at most 32 MB."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 21
+    return f"{min(16 << 10, half_mb & ~63)}m"
+
+
 def get_spark(
     app_name: str = "work_order_pdf_extractor_spark",
     cores: int | str | None = None,
@@ -45,7 +54,7 @@ def get_spark(
         # measured ~2x on the extraction pipeline vs the 2048 default
         # (10k rows × ~2 KB payload ≈ 20 MB in flight per worker)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
         # keep the Python worker pool stable: forks are expensive and
         # serialized in this sandbox (~0.7 s each), so never reap idle
         # workers between jobs
