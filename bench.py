@@ -1,25 +1,23 @@
 #!/usr/bin/env python
-"""Benchmark harness (M7).
+"""Benchmark harness.
 
-Default mode (what the driver runs per round): headline queries at
+Default mode (the per-round bench): the headline queries at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]``, plus the flagship transcript-extraction job on
-a cached deterministic fixture. Prints ONE JSON line::
+``local[$SPARK_GRAFT_CPUS]`` (default: every CPU this process may run on),
+plus the flagship transcript-extraction job on a cached deterministic
+fixture. Prints ONE JSON line::
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {...per-query sec...}, "sf": 0.1, ...}
 
-Scaling mode (``--scaling``, run manually / by CI): the SAME extraction job
-on the SAME input at local[2]/local[8]/local[32], each ``taskset``-pinned to
-exactly N CPUs, in fresh subprocesses over round-robin rounds; reports
-turns/sec, N→4N scaling efficiency for both pairs, the identically-pinned
-pure-multiprocessing hardware ceiling, the engine's attainment of that
-ceiling, and a cross-config result fingerprint (per-turn equality at every
-parallelism level) — the sandbox rendition of the north rule's
-"N → 4N executors ≥ 0.8" criterion. Rewrites BENCH/BASELINE.md.
-
-Internal helper modes ``--extract-once CORES`` / ``--mp-once CORES`` are
-what the scaling mode spawns.
+Scaling mode (``--scaling``): the flagship extraction job and the
+MinHash-LSH dedup job at N = 1 CPU and 4N = every CPU this process may run
+on. Each level is one ``taskset``-pinned child (the internal
+``--scaling-child CORES`` mode) that measures the plain-multiprocessing
+ceiling of both jobs and then runs them on ``local[CORES]``. Over three
+coherent rounds it reports throughput, N→4N scaling efficiency, the
+engine's attainment of the ceiling's own scaling, and a cross-level result
+fingerprint, prints one JSON line and rewrites BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
@@ -92,10 +90,16 @@ HD_VECS = 50_000
 HD_DIM = 256
 
 
-def _force(df) -> int:
+def _force(df) -> None:
     """Execute fully without driver-side materialization."""
     df.write.format("noop").mode("overwrite").save()
-    return 0
+
+
+def _secs(make_df) -> float:
+    """Seconds to build ``make_df()`` and execute it into the noop sink."""
+    t0 = time.perf_counter()
+    _force(make_df())
+    return time.perf_counter() - t0
 
 
 def _hw_probe() -> dict:
@@ -165,11 +169,11 @@ def _probe_matmul(_i: int) -> int:
     return 0
 
 
-def _ensure_bench_fixture(scale: str = "bench") -> str:
+def _ensure_bench_fixture() -> str:
     from work_order_pdf_extractor_spark import fixtures
 
     os.makedirs(BENCH_CACHE, exist_ok=True)
-    return fixtures.write_fixture_parquet(BENCH_CACHE, scale)["transcripts"]
+    return fixtures.write_fixture_parquet(BENCH_CACHE, "bench")["transcripts"]
 
 
 def _ensure_hd_embeddings(spark) -> str:
@@ -193,47 +197,51 @@ def _ensure_hd_embeddings(spark) -> str:
     return path
 
 
-def run_default() -> None:
-    from work_order_pdf_extractor_spark import fixtures
-    from work_order_pdf_extractor_spark.plans import pipeline
-    from work_order_pdf_extractor_spark.queries import REGISTRY
-    from work_order_pdf_extractor_spark.session import get_spark
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
-
-    tpath = _ensure_bench_fixture()
-    # tuned executor-thread sizing (see TUNED_THREADS): local[N] on N CPUs
-    # oversubscribes ~2x (JVM Arrow feeders + Python workers); leaving
-    # headroom measured ~96k vs ~70k turns/s at 32 CPUs
-    n_req = int(cores) if str(cores).isdigit() else 32
-    threads = TUNED_THREADS.get(n_req, n_req)
-    spark = get_spark(app_name="bench", cores=threads)
-
-    # untimed warm-up: JVM JIT + the Python worker pool (worker forks are
-    # serialized in this sandbox, ~0.7 s each — a one-time session cost a
-    # long-lived cluster would not re-pay per job)
-    n_cores = threads
-    spark.range(0, 1_000_000, 1, n_cores).selectExpr("sum(id)").collect()
-    spark.range(0, n_cores * 2, 1, n_cores * 2).mapInPandas(
-        lambda it: it, schema="id long"
-    ).write.format("noop").mode("overwrite").save()
-
-    times: dict[str, float] = {}
-
-    # FLAGSHIP FIRST (r2 lesson: measuring it after 14 multi-stage queries
-    # left it exposed to whatever executor/GC state they accumulated — the
-    # official number regressed 5.6x while the isolated number didn't).
-    # Amortizable inputs (skew census, prepared reference dim) are computed
-    # once OUTSIDE the timed region, exactly like the scaling protocol and
-    # like a real deployment (table stats + materialized dim); the timed
-    # region is the extraction job alone.
-    from work_order_pdf_extractor_spark.plans import skew
+def _timed(df, fp_cols: str) -> tuple[float, tuple[int, int]]:
+    """Seconds to execute ``df`` into the noop sink, and its
+    order-insensitive result fingerprint ``(bit_xor(xxhash64(fp_cols)),
+    rows)``. The fingerprint rides on observe(), so it costs no extra
+    pass; equal fingerprints at two parallelism levels mean equal rows."""
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    t = spark.read.parquet(tpath)
-    ref = spark.createDataFrame(fixtures.gen_reference_orders())
+    obs = Observation()
+    res = df.observe(
+        obs,
+        F.expr(f"bit_xor(xxhash64({fp_cols}))").alias("fp"),
+        F.count(F.lit(1)).alias("n"),
+    )
+    sec = _secs(lambda: res)
+    return sec, (int(obs.get["fp"]), int(obs.get["n"]))
+
+
+def _best_of(run, n: int) -> tuple[float, list]:
+    """One untimed warm-up run (JVM JIT, Python worker pool), then the best
+    of ``n`` timed runs: this VM's speed drifts ~2x within minutes. Returns
+    the best seconds and the fingerprint of every run, warm-up included."""
+    fps = [run()[1]]
+    best = float("inf")
+    for _ in range(n):
+        sec, fp = run()
+        best = min(best, sec)
+        fps.append(fp)
+    return best, fps
+
+
+def _flagship(spark, paths: list[str]):
+    """The flagship extraction job over the transcript parquet ``paths``.
+
+    The skew census and the prepared reference dim are amortizable inputs
+    (a deployment keeps them as table stats and a materialized dim), so
+    they are computed once here, outside every timed region. Returns
+    ``(n_turns, run)``; ``run()`` executes the whole pipeline once through
+    :func:`_timed`."""
+    from pyspark.sql import functions as F
+
+    from work_order_pdf_extractor_spark import fixtures
+    from work_order_pdf_extractor_spark.plans import pipeline, skew
+
+    t = spark.read.parquet(*paths)
     n_turns = t.count()
     whale_rows = (
         skew.conversation_lengths(t.select("conv_id"))
@@ -244,16 +252,50 @@ def run_default() -> None:
     whales = spark.createDataFrame(
         [(r["conv_id"],) for r in whale_rows] or [("__none__",)], "conv_id string"
     )
+    ref = spark.createDataFrame(fixtures.gen_reference_orders())
     ref_prep = spark.createDataFrame(
         [(r["ref_order"],) for r in pipeline.prepare_reference_orders(ref).collect()],
         "ref_order string",
     )
-    _force(pipeline.run_pipeline(t, ref_prep, whales=whales, ref_prepared=True))
-    ext_sec = float("inf")
-    for _ in range(3):  # best-of-3: the sandbox VM has noisy neighbors
-        t0 = time.perf_counter()
-        _force(pipeline.run_pipeline(t, ref_prep, whales=whales, ref_prepared=True))
-        ext_sec = min(ext_sec, time.perf_counter() - t0)
+
+    def run() -> tuple[float, tuple[int, int]]:
+        return _timed(
+            pipeline.run_pipeline(t, ref_prep, whales=whales, ref_prepared=True),
+            "conv_id, turn_idx, coalesce(extracted_text, '<N>'), matched, status",
+        )
+
+    return n_turns, run
+
+
+def run_default() -> None:
+    from work_order_pdf_extractor_spark.operators import similarity
+    from work_order_pdf_extractor_spark.queries import REGISTRY
+    from work_order_pdf_extractor_spark.session import get_spark
+
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cores = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
+    n_cores = int(cores) if cores.isdigit() else len(os.sched_getaffinity(0))
+    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
+
+    tpath = _ensure_bench_fixture()
+    spark = get_spark(app_name="bench", cores=n_cores)
+
+    # untimed warm-up: JVM JIT + the Python worker pool (worker forks are
+    # serialized in this sandbox, ~0.7 s each — a one-time session cost a
+    # long-lived cluster would not re-pay per job)
+    spark.range(0, 1_000_000, 1, n_cores).selectExpr("sum(id)").collect()
+    spark.range(0, n_cores * 2, 1, n_cores * 2).mapInPandas(
+        lambda it: it, schema="id long"
+    ).write.format("noop").mode("overwrite").save()
+
+    times: dict[str, float] = {}
+
+    # FLAGSHIP FIRST (r2 lesson: measuring it after 14 multi-stage queries
+    # left it exposed to whatever executor/GC state they accumulated — the
+    # official number regressed 5.6x while the isolated number didn't).
+    # The timed region is the extraction job alone (see _flagship).
+    n_turns, extract = _flagship(spark, [tpath])
+    ext_sec, _ = _best_of(extract, 3)
     times["extract_pipeline"] = round(ext_sec, 3)
 
     # best-of-2 per query: the sandbox VM's throughput drifts 2-3x across
@@ -264,12 +306,7 @@ def run_default() -> None:
     # the amortized train-once pattern — so best-of-2 times the search.)
     for name in HEADLINE:
         fn, _sql = REGISTRY[name]
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            _force(fn(spark, sf_dir))
-            best = min(best, time.perf_counter() - t0)
-        times[name] = round(best, 3)
+        times[name] = round(min(_secs(lambda: fn(spark, sf_dir)) for _ in range(2)), 3)
         # drop caches a query persisted for its own internal reuse so one
         # query's storage blocks don't pressure the next one's execution
         # memory (isolation between measurements)
@@ -278,15 +315,9 @@ def run_default() -> None:
     # high-dim ANN: the LSH bucket pass at a realistic embedding shape
     # (50k x 256-dim) — must stay a single narrow projection (no explode,
     # no shuffle); best-of-2 after a warm run
-    from work_order_pdf_extractor_spark.operators import similarity
-
     hd = spark.read.parquet(_ensure_hd_embeddings(spark))
     _force(similarity.hyperplane_lsh_buckets_fast(hd))
-    hd_sec = float("inf")
-    for _ in range(2):
-        t0 = time.perf_counter()
-        _force(similarity.hyperplane_lsh_buckets_fast(hd))
-        hd_sec = min(hd_sec, time.perf_counter() - t0)
+    hd_sec = min(_secs(lambda: similarity.hyperplane_lsh_buckets_fast(hd)) for _ in range(2))
     times[f"ann_lsh_{HD_VECS // 1000}k_{HD_DIM}d"] = round(hd_sec, 3)
 
     total = round(sum(times.values()), 3)
@@ -303,7 +334,7 @@ def run_default() -> None:
                 "ann_vecs_per_sec": round(HD_VECS / hd_sec, 1),
                 "cores": cores,
                 # machine-speed normalizer for round-over-round reads
-                # (this VM drifts 2-4x across minutes; see BENCH/BASELINE.md)
+                # (this VM drifts 2-4x across minutes)
                 "hw_probe": _hw_probe(),
             }
         )
@@ -311,396 +342,39 @@ def run_default() -> None:
     spark.stop()
 
 
-# Tuned executor-thread count per pinned CPU slice: running task threads +
-# Python workers at full CPU count oversubscribes the slice 2x (JVM Arrow
-# feeders compete with Python compute); leaving headroom for service threads
-# is the local-mode analog of standard executor-core sizing on clusters.
-# Measured on this VM: 32 CPUs → local[28] ≈ 96k turns/s vs local[32] ≈ 70k.
-TUNED_THREADS = {2: 2, 8: 7, 32: 28}
+# ---------------------------------------------------------------------------
+# --scaling: N = 1 CPU against 4N = every CPU this process may run on.
+# Inputs are sized so that the whole mode takes about 15 minutes on 4 CPUs.
+# ---------------------------------------------------------------------------
+
+SCALING_FILES = 16  # of the `bench` fixture's 32 transcript files
+DEDUP_REPLICAS = 8  # copies of the sf documents table in the dedup job
+SCALING_ROUNDS = 3
+JOBS = {"extract": "turns", "dedup": "docs"}  # job -> unit of its throughput
 
 
-def run_extract_once(cores: int, replicate: int = 4) -> None:
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    from work_order_pdf_extractor_spark import fixtures
-    from work_order_pdf_extractor_spark.plans import pipeline
-    from work_order_pdf_extractor_spark.session import get_spark
-
-    tpath = _ensure_bench_fixture()
-    threads = TUNED_THREADS.get(cores, max(2, cores - max(1, cores // 8)))
-    spark = get_spark(app_name=f"scaling-{cores}", cores=threads)
-    t = spark.read.parquet(tpath)
-    # replicate with distinct conv_ids so the scaling measurement has enough
-    # per-core work to expose true parallel efficiency (small jobs measure
-    # scheduler overhead, not scaling)
-    if replicate > 1:
-        parts = [
-            t.withColumn("conv_id", F.concat(F.col("conv_id"), F.lit(f"#r{i}")))
-            for i in range(replicate)
-        ]
-        t0 = parts[0]
-        for p in parts[1:]:
-            t0 = t0.unionByName(p)
-        t = t0
-    ref = spark.createDataFrame(fixtures.gen_reference_orders())
-    n_turns = t.count()
-
-    # amortizable metadata, computed once OUTSIDE the timed region (a real
-    # deployment keeps the skew census as table stats and the normalized
-    # reference dim materialized; re-deriving them per run would measure
-    # fixed driver-side jobs, not scaling):
-    from work_order_pdf_extractor_spark.plans import skew
-
-    whale_rows = (
-        skew.conversation_lengths(t.select("conv_id"))
-        .filter(F.col("n_turns") >= skew.DEFAULT_WHALE_THRESHOLD)
-        .select("conv_id")
-        .collect()
-    )
-    whales = spark.createDataFrame(
-        [(r["conv_id"],) for r in whale_rows] or [("__none__",)], "conv_id string"
-    )
-    ref_prep = spark.createDataFrame(
-        [(r["ref_order"],) for r in pipeline.prepare_reference_orders(ref).collect()],
-        "ref_order string",
-    )
-
-    def one_run() -> tuple[float, dict]:
-        """One full pipeline execution; the order-insensitive result
-        fingerprint rides on observe() (no extra pass): identical across
-        parallelism levels ⇔ per-turn equality holds (BASELINE.md)."""
-        obs = Observation()
-        res = pipeline.run_pipeline(
-            t, ref_prep, whales=whales, ref_prepared=True
-        ).observe(
-            obs,
-            F.expr(
-                "bit_xor(xxhash64(conv_id, turn_idx, "
-                "coalesce(extracted_text, '<N>'), matched, status))"
-            ).alias("fp"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        t0 = time.perf_counter()
-        _force(res)
-        return time.perf_counter() - t0, obs.get
-
-    one_run()  # warm-up: JIT + python worker pool out of the measurement
-    sec = float("inf")
-    metrics = None
-    for _ in range(2):  # best-of-2 against sandbox VM noise
-        s, m = one_run()
-        if s < sec:
-            sec, metrics = s, m
-
-    # ANN family at the same parallelism level: the high-dim LSH bucket
-    # pass (narrow, JVM-side) with its own order-insensitive fingerprint
-    from pyspark.sql import functions as F2
-
-    from work_order_pdf_extractor_spark.operators import similarity
-
-    # replicate 8x in-plan (distinct ids) so the high-core config has
-    # real work per task slot instead of fixed job overhead
-    hd0 = spark.read.parquet(_ensure_hd_embeddings(spark))
-    hd = hd0
-    for i in range(1, 8):
-        hd = hd.unionByName(
-            hd0.withColumn("vec_id", F2.col("vec_id") + F2.lit(i * HD_VECS))
-        )
-    ann_n = HD_VECS * 8
-
-    def ann_run() -> tuple[float, dict]:
-        obs = Observation()
-        res = similarity.hyperplane_lsh_buckets_fast(hd).observe(
-            obs,
-            F2.expr("bit_xor(xxhash64(vec_id, bucket))").alias("fp"),
-            F2.count(F2.lit(1)).alias("n"),
-        )
-        t0 = time.perf_counter()
-        _force(res)
-        return time.perf_counter() - t0, obs.get
-
-    ann_run()
-    ann_sec, ann_m = float("inf"), None
-    for _ in range(2):
-        s, m = ann_run()
-        if s < ann_sec:
-            ann_sec, ann_m = s, m
-
-    # dedup family at the same parallelism level: the full MinHash-LSH
-    # candidate pipeline (shingle -> signature -> band -> bucket join)
-    # over documents replicated 8x with distinct ids — the shuffle-heavy
-    # member of the trio (extraction = map+broadcast, ANN = pure narrow,
-    # dedup = multi-stage groupBy/join), so the three cover the engine's
-    # main plan shapes
-    from work_order_pdf_extractor_spark.operators import dedup as _dedup
-
-    d0 = spark.read.parquet(
-        os.path.join(
-            os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
-            "documents.parquet",
-        )
-    ).select("doc_id", "text")
-    dd = d0
-    n_base = d0.count()
-    for i in range(1, 8):
-        dd = dd.unionByName(
-            d0.withColumn("doc_id", F2.col("doc_id") + F2.lit(i * 10_000_000))
-        )
-    dedup_docs = n_base * 8
-
-    def dedup_run() -> tuple[float, dict]:
-        obs = Observation()
-        res = _dedup.minhash_lsh_pairs(dd, 8, 4).observe(
-            obs,
-            F2.expr("bit_xor(xxhash64(doc1, doc2))").alias("fp"),
-            F2.count(F2.lit(1)).alias("n"),
-        )
-        t0 = time.perf_counter()
-        _force(res)
-        return time.perf_counter() - t0, obs.get
-
-    dedup_run()
-    dd_sec, dd_m = float("inf"), None
-    for _ in range(2):
-        s, m = dedup_run()
-        if s < dd_sec:
-            dd_sec, dd_m = s, m
-
-    print(
-        json.dumps(
-            {
-                "cores": cores,
-                "n_turns": n_turns,
-                "sec": round(sec, 3),
-                "turns_per_sec": round(n_turns / sec, 1),
-                "result_fingerprint": int(metrics["fp"]),
-                "result_rows": int(metrics["n"]),
-                "ann_vecs_per_sec": round(ann_n / ann_sec, 1),
-                "ann_fingerprint": int(ann_m["fp"]),
-                "dedup_docs_per_sec": round(dedup_docs / dd_sec, 1),
-                "dedup_fingerprint": int(dd_m["fp"]),
-                "dedup_pairs": int(dd_m["n"]),
-            }
-        )
-    )
-    spark.stop()
-
-
-def run_extract_cluster_once(n_execs: int, cores_per_exec: int = 7) -> None:
-    """One extraction measurement on ``local-cluster[n_execs,
-    cores_per_exec, 6144]`` — SEPARATE executor JVM processes (each with
-    its own heap, shuffle threads, and Python worker pool), the closest
-    sandbox analog of an n-executor cluster. This is the r4 verdict's
-    multi-JVM ask: the thread-based local[8]→local[32] pair conflates
-    engine scaling with one JVM's shared memory bus; 1→4 executor JVMs
-    of a fixed per-executor width is the N→4N *executor* shape the north
-    rule actually names."""
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    from work_order_pdf_extractor_spark import fixtures
-    from work_order_pdf_extractor_spark.plans import pipeline, skew
-    from work_order_pdf_extractor_spark.session import get_spark
-
-    tpath = _ensure_bench_fixture()
-    total_cores = n_execs * cores_per_exec
-    spark = get_spark(
-        app_name=f"cluster-scaling-{n_execs}x{cores_per_exec}",
-        cores=total_cores,
-        master=f"local-cluster[{n_execs},{cores_per_exec},6144]",
-        extra_conf={
-            # executor JVMs spawn their own Python workers; they must
-            # find the package without the driver's sys.path mutations
-            "spark.executorEnv.PYTHONPATH": REPO,
-            "spark.executor.memory": "5g",
-        },
-    )
-    t = spark.read.parquet(tpath)
-    parts = [
-        t.withColumn("conv_id", F.concat(F.col("conv_id"), F.lit(f"#r{i}")))
-        for i in range(4)
-    ]
-    t0df = parts[0]
-    for p in parts[1:]:
-        t0df = t0df.unionByName(p)
-    t = t0df
-    ref = spark.createDataFrame(fixtures.gen_reference_orders())
-    n_turns = t.count()
-    whale_rows = (
-        skew.conversation_lengths(t.select("conv_id"))
-        .filter(F.col("n_turns") >= skew.DEFAULT_WHALE_THRESHOLD)
-        .select("conv_id")
-        .collect()
-    )
-    whales = spark.createDataFrame(
-        [(r["conv_id"],) for r in whale_rows] or [("__none__",)],
-        "conv_id string",
-    )
-    ref_prep = spark.createDataFrame(
-        [(r["ref_order"],) for r in pipeline.prepare_reference_orders(ref).collect()],
-        "ref_order string",
-    )
-
-    def one_run() -> tuple[float, dict]:
-        obs = Observation()
-        res = pipeline.run_pipeline(
-            t, ref_prep, whales=whales, ref_prepared=True
-        ).observe(
-            obs,
-            F.expr(
-                "bit_xor(xxhash64(conv_id, turn_idx, "
-                "coalesce(extracted_text, '<N>'), matched, status))"
-            ).alias("fp"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        t0 = time.perf_counter()
-        _force(res)
-        return time.perf_counter() - t0, obs.get
-
-    one_run()  # warm-up: executor JVM launch + Python pools
-    sec, metrics = float("inf"), None
-    for _ in range(2):
-        s, m = one_run()
-        if s < sec:
-            sec, metrics = s, m
-    print(
-        json.dumps(
-            {
-                "n_execs": n_execs,
-                "cores_per_exec": cores_per_exec,
-                "n_turns": n_turns,
-                "sec": round(sec, 3),
-                "turns_per_sec": round(n_turns / sec, 1),
-                "result_fingerprint": int(metrics["fp"]),
-                "result_rows": int(metrics["n"]),
-            }
-        )
-    )
-    spark.stop()
-
-
-def run_cluster_scaling() -> None:
-    """Multi-JVM N→4N scaling evidence (r4 verdict ask #2): the SAME
-    extraction job on ``local-cluster[1,7]`` pinned to 8 CPUs vs
-    ``local-cluster[4,7]`` pinned to 32 CPUs — 1 executor JVM vs 4
-    executor JVMs of identical width, so the ratio measures what adding
-    EXECUTORS does (scheduler, shuffle fabric, broadcast distribution)
-    rather than what one JVM's memory bus does. Same coherent-round
-    discipline and identically-pinned multiprocessing ceiling as
-    ``run_scaling``; results append to BENCH/BASELINE.md."""
-    _ensure_bench_fixture()
-    import shutil as _shutil
-
-    have_taskset = _shutil.which("taskset") is not None
-
-    def pinned(cmd: list[str], cores: int) -> list[str]:
-        return (
-            ["taskset", "-c", f"0-{cores - 1}"] if have_taskset else []
-        ) + cmd
-
-    all_rounds: list[dict] = []
-    fps: set[tuple] = set()
-    for _round in range(3):
-        results: dict[int, dict] = {}
-        hw: dict[int, float] = {}
-        for n_execs, cores in ((1, 8), (4, 32)):
-            out = subprocess.run(
-                pinned(
-                    [sys.executable, __file__, "--cluster-extract-once", str(n_execs)],
-                    cores,
-                ),
-                capture_output=True, text=True, check=True,
-            )
-            line = [
-                ln for ln in out.stdout.strip().splitlines() if ln.startswith("{")
-            ][-1]
-            results[n_execs] = json.loads(line)
-            out = subprocess.run(
-                pinned([sys.executable, __file__, "--mp-once", str(cores)], cores),
-                capture_output=True, text=True, check=True,
-            )
-            hw[n_execs] = float(out.stdout.strip().splitlines()[-1])
-        for n in (1, 4):
-            fps.add(
-                (results[n]["result_fingerprint"], results[n]["result_rows"])
-            )
-        tp = {n: results[n]["turns_per_sec"] for n in (1, 4)}
-        eff = round((tp[4] / tp[1]) / 4.0, 3)
-        hw_eff = round((hw[4] / hw[1]) / 4.0, 3)
-        attain = round(eff / hw_eff, 3) if hw_eff else None
-        all_rounds.append(
-            {
-                "tp": tp, "hw": hw, "eff": eff, "hw_eff": hw_eff,
-                "attain": attain, "n_turns": results[1]["n_turns"],
-                "score": max(eff / 0.8, (attain or 0) / 0.9),
-            }
-        )
-
-    best = max(all_rounds, key=lambda r: r["score"])
-    equality_ok = len(fps) == 1
-    ok = equality_ok and (best["eff"] >= 0.8 or (best["attain"] or 0) >= 0.9)
-    summary = {
-        "metric": "extraction scaling 1->4 executor JVMs (local-cluster[1,7] @8 CPUs -> local-cluster[4,7] @32 CPUs)",
-        "turns": best["n_turns"],
-        "turns_per_sec": best["tp"],
-        "hw_ceiling_turns_per_sec": best["hw"],
-        "scaling_efficiency": best["eff"],
-        "hw_ceiling_efficiency": best["hw_eff"],
-        "attainment_of_hw_ceiling": best["attain"],
-        "per_turn_equality_across_configs": equality_ok,
-        "rounds": [
-            {"eff": r["eff"], "hw_eff": r["hw_eff"], "attain": r["attain"]}
-            for r in all_rounds
-        ],
-        "target": "eff >= 0.8 or attainment >= 0.9, equality across executor counts",
-        "pass": ok,
-    }
-    print(json.dumps(summary))
-    section = (
-        "\n## Round-5: multi-JVM executor scaling (1 -> 4 executor JVMs)\n\n"
-        "The thread-based 8->32 pair above conflates engine scaling with one "
-        "JVM's shared memory bus (r4 verdict finding #3). This section holds "
-        "the per-executor width FIXED (7 cores, 5g heap — separate JVM "
-        "processes with their own Python worker pools via "
-        "`local-cluster[n,7,6144]`) and scales the EXECUTOR COUNT 1 -> 4, "
-        "pinned to 8 and 32 CPUs respectively — the N->4N *executor* shape "
-        "the north rule names. Ceiling = identically pinned plain "
-        "multiprocessing of the same extraction core.\n\n"
-        "| config | engine turns/sec | hw-ceiling turns/sec |\n|---|---|---|\n"
-        f"| 1 executor (8 CPUs) | {best['tp'][1]} | {best['hw'][1]} |\n"
-        f"| 4 executors (32 CPUs) | {best['tp'][4]} | {best['hw'][4]} |\n\n"
-        f"| pair | engine eff | hw-ceiling eff | attainment |\n|---|---|---|---|\n"
-        f"| 1→4 executors | {best['eff']} | {best['hw_eff']} | {best['attain']} |\n\n"
-        "All coherent rounds: "
-        + "; ".join(
-            f"round {i}: eff {r['eff']}, ceiling {r['hw_eff']}, attainment {r['attain']}"
-            for i, r in enumerate(all_rounds, 1)
-        )
-        + f"\n\n- per-turn result fingerprint identical across executor counts: {equality_ok}\n"
-        f"- Gate (eff ≥ 0.8 or attainment ≥ 0.9): **{'PASS' if ok else 'FAIL'}**\n"
-    )
-    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "a") as f:
-        f.write(section)
-
-
-def _mp_ceiling(n_procs: int) -> float:
-    """Hardware ceiling: the same extraction core run under plain
-    multiprocessing (no Spark) — what this box can physically deliver at
-    ``n_procs`` workers. Used to separate engine scaling from SMT/memory-
-    bandwidth saturation of the sandbox VM."""
+def _scaling_files() -> list[str]:
     import glob
-    import multiprocessing as mp
 
-    files = sorted(glob.glob(os.path.join(BENCH_CACHE, "transcripts_bench.parquet", "*.parquet")))
-    t0 = time.perf_counter()
-    with mp.Pool(n_procs) as p:
-        res = p.map(_mp_work, files)
-    wall = time.perf_counter() - t0
-    return round(sum(res) / wall, 1)
+    return sorted(glob.glob(os.path.join(_ensure_bench_fixture(), "*.parquet")))[:SCALING_FILES]
+
+
+def _dedup_replica(docs, r: int):
+    """Replica ``r`` of a ``(doc_id, text)`` table: ids shifted by
+    ``r * 1_000_000`` and every space-split word tagged ``~r``, so two
+    replicas share no shingle and the candidate pairs are the corpus's
+    own near-dup structure times the replica count."""
+    from pyspark.sql import functions as F
+
+    return docs.select(
+        (F.col("doc_id") + r * 1_000_000).alias("doc_id"),
+        F.replace("text", F.lit(" "), F.lit(f"~{r} ")).alias("text"),
+    )
 
 
 def _mp_work(path: str) -> int:
+    """Extraction ceiling unit: the engine's per-turn core,
+    ``extract_turn``, over one fixture file, no Spark."""
     import pandas as pd
 
     from work_order_pdf_extractor_spark.core.extractor import extract_turn
@@ -711,556 +385,181 @@ def _mp_work(path: str) -> int:
     return len(df)
 
 
-def run_scaling() -> None:
-    """N → 4N scaling evidence, CPU-pinned (taskset) so local[N] gets
-    exactly N CPUs like an N-core executor host. For each parallelism
-    level we also measure the PINNED pure-multiprocessing ceiling — the
-    most this VM can scale the same extraction core with zero framework —
-    and report the engine's attainment of that ceiling. Gate: efficiency
-    ≥ 0.8 for 2→8, or ≥ 90% attainment of the hardware's own scaling,
-    plus identical result fingerprints at every level."""
-    _ensure_bench_fixture()
-    import shutil as _shutil
-
-    have_taskset = _shutil.which("taskset") is not None
-
-    def pinned(cmd: list[str], cores: int) -> list[str]:
-        return (["taskset", "-c", f"0-{cores - 1}"] if have_taskset else []) + cmd
-
-    # Each ROUND is one coherent weather window: engine run and hw-ceiling
-    # run for a config execute back-to-back, all three configs in one
-    # sweep, and the N→4N ratios are computed WITHIN the round. Taking
-    # per-config bests across rounds (the old protocol) let the engine
-    # numerator come from a calm minute and the ceiling denominator from a
-    # contended one — the attainment ratio then measured VM weather drift,
-    # not the engine. Gate = the best coherent round; all rounds reported.
-    all_rounds: list[dict] = []
-    all_fps: set[tuple] = set()
-    for _round in range(3):
-        results: dict[int, dict] = {}
-        hw: dict[int, float] = {}
-        for cores in (2, 8, 32):
-            out = subprocess.run(
-                pinned([sys.executable, __file__, "--extract-once", str(cores)], cores),
-                capture_output=True, text=True, check=True,
-            )
-            line = [
-                ln for ln in out.stdout.strip().splitlines() if ln.startswith("{")
-            ][-1]
-            results[cores] = json.loads(line)
-            out = subprocess.run(
-                pinned([sys.executable, __file__, "--mp-once", str(cores)], cores),
-                capture_output=True, text=True, check=True,
-            )
-            hw[cores] = float(out.stdout.strip().splitlines()[-1])
-        for c in (2, 8, 32):
-            all_fps.add(
-                (
-                    results[c]["result_fingerprint"],
-                    results[c]["result_rows"],
-                    results[c]["ann_fingerprint"],
-                    results[c]["dedup_fingerprint"],
-                    results[c]["dedup_pairs"],
-                )
-            )
-        rtp = {c: results[c]["turns_per_sec"] for c in (2, 8, 32)}
-        reff = {
-            "2_to_8": round((rtp[8] / rtp[2]) / 4.0, 3),
-            "8_to_32": round((rtp[32] / rtp[8]) / 4.0, 3),
-        }
-        rhw_eff = {
-            "2_to_8": round((hw[8] / hw[2]) / 4.0, 3),
-            "8_to_32": round((hw[32] / hw[8]) / 4.0, 3),
-        }
-        rattain = {
-            k: round(reff[k] / rhw_eff[k], 3) if rhw_eff[k] else None
-            for k in reff
-        }
-        all_rounds.append(
-            {
-                "results": results,
-                "hw": hw,
-                "eff": reff,
-                "hw_eff": rhw_eff,
-                "attain": rattain,
-                # gate score: how far past EITHER arm of the 2→8 gate
-                "score": max(
-                    reff["2_to_8"] / 0.8, (rattain["2_to_8"] or 0) / 0.9
-                ),
-            }
-        )
-
-    best = max(all_rounds, key=lambda r: r["score"])
-    results, hw = best["results"], best["hw"]
-    eff, hw_eff, attain = best["eff"], best["hw_eff"], best["attain"]
-
-    tp = {c: results[c]["turns_per_sec"] for c in (2, 8, 32)}
-    # equality must hold across EVERY run of EVERY round, not just the
-    # reported one — any divergence anywhere fails the gate
-    equality_ok = len(all_fps) == 1
-    ann_tp = {c: results[c]["ann_vecs_per_sec"] for c in (2, 8, 32)}
-    ann_equality_ok = len({results[c]["ann_fingerprint"] for c in (2, 8, 32)}) == 1
-    ann_eff = {
-        "2_to_8": round((ann_tp[8] / ann_tp[2]) / 4.0, 3),
-        "8_to_32": round((ann_tp[32] / ann_tp[8]) / 4.0, 3),
-    }
-    dd_tp = {c: results[c]["dedup_docs_per_sec"] for c in (2, 8, 32)}
-    dd_equality_ok = (
-        len({results[c]["dedup_fingerprint"] for c in (2, 8, 32)}) == 1
-        and len({results[c]["dedup_pairs"] for c in (2, 8, 32)}) == 1
-    )
-    dd_eff = {
-        "2_to_8": round((dd_tp[8] / dd_tp[2]) / 4.0, 3),
-        "8_to_32": round((dd_tp[32] / dd_tp[8]) / 4.0, 3),
-    }
-    ok = equality_ok and (eff["2_to_8"] >= 0.8 or (attain["2_to_8"] or 0) >= 0.9)
-    summary = {
-        "metric": "extraction scaling N->4N, CPU-pinned (local[2]->[8], local[8]->[32])",
-        "turns": results[2]["n_turns"],
-        "turns_per_sec": tp,
-        "hw_ceiling_turns_per_sec": hw,
-        "scaling_efficiency": eff,
-        "hw_ceiling_efficiency": hw_eff,
-        "attainment_of_hw_ceiling": attain,
-        "per_turn_equality_across_configs": equality_ok,
-        "ann_vecs_per_sec": ann_tp,
-        "ann_scaling_efficiency": ann_eff,
-        "ann_equality_across_configs": ann_equality_ok,
-        "dedup_docs_per_sec": dd_tp,
-        "dedup_scaling_efficiency": dd_eff,
-        "dedup_equality_across_configs": dd_equality_ok,
-        "rounds": [
-            {"eff": r["eff"], "hw_eff": r["hw_eff"], "attain": r["attain"]}
-            for r in all_rounds
-        ],
-        "target": "eff >= 0.8 or attainment >= 0.9, equality at all levels",
-        "pass": ok,
-    }
-    print(json.dumps(summary))
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    # preserve hand-appended round addenda (weather attributions, the
-    # multi-JVM section) across protocol re-runs: everything from the
-    # first "## Round-" header onward survives the rewrite
-    baseline_path = os.path.join(REPO, "BENCH", "BASELINE.md")
-    preserved = ""
-    if os.path.exists(baseline_path):
-        with open(baseline_path) as f:
-            old = f.read()
-        idx = old.find("\n## Round-")
-        if idx != -1:
-            preserved = old[idx:]
-    with open(baseline_path, "w") as f:
-        f.write(
-            "# BENCH/BASELINE — scaling-efficiency evidence (north rule, sandbox protocol)\n\n"
-            "Same job (flagship extraction pipeline), same deterministic input "
-            f"({results[2]['n_turns']} turns, seed 42), run at three parallelism levels, "
-            "each `taskset`-pinned to exactly N CPUs (an unpinned local[N] borrows idle "
-            "cores for JVM scan/shuffle threads and inflates the small-N baseline). The "
-            "protocol runs 3 COHERENT rounds — within a round, the engine job and the "
-            "hardware-ceiling job for each config execute back-to-back in the same "
-            "weather window, and the N→4N ratios are computed within that round; the "
-            "reported numbers are the best round's (per-config bests across rounds would "
-            "let the engine numerator and ceiling denominator come from different "
-            "contention windows, making attainment measure VM drift, not the engine). "
-            "All rounds' ratios are listed below. 'hw ceiling' = the same extraction "
-            "core under plain multiprocessing, identically pinned — the most this VM "
-            "can physically scale ANY implementation of the job.\n\n"
-            "| config | engine turns/sec | hw-ceiling turns/sec |\n|---|---|---|\n"
-            + "".join(
-                f"| {c} CPUs | {tp[c]} | {hw[c]} |\n" for c in (2, 8, 32)
-            )
-            + "\n| N→4N pair | engine eff | hw-ceiling eff | attainment |\n|---|---|---|---|\n"
-            + "".join(
-                f"| {k.replace('_to_', '→')} | {eff[k]} | {hw_eff[k]} | {attain[k]} |\n"
-                for k in ("2_to_8", "8_to_32")
-            )
-            + "\nAll coherent rounds (2→8 pair): "
-            + "; ".join(
-                f"round {i}: eff {r['eff']['2_to_8']}, ceiling {r['hw_eff']['2_to_8']}, attainment {r['attain']['2_to_8']}"
-                for i, r in enumerate(all_rounds, 1)
-            )
-            + "\n"
-            + f"\n## ANN family ({HD_VECS * 8} vecs × {HD_DIM}-dim hyperplane-LSH bucketing — 8× in-plan replicate of the {HD_VECS // 1000}k fixture, same pinning)\n\n"
-            "| config | vecs/sec |\n|---|---|\n"
-            + "".join(f"| {c} CPUs | {ann_tp[c]} |\n" for c in (2, 8, 32))
-            + "\n| N→4N pair | ANN eff |\n|---|---|\n"
-            + "".join(
-                f"| {k.replace('_to_', '→')} | {ann_eff[k]} |\n"
-                for k in ("2_to_8", "8_to_32")
-            )
-            + f"\n- bucket fingerprint identical across configs: {ann_equality_ok}\n"
-            + "- Interpretation: the bucket pass is one Arrow-batched numpy matmul per "
-            "partition — pure memory-bandwidth work; it saturates this single VM's shared "
-            "memory bus by ~8 cores. On a cluster each executor brings its own bus and the "
-            "pass has zero cross-executor dependencies (no shuffle, no broadcast).\n"
-            + f"\n## Dedup family (MinHash-LSH candidate pipeline over {results[2]['dedup_pairs']}-pair output — 8× in-plan replicate of the documents table, same pinning)\n\n"
-            "| config | docs/sec |\n|---|---|\n"
-            + "".join(f"| {c} CPUs | {dd_tp[c]} |\n" for c in (2, 8, 32))
-            + "\n| N→4N pair | dedup eff |\n|---|---|\n"
-            + "".join(
-                f"| {k.replace('_to_', '→')} | {dd_eff[k]} |\n"
-                for k in ("2_to_8", "8_to_32")
-            )
-            + f"\n- candidate-pair fingerprint + count identical across configs: {dd_equality_ok}\n"
-            + "- Why this family: extraction is map+broadcast, ANN is pure narrow — "
-            "dedup (shingle explode → signature groupBy → band bucket join) is the "
-            "SHUFFLE-heavy plan shape, so the trio covers the engine's three main "
-            "execution patterns at both cluster sizes.\n"
-            + "- Interpretation: every shuffle partition on this single VM contends "
-            "for ONE memory bus, so the shuffle-bound member plateaus hardest at "
-            "high core counts (same physics as the ANN matmul saturation). On a "
-            "cluster, 4N executors add buses and network bisection; the plan's "
-            "shuffle volume is O(signatures + band keys), independent of document "
-            "text size.\n"
-            + f"\n- per-turn result fingerprint identical across all three configs: "
-            f"{equality_ok} (order-insensitive xxhash64 over (conv_id, turn_idx, "
-            "extracted_text, matched, status)) — per-turn equality holds at every "
-            "parallelism level.\n"
-            f"- Gate: engine eff ≥ 0.8 OR ≥ 90% attainment of the hardware's own "
-            f"scaling for the 2→8 pair → **{'PASS' if ok else 'FAIL'}**.\n"
-            "- The VM itself does not scale linearly (SMT + shared memory bandwidth); "
-            "attainment separates engine overhead from that hardware property. On a real "
-            "cluster, N→4N adds independent hosts with independent memory buses — the "
-            "regime the ≥0.8 rule assumes — and the engine's only cross-executor "
-            "dependency is one shuffle of small extracted rows plus a broadcast, both "
-            "O(rows), not O(payload bytes).\n"
-            "- Reading per-round BENCH_r{N}.json numbers: every default-bench run "
-            "embeds `hw_probe` — single-thread matmul GFLOPs, copy GB/s, FIRST-TOUCH "
-            "allocation GB/s, and `mp_gflops_8x` (the same matmul in 8 concurrent "
-            "processes). The sandbox's throughput drifts 2-4x across minutes, and the "
-            "failure mode is usually MULTI-CORE: back-to-back benches measured 100 s "
-            "vs 33 s with near-identical single-thread probes, while `alloc_gbs` "
-            "collapsed 100x (memory squeeze) — so read per-query seconds against "
-            "`mp_gflops_8x` and `alloc_gbs` first, raw seconds never.\n"
-            + preserved
-        )
-
-
-# ---------------------------------------------------------------------------
-# Dedup-family executor scaling (VERDICT r5 ask #4): the shuffle-heavy
-# pipeline (shingle explode → signature groupBy → band self-join) on the
-# same local-cluster 1→4 executor protocol as extraction. The r5 evidence
-# covered only the mapInPandas-dominated extraction job; this measures the
-# plan shape whose cluster behavior was previously argued, not measured.
-# ---------------------------------------------------------------------------
-
-DEDUP_REPLICAS = 64  # 320k docs: job long enough that fixed stage costs amortize
-_DEDUP_POOL = "aeioubcdfghjklmnpqrst"  # 21 chars
-
-
-def _dedup_vowel_map(r: int) -> str:
-    """Pairwise-distinct 5-char vowel substitution per replica. Positions
-    0 and 1 carry the base-21 digits of r (r < 441), so ANY two replicas
-    differ in at least one of the first two map characters — a guarantee
-    that holds for every DEDUP_REPLICAS <= 441, unlike the r6 first cut
-    (single rotation mod 21), which silently collapsed 64 replicas into
-    21 identical-map groups of byte-identical clones. Replicas of one
-    document therefore share (almost) no shingles and candidate
-    generation stays the corpus's own near-dup structure ×replicas, not
-    a replica cross-product."""
-    return "".join(
-        [
-            _DEDUP_POOL[r % 21],
-            _DEDUP_POOL[(r // 21 + 7) % 21],
-            _DEDUP_POOL[(r + 5) % 21],
-            _DEDUP_POOL[(2 * r + 11) % 21],
-            _DEDUP_POOL[(3 * r + 2) % 21],
-        ]
-    )
-
-
-def _dedup_corpus(spark, sf_dir: str):
-    from pyspark.sql import functions as F
-
-    d = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
-        "doc_id", "text"
-    )
-    parts = [
-        d.select(
-            (F.col("doc_id") + r * 1_000_000).alias("doc_id"),
-            F.translate("text", "aeiou", _dedup_vowel_map(r)).alias("text"),
-        )
-        for r in range(DEDUP_REPLICAS)
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def run_dedup_cluster_once(n_execs: int, cores_per_exec: int = 7) -> None:
-    from pyspark.sql import Observation, functions as F
-
-    from work_order_pdf_extractor_spark.operators import dedup
-    from work_order_pdf_extractor_spark.session import get_spark
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    total_cores = n_execs * cores_per_exec
-    # Executor sizing measured (r6, this VM): 4x5g JVMs ran this string-
-    # churn-heavy job 8-15x SLOWER than 1x5g (54 MB shuffle write clocked
-    # 17 core-s, 10 core-s GC; raw disk is 160 MB/s and RAM was free, so
-    # it is JVM GC ergonomics at large heaps, not I/O). 3g heaps +
-    # ActiveProcessorCount sized to the executor's own core slice (what a
-    # real cluster node's container would see) restore sane behavior:
-    # pairs job 50-100s -> 6.5s at 4 executors. Width stays identical at
-    # both executor counts, so the 1->4 ratio still isolates executor
-    # scaling.
-    spark = get_spark(
-        app_name=f"dedup-cluster-{n_execs}x{cores_per_exec}",
-        cores=total_cores,
-        master=f"local-cluster[{n_execs},{cores_per_exec},4096]",
-        extra_conf={
-            "spark.executorEnv.PYTHONPATH": REPO,
-            "spark.executor.memory": "3g",
-            "spark.executor.extraJavaOptions": (
-                f"-XX:ActiveProcessorCount={cores_per_exec}"
-            ),
-        },
-    )
-    corpus = _dedup_corpus(spark, sf_dir)
-    n_docs = corpus.count()
-
-    def one_run() -> tuple[float, dict]:
-        obs = Observation()
-        res = dedup.minhash_lsh_pairs(corpus).observe(
-            obs,
-            F.expr("bit_xor(xxhash64(doc1, doc2))").alias("fp"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        t0 = time.perf_counter()
-        _force(res)
-        return time.perf_counter() - t0, obs.get
-
-    one_run()  # warm-up: executor JVM launch + shuffle fabric
-    sec, metrics = float("inf"), None
-    for _ in range(2):
-        s, m = one_run()
-        if s < sec:
-            sec, metrics = s, m
-    print(
-        json.dumps(
-            {
-                "n_execs": n_execs,
-                "cores_per_exec": cores_per_exec,
-                "n_docs": n_docs,
-                "sec": round(sec, 3),
-                "docs_per_sec": round(n_docs / sec, 1),
-                "result_fingerprint": int(metrics["fp"]),
-                "result_rows": int(metrics["n"]),
-            }
-        )
-    )
-    spark.stop()
-
-
-def _mp_dedup_work(args: tuple) -> int:
-    """One (replica, doc-chunk) unit of the plain-multiprocessing dedup
-    ceiling: the IDENTICAL shingle → md5 → affine-MinHash → band-bucket
-    computation as operators/dedup.py, no Spark."""
+def _mp_dedup_work(args: tuple) -> list:
+    """Dedup ceiling unit: replica ``r`` of ``rows`` through the engine's
+    own definitions (``word_grams`` 3-shingles, md5 base hash, the affine
+    MinHash family, md5 band buckets), no Spark. Returns the
+    ``(band, bucket, doc_id)`` rows of ``band_buckets``."""
     import hashlib
 
-    from work_order_pdf_extractor_spark.operators.dedup import (
-        LSH_BANDS,
-        MH_A,
-        MH_B,
-        MH_P,
-        N_MINHASH,
-    )
+    from work_order_pdf_extractor_spark.operators import dedup
+    from work_order_pdf_extractor_spark.operators.common import word_grams
 
     r, rows = args
-    table = str.maketrans("aeiou", _dedup_vowel_map(r))
-    rpb = N_MINHASH // LSH_BANDS
+    rpb = dedup.N_MINHASH // dedup.LSH_BANDS
     out = []
     for doc_id, text in rows:
-        words = text.translate(table).split(" ")
-        if len(words) < 3:
+        shingles = set(word_grams(None if text is None else text.replace(" ", f"~{r} "), 3))
+        if not shingles:
             continue
-        shingles = {
-            " ".join(words[i : i + 3]) for i in range(len(words) - 2)
-        }
-        bases = [
-            int(hashlib.md5(s.encode()).hexdigest()[:8], 16) for s in shingles
-        ]
+        bases = [int(hashlib.md5(s.encode()).hexdigest()[:8], 16) for s in shingles]
         sig = [
-            min((MH_A(i) * h + MH_B(i)) % MH_P for h in bases)
-            for i in range(N_MINHASH)
+            min((dedup.MH_A(i) * h + dedup.MH_B(i)) % dedup.MH_P for h in bases)
+            for i in range(dedup.N_MINHASH)
         ]
-        did = doc_id + r * 1_000_000
-        for b in range(LSH_BANDS):
-            key = "_".join(
-                str(sig[b * rpb + k]) for k in range(rpb)
-            )
-            out.append(
-                (b, hashlib.md5(key.encode()).hexdigest(), did)
-            )
+        for b in range(dedup.LSH_BANDS):
+            key = "_".join(map(str, sig[b * rpb : (b + 1) * rpb]))
+            out.append((b, hashlib.md5(key.encode()).hexdigest(), doc_id + r * 1_000_000))
     return out
 
 
-def _mp_dedup_ceiling(n_procs: int) -> float:
-    """Hardware ceiling for the dedup family: the same replicated corpus
-    through a plain multiprocessing map (signatures + bucket keys) and an
-    in-memory bucket merge + pair expansion in the parent — the natural
-    no-framework single-node implementation of LSH dedup. docs/sec."""
+def _mp_ceilings(files: list[str], docs_path: str, n_procs: int) -> dict:
+    """Plain-multiprocessing throughput of both jobs at ``n_procs``
+    workers: what this box delivers for the same work with no framework.
+    The dedup ceiling merges buckets and expands pairs in the parent, the
+    natural single-node implementation of LSH dedup."""
     import multiprocessing as mp
     from itertools import combinations
 
     import pandas as pd
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    df = pd.read_parquet(
-        os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "text"]
-    )
-    rows = list(zip(df.doc_id.astype(int), df.text))
-    n_docs = len(rows) * DEDUP_REPLICAS
-    chunk = -(-len(rows) // 4)
-    units = [
-        (r, rows[i : i + chunk])
-        for r in range(DEDUP_REPLICAS)
-        for i in range(0, len(rows), chunk)
-    ]
-    t0 = time.perf_counter()
-    buckets: dict = {}
-    with mp.Pool(n_procs) as p:
+    with mp.Pool(n_procs) as p:  # fork the workers before pyarrow starts threads here
+        df = pd.read_parquet(docs_path, columns=["doc_id", "text"])
+        rows = list(zip(df.doc_id.astype(int), df.text))
+        chunk = -(-len(rows) // 4)
+        units = [(r, rows[i : i + chunk]) for r in range(DEDUP_REPLICAS) for i in range(0, len(rows), chunk)]
+        t0 = time.perf_counter()
+        n_turns = sum(p.map(_mp_work, files))
+        extract = n_turns / (time.perf_counter() - t0)
+        t0 = time.perf_counter()
+        buckets: dict = {}
         for part in p.imap_unordered(_mp_dedup_work, units):
             for b, h, did in part:
                 buckets.setdefault((b, h), []).append(did)
-    pairs = set()
-    for ids in buckets.values():
-        if len(ids) > 1:
-            ids.sort()
-            pairs.update(combinations(ids, 2))
-    wall = time.perf_counter() - t0
-    return round(n_docs / wall, 1)
+        pairs = set()
+        for ids in buckets.values():
+            pairs.update(combinations(sorted(ids), 2))
+        dedup = len(rows) * DEDUP_REPLICAS / (time.perf_counter() - t0)
+    return {"extract": round(extract, 1), "dedup": round(dedup, 1), "pairs": len(pairs)}
 
 
-def run_cluster_scaling_dedup() -> None:
-    """Multi-JVM 1→4 executor scaling for the shuffle-heavy dedup family,
-    same coherent-round / pinning / ceiling discipline as
-    ``run_cluster_scaling``; results append to BENCH/BASELINE.md."""
-    import shutil as _shutil
+def run_scaling_child(cores: int) -> None:
+    """One level of ``--scaling``, inside a process pinned to ``cores``
+    CPUs: the ceilings of both jobs at ``cores`` workers, then both jobs on
+    ``local[cores]`` (warm-up, best of 2). Prints one JSON line. The
+    ceilings go first so that their pool forks from a process without the
+    Spark gateway's threads."""
+    from functools import reduce
 
-    have_taskset = _shutil.which("taskset") is not None
+    from pyspark.sql import DataFrame
 
-    def pinned(cmd: list[str], cores: int) -> list[str]:
-        return (
-            ["taskset", "-c", f"0-{cores - 1}"] if have_taskset else []
-        ) + cmd
+    from work_order_pdf_extractor_spark.operators import dedup
+    from work_order_pdf_extractor_spark.session import get_spark
 
-    all_rounds: list[dict] = []
-    fps: set[tuple] = set()
-    for _round in range(3):
-        results: dict[int, dict] = {}
-        hw: dict[int, float] = {}
-        for n_execs, cores in ((1, 8), (4, 32)):
-            out = subprocess.run(
-                pinned(
-                    [sys.executable, __file__, "--cluster-dedup-once", str(n_execs)],
-                    cores,
-                ),
-                capture_output=True, text=True, check=True,
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    files, docs_path = _scaling_files(), os.path.join(sf_dir, "documents.parquet")
+    ceiling = _mp_ceilings(files, docs_path, cores)
+    spark = get_spark(app_name=f"scaling-{cores}", cores=cores)
+    n_turns, extract = _flagship(spark, files)
+    d = spark.read.parquet(docs_path)
+    docs = reduce(DataFrame.unionByName, [_dedup_replica(d, r) for r in range(DEDUP_REPLICAS)])
+    n_docs = docs.count()
+    ext_s, ext_fps = _best_of(extract, 2)
+    dd_s, dd_fps = _best_of(lambda: _timed(dedup.minhash_lsh_pairs(docs), "doc1, doc2"), 2)
+    spark.stop()
+    if ceiling.pop("pairs") != dd_fps[0][1]:
+        raise RuntimeError("the dedup ceiling found other pairs than the engine")
+    out = {"turns": n_turns, "docs": n_docs, "pairs": dd_fps[0][1], "ceiling": ceiling}
+    out["engine"] = {"extract": round(n_turns / ext_s, 1), "dedup": round(n_docs / dd_s, 1)}
+    out["fps"] = {"extract": ext_fps, "dedup": dd_fps}
+    print(json.dumps(out))
+
+
+def run_scaling() -> None:
+    """N → 4N scaling evidence. Each level runs in a fresh child pinned by
+    ``taskset`` to exactly that many CPUs, so ``local[N]`` cannot borrow
+    idle cores. A round runs both levels back-to-back and every ratio is
+    taken within one round: per-level bests across rounds would let the
+    engine and its ceiling come from different weather windows. Per job,
+    the gate is the best round's efficiency ≥ 0.8 or attainment ≥ 0.9,
+    and the fingerprint of every run of every round must agree."""
+    cpus = sorted(os.sched_getaffinity(0))
+    lo, hi = 1, len(cpus)
+    _scaling_files()  # write the fixture once, before the children race for it
+    t0 = time.perf_counter()
+    rounds = []
+    for _ in range(SCALING_ROUNDS):
+        res = {}
+        for c in (lo, hi):
+            cmd = ["taskset", "-c", ",".join(map(str, cpus[:c])), sys.executable, __file__, "--scaling-child", str(c)]
+            out = subprocess.run(cmd, capture_output=True, text=True, check=True).stdout
+            res[c] = json.loads([ln for ln in out.splitlines() if ln.startswith("{")][-1])
+        rounds.append(res)
+    s = {"levels": [lo, hi], "wall_min": round((time.perf_counter() - t0) / 60, 1)}
+    s["sizes"] = {k: rounds[0][lo][k] for k in ("turns", "docs", "pairs")}
+    for job in JOBS:
+        per_round = []
+        for res in rounds:
+            eng = {c: res[c]["engine"][job] for c in (lo, hi)}
+            ceil = {c: res[c]["ceiling"][job] for c in (lo, hi)}
+            eff = round(eng[hi] / eng[lo] / (hi / lo), 3)
+            ceil_eff = round(ceil[hi] / ceil[lo] / (hi / lo), 3)
+            per_round.append(
+                {"engine": eng, "ceiling": ceil, "eff": eff, "ceiling_eff": ceil_eff, "attain": round(eff / ceil_eff, 3)}
             )
-            line = [
-                ln for ln in out.stdout.strip().splitlines() if ln.startswith("{")
-            ][-1]
-            results[n_execs] = json.loads(line)
-            out = subprocess.run(
-                pinned(
-                    [sys.executable, __file__, "--mp-dedup-once", str(cores)],
-                    cores,
-                ),
-                capture_output=True, text=True, check=True,
-            )
-            hw[n_execs] = float(out.stdout.strip().splitlines()[-1])
-        for n in (1, 4):
-            fps.add(
-                (results[n]["result_fingerprint"], results[n]["result_rows"])
-            )
-        tp = {n: results[n]["docs_per_sec"] for n in (1, 4)}
-        eff = round((tp[4] / tp[1]) / 4.0, 3)
-        hw_eff = round((hw[4] / hw[1]) / 4.0, 3)
-        attain = round(eff / hw_eff, 3) if hw_eff else None
-        all_rounds.append(
-            {
-                "tp": tp, "hw": hw, "eff": eff, "hw_eff": hw_eff,
-                "attain": attain, "n_docs": results[1]["n_docs"],
-                "n_pairs": results[1]["result_rows"],
-                "score": max(eff / 0.8, (attain or 0) / 0.9),
-            }
-        )
+        best = max(per_round, key=lambda r: max(r["eff"] / 0.8, r["attain"] / 0.9))
+        equal = len({tuple(fp) for res in rounds for c in (lo, hi) for fp in res[c]["fps"][job]}) == 1
+        s[job] = dict(best, fingerprint_equal=equal, rounds=per_round)
+        s[job]["pass"] = equal and (best["eff"] >= 0.8 or best["attain"] >= 0.9)
+    s["pass"] = all(s[job]["pass"] for job in JOBS)
+    print(json.dumps(s))
+    _write_baseline(s)
 
-    best = max(all_rounds, key=lambda r: r["score"])
-    equality_ok = len(fps) == 1
-    ok = equality_ok and (best["eff"] >= 0.8 or (best["attain"] or 0) >= 0.9)
-    summary = {
-        "metric": "dedup scaling 1->4 executor JVMs (local-cluster[1,7] @8 CPUs -> local-cluster[4,7] @32 CPUs)",
-        "docs": best["n_docs"],
-        "pairs": best["n_pairs"],
-        "docs_per_sec": best["tp"],
-        "hw_ceiling_docs_per_sec": best["hw"],
-        "scaling_efficiency": best["eff"],
-        "hw_ceiling_efficiency": best["hw_eff"],
-        "attainment_of_hw_ceiling": best["attain"],
-        "pair_equality_across_configs": equality_ok,
-        "rounds": [
-            {"eff": r["eff"], "hw_eff": r["hw_eff"], "attain": r["attain"]}
-            for r in all_rounds
-        ],
-        "target": "eff >= 0.8 or attainment >= 0.9, equality across executor counts",
-        "pass": ok,
-    }
-    print(json.dumps(summary))
-    section = (
-        "\n## Round-6: dedup-family executor scaling (1 -> 4 executor JVMs)\n\n"
-        "The r5 multi-JVM evidence covered only the extraction job (mapInPandas-"
-        "dominated, one small shuffle). This section runs the SHUFFLE-HEAVY dedup "
-        "pipeline — shingle explode -> md5/affine MinHash signature groupBy -> "
-        "banded bucket self-join -> distinct pairs — on the same protocol: "
-        "`local-cluster[n,7,4096]` (3g executor heaps + ActiveProcessorCount — "
-        "see the attempt-1 heap-sizing diagnosis) holds executor width fixed, "
-        "executor count scales 1 -> 4 pinned to 8/32 CPUs, ceiling = the "
-        "identical signature/bucket computation under plain multiprocessing "
-        f"with an in-memory bucket merge. Corpus: sf0.1 documents x{DEDUP_REPLICAS} replicas, each replica "
-        "vowel-translated so replicas share no shingles (the candidate structure "
-        "is the corpus's own near-dup groups x16, never a replica cross-product).\n\n"
-        "| config | engine docs/sec | hw-ceiling docs/sec |\n|---|---|---|\n"
-        f"| 1 executor (8 CPUs) | {best['tp'][1]} | {best['hw'][1]} |\n"
-        f"| 4 executors (32 CPUs) | {best['tp'][4]} | {best['hw'][4]} |\n\n"
-        f"| pair | engine eff | hw-ceiling eff | attainment |\n|---|---|---|---|\n"
-        f"| 1→4 executors | {best['eff']} | {best['hw_eff']} | {best['attain']} |\n\n"
-        "All coherent rounds: "
-        + "; ".join(
-            f"round {i}: eff {r['eff']}, ceiling {r['hw_eff']}, attainment {r['attain']}"
-            for i, r in enumerate(all_rounds, 1)
-        )
-        + f"\n\n- pair-set fingerprint identical across executor counts: {equality_ok}\n"
-        f"- docs {best['n_docs']}, candidate pairs {best['n_pairs']}\n"
-        f"- Gate (eff ≥ 0.8 or attainment ≥ 0.9): **{'PASS' if ok else 'FAIL'}**\n"
+
+def _write_baseline(s: dict) -> None:
+    lo, hi = s["levels"]
+    sz = s["sizes"]
+    rows = "\n".join(
+        f"| {job} ({unit}/s) | {j['engine'][lo]} | {j['engine'][hi]} | {j['ceiling'][lo]} "
+        f"| {j['ceiling'][hi]} | {j['eff']} | {j['ceiling_eff']} | {j['attain']} | "
+        + "; ".join(f"{r['eff']} / {r['ceiling_eff']} / {r['attain']}" for r in j["rounds"])
+        + f" | {j['fingerprint_equal']} | {'PASS' if j['pass'] else 'FAIL'} |"
+        for job, unit in JOBS.items()
+        for j in [s[job]]
     )
-    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "a") as f:
-        f.write(section)
+    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
+        f.write(f"""# BENCH/BASELINE — N → 4N scaling evidence
+
+Written by `python bench.py --scaling` in {s['wall_min']} min. N = {lo} CPU and 4N = {hi} CPUs
+(the whole affinity mask); each level runs in a fresh `taskset`-pinned child on `local[N]`,
+and each job is warmed once and timed best of 2. The ceiling is the same work under plain
+`multiprocessing` at the same pinning, run first in the same child. Attainment = engine
+efficiency / ceiling efficiency: the share of the box's own scaling that the engine keeps
+across the JVM↔Python boundary and the scheduler.
+
+Inputs: extraction = `run_pipeline` over {SCALING_FILES} of the 32 files of the `bench`
+transcript fixture (seed 42, {sz['turns']} turns); dedup = `minhash_lsh_pairs` over
+{DEDUP_REPLICAS} word-tagged replicas of the sf documents table ({sz['docs']} docs,
+{sz['pairs']} candidate pairs, the same count as the ceiling's).
+
+| job | engine {lo} CPU | engine {hi} CPUs | ceiling {lo} CPU | ceiling {hi} CPUs | engine eff | ceiling eff | attainment | all {SCALING_ROUNDS} rounds (eff / ceiling eff / attainment) | fingerprint equal | gate |
+|---|---|---|---|---|---|---|---|---|---|---|
+{rows}
+
+The table shows each job's best coherent round: both levels ran back-to-back in it. Gate, per
+job: efficiency ≥ 0.8 or attainment ≥ 0.9 in the best round, and one result fingerprint
+(bit_xor of xxhash64 over every output row, and the row count) on every run of every round at
+both levels. **Overall: {'PASS' if s['pass'] else 'FAIL'}.**
+
+The 2/8/32-CPU, `local-cluster` and ANN-family numbers this file held before came from a
+32-CPU host and from modes that are gone; they are in the git history of this file.
+""")
 
 
 if __name__ == "__main__":
     if "--scaling" in sys.argv:
         run_scaling()
-    elif "--mp-once" in sys.argv:
-        _ensure_bench_fixture()
-        print(_mp_ceiling(int(sys.argv[sys.argv.index("--mp-once") + 1])))
-    elif "--extract-once" in sys.argv:
-        run_extract_once(int(sys.argv[sys.argv.index("--extract-once") + 1]))
-    elif "--cluster-scaling" in sys.argv:
-        run_cluster_scaling()
-    elif "--cluster-extract-once" in sys.argv:
-        run_extract_cluster_once(
-            int(sys.argv[sys.argv.index("--cluster-extract-once") + 1])
-        )
-    elif "--cluster-scaling-dedup" in sys.argv:
-        run_cluster_scaling_dedup()
-    elif "--cluster-dedup-once" in sys.argv:
-        run_dedup_cluster_once(
-            int(sys.argv[sys.argv.index("--cluster-dedup-once") + 1])
-        )
-    elif "--mp-dedup-once" in sys.argv:
-        print(_mp_dedup_ceiling(int(sys.argv[sys.argv.index("--mp-dedup-once") + 1])))
+    elif "--scaling-child" in sys.argv:
+        run_scaling_child(int(sys.argv[sys.argv.index("--scaling-child") + 1]))
     else:
         run_default()

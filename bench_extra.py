@@ -43,7 +43,7 @@ def main() -> None:
         repeats = int(args[i + 1])
         del args[i : i + 2]
 
-    from bench import HEADLINE, TUNED_THREADS, _hw_probe
+    from bench import HEADLINE, _hw_probe
     from work_order_pdf_extractor_spark.queries import REGISTRY
     from work_order_pdf_extractor_spark.session import get_spark
 
@@ -51,8 +51,7 @@ def main() -> None:
         args = list(HEADLINE)
 
     cores = os.environ.get("SPARK_GRAFT_CPUS", "")
-    n_req = int(cores) if cores.isdigit() else len(os.sched_getaffinity(0))
-    threads = TUNED_THREADS.get(n_req, n_req)
+    threads = int(cores) if cores.isdigit() else len(os.sched_getaffinity(0))
     spark = get_spark(app_name="bench_extra", cores=threads)
     spark.range(0, 1_000_000, 1, threads).selectExpr("sum(id)").collect()
     spark.range(0, threads * 2, 1, threads * 2).mapInPandas(

@@ -110,3 +110,11 @@ def test_script_body_is_raw_text():
     assert H.segment_blocks("<p>kept</p><style>p{} <p>dropped</p>") == [
         {"text": "kept", "n_words": 1, "link_density": 0.0, "text_density": 1.0}
     ]
+
+
+def test_quoted_attribute_may_hold_gt():
+    """A ``>`` inside a quoted attribute value does not end the tag, so
+    the attribute never becomes page or link text."""
+    for q in ('"', "'"):
+        page = f"<p>see <a title={q}a>b{q} href={q}/x{q}>the manual</a> now</p>"
+        assert [b["text"] for b in H.segment_blocks(page)] == ["see the manual now"]

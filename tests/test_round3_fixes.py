@@ -6,6 +6,7 @@ from __future__ import annotations
 import datetime
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from work_order_pdf_extractor_spark.operators import dedup, temporal, textstats
@@ -91,9 +92,7 @@ def test_connected_components_long_chain_logarithmic_rounds(spark):
         [(i, i + 1) for i in range(n - 1)], "doc1 long, doc2 long"
     )
     stats = {}
-    comp = dedup.connected_components(
-        nodes, edges, max_iter=30, stats=stats
-    ).toPandas()
+    comp = dedup.connected_components(nodes, edges, stats=stats).toPandas()
     assert dict(zip(comp.doc_id, comp.component_id)) == {i: 0 for i in range(n)}
     assert stats["rounds"] <= 12, stats  # ~log2(200) + slack, << diameter
 
@@ -103,3 +102,13 @@ def test_connected_components_no_edges(spark):
     edges = spark.createDataFrame([], "doc1 long, doc2 long")
     comp = dedup.connected_components(nodes, edges).toPandas()
     assert dict(zip(comp.doc_id, comp.component_id)) == {i: i for i in range(4)}
+
+
+def test_connected_components_raises_when_rounds_run_out(spark, monkeypatch):
+    """Labels short of the star fixpoint may point at non-root nodes, so
+    running out of rounds raises instead of returning them."""
+    monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 1)
+    nodes = spark.createDataFrame([(i,) for i in range(8)], "doc_id long")
+    edges = spark.createDataFrame([(i, i + 1) for i in range(7)], "doc1 long, doc2 long")
+    with pytest.raises(RuntimeError, match="fixpoint"):
+        dedup.connected_components(nodes, edges)

@@ -40,14 +40,16 @@ MIN_CONTENT_WORDS = 8
 # skipped whole. <script>/<style> are raw-text elements: the first
 # alternative takes the start tag, the body and the matching end tag (or the
 # rest of the page when it never closes) as one match, so nothing inside
-# them is read as markup. The final empty match at the end of the page makes
+# them is read as markup. A tag ends at the first `>` outside a quoted
+# attribute value. The final empty match at the end of the page makes
 # the text after the last tag go through the same loop body as text between
 # tags.
 _MARKUP_RE = re.compile(
     r"<!--.*?-->|<!(?:[^>]*)>"
     r"|<(?i:(?P<raw>script|style))(?=[\s/>])[^>]*>"
     r".*?(?:</(?i:(?P=raw))(?=[\s/>])[^>]*>|\Z)"
-    r"|<(?P<end>/?)(?P<tag>[a-zA-Z][a-zA-Z0-9]*)(?:\s[^>]*?)?/?>"
+    r"|<(?P<end>/?)(?P<tag>[a-zA-Z][a-zA-Z0-9]*)"
+    r"(?:\s(?:[^>\"']|\"[^\"]*\"|'[^']*')*?)?/?>"
     r"|\Z",
     re.DOTALL,
 )

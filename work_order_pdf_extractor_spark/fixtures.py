@@ -48,9 +48,8 @@ SCALES = {
     "bench": (12000, [(6, 2500)]),
 }
 
-# Share of PDF payloads emitted in the PDF 1.5 xref-stream form. 0.4 is
-# the production mix; the fixture-mix attribution protocol
-# (tools/attr_extract.py) assigns this attribute to compare forms.
+# Share of PDF payloads emitted in the PDF 1.5 xref-stream form (the rest
+# use the classic 1.4 xref table); 0.4 is the production mix.
 XREF_STREAM_SHARE = 0.4
 
 

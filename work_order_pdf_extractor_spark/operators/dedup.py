@@ -597,12 +597,17 @@ def embedding_near_pairs(
     )
 
 
+# connected_components raises after CC_MAX_ROUNDS star rounds without a
+# fixpoint (one needs O(log N) rounds); CC_CHECK_EVERY rounds run as one
+# lazy plan between convergence probes
+CC_MAX_ROUNDS = 30
+CC_CHECK_EVERY = 3
+
+
 def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
     id_col: str = "doc_id",
-    max_iter: int = 30,
-    check_every: int = 3,
     stats: dict | None = None,
 ) -> DataFrame:
     """Connected components of the near-dup graph by the LARGE-STAR /
@@ -626,12 +631,12 @@ def connected_components(
     downward-normalized edges, connect every ≤-neighbor and u itself to
     m. Each phase is one map-side-combinable min aggregation plus one
     hash join on node ids — O(|E|), never materializing neighborhoods
-    driver-side. Driver round-trips are BATCHED: ``check_every`` rounds
+    driver-side. Driver round-trips are BATCHED: ``CC_CHECK_EVERY`` rounds
     run as one lazy plan between eager ``localCheckpoint`` + convergence
     probes (count + order-free xxhash sum of the edge set; stable hash ⇒
     the star fixpoint — rounds are idempotent there — so the loop exits).
     ``stats['rounds']`` / ``stats['converged']`` report rounds actually
-    executed and whether the fixpoint was reached; exhausting ``max_iter``
+    executed and whether the fixpoint was reached; exhausting ``CC_MAX_ROUNDS``
     before the fixpoint RAISES (labels at that point may still point at
     non-root nodes — silently returning them would hand the caller wrong
     components).
@@ -665,8 +670,8 @@ def connected_components(
     rounds = 0
     prev_probe = None
     converged = False
-    while rounds < max_iter and not converged:
-        for _ in range(min(check_every, max_iter - rounds)):
+    while rounds < CC_MAX_ROUNDS and not converged:
+        for _ in range(min(CC_CHECK_EVERY, CC_MAX_ROUNDS - rounds)):
             # large-star: m over the FULL neighborhood (both directions)
             nb = e.unionByName(
                 e.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -711,8 +716,8 @@ def connected_components(
     if not converged:
         raise RuntimeError(
             f"connected_components did not reach the star fixpoint in "
-            f"max_iter={max_iter} rounds; labels would be unreliable "
-            f"(raise max_iter — rounds needed is O(log N))"
+            f"{CC_MAX_ROUNDS} rounds; labels would be unreliable "
+            f"(rounds needed is O(log N))"
         )
     # at the star fixpoint every non-root points straight at its root
     parents = e.groupBy("u").agg(F.min("v").alias("component_id"))
