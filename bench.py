@@ -280,9 +280,8 @@ def run_default() -> None:
     tpath = _ensure_bench_fixture()
     spark = get_spark(app_name="bench", cores=n_cores)
 
-    # untimed warm-up: JVM JIT + the Python worker pool (worker forks are
-    # serialized in this sandbox, ~0.7 s each — a one-time session cost a
-    # long-lived cluster would not re-pay per job)
+    # untimed warm-up: JVM JIT + the Python worker daemon and pool, a
+    # one-time session cost a long-lived cluster would not re-pay per job
     spark.range(0, 1_000_000, 1, n_cores).selectExpr("sum(id)").collect()
     spark.range(0, n_cores * 2, 1, n_cores * 2).mapInPandas(
         lambda it: it, schema="id long"

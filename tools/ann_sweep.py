@@ -21,17 +21,12 @@ CONFIGS = [(4, 4), (8, 4), (8, 3), (16, 3), (16, 4), (24, 3)]
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from work_order_pdf_extractor_spark.operators import annfast
+    from work_order_pdf_extractor_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .appName("ann-sweep")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="ann-sweep", cores=8, shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     n = emb.count()

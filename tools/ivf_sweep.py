@@ -24,17 +24,12 @@ NPROBES = [1, 2, 3, 4, 6, 8, 10, 12, 16]
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from work_order_pdf_extractor_spark.operators import annfast, similarity
+    from work_order_pdf_extractor_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .appName("ivf-sweep")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="ivf-sweep", cores=8, shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     n = emb.count()

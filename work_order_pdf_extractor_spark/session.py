@@ -28,21 +28,13 @@ def get_spark(
     cores: int | str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
-    master: str | None = None,
 ) -> SparkSession:
-    """``master`` overrides the default ``local[cores]`` — used by the
-    multi-JVM scaling protocol (``local-cluster[n,cores,mem]``: separate
-    executor JVM processes on this box, the closest sandbox analog of
-    N-executor cluster scaling). ``cores`` still sizes shuffle/scan
-    partitioning (pass total cores across executors)."""
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    if master is None:
-        master = f"local[{cores}]"
     if shuffle_partitions is None:
         shuffle_partitions = 32 if cores == "*" else max(int(cores), 8)
     b = (
-        SparkSession.builder.master(master)
+        SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
@@ -55,11 +47,12 @@ def get_spark(
         # (10k rows × ~2 KB payload ≈ 20 MB in flight per worker)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
-        # keep the Python worker pool stable: forks are expensive and
-        # serialized in this sandbox (~0.7 s each), so never reap idle
-        # workers between jobs
         .config("spark.python.worker.reuse", "true")
-        .config("spark.python.worker.idleTimeoutSeconds", "0")
+        # workers fork from a daemon that stops Python < 3.13 re-reading Spark's zips every task
+        .config("spark.python.daemon.module", "work_order_pdf_extractor_spark.pyworker")
+        # the daemon starts before a task adds the --py-files, so it imports
+        # this package from where the driver did (a directory or the zip)
+        .config("spark.executorEnv.PYTHONPATH", os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # local inputs are small; without a floor Spark would pack the whole
