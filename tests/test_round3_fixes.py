@@ -4,6 +4,7 @@ determinism, conf-gated dedup fan-out, whitespace-key probe parity."""
 from __future__ import annotations
 
 import datetime
+import random
 
 import pandas as pd
 import pytest
@@ -52,9 +53,9 @@ def test_asof_join_tiebreak_is_deterministic(spark):
 
 
 def test_connected_components_chains_and_singletons(spark):
-    """Min-label propagation must assign the min id transitively (a~b~c →
-    all labeled a), leave singletons self-labeled, and converge identically
-    across partitionings."""
+    """Components must assign the min id transitively (a~b~c → all
+    labeled a), leave singletons self-labeled, and agree across
+    partitionings."""
     nodes = spark.createDataFrame([(i,) for i in range(7)], "doc_id long")
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 6), (4, 5)], "doc1 long, doc2 long"
@@ -81,20 +82,16 @@ def test_dedup_fanout_is_conf_gated(spark):
     assert "RoundRobinPartitioning" in plan_on
 
 
-def test_connected_components_long_chain_logarithmic_rounds(spark):
-    """A 200-node path (diameter 199) must fully converge — naive
-    min-label propagation with the default 30-round cap provably cannot
-    (labels travel one hop per round); large-star/small-star flattens it
-    in O(log N) rounds. Round count is asserted via the stats hook."""
-    n = 200
+def test_connected_components_permuted_long_chain(spark):
+    """A 2,000-node path (diameter 1,999) whose ids are randomly permuted
+    along the path: every node must end labelled 0. Naive min-label
+    propagation moves a label one hop per round and cannot finish it."""
+    n = 2000
+    order = random.Random(7).sample(range(n), n)
     nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "doc1 long, doc2 long"
-    )
-    stats = {}
-    comp = dedup.connected_components(nodes, edges, stats=stats).toPandas()
+    edges = spark.createDataFrame(list(zip(order, order[1:])), "doc1 long, doc2 long")
+    comp = dedup.connected_components(nodes, edges).toPandas()
     assert dict(zip(comp.doc_id, comp.component_id)) == {i: 0 for i in range(n)}
-    assert stats["rounds"] <= 12, stats  # ~log2(200) + slack, << diameter
 
 
 def test_connected_components_no_edges(spark):
@@ -104,11 +101,68 @@ def test_connected_components_no_edges(spark):
     assert dict(zip(comp.doc_id, comp.component_id)) == {i: i for i in range(4)}
 
 
-def test_connected_components_raises_when_rounds_run_out(spark, monkeypatch):
-    """Labels short of the star fixpoint may point at non-root nodes, so
-    running out of rounds raises instead of returning them."""
-    monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 1)
+def test_connected_components_raises_over_node_budget(spark, monkeypatch):
+    """A graph with more distinct ids than the one-task budget raises,
+    naming the count and the budget, instead of running the task out of
+    memory."""
+    monkeypatch.setattr(dedup, "CC_MAX_NODES", 4)
     nodes = spark.createDataFrame([(i,) for i in range(8)], "doc_id long")
     edges = spark.createDataFrame([(i, i + 1) for i in range(7)], "doc1 long, doc2 long")
-    with pytest.raises(RuntimeError, match="fixpoint"):
-        dedup.connected_components(nodes, edges)
+    with pytest.raises(Exception, match="8 nodes exceed the one-task node budget CC_MAX_NODES = 4"):
+        dedup.connected_components(nodes, edges).collect()
+
+
+@pytest.mark.parametrize(
+    "ansi, err, match",
+    [("true", Exception, "CAST_INVALID_INPUT"), ("false", ValueError, "requires numeric")],
+    ids=["ansi", "no_ansi"],
+)
+def test_connected_components_rejects_non_numeric_ids(spark, ansi, err, match):
+    """A string id that does not cast to long fails loudly under both ANSI
+    settings: Spark's cast error with ANSI on, the NULL-cast guard with it
+    off (the NULL would otherwise drop the edge)."""
+    nodes = spark.createDataFrame([("1",), ("x",)], "doc_id string")
+    edges = spark.createDataFrame([("1", "x")], "doc1 string, doc2 string")
+    was = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        with pytest.raises(err, match=match):
+            dedup.connected_components(nodes, edges).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", was)
+
+
+def _bfs_labels(edges: list) -> dict:
+    adj: dict = {}
+    for a, b in edges:
+        adj.setdefault(a, []).append(b)
+        adj.setdefault(b, []).append(a)
+    label: dict = {}
+    for start in sorted(adj):
+        if start not in label:
+            label[start], todo = start, [start]
+            while todo:
+                for y in adj[todo.pop()]:
+                    if y not in label:
+                        label[y] = start
+                        todo.append(y)
+    return {k: v for k, v in label.items() if k != v}
+
+
+def test_component_roots_kernel_matches_bfs():
+    """The numpy task body, without Spark: random multigraphs with sparse,
+    negative and repeated ids arrive as many 3-edge batches with a fold
+    floor of 4, so the buffered batches fold into the forest many times;
+    the output must be BFS's min-id label of every non-minimum id."""
+    rng = random.Random(3)
+    for _ in range(200):
+        n = rng.randint(1, 60)
+        edges = [(rng.randrange(n) * 7 - 50, rng.randrange(n) * 7 - 50) for _ in range(rng.randint(0, 90))]
+        edges = [e for e in edges if e[0] != e[1]]
+        batches = (
+            pd.DataFrame(edges[i : i + 3], columns=["u", "v"], dtype="int64")
+            for i in range(0, len(edges), 3)
+        )
+        out = list(dedup._component_roots(batches, budget=10**6, floor=4))
+        got = {u: r for o in out for u, r in zip(o.u, o.component_id)}
+        assert got == _bfs_labels(edges)

@@ -1,7 +1,10 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-All operators take/return DataFrames and are pure DataFrame-API
-compositions (JVM-side, codegen-friendly, no Python in the hot path).
+All operators take/return DataFrames and are DataFrame-API
+compositions (JVM-side, codegen-friendly); Python runs only in
+``mapInPandas`` tasks: the word tokenizers (:func:`word_shingles`,
+:func:`positioned_shingles`) and the union-find of
+:func:`connected_components`.
 Cross-engine-stable hashing (md5-hex → int) is used instead of engine-
 native ``hash()`` so results are reproducible anywhere and oracle-checkable.
 
@@ -27,6 +30,9 @@ top of the overlap; :func:`minhash_lsh_pairs` is the candidate join;
 
 from __future__ import annotations
 
+import functools
+
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from .common import (  # noqa: F401  (re-exported: long-time import site)
@@ -597,11 +603,59 @@ def embedding_near_pairs(
     )
 
 
-# connected_components raises after CC_MAX_ROUNDS star rounds without a
-# fixpoint (one needs O(log N) rounds); CC_CHECK_EVERY rounds run as one
-# lazy plan between convergence probes
-CC_MAX_ROUNDS = 30
-CC_CHECK_EVERY = 3
+# connected_components runs the whole edge set in one Python task, which
+# raises past this many distinct ids instead of running out of memory
+CC_MAX_NODES = 1 << 27
+
+
+def _spanning_forest(u: np.ndarray, v: np.ndarray, budget: int):
+    """``(ids, roots)``: each id of the edges ``u``–``v`` that is not the
+    minimum id of its component, and that minimum. ``np.unique`` maps ids
+    to dense indices in id order. Per round, each edge whose ends have
+    different roots hooks the larger root under the smaller
+    (``np.minimum.at``: parents only decrease, so no cycle forms),
+    pointer-jumping flattens the trees and the edges become root pairs;
+    every round hooks a root, so the loop ends."""
+    nodes, idx = np.unique(np.concatenate([u, v]), return_inverse=True)
+    if len(nodes) > budget:
+        raise RuntimeError(
+            f"connected_components: {len(nodes):,} nodes exceed the "
+            f"one-task node budget CC_MAX_NODES = {budget:,}"
+        )
+    parent = np.arange(len(nodes))
+    a, b = idx[: len(u)], idx[len(u) :]
+    while True:
+        a, b = parent[a], parent[b]
+        split = a != b
+        if not split.any():
+            child = parent != np.arange(len(nodes))
+            return nodes[child], nodes[parent[child]]
+        a, b = a[split], b[split]
+        np.minimum.at(parent, np.maximum(a, b), np.minimum(a, b))
+        while not np.array_equal(jumped := parent[parent], parent):
+            parent = jumped
+
+
+def _component_roots(batches, budget: int, floor: int = 1 << 20):
+    """The one task of :func:`connected_components`: ``(u, v)`` edge
+    batches in, the :func:`_spanning_forest` of them out as
+    ``(u, component_id)`` frames of at most ``floor`` rows. Buffered
+    batches fold into the forest once they reach twice its size plus
+    ``floor`` edges, so memory is O(non-singleton ids), not O(edges)."""
+    import pandas as pd
+
+    # the forest first, then the buffered batches
+    us, vs, buffered = [np.empty(0, np.int64)], [np.empty(0, np.int64)], 0
+    for pdf in batches:
+        us.append(pdf["u"].to_numpy(np.int64))
+        vs.append(pdf["v"].to_numpy(np.int64))
+        buffered += len(pdf)
+        if buffered >= 2 * len(us[0]) + floor:
+            u, root = _spanning_forest(np.concatenate(us), np.concatenate(vs), budget)
+            us, vs, buffered = [u], [root], 0
+    u, root = _spanning_forest(np.concatenate(us), np.concatenate(vs), budget)
+    for i in range(0, len(u), floor):
+        yield pd.DataFrame({"u": u[i : i + floor], "component_id": root[i : i + floor]})
 
 
 def connected_components(
@@ -610,15 +664,9 @@ def connected_components(
     id_col: str = "doc_id",
     stats: dict | None = None,
 ) -> DataFrame:
-    """Connected components of the near-dup graph by the LARGE-STAR /
-    SMALL-STAR alternation (Kiveris et al., "Connected Components in
-    MapReduce and Beyond"): each round rewires every node's neighborhood
-    toward its local minimum, so component trees flatten geometrically —
-    O(log N) rounds on ANY graph shape (a naive min-label propagation
-    needs O(diameter) rounds, which a 200-node near-dup chain already
-    defeats). Deterministic fixpoint: every node ends pointing at its
-    component's minimum id. Output: ``(id_col, component_id)`` —
-    singletons label themselves.
+    """Connected components of the near-dup graph. Output:
+    ``(id_col, component_id)`` — ``component_id`` is the minimum id of the
+    component; singletons label themselves.
 
     This is the exact duplicate-CLUSTER semantics that the greedy
     keeper rule of :func:`deduplicate_near` approximates: under a chain
@@ -626,27 +674,21 @@ def connected_components(
     components also give the cluster assignment itself, which training
     pipelines keep (cluster size features, one-per-cluster sampling).
 
-    Per round: large-star — for each node u with m = min(Γ(u) ∪ {u}),
-    connect every strictly-larger neighbor to m; small-star — on the
-    downward-normalized edges, connect every ≤-neighbor and u itself to
-    m. Each phase is one map-side-combinable min aggregation plus one
-    hash join on node ids — O(|E|), never materializing neighborhoods
-    driver-side. Driver round-trips are BATCHED: ``CC_CHECK_EVERY`` rounds
-    run as one lazy plan between eager ``localCheckpoint`` + convergence
-    probes (count + order-free xxhash sum of the edge set; stable hash ⇒
-    the star fixpoint — rounds are idempotent there — so the loop exits).
-    ``stats['rounds']`` / ``stats['converged']`` report rounds actually
-    executed and whether the fixpoint was reached; exhausting ``CC_MAX_ROUNDS``
-    before the fixpoint RAISES (labels at that point may still point at
-    non-root nodes — silently returning them would hand the caller wrong
-    components).
+    Near-dup edge sets are far smaller than the corpus, so the edges go to
+    ONE vectorized task (``coalesce(1)`` + ``mapInPandas``) that runs a
+    numpy union-find (:func:`_component_roots`) over them; the nodes then
+    left-join its ``(id, root)`` rows. That task raises past
+    ``CC_MAX_NODES`` distinct ids; per-partition local contraction
+    (Łącki et al., "Connected Components at Scale via Local
+    Contractions") is the route for a graph larger than that.
+    ``stats['rounds']`` is always 1, kept for callers that read it.
 
-    Ids must be numeric (castable to long): the label algebra is min()
-    over ids. A non-numeric string id would cast to NULL and silently
-    drop edges, so the cast is guarded — any null-producing cast raises."""
+    Ids must be numeric (castable to long): the label is min() over ids.
+    A non-numeric string id would cast to NULL and silently drop edges,
+    so the cast is guarded — any null-producing cast raises."""
     # checkpoint the cast edges ONCE so the (typically expensive) upstream
     # candidate-pair pipeline is never evaluated twice: both the null-cast
-    # guard and the star loop read the checkpointed table
+    # guard and the union-find task read the checkpointed table
     ecast = edges.select(
         F.col("doc1").cast("long").alias("u"),
         F.col("doc2").cast("long").alias("v"),
@@ -661,66 +703,16 @@ def connected_components(
             "a non-numeric id cast to NULL would silently collapse the "
             "edge set"
         )
-    e = (
-        ecast.select("u", "v")
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    # the budget is bound here, so the task sees the driver's value
+    task = functools.partial(_component_roots, budget=CC_MAX_NODES)
+    parents = (
+        ecast.filter(F.col("u") != F.col("v"))
+        .select("u", "v")
+        .coalesce(1)
+        .mapInPandas(task, "u long, component_id long")
     )
-    rounds = 0
-    prev_probe = None
-    converged = False
-    while rounds < CC_MAX_ROUNDS and not converged:
-        for _ in range(min(CC_CHECK_EVERY, CC_MAX_ROUNDS - rounds)):
-            # large-star: m over the FULL neighborhood (both directions)
-            nb = e.unionByName(
-                e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            )
-            mins = nb.groupBy("u").agg(
-                F.least(F.min("v"), F.first("u")).alias("m")
-            )
-            e = (
-                nb.join(mins, "u")
-                .filter(F.col("v") > F.col("u"))
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .filter(F.col("u") != F.col("v"))
-                .distinct()
-            )
-            # small-star: downward edges only; u itself also re-points
-            ee = e.select(
-                F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-            )
-            mins2 = ee.groupBy("u").agg(F.min("v").alias("m"))
-            e = (
-                ee.join(mins2, "u")
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .unionByName(mins2.select("u", F.col("m").alias("v")))
-                .filter(F.col("u") != F.col("v"))
-                .distinct()
-            )
-            rounds += 1
-        e = e.localCheckpoint(eager=True)
-        probe = tuple(
-            e.agg(
-                F.count(F.lit(1)),
-                # decimal sum: order-free AND overflow-free under ANSI
-                # (a long sum of 64-bit hashes overflows immediately)
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
-            ).first()
-        )
-        converged = probe == prev_probe
-        prev_probe = probe
     if stats is not None:
-        stats["rounds"] = rounds
-        stats["converged"] = converged
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not reach the star fixpoint in "
-            f"{CC_MAX_ROUNDS} rounds; labels would be unreliable "
-            f"(rounds needed is O(log N))"
-        )
-    # at the star fixpoint every non-root points straight at its root
-    parents = e.groupBy("u").agg(F.min("v").alias("component_id"))
+        stats["rounds"] = 1
     return nodes.select(F.col(id_col).cast("long").alias("u")).join(
         parents, "u", "left"
     ).select(

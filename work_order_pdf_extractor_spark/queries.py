@@ -1623,7 +1623,7 @@ WHERE doc_id NOT IN (SELECT doc2 FROM verified)
 
 def q_dedup_components(spark, sf_dir, persisted_out: list | None = None):
     """Duplicate-CLUSTER assignment: connected components over the
-    verified near-dup pair graph by min-label propagation (component id =
+    verified near-dup pair graph by one union-find task (component id =
     min doc id of the cluster — the exact cluster semantics the greedy
     keeper rule approximates; training pipelines keep the assignment for
     cluster-size features and one-per-cluster sampling). Oracle: a DuckDB
@@ -1972,7 +1972,7 @@ def q_cluster_sample(spark, sf_dir, persisted_out: list | None = None):
     training pipeline DOES with the component assignment: keep exactly
     the min-id document of every near-dup cluster and carry the cluster
     size as a feature (dedup weight / quality signal). Composes the
-    LSH-candidates → Jaccard-verify → star connected-components chain
+    LSH-candidates → Jaccard-verify → union-find connected-components chain
     into one lazy plan; the oracle replays it over a recursive-CTE
     transitive closure."""
     from .operators import dedup

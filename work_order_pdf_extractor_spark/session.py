@@ -34,8 +34,7 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = 32 if cores == "*" else max(int(cores), 8)
     b = (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(app_name)
+        SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -63,6 +62,10 @@ def get_spark(
             str((32 if cores == "*" else int(cores)) * 2),
         )
     )
+    # spark-submit starts the JVM before Python and hands over its gateway;
+    # its master (--master, or its local[*] default) stands
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        b = b.master(f"local[{cores}]")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
