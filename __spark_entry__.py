@@ -15,9 +15,10 @@ from pyspark.sql import functions as F
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: the end-to-end work-order
-    extraction pipeline (mapInPandas payload parse → anchored-regex fields →
-    broadcast semi-probe vs reference orders → disposition), run over the
-    documents table mapped into the transcripts shape."""
+    extraction pipeline — the same ``run_pipeline`` plan every entry point
+    ships (mapInPandas payload parse → anchored-regex fields → salted
+    repartition → dual broadcast probe vs reference orders → disposition),
+    run over the documents table mapped into the transcripts shape."""
     from work_order_pdf_extractor_spark import fixtures
     from work_order_pdf_extractor_spark.plans import pipeline
 
@@ -41,7 +42,7 @@ def entry(spark: SparkSession) -> DataFrame:
         F.to_timestamp(F.lit("2026-01-01 00:00:00")).alias("ts"),
     )
     ref = spark.createDataFrame(fixtures.gen_reference_orders())
-    res = pipeline.run_pipeline(transcripts, ref, salt=False)
+    res = pipeline.run_pipeline(transcripts, ref)
     return res.drop("spans")  # keep the smoke-check schema simple/stable
 
 

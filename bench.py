@@ -273,12 +273,11 @@ def run_default() -> None:
     from work_order_pdf_extractor_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
-    n_cores = int(cores) if cores.isdigit() else len(os.sched_getaffinity(0))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 
     tpath = _ensure_bench_fixture()
-    spark = get_spark(app_name="bench", cores=n_cores)
+    spark = get_spark(app_name="bench")
+    n_cores = spark.sparkContext.defaultParallelism
 
     # untimed warm-up: JVM JIT + the Python worker daemon and pool, a
     # one-time session cost a long-lived cluster would not re-pay per job
@@ -331,7 +330,7 @@ def run_default() -> None:
                 "extract_turns": n_turns,
                 "extract_turns_per_sec": round(n_turns / ext_sec, 1),
                 "ann_vecs_per_sec": round(HD_VECS / hd_sec, 1),
-                "cores": cores,
+                "cores": n_cores,
                 # machine-speed normalizer for round-over-round reads
                 # (this VM drifts 2-4x across minutes)
                 "hw_probe": _hw_probe(),

@@ -50,9 +50,8 @@ def main() -> None:
     if "--all" in args:
         args = list(HEADLINE)
 
-    cores = os.environ.get("SPARK_GRAFT_CPUS", "")
-    threads = int(cores) if cores.isdigit() else len(os.sched_getaffinity(0))
-    spark = get_spark(app_name="bench_extra", cores=threads)
+    spark = get_spark(app_name="bench_extra")
+    threads = spark.sparkContext.defaultParallelism
     spark.range(0, 1_000_000, 1, threads).selectExpr("sum(id)").collect()
     spark.range(0, threads * 2, 1, threads * 2).mapInPandas(
         lambda it: it, schema="id long"

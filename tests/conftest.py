@@ -10,7 +10,7 @@ from work_order_pdf_extractor_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", cores=8, shuffle_partitions=8)
+    s = get_spark(app_name="tests", cores=8)
     # the whole suite shares one driver JVM; a heap larger than half the
     # machine lets G1 grow until the kernel OOM-kills the JVM mid-suite,
     # failing every later test with "Connection refused"

@@ -101,6 +101,49 @@ def test_lineage_rows_have_failure_counts(spark, transcripts_df, ref_orders_df, 
     assert int(lin.n_failed.sum()) == s["metrics"]["failed"]
 
 
+@pytest.mark.parametrize("first, second", [(8, 4), (4, 8)])
+def test_resume_with_another_bucket_count_raises(
+    spark, transcripts_df, ref_orders_df, golden_pd, tmp_path, first, second
+):
+    """A bucket id means something only under the modulus that wrote it.
+    Committed buckets 0-3 of 8 would count as all 4 buckets of 4, so a
+    resume with 4 would never write the rest (8 → 4 loses rows); committed
+    buckets 0-1 of 4 would count as buckets 0-1 of 8, so a resume with 8
+    would rewrite the rows of buckets 4-5 of 8 (4 → 8 duplicates rows).
+    Either resume raises, naming both counts, before any Spark job."""
+    out = str(tmp_path / "ckpt6")
+    half = transcripts_df.where(lineage.bucket_col(first) < first // 2)
+    lineage.run_with_checkpoint(spark, half, ref_orders_df, out, n_buckets=first, run_id="r1")
+
+    sc = spark.sparkContext
+    sc.setJobGroup("mismatch", "resume with another bucket count")
+    try:
+        with pytest.raises(ValueError, match=f"n_buckets={first}.*n_buckets={second}"):
+            lineage.run_with_checkpoint(
+                spark, transcripts_df, ref_orders_df, out, n_buckets=second, run_id="r2"
+            )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("mismatch")) == []
+
+    # the recorded count resumes the other half, once
+    s = lineage.run_with_checkpoint(
+        spark, transcripts_df, ref_orders_df, out, n_buckets=first, run_id="r3"
+    )
+    assert (s["buckets_skipped"], s["buckets_done"]) == (first // 2, first // 2)
+    df = lineage.read_output(spark, out).toPandas()
+    assert len(df) == len(golden_pd)
+    assert not df.duplicated(["conv_id", "turn_idx"]).any()
+
+    # an output written before the record existed is accepted and gets one
+    os.remove(os.path.join(out, "_n_buckets"))
+    assert lineage.run_with_checkpoint(
+        spark, transcripts_df, ref_orders_df, out, n_buckets=first, run_id="r4"
+    )["buckets_done"] == 0
+    with open(os.path.join(out, "_n_buckets")) as f:
+        assert int(f.read()) == first
+
+
 def _ingest_run(spark, out_dir, run_id):
     docs = spark.createDataFrame(
         [(i, f"doc {i} alpha bravo charlie delta {i % 7}") for i in range(40)],

@@ -226,7 +226,7 @@ def test_pipeline_extracts_from_xref_stream_payloads(spark):
     )
     ref = pd.DataFrame({"Order": ["22809891"]})
     out = pipeline.run_pipeline(
-        spark.createDataFrame(tp), spark.createDataFrame(ref), salt=False
+        spark.createDataFrame(tp), spark.createDataFrame(ref)
     ).collect()
     assert len(out) == 1
     assert out[0].matched is True

@@ -102,7 +102,7 @@ def test_reference_default_crop_parity(
     crop = (0.0, 0.0, 0.25, 0.25)
     golden = O.extract_goldens(tiny_transcripts_pd, ref_orders_pd, crop=crop)
     res = pipeline.run_pipeline(
-        transcripts_df, ref_orders_df, crop=crop, salt=False
+        transcripts_df, ref_orders_df, crop=crop
     ).toPandas()
     j = _join(golden, res)
     assert (j["_merge"] == "both").all()
@@ -165,17 +165,6 @@ def test_observe_metrics_match_oracle(transcripts_df, ref_orders_df, golden_pd):
     assert m["files_processed"] == len(golden_pd)
     assert m["failed"] == int((golden_pd.status != "ok").sum())
     assert m["matched"] == int(golden_pd.matched.sum())
-
-
-def test_salting_does_not_change_results(transcripts_df, ref_orders_df, golden_pd):
-    res = pipeline.run_pipeline(
-        transcripts_df, ref_orders_df, salt=False
-    ).toPandas()
-    j = _join(golden_pd, res)
-    assert (j["_merge"] == "both").all()
-    assert (
-        j["extracted_text_g"].fillna("\0") == j["extracted_text_s"].fillna("\0")
-    ).all()
 
 
 def test_shuffled_input_same_output(spark, tiny_transcripts_pd, ref_orders_df, golden_pd):

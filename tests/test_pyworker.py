@@ -74,7 +74,7 @@ def test_spark_workers_fork_from_the_package_daemon(spark):
 SUBMITTED = """
 from work_order_pdf_extractor_spark.session import get_spark
 
-spark = get_spark(app_name="py-files", cores=2, shuffle_partitions=2)
+spark = get_spark(app_name="py-files", cores=2)
 print("ROWS", spark.range(0, 8, numPartitions=4).mapInPandas(lambda it: it, "id long").count())
 spark.stop()
 """

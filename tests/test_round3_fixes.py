@@ -68,18 +68,14 @@ def test_connected_components_chains_and_singletons(spark):
         assert dict(zip(comp.doc_id, comp.component_id)) == want
 
 
-def test_dedup_fanout_is_conf_gated(spark):
+def test_word_shingles_fans_out_round_robin(spark):
+    """A one-partition input is fanned out (round robin) before the
+    shingle explode, so the explode does not run as one task."""
     df = spark.range(0, 10, 1, 1).select(
         F.col("id").alias("doc_id"), F.lit("a b c d").alias("text")
     )
-    try:
-        spark.conf.set(dedup.FANOUT_CONF, "false")
-        plan = dedup.word_shingles(df)._jdf.queryExecution().toString()
-        assert "Exchange RoundRobinPartitioning" not in plan
-    finally:
-        spark.conf.unset(dedup.FANOUT_CONF)
-    plan_on = dedup.word_shingles(df)._jdf.queryExecution().toString()
-    assert "RoundRobinPartitioning" in plan_on
+    plan = dedup.word_shingles(df)._jdf.queryExecution().toString()
+    assert "RoundRobinPartitioning" in plan
 
 
 def test_connected_components_permuted_long_chain(spark):

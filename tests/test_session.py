@@ -10,7 +10,7 @@ import pyspark
 JOB = """
 from work_order_pdf_extractor_spark.session import get_spark
 
-spark = get_spark(app_name="master", cores=2, shuffle_partitions=2)
+spark = get_spark(app_name="master", cores=2)
 print("MASTER", spark.sparkContext.master)
 spark.stop()
 """

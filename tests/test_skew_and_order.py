@@ -2,21 +2,32 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from work_order_pdf_extractor_spark.plans import skew
 
 
-def test_salted_repartition_preserves_rows(transcripts_df, tiny_transcripts_pd):
-    out = skew.repartition_salted(transcripts_df, 16, whale_threshold=100)
+@pytest.fixture
+def salting(monkeypatch):
+    """16 fixed partitions (AQE does not coalesce a repartition to a set
+    number) and a 100-turn whale threshold, so the tiny fixture's one
+    ~400-turn conversation is a whale."""
+    monkeypatch.setattr(skew, "N_PARTITIONS", 16)
+    monkeypatch.setattr(skew, "DEFAULT_WHALE_THRESHOLD", 100)
+
+
+def test_salted_repartition_preserves_rows(salting, transcripts_df, tiny_transcripts_pd):
+    out = skew.repartition_salted(transcripts_df)
     assert out.count() == len(tiny_transcripts_pd)
     assert set(out.columns) == set(transcripts_df.columns)
 
 
-def test_whale_spreads_over_partitions(spark, transcripts_df, tiny_transcripts_pd):
+def test_whale_spreads_over_partitions(salting, monkeypatch, transcripts_df, tiny_transcripts_pd):
     # the tiny fixture has one whale conversation (~400 turns)
     whale = tiny_transcripts_pd.conv_id.value_counts().idxmax()
-    out = skew.repartition_salted(transcripts_df, 16, whale_threshold=100, n_salts=8)
+    monkeypatch.setattr(skew, "DEFAULT_N_SALTS", 8)
+    out = skew.repartition_salted(transcripts_df)
     parts = (
         out.withColumn("pid", F.spark_partition_id())
         .filter(F.col("conv_id") == whale)
@@ -25,9 +36,9 @@ def test_whale_spreads_over_partitions(spark, transcripts_df, tiny_transcripts_p
     assert parts > 1, "whale conversation not spread by salting"
 
 
-def test_small_conversations_stay_colocated(spark, transcripts_df, tiny_transcripts_pd):
+def test_small_conversations_stay_colocated(salting, transcripts_df, tiny_transcripts_pd):
     whale = tiny_transcripts_pd.conv_id.value_counts().idxmax()
-    out = skew.repartition_salted(transcripts_df, 16, whale_threshold=100)
+    out = skew.repartition_salted(transcripts_df)
     multi = (
         out.withColumn("pid", F.spark_partition_id())
         .filter(F.col("conv_id") != whale)

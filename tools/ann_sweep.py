@@ -26,7 +26,7 @@ def main() -> None:
     from work_order_pdf_extractor_spark.operators import annfast
     from work_order_pdf_extractor_spark.session import get_spark
 
-    spark = get_spark(app_name="ann-sweep", cores=8, shuffle_partitions=8)
+    spark = get_spark(app_name="ann-sweep", cores=8)
     spark.sparkContext.setLogLevel("ERROR")
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     n = emb.count()

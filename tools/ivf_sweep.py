@@ -29,7 +29,7 @@ def main() -> None:
     from work_order_pdf_extractor_spark.operators import annfast, similarity
     from work_order_pdf_extractor_spark.session import get_spark
 
-    spark = get_spark(app_name="ivf-sweep", cores=8, shuffle_partitions=8)
+    spark = get_spark(app_name="ivf-sweep", cores=8)
     spark.sparkContext.setLogLevel("ERROR")
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     n = emb.count()

@@ -1,9 +1,8 @@
 """Deterministic synthetic transcripts + reference-order fixtures (M0).
 
 Implements FIXTURES.md §1-§3: an Iceberg-shaped transcripts table
-``(conv_id:string, turn_idx:int32, role:string, text:string, tool:string,
-ts:timestamp)`` whose ``text`` cells embed three payload families —
-self-constructed minimal PDFs (ground truth known by construction), HTML
+(``sources.transcripts.TRANSCRIPT_SCHEMA``) whose ``text`` cells embed
+three payload families — self-constructed minimal PDFs (ground truth known by construction), HTML
 with boilerplate, and plain text (some with the reference's markdown-fenced
 JSON response shape, ``work_order_extractor.py:1663-1668``) — plus a
 ``reference_orders`` key table modeled on
@@ -24,6 +23,7 @@ import random
 import pandas as pd
 
 from .core import pdfparse
+from .sources.transcripts import REQUIRED_COLUMNS
 
 EPOCH = _dt.datetime(2026, 1, 1, 0, 0, 0)
 
@@ -256,9 +256,7 @@ def gen_transcripts(scale: str = "tiny", seed: int = 42) -> pd.DataFrame:
             rows.append((conv_id, ti, role, text, tool, ts))
 
     rng.shuffle(rows)
-    df = pd.DataFrame(
-        rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-    )
+    df = pd.DataFrame(rows, columns=REQUIRED_COLUMNS)
     df["turn_idx"] = df["turn_idx"].astype("int32")
     # microsecond precision: Spark cannot read parquet TIMESTAMP(NANOS)
     df["ts"] = pd.to_datetime(df["ts"]).astype("datetime64[us]")

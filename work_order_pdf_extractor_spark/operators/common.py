@@ -1,7 +1,7 @@
 """Shared leaf helpers for the operator families.
 
 Deliberately a LEAF module (imports nothing package-internal): half the
-operator modules need the fan-out gate, the cross-engine-stable hash,
+operator modules need the fan-out, the cross-engine-stable hash,
 the canonical-content expression, word shingling or the sorted-id pair
 expander, and keeping them here means none of those modules has to
 import the whole dedup family to get them.
@@ -11,27 +11,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-FANOUT_CONF = "spark.workorder.dedup.fanout.enabled"
-
-
-def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Fan a narrow input out to cluster parallelism before explode-heavy
-    work. A single small parquet file scans as 1 task, and everything
-    downstream of an explode inherits that parallelism until the first
-    shuffle. Gated by the session conf ``spark.workorder.dedup.fanout.
-    enabled`` (default true) — a per-session, runtime-settable switch
-    rather than a mutable module global (ADVICE r2): at real scale, where
-    the scan is already wider than the cluster, ``spark.conf.set(...,
-    'false')`` removes the round-robin shuffle from every dedup/text
-    operator at once and they run shuffle-free up to their aggregation.
-    The gate avoids probing ``df.rdd.getNumPartitions()``, which forces a
-    driver-side conversion of the analyzed plan on every call; what it
-    shuffles when on is the pre-explode rows (id + text), one pass."""
-    spark = df.sparkSession
-    if spark.conf.get(FANOUT_CONF, "true").lower() != "true":
-        return df
-    target = min_parts or spark.sparkContext.defaultParallelism
-    return df.repartition(target)
+    work: a round-robin repartition to ``defaultParallelism``. A single
+    small parquet file scans as 1 task, and everything downstream of an
+    explode inherits that parallelism until the first shuffle. It never
+    probes ``df.rdd.getNumPartitions()``, which forces a driver-side
+    conversion of the analyzed plan on every call; what it shuffles is the
+    pre-explode rows (id + text), one pass."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def stable_hash64(col: F.Column, seed: int | None = None) -> F.Column:

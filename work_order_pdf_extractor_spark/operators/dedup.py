@@ -36,7 +36,6 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from .common import (  # noqa: F401  (re-exported: long-time import site)
-    FANOUT_CONF,
     ensure_parallelism,
     sorted_id_pairs,
     stable_hash64,

@@ -20,6 +20,7 @@ from pyspark.sql import types as T
 
 from ..core.extractor import extract_turn, parse_pdf_payload
 from ..core.pdfparse import DEFAULT_CROP
+from ..sources.transcripts import REQUIRED_COLUMNS, TRANSCRIPT_SCHEMA
 
 SPAN_TYPE = T.StructType(
     [
@@ -43,13 +44,8 @@ EXTRACT_FIELDS = [
     T.StructField("status", T.StringType()),
 ]
 
-TRANSCRIPT_FIELDS = [
-    T.StructField("conv_id", T.StringType()),
-    T.StructField("turn_idx", T.IntegerType()),
-    T.StructField("role", T.StringType()),
-    T.StructField("tool", T.StringType()),
-    T.StructField("ts", T.TimestampType()),
-]
+# the transcript columns an extracted row carries through: all but the payload
+TRANSCRIPT_FIELDS = [f for f in TRANSCRIPT_SCHEMA.fields if f.name != "text"]
 
 EXTRACTED_SCHEMA = T.StructType(TRANSCRIPT_FIELDS + EXTRACT_FIELDS)
 
@@ -58,11 +54,7 @@ def _extract_batch(pdf: pd.DataFrame, crop: tuple) -> pd.DataFrame:
     res = [extract_turn(t, tl, crop) for t, tl in zip(pdf["text"], pdf["tool"])]
     out = pd.DataFrame(
         {
-            "conv_id": pdf["conv_id"].values,
-            "turn_idx": pdf["turn_idx"].values,
-            "role": pdf["role"].values,
-            "tool": pdf["tool"].values,
-            "ts": pdf["ts"].values,
+            **{f.name: pdf[f.name].values for f in TRANSCRIPT_FIELDS},
             "extracted_text": [r["extracted_text"] for r in res],
             "spans": [
                 [
@@ -98,8 +90,7 @@ def extract_turns(df: DataFrame, crop: tuple = DEFAULT_CROP) -> DataFrame:
         for pdf in batches:
             yield _extract_batch(pdf, crop)
 
-    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-    return df.select(*cols).mapInPandas(fn, schema=EXTRACTED_SCHEMA)
+    return df.select(*REQUIRED_COLUMNS).mapInPandas(fn, schema=EXTRACTED_SCHEMA)
 
 
 PAGES_SCHEMA = T.StructType(

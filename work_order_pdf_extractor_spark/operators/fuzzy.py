@@ -76,11 +76,10 @@ def fuzzy_semi_join(
     # The probe side now carries exactly one shuffle: the closing window
     # over VERIFIED rows (post-reduction, the smallest set in the plan).
     # Scan-level parallelism is guaranteed by the session's
-    # files.minPartitionNum floor (the fan-out gate existed for
+    # files.minPartitionNum floor (ensure_parallelism's fan-out exists for
     # single-task scans of tiny inputs; with the variant pass vectorized
     # the remaining single-task cost is the Arrow batch itself, which
-    # the floor already splits), so the fan-out conf gate is retired on
-    # this path.
+    # the floor already splits), so this path does not fan out.
     # r7: variant generation runs in one Arrow pass (_explode_variants —
     # the interpreted per-variant substring/concat chain was a measured
     # 2.5 s per side at sf1), and the candidate join keys on xxhash64(v)

@@ -13,8 +13,8 @@ asserted by `tests/test_bucketing.py` (two co-bucketed tables join with
 ZERO Exchange in the physical plan).
 
 ``sortBy`` within buckets additionally lets sort-merge joins skip the
-per-task sort when files-per-bucket is 1 — worth it for append-once
-layouts, skippable for continuously-appended ones.
+per-task sort when files-per-bucket is 1. The writer always sorts: every
+table written here is overwritten whole, never appended to.
 """
 
 from __future__ import annotations
@@ -22,23 +22,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int,
-    sort: bool = True,
-) -> None:
-    """Persist ``df`` as a parquet metastore table bucketed (and
-    optionally sorted) by ``bucket_col``. ``n_buckets`` should be sized
-    so a bucket is a few hundred MB at the target scale and MUST match
-    across tables that will be co-joined."""
-    w = df.write.mode("overwrite").format("parquet").bucketBy(
-        n_buckets, bucket_col
+def write_bucketed(df: DataFrame, table: str, bucket_col: str, n_buckets: int) -> None:
+    """Persist ``df`` as a parquet metastore table bucketed and sorted by
+    ``bucket_col``. ``n_buckets`` should be sized so a bucket is a few
+    hundred MB at the target scale and MUST match across tables that will
+    be co-joined."""
+    (
+        df.write.mode("overwrite")
+        .format("parquet")
+        .bucketBy(n_buckets, bucket_col)
+        .sortBy(bucket_col)
+        .saveAsTable(table)
     )
-    if sort:
-        w = w.sortBy(bucket_col)
-    w.saveAsTable(table)
 
 
 def read_bucketed(spark: SparkSession, table: str) -> DataFrame:

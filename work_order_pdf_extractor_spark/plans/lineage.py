@@ -20,6 +20,10 @@ Here the same guarantee is data-engineering-grade:
   directory listings and never a Spark job. Not-done buckets are dropped
   by an ``isin`` filter on the bucket expression before the expensive UDF
   runs;
+- a bucket id means something only under the modulus that wrote it, so
+  ``_n_buckets`` records ``n_buckets`` once per output directory, and a
+  run with another count raises instead of skipping or re-writing the
+  wrong rows;
 - a crash between rename and lineage append leaves a visible-but-unrecorded
   bucket. Resume repairs it WITHOUT reprocessing: it recomputes that
   bucket's lineage row from the committed parquet (the only case that
@@ -61,6 +65,26 @@ def _lineage_dir(out_dir: str) -> str:
 
 def _data_dir(out_dir: str) -> str:
     return os.path.join(out_dir, "data")
+
+
+def _check_n_buckets(out_dir: str, n_buckets: int) -> None:
+    """Record ``n_buckets`` in ``out_dir/_n_buckets`` on the first run and
+    raise ``ValueError`` when a later run asks for another count. A
+    directory without the record (written before it existed) is accepted
+    and gets one."""
+    path = os.path.join(out_dir, "_n_buckets")
+    if not os.path.exists(path):
+        with open(path + ".tmp", "w") as f:
+            f.write(f"{n_buckets}\n")
+        os.replace(path + ".tmp", path)  # atomic on POSIX
+        return
+    with open(path) as f:
+        recorded = int(f.read())
+    if recorded != n_buckets:
+        raise ValueError(
+            f"{out_dir} was committed with n_buckets={recorded}; resuming it "
+            f"with n_buckets={n_buckets} would lose or duplicate rows"
+        )
 
 
 def _listdir(path: str) -> list[str]:
@@ -140,9 +164,12 @@ def run_bucketed(
     ``plan(rows of not-done buckets)`` to ``_tmp-<run_id>`` partitioned by
     ``bucket``, read back per-bucket stats, rename each bucket directory
     into ``data/`` and append its lineage row. ``plan`` is not called when
-    every bucket is already committed, so that rerun runs no Spark job."""
+    every bucket is already committed, so that rerun runs no Spark job.
+    Raises ``ValueError`` before any of that when ``out_dir`` was committed
+    with another ``n_buckets``."""
     run_id = run_id or uuid.uuid4().hex[:12]
     os.makedirs(out_dir, exist_ok=True)
+    _check_n_buckets(out_dir, n_buckets)
     dd = _data_dir(out_dir)
 
     # repair: record lineage for dirs present without rows (crash window)
@@ -200,14 +227,15 @@ def run_with_checkpoint(
     "metrics"}``, ``metrics`` being this run's counters
     (``files_processed``, ``successful``, ``failed``, ``matched``,
     ``not_matched``). Safe to re-invoke after any crash; a fully committed
-    output is a no-op rerun (idempotency property test in the suite)."""
+    output is a no-op rerun (idempotency property test in the suite); a
+    rerun with another ``n_buckets`` raises ``ValueError``."""
     obs: list[Observation] = []  # set only when the plan is built and run
 
     def plan(todo: DataFrame) -> DataFrame:
         obs.append(Observation())
         # one job for every remaining bucket; salting happens inside run_pipeline
         return run_pipeline(
-            todo, reference_orders, crop=crop, salt=True, observation=obs[0]
+            todo, reference_orders, crop=crop, observation=obs[0]
         ).withColumn(
             # order-insensitive per-bucket input fingerprint (input-snapshot id)
             "row_fp", F.xxhash64("conv_id", "turn_idx")

@@ -8,15 +8,21 @@ Reference trace being re-expressed::
 
 Spark plan::
 
-    read transcripts → salted repartition(conv_id) → mapInPandas extraction
-    (payload column dropped inside the pass) → JVM-side key normalization →
-    ONE broadcast LEFT join vs reference orders (both dispositions from a
-    single probe, like the reference's single set lookup :1752-1767) →
-    disposition/out_name columns (rename/move become data, :1769-1797) →
-    observe() metrics (the reference's session_stats :1887-1916)
+    read transcripts → mapInPandas extraction (payload column dropped
+    inside the pass) → salted repartition(conv_id) → JVM-side key
+    normalization → dual broadcast LEFT probe vs reference orders (both
+    dispositions from the probe, like the reference's single set lookup
+    :1752-1767) → disposition/out_name columns (rename/move become data,
+    :1769-1797) → observe() metrics (the reference's session_stats
+    :1887-1916)
 
-Scale notes: the only shuffles are the salted repartition (explicit,
-skew-proofed) and nothing else — the join is broadcast (build side ≈ 900
+Every entry point runs this one plan: ``main.py`` (both batch modes),
+``lineage.run_with_checkpoint``, each ``streaming.incremental`` micro-batch,
+:func:`preview` and the driver contract's ``entry``.
+
+Scale notes: the shuffles are the salted repartition (explicit,
+skew-proofed) and its whale census (a count per conversation over the raw
+``conv_id`` column) — the probe joins are broadcast (build side ≈ 900
 keys ≪ 10 MB threshold) and metrics ride on ``observe`` (no extra pass).
 """
 
@@ -70,8 +76,6 @@ def run_pipeline(
     transcripts: DataFrame,
     reference_orders: DataFrame,
     crop: tuple = DEFAULT_CROP,
-    n_partitions: int | None = None,
-    salt: bool = True,
     observation: Observation | None = None,
     whales: DataFrame | None = None,
     ref_prepared: bool = False,
@@ -80,7 +84,10 @@ def run_pipeline(
 
     Output schema: ``(conv_id, turn_idx, role, tool, ts, extracted_text,
     spans, work_order_number, equipment_number, customer, order_date,
-    status, matched, disposition, out_name)`` — one row per input turn.
+    status, matched, disposition, out_name)`` — one row per input turn,
+    distributed by the salted ``(conv_id, salt)`` repartition of
+    ``skew.repartition_salted``. ``observation`` collects the run's
+    counters on the same pass.
 
     ``whales``/``ref_prepared``: amortizable inputs. The skew census and the
     normalized-distinct reference set are properties of the data, not of a
@@ -92,19 +99,16 @@ def run_pipeline(
     # the mapInPandas pass and NEVER shuffles. Only the small extracted rows
     # are redistributed afterwards (salted, for conversation-local
     # downstream ops). Shuffling payloads before extraction would move the
-    # entire 100 TB corpus across the network for zero benefit.
-    extracted = extract_turns(transcripts, crop)
-    if salt:
-        # whale census on the RAW input (pruned conv_id column scan), never
-        # on the extraction output — see repartition_salted docstring
-        extracted = skew.repartition_salted(
-            extracted, n_partitions, lengths_source=transcripts, whales=whales
+    # entire 100 TB corpus across the network for zero benefit. The whale
+    # census reads the RAW input (pruned conv_id column scan), never the
+    # extraction output — see repartition_salted docstring.
+    extracted = (
+        skew.repartition_salted(
+            extract_turns(transcripts, crop), lengths_source=transcripts, whales=whales
         )
-    elif n_partitions:
-        extracted = extracted.repartition(n_partitions, "conv_id")
-    extracted = extracted.withColumn(
-        "wo_trim", trim_ws(F.col("work_order_number"))
-    ).withColumn("wo_norm", normalize_key_col(F.col("work_order_number")))
+        .withColumn("wo_trim", trim_ws(F.col("work_order_number")))
+        .withColumn("wo_norm", normalize_key_col(F.col("work_order_number")))
+    )
 
     ref = (
         reference_orders.select(F.col("ref_order"))
@@ -171,17 +175,13 @@ def preview(
     """The reference's `test_crop` entry point (SURVEY §3.2,
     ``work_order_extractor.py:1480-1534``): extract the first n turns by
     deterministic order and collect them for inspection — `limit` +
-    extraction UDF + local collect."""
+    the same plan as :func:`run_pipeline` + local collect."""
     first = transcripts.orderBy("conv_id", "turn_idx").limit(n)
-    return run_pipeline(first, reference_orders, crop=crop, salt=False).collect()
+    return run_pipeline(first, reference_orders, crop=crop).collect()
 
 
-def write_partitioned(result: DataFrame, out_dir: str, mode: str = "overwrite") -> None:
+def write_partitioned(result: DataFrame, out_dir: str) -> None:
     """Disposition sink: the reference renames/moves files
     (``work_order_extractor.py:1769-1797``); here disposition is a partition
-    column of an append-only table — idempotent, atomic per partition."""
-    (
-        result.write.mode(mode)
-        .partitionBy("disposition")
-        .parquet(out_dir)
-    )
+    column of a table the run overwrites — idempotent, atomic per partition."""
+    result.write.mode("overwrite").partitionBy("disposition").parquet(out_dir)

@@ -4,9 +4,9 @@ A conversation with 10^6 turns would land on one task if we naively
 ``repartition("conv_id")``. AQE's skew handling covers JOIN skew but not
 repartition/groupBy skew, so salting is plain column logic (SURVEY §4):
 
-- conversations at or above ``whale_threshold`` turns get a salt of
-  ``pmod(hash(conv_id, turn_idx), n_salts)`` — their rows spread over
-  ``n_salts`` partitions;
+- conversations at or above ``DEFAULT_WHALE_THRESHOLD`` turns get a salt
+  of ``pmod(hash(conv_id, turn_idx), DEFAULT_N_SALTS)`` — their rows
+  spread over ``DEFAULT_N_SALTS`` partitions;
 - everyone else salts to 0, keeping conversation locality.
 
 The salt is only a PHYSICAL distribution key. Logical ordering is
@@ -20,8 +20,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# read at call time, so a test can monkeypatch them
 DEFAULT_WHALE_THRESHOLD = 1000
 DEFAULT_N_SALTS = 16
+# None: spark.sql.shuffle.partitions, which AQE may coalesce
+N_PARTITIONS: int | None = None
 
 
 def conversation_lengths(df: DataFrame) -> DataFrame:
@@ -31,9 +34,6 @@ def conversation_lengths(df: DataFrame) -> DataFrame:
 
 def repartition_salted(
     df: DataFrame,
-    n_partitions: int | None = None,
-    whale_threshold: int = DEFAULT_WHALE_THRESHOLD,
-    n_salts: int = DEFAULT_N_SALTS,
     lengths_source: DataFrame | None = None,
     whales: DataFrame | None = None,
 ) -> DataFrame:
@@ -60,7 +60,7 @@ def repartition_salted(
             conversation_lengths(
                 (lengths_source if lengths_source is not None else df).select("conv_id")
             )
-            .filter(F.col("n_turns") >= whale_threshold)
+            .filter(F.col("n_turns") >= DEFAULT_WHALE_THRESHOLD)
             .select("conv_id")
         )
     whales = whales.select("conv_id").withColumn("is_whale", F.lit(True))
@@ -68,14 +68,14 @@ def repartition_salted(
         "salt",
         F.when(
             F.col("is_whale").isNotNull(),
-            F.pmod(F.hash("conv_id", "turn_idx"), F.lit(n_salts)),
+            F.pmod(F.hash("conv_id", "turn_idx"), F.lit(DEFAULT_N_SALTS)),
         ).otherwise(F.lit(0)),
     ).drop("is_whale")
-    if n_partitions:
-        out = salted.repartition(n_partitions, "conv_id", "salt")
+    if N_PARTITIONS:
+        salted = salted.repartition(N_PARTITIONS, "conv_id", "salt")
     else:
-        out = salted.repartition("conv_id", "salt")
-    return out.drop("salt")
+        salted = salted.repartition("conv_id", "salt")
+    return salted.drop("salt")
 
 
 def with_turn_order(df: DataFrame) -> DataFrame:

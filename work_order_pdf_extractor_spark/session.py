@@ -25,17 +25,19 @@ def _default_driver_mem() -> str:
 
 def get_spark(
     app_name: str = "work_order_pdf_extractor_spark",
-    cores: int | str | None = None,
-    shuffle_partitions: int | None = None,
+    cores: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    """A session on ``local[cores]`` with ``max(cores, 8)`` shuffle
+    partitions and a scan floor of two splits per core. ``cores`` defaults
+    to ``SPARK_GRAFT_CPUS`` when it is a number, otherwise to the CPUs this
+    process may run on (its affinity mask, not the machine's count)."""
     if cores is None:
-        cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    if shuffle_partitions is None:
-        shuffle_partitions = 32 if cores == "*" else max(int(cores), 8)
+        env = os.environ.get("SPARK_GRAFT_CPUS", "")
+        cores = int(env) if env.isdigit() else len(os.sched_getaffinity(0))
     b = (
         SparkSession.builder.appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(cores, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -57,10 +59,7 @@ def get_spark(
         # local inputs are small; without a floor Spark would pack the whole
         # scan into a couple of tasks and starve the Python workers. On a
         # real cluster file count ≫ cores and this config is a no-op.
-        .config(
-            "spark.sql.files.minPartitionNum",
-            str((32 if cores == "*" else int(cores)) * 2),
-        )
+        .config("spark.sql.files.minPartitionNum", str(cores * 2))
     )
     # spark-submit starts the JVM before Python and hands over its gateway;
     # its master (--master, or its local[*] default) stands

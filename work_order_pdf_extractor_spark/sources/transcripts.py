@@ -1,18 +1,29 @@
 """Transcripts source — the engine's S1 (SURVEY §2.1).
 
-The production shape is an Iceberg table
-``(conv_id string, turn_idx int, role string, text string, tool string,
-ts timestamp)``; the sandbox fallback is a parquet directory of the same
-schema. Both go through one reader so the pipeline code is
-catalog-agnostic (SURVEY §7 guiding decision): Iceberg when the runtime
-jar is on the classpath, parquet otherwise — never a code change.
+The production shape is an Iceberg table of :data:`TRANSCRIPT_SCHEMA`;
+the sandbox fallback is a parquet directory of the same schema. Both go
+through one reader so the pipeline code is catalog-agnostic (SURVEY §7
+guiding decision): Iceberg when the runtime jar is on the classpath,
+parquet otherwise — never a code change.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
-REQUIRED_COLUMNS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+# the one definition of the transcripts schema; every other copy derives from it
+TRANSCRIPT_SCHEMA = T.StructType(
+    [
+        T.StructField("conv_id", T.StringType()),
+        T.StructField("turn_idx", T.IntegerType()),
+        T.StructField("role", T.StringType()),
+        T.StructField("text", T.StringType()),
+        T.StructField("tool", T.StringType()),
+        T.StructField("ts", T.TimestampType()),
+    ]
+)
+REQUIRED_COLUMNS = TRANSCRIPT_SCHEMA.fieldNames()
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -25,13 +36,7 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
-TRANSCRIPT_DDL = (
-    "conv_id string, turn_idx int, role string, text string, "
-    "tool string, ts timestamp"
-)
-
-
-def read_jsonl(spark: SparkSession, path: str, schema: str) -> DataFrame:
+def read_jsonl(spark: SparkSession, path: str, schema: T.StructType | str) -> DataFrame:
     """JSONL (one JSON object per line) scan with an EXPLICIT schema —
     never ``inferSchema``, which would read the whole corpus once just to
     guess types before reading it again. Spark's json source splits and
@@ -43,13 +48,11 @@ def read_jsonl(spark: SparkSession, path: str, schema: str) -> DataFrame:
     return spark.read.schema(schema).json(path)
 
 
-def read_csv(
-    spark: SparkSession, path: str, schema: str, header: bool = True
-) -> DataFrame:
-    """CSV scan with an explicit schema (same no-inference rule). Quoting/
-    escaping follow Spark's writer defaults, so Spark-written CSV
-    round-trips exactly."""
-    return spark.read.option("header", header).schema(schema).csv(path)
+def read_csv(spark: SparkSession, path: str, schema: T.StructType | str) -> DataFrame:
+    """CSV scan of files with a header line, with an explicit schema (same
+    no-inference rule). Quoting/escaping follow Spark's writer defaults,
+    so Spark-written CSV round-trips exactly."""
+    return spark.read.option("header", True).schema(schema).csv(path)
 
 
 def read_orc(spark: SparkSession, path: str, schema: str) -> DataFrame:
@@ -66,9 +69,9 @@ def read_transcripts(spark: SparkSession, location: str) -> DataFrame:
     reference's own ingest is CSV, ``work_order_extractor.py:976-996``).
     Validates the mandated schema either way."""
     if location.endswith((".jsonl", ".json")) or location.endswith(".jsonl/"):
-        df = read_jsonl(spark, location, TRANSCRIPT_DDL)
+        df = read_jsonl(spark, location, TRANSCRIPT_SCHEMA)
     elif location.endswith(".csv"):
-        df = read_csv(spark, location, TRANSCRIPT_DDL)
+        df = read_csv(spark, location, TRANSCRIPT_SCHEMA)
     elif "/" not in location and iceberg_available(spark):
         df = spark.read.format("iceberg").table(location)
     else:

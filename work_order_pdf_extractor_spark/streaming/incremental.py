@@ -25,21 +25,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-import pyspark.sql.types as T
-
 from ..core.pdfparse import DEFAULT_CROP
 from ..plans.pipeline import run_pipeline
-
-TRANSCRIPT_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("role", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("tool", T.StringType()),
-        T.StructField("ts", T.TimestampType()),
-    ]
-)
+from ..sources.transcripts import TRANSCRIPT_SCHEMA
 
 
 def _run_available_now(
@@ -100,9 +88,9 @@ def run_incremental(
     duplicates.
     """
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        result = run_pipeline(
-            batch_df, reference_orders, crop=crop, salt=False
-        ).withColumn("batch_id", F.lit(batch_id))
+        result = run_pipeline(batch_df, reference_orders, crop=crop).withColumn(
+            "batch_id", F.lit(batch_id)
+        )
         (
             result.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

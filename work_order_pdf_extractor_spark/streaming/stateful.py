@@ -33,17 +33,10 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 import pyspark.sql.types as T
 
-from .incremental import TRANSCRIPT_SCHEMA, _run_available_now
+from ..sources.transcripts import TRANSCRIPT_SCHEMA
+from .incremental import _run_available_now
 
-OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("role", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("tool", T.StringType()),
-    ]
-)
+OUTPUT_SCHEMA = T.StructType([f for f in TRANSCRIPT_SCHEMA.fields if f.name != "ts"])
 
 STATE_SCHEMA = T.StructType(
     [T.StructField("seen", T.ArrayType(T.IntegerType()))]
@@ -62,7 +55,7 @@ def _dedup_group(
         fresh = pdf[~pdf["turn_idx"].isin(seen) & ~pdf["turn_idx"].duplicated()]
         seen.update(int(t) for t in fresh["turn_idx"])
         if len(fresh):
-            yield fresh[["conv_id", "turn_idx", "role", "text", "tool"]]
+            yield fresh[OUTPUT_SCHEMA.fieldNames()]
     state.update((sorted(seen),))
 
 

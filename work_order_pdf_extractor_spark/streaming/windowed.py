@@ -19,7 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .incremental import TRANSCRIPT_SCHEMA, _run_available_now
+from ..sources.transcripts import TRANSCRIPT_SCHEMA
+from .incremental import _run_available_now
 
 
 def turns_per_window(
