@@ -6,6 +6,9 @@ from __future__ import annotations
 
 import base64
 import random
+import zlib
+
+import pytest
 
 from work_order_pdf_extractor_spark import fixtures
 from work_order_pdf_extractor_spark.core import pdfparse
@@ -101,3 +104,26 @@ def test_mutated_payloads_become_status_rows():
         statuses[tool][status] = statuses[tool].get(status, 0) + 1
     assert set(statuses["pdf_reader"]) == {STATUS_OK, STATUS_FAILED}, statuses
     assert set(statuses["browser"]) == {STATUS_OK}, statuses
+
+
+def test_flate_bomb_becomes_status_row():
+    """A ~100 KB Flate stream that inflates to 100 MB of blanks is refused
+    at the inflation bound: ``parse_pdf`` raises, ``extract_turn`` reports
+    ``extraction_failed``, and neither holds the inflated stream."""
+    deflate = zlib.compressobj(9)
+    bomb = b"".join(deflate.compress(b" " * (1 << 20)) for _ in range(100)) + deflate.flush()
+    assert 90_000 < len(bomb) < 110_000
+    data = pdfparse.build_pdf([[("text", 40, 760, 10, "Work Order No. : 22809891")]])
+    start = data.index(b"stream\n") + len(b"stream\n")
+    end = data.index(b"\nendstream", start)
+    length = b"/Length %d" % (end - start)
+    data = (
+        data[:start].replace(length, b"/Length %d /Filter /FlateDecode" % len(bomb))
+        + bomb
+        + data[end:]
+    )
+    with pytest.raises(pdfparse.PdfParseError, match="inflates past"):
+        pdfparse.parse_pdf(data)
+    with deadline(2.0):
+        row = extract_turn(base64.b64encode(data).decode(), "pdf_reader")
+    assert row["status"] == STATUS_FAILED

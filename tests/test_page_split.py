@@ -6,8 +6,10 @@ from __future__ import annotations
 import base64
 
 import pandas as pd
+import pytest
 
 from work_order_pdf_extractor_spark.core import pdfparse
+from work_order_pdf_extractor_spark.core.extractor import STATUS_OK, extract_turn
 from work_order_pdf_extractor_spark.operators.extract import split_pdf_pages
 
 
@@ -39,3 +41,30 @@ def test_page_split_explodes_in_order(spark):
     assert list(three.page_name) == [f"c1_0_page_{i:03d}.pdf" for i in range(1, 4)]
     assert out[out.turn_idx == 1].page_text.iloc[0] == "solo page"
 
+
+
+def test_extract_turn_reads_page_one_only(spark):
+    """A page-2 content stream that does not lex leaves ``extract_turn``
+    ``ok`` with page 1's text; ``split_pdf_pages``, which parses every
+    page, still gives that turn no page rows."""
+    data = pdfparse.build_pdf(
+        [
+            [("text", 40, 760, 10, "Work Order No. : 22809891")],
+            [("text", 40, 760, 10, "BROKEN")],
+        ]
+    )
+    data = data.replace(b"(BROKEN) Tj", b"(BROKEN  Tj")  # unterminated string
+    with pytest.raises(pdfparse.PdfParseError, match="unterminated string"):
+        pdfparse.parse_pdf(data)
+    payload = base64.b64encode(data).decode()
+    row = extract_turn(payload, "pdf_reader")
+    assert row["status"] == STATUS_OK
+    assert row["extracted_text"] == "Work Order No. : 22809891"
+    assert row["work_order_number"] == "22809891"
+    df = spark.createDataFrame(
+        pd.DataFrame(
+            [("c1", 0, "tool", payload, "pdf_reader", pd.Timestamp("2026-01-01"))],
+            columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"],
+        )
+    )
+    assert split_pdf_pages(df).count() == 0

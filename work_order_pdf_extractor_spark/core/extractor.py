@@ -8,11 +8,11 @@ test suite then exercises (ordering, partitioning, skew, resume).
 
 Routing mirrors the fixture payload families (FIXTURES.md §2):
 
-- ``tool == 'pdf_reader'`` → base64 PDF → content-stream tokenizer → page-1
-  region filter (the reference processes page 1 only,
-  ``work_order_extractor.py:1125``, and crops the configured region,
-  ``:1378-1388``) → canonical line assembly → anchored-regex fields with
-  line bboxes.
+- ``tool == 'pdf_reader'`` → base64 PDF → page tree → page 1's content
+  stream tokenized (the reference processes page 1 only,
+  ``work_order_extractor.py:1125``; later pages are never read) → region
+  filter (the reference's crop, ``:1378-1388``) → canonical line assembly →
+  anchored-regex fields with line bboxes.
 - ``tool == 'browser'`` → Boilerpipe-style main-content extraction → fields.
 - otherwise → plain text: fenced-JSON fields if present (``:1663-1677``),
   else regex fields.
@@ -21,6 +21,7 @@ Routing mirrors the fixture payload families (FIXTURES.md §2):
 from __future__ import annotations
 
 import base64
+import bisect
 import datetime as _dt
 
 from . import fields as F
@@ -30,29 +31,37 @@ STATUS_OK = "ok"
 STATUS_FAILED = "extraction_failed"
 
 
-def parse_pdf_payload(text: str) -> list[dict] | None:
-    """Pages of a base64-encoded PDF payload (:func:`pdfparse.parse_pdf`),
-    or ``None`` when the payload does not decode or parse."""
+def _parse_payload(parse, text: str):
+    """``parse`` applied to the bytes of a base64-encoded PDF payload, or
+    ``None`` when the payload does not decode or parse."""
     try:
-        return pdfparse.parse_pdf(base64.b64decode(text.strip(), validate=True))
+        return parse(base64.b64decode(text.strip(), validate=True))
     except ValueError:  # binascii.Error and PdfParseError are ValueErrors
         return None
+
+
+def parse_pdf_payload(text: str) -> list[dict] | None:
+    """Every page of a base64-encoded PDF payload
+    (:func:`pdfparse.parse_pdf`), or ``None``."""
+    return _parse_payload(pdfparse.parse_pdf, text)
 
 
 def _with_bboxes(spans: list[dict], lines: list[dict]) -> list[dict]:
     """Attach to each span the bbox of the line holding its start offset,
     ``lines`` joined with '\\n' being the text the spans index; ``None``
     where no line holds it (every span of a turn without lines)."""
+    starts = []  # offset of each line in the joined text
+    off = 0
+    for ln in lines:
+        starts.append(off)
+        off += len(ln["text"]) + 1  # '\n'
     out = []
     for span in spans:
         box = (None, None, None, None)
-        off = 0
-        for ln in lines:
-            end = off + len(ln["text"])
-            if off <= span["start"] < end:
-                box = (ln["x0"], ln["y0"], ln["x1"], ln["y1"])
-                break
-            off = end + 1  # '\n'
+        i = bisect.bisect_right(starts, span["start"]) - 1
+        if i >= 0 and span["start"] < starts[i] + len(lines[i]["text"]):
+            ln = lines[i]
+            box = (ln["x0"], ln["y0"], ln["x1"], ln["y1"])
         out.append({**span, "x0": box[0], "y0": box[1], "x1": box[2], "y1": box[3]})
     return out
 
@@ -77,10 +86,10 @@ def extract_turn(
         return _result(None, [], {}, STATUS_FAILED)
     lines: list[dict] = []
     if tool == "pdf_reader":
-        pages = parse_pdf_payload(text)
-        if pages is None:
+        # first-page-only, like the reference (:1125)
+        page = _parse_payload(pdfparse.parse_first_page, text)
+        if page is None:
             return _result(None, [], {}, STATUS_FAILED)
-        page = pages[0]  # first-page-only, like the reference (:1125)
         toks = pdfparse.tokens_in_region(
             page["tokens"], page["width"], page["height"], crop
         )

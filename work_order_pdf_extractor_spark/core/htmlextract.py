@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import html as _htmlmod
 import re
+from itertools import chain
 
 BLOCK_TAGS = {
     "p", "div", "li", "h1", "h2", "h3", "h4", "h5", "h6", "td", "th",
@@ -41,16 +42,14 @@ MIN_CONTENT_WORDS = 8
 # alternative takes the start tag, the body and the matching end tag (or the
 # rest of the page when it never closes) as one match, so nothing inside
 # them is read as markup. A tag ends at the first `>` outside a quoted
-# attribute value. The final empty match at the end of the page makes
-# the text after the last tag go through the same loop body as text between
-# tags.
+# attribute value. Every alternative starts with `<`, so the scan skips
+# text between tags without trying an alternative at each character.
 _MARKUP_RE = re.compile(
     r"<!--.*?-->|<!(?:[^>]*)>"
     r"|<(?i:(?P<raw>script|style))(?=[\s/>])[^>]*>"
     r".*?(?:</(?i:(?P=raw))(?=[\s/>])[^>]*>|\Z)"
     r"|<(?P<end>/?)(?P<tag>[a-zA-Z][a-zA-Z0-9]*)"
-    r"(?:\s(?:[^>\"']|\"[^\"]*\"|'[^']*')*?)?/?>"
-    r"|\Z",
+    r"(?:\s(?:[^>\"']|\"[^\"]*\"|'[^']*')*?)?/?>",
     re.DOTALL,
 )
 
@@ -89,9 +88,12 @@ def segment_blocks(html: str) -> list[dict]:
         total_chars = 0
 
     pos = 0
-    for m in _MARKUP_RE.finditer(html):
-        if m.start() > pos and not skip_depth:
-            data = html[pos : m.start()]
+    n_html = len(html)
+    # the page end closes the text after the last tag like one more tag
+    for m in chain(_MARKUP_RE.finditer(html), (None,)):
+        start = n_html if m is None else m.start()
+        if start > pos and not skip_depth:
+            data = html[pos:start]
             if "&" in data:
                 data = _htmlmod.unescape(data)
             text_parts.append(data)
@@ -99,16 +101,18 @@ def segment_blocks(html: str) -> list[dict]:
             total_chars += n
             if a_depth:
                 link_chars += n
+        if m is None:
+            break
         pos = m.end()
         tag = m.group("tag")
-        if tag is None:  # comment, declaration, raw-text element, page end
+        if tag is None:  # comment, declaration, raw-text element
             continue
         tag = tag.lower()
         closing = m.group("end") == "/"
         if tag in SKIP_TAGS:
             skip_depth = max(0, skip_depth - 1) if closing else skip_depth + 1
             continue
-        if tag in BLOCK_TAGS:
+        if tag in BLOCK_TAGS and text_parts:
             flush()
         if tag == "a":
             a_depth = max(0, a_depth - 1) if closing else a_depth + 1

@@ -41,6 +41,13 @@ class PdfParseError(ValueError):
     """Raised when a payload is not a parseable member of the emitted subset."""
 
 
+# Largest stream a FlateDecode filter may inflate to (8 MiB, thousands of
+# times any fixture stream). Flate compresses a run of one byte ~1000:1, so
+# without a bound a 100 KB payload would inflate to ~100 MB inside a worker;
+# past it the payload is a parse error like any other.
+MAX_INFLATED_BYTES = 8 << 20
+
+
 # ---------------------------------------------------------------------------
 # Builder
 # ---------------------------------------------------------------------------
@@ -298,10 +305,15 @@ def _stream_bytes(body: bytes) -> bytes:
     if len(raw) < length:
         raise PdfParseError("truncated content stream")
     if b"/FlateDecode" in body[:sidx]:
+        inflate = zlib.decompressobj()
         try:
-            raw = zlib.decompress(raw)
+            raw = inflate.decompress(raw, MAX_INFLATED_BYTES + 1)
         except zlib.error as e:
             raise PdfParseError(f"bad Flate stream: {e}") from e
+        if len(raw) > MAX_INFLATED_BYTES:
+            raise PdfParseError(f"Flate stream inflates past {MAX_INFLATED_BYTES} bytes")
+        if not inflate.eof:
+            raise PdfParseError("bad Flate stream: incomplete or truncated stream")
     return raw
 
 
@@ -461,62 +473,32 @@ def _objects_via_xref_stream(data: bytes) -> dict[int, bytes] | None:
     return objs
 
 
-# One-pass lexer: one compiled alternation matched at the current offset,
-# dispatched on the name of the group that matched. Each match first skips
-# whitespace and comments (atomic, so a long blank run before a bad byte
-# cannot backtrack), then takes one token; `end` matches trailing blanks.
-# Literal strings nest, so only their opening `(` is matched here and
-# `_lex_string` reads the body.
+# The content-stream token grammar, one compiled alternation scanned once over
+# the whole stream by `tokenize_content`. Each match first skips whitespace
+# and comments, then takes one token; the alternatives start on disjoint
+# bytes, `end` matches trailing blanks and the last alternative takes any
+# other byte, so the matches tile the stream. Every repeat is possessive:
+# nothing after a run could match what the run gave back, so the engine
+# keeps no backtracking state (and a long blank run before a bad byte
+# cannot backtrack). A literal string without escapes or nested
+# parentheses is matched whole; any other string matches only its opening
+# `(` and `_lex_string` reads the body.
 _TOKEN_RE = re.compile(
-    rb"(?>(?:[ \t\r\n]+|%[^\n]*)*)(?:"
-    rb"(?P<num>[+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?)"
-    rb"|(?P<op>[A-Za-z*'\"]+)"
-    rb"|(?P<str>\()"
-    rb"|/(?P<name>[^ \t\r\n()\[\]<>/%]*)"
-    rb"|(?P<open>\[)"
-    rb"|(?P<close>\])"
-    rb"|(?P<end>\Z))"
+    rb"[ \t\r\n]*+(?:%[^\n]*+[ \t\r\n]*+)*+(?:"
+    rb"([+-]?+(?:\d++\.?\d*+|\.\d++)(?:[eE][+-]?\d++)?+)"
+    rb"|([A-Za-z*'\"]++)"
+    rb"|\(([^\\()]*+)\)"
+    rb"|(\()"
+    rb"|/([^ \t\r\n()\[\]<>/%]*+)"
+    rb"|(\[)"
+    rb"|(\])"
+    rb"|(\Z)"
+    rb"|(.))",
+    re.S,
 )
-
-
-def _lex_content(stream: bytes):
-    """Yield tokens: ('num', float) | ('str', str) | ('name', str) |
-    ('arr', list) | ('op', str). An array holds only strings and numbers;
-    anything else inside one, an unterminated array or a stray ``]``
-    raises :class:`PdfParseError`."""
-    match = _TOKEN_RE.match
-    arr: list | None = None  # the array being collected, if any
-    i, n = 0, len(stream)
-    while i < n:
-        m = match(stream, i)
-        if m is None:
-            raise PdfParseError(f"unexpected byte in content stream at {i}")
-        kind = m.lastgroup
-        i = m.end()
-        if kind == "num":
-            tok = ("num", float(m.group(kind)))
-        elif kind == "str":
-            s, i = _lex_string(stream, i)
-            tok = ("str", s)
-        elif kind == "end":
-            break
-        elif kind == "close":
-            if arr is None:
-                raise PdfParseError("unbalanced ] in content stream")
-            tok, arr = ("arr", arr), None
-        elif arr is not None:
-            raise PdfParseError(f"unexpected {kind} token in TJ array")
-        elif kind == "open":
-            arr = []
-            continue
-        else:  # op or name
-            tok = (kind, m.group(kind).decode("latin-1"))
-        if arr is None:
-            yield tok
-        else:
-            arr.append(tok)
-    if arr is not None:
-        raise PdfParseError("unterminated array in content stream")
+# `m.lastindex` of each alternative above
+_NUM, _OP, _STR, _ESC_STR, _NAME, _OPEN, _CLOSE, _END, _BAD = range(1, 10)
+_KIND_NAMES = {_NAME: "name", _OPEN: "open"}
 
 
 # Literal-string escapes (ISO 32000-1 §7.3.4.2): an octal code of 1-3
@@ -570,79 +552,122 @@ def tokenize_content(stream: bytes) -> list[tuple[str, float, float, float, floa
     """Interpret a content stream's text operators into positioned tokens.
 
     Tracks ``Tf`` (font size), ``Tm`` (absolute line matrix, translation
-    part), ``Td``/``TD`` (relative line moves), ``Tj`` (show string) and
-    ``TJ`` (show array with kerning). Returns
+    part), ``Td``/``TD`` (relative line moves), ``T*``, ``Tj`` (show string)
+    and ``TJ`` (show array with kerning). Returns
     ``(text, x0, y0, x1, y1)`` tuples in PDF user space. The bbox is
     estimated with :data:`CHAR_WIDTH_FACTOR` — positions come from the
     stream, widths from the fixed factor, so results are deterministic.
+
+    One scan of :data:`_TOKEN_RE` feeds this loop. Only the last two
+    operands are kept, numbers as their match until an operator reads
+    them, and every operator, known or not, drops its operands (PDF
+    semantics). An array holds only strings and numbers; anything else
+    inside one, an unterminated array, a stray ``]``, an unterminated
+    string or a byte outside the grammar raises :class:`PdfParseError`.
     """
     tokens: list[tuple[str, float, float, float, float]] = []
-    stack: list = []
     size = 12.0
     lx = ly = 0.0   # text line origin
     cx = 0.0        # current x within line
     in_text = False
-
-    def show(parts: list) -> None:
-        """Emit one token for a Tj string or a TJ array; numbers in the
-        array are kerning, in thousandths of text space."""
-        nonlocal cx
-        x = lx + cx
-        buf: list[str] = []
-        for kind, v in parts:
-            if kind == "str":
-                buf.append(v)
-                cx += CHAR_WIDTH_FACTOR * size * len(v)
+    k1 = k2 = 0     # kinds of the last and second-to-last operand (0: none)
+    v1 = v2 = None  # their values: a match (number), str, or list (array)
+    arr: list | None = None  # the array being collected, if any
+    pos: int | None = 0
+    while pos is not None:  # a new scan only after an escaped string
+        scan, pos = _TOKEN_RE.finditer(stream, pos), None
+        for m in scan:
+            kind = m.lastindex
+            if kind == _NUM:
+                if arr is None:
+                    k2, v2, k1, v1 = k1, v1, _NUM, m
+                else:
+                    arr.append((_NUM, m))
+                continue
+            if kind == _OP:
+                if arr is not None:
+                    raise PdfParseError("unexpected op token in TJ array")
+                op = m.group(_OP)
+                if op == b"Tj":
+                    if in_text and k1 == _STR and v1:
+                        x = lx + cx
+                        w = CHAR_WIDTH_FACTOR * size * len(v1)
+                        tokens.append((v1, x, ly, x + w, ly + size))
+                        cx += w
+                elif op == b"Tm":
+                    if k1 == _NUM and k2 == _NUM:
+                        lx, ly = float(v2.group(_NUM)), float(v1.group(_NUM))
+                        cx = 0.0
+                elif op == b"Tf":
+                    if k1 == _NUM:
+                        size = float(v1.group(_NUM))
+                elif op == b"TJ":
+                    if in_text and k1 == _CLOSE:
+                        # numbers in the array are kerning, in thousandths
+                        # of text space
+                        x = lx + cx
+                        buf: list[str] = []
+                        for k, v in v1:
+                            if k == _NUM:
+                                cx -= float(v.group(_NUM)) / 1000.0 * size
+                            else:
+                                buf.append(v)
+                                cx += CHAR_WIDTH_FACTOR * size * len(v)
+                        s = "".join(buf)
+                        if s:
+                            tokens.append(
+                                (s, x, ly, x + CHAR_WIDTH_FACTOR * size * len(s), ly + size)
+                            )
+                elif op == b"BT":
+                    in_text = True
+                    lx = ly = cx = 0.0
+                elif op == b"ET":
+                    in_text = False
+                elif op == b"Td" or op == b"TD":
+                    if k1 == _NUM and k2 == _NUM:
+                        lx += float(v2.group(_NUM))
+                        ly += float(v1.group(_NUM))
+                        cx = 0.0
+                elif op == b"T*":
+                    ly -= size * 1.2
+                    cx = 0.0
+                k1 = k2 = 0
+                continue
+            elif kind == _STR:
+                val = m.group(_STR).decode("latin-1")
+            elif kind == _ESC_STR:
+                val, pos = _lex_string(stream, m.end())
+                kind = _STR
+            elif kind == _CLOSE:
+                if arr is None:
+                    raise PdfParseError("unbalanced ] in content stream")
+                val, arr = arr, None
+            elif kind == _END:
+                break
+            elif kind == _BAD:
+                raise PdfParseError(f"unexpected byte in content stream at {m.start()}")
+            elif arr is not None:
+                raise PdfParseError(f"unexpected {_KIND_NAMES[kind]} token in TJ array")
+            elif kind == _OPEN:
+                arr = []
+                continue
+            else:  # a name: only its kind matters
+                val = None
+            if arr is None:
+                k2, v2, k1, v1 = k1, v1, kind, val
             else:
-                cx -= v / 1000.0 * size
-        s = "".join(buf)
-        if s:
-            tokens.append((s, x, ly, x + CHAR_WIDTH_FACTOR * size * len(s), ly + size))
-
-    for tok in _lex_content(stream):
-        kind = tok[0]
-        if kind != "op":
-            stack.append(tok)
-            continue
-        op = tok[1]
-        if op == "BT":
-            in_text = True
-            lx = ly = cx = 0.0
-        elif op == "ET":
-            in_text = False
-        elif op == "Tf":
-            if stack and stack[-1][0] == "num":
-                size = stack[-1][1]
-        elif op == "Tm":
-            if len(stack) >= 2 and stack[-1][0] == "num" and stack[-2][0] == "num":
-                lx, ly = stack[-2][1], stack[-1][1]
-                cx = 0.0
-        elif op in ("Td", "TD"):
-            if len(stack) >= 2 and stack[-1][0] == "num" and stack[-2][0] == "num":
-                lx += stack[-2][1]
-                ly += stack[-1][1]
-                cx = 0.0
-        elif op == "T*":
-            ly -= size * 1.2
-            cx = 0.0
-        elif op == "Tj":
-            if in_text and stack and stack[-1][0] == "str":
-                show(stack[-1:])
-        elif op == "TJ":
-            if in_text and stack and stack[-1][0] == "arr":
-                show(stack[-1][1])
-        # every operator, known or not, consumes its operands (PDF semantics)
-        stack.clear()
+                arr.append((kind, val))
+            if pos is not None:  # resume the scan after the escaped string
+                break
+    if arr is not None:
+        raise PdfParseError("unterminated array in content stream")
     return tokens
 
 
-def parse_pdf(data: bytes) -> list[dict]:
-    """Parse a PDF of the emitted subset into pages of positioned tokens.
-
-    Returns ``[{"width": w, "height": h, "tokens": [(text,x0,y0,x1,y1),...]}]``
-    in document page order (the /Kids array order). Raises
-    :class:`PdfParseError` for anything outside the subset or truncated.
-    """
+def _page_tree(data: bytes) -> tuple[dict[int, bytes], list[int]]:
+    """The objects of a PDF and its page object numbers in document order
+    (the /Kids array order). Raises :class:`PdfParseError` for a payload
+    with no pages."""
     if not data.startswith(b"%PDF-"):
         raise PdfParseError("missing %PDF header")
     # PDF 1.5+ files resolve through the cross-reference stream (the form
@@ -675,23 +700,42 @@ def parse_pdf(data: bytes) -> list[dict]:
         )
     if not page_nums:
         raise PdfParseError("no pages found")
-    pages: list[dict] = []
-    for pn in page_nums:
-        body = objs.get(pn)
-        if body is None:
-            raise PdfParseError(f"missing page object {pn}")
-        mb = _MEDIABOX_RE.search(body)
-        w, h = (float(mb.group(3)), float(mb.group(4))) if mb else (612.0, 792.0)
-        cm = _CONTENTS_RE.search(body)
-        if cm is None:
-            pages.append({"width": w, "height": h, "tokens": []})
-            continue
-        cont = objs.get(int(cm.group(1)))
-        if cont is None:
-            raise PdfParseError(f"missing contents object {cm.group(1)!r}")
-        stream = _stream_bytes(cont)
-        pages.append({"width": w, "height": h, "tokens": tokenize_content(stream)})
-    return pages
+    return objs, page_nums
+
+
+def _page(objs: dict[int, bytes], pn: int) -> dict:
+    """Size and positioned tokens of page object ``pn``."""
+    body = objs.get(pn)
+    if body is None:
+        raise PdfParseError(f"missing page object {pn}")
+    mb = _MEDIABOX_RE.search(body)
+    w, h = (float(mb.group(3)), float(mb.group(4))) if mb else (612.0, 792.0)
+    cm = _CONTENTS_RE.search(body)
+    if cm is None:
+        return {"width": w, "height": h, "tokens": []}
+    cont = objs.get(int(cm.group(1)))
+    if cont is None:
+        raise PdfParseError(f"missing contents object {cm.group(1)!r}")
+    return {"width": w, "height": h, "tokens": tokenize_content(_stream_bytes(cont))}
+
+
+def parse_pdf(data: bytes) -> list[dict]:
+    """Parse a PDF of the emitted subset into pages of positioned tokens.
+
+    Returns ``[{"width": w, "height": h, "tokens": [(text,x0,y0,x1,y1),...]}]``
+    in document page order (the /Kids array order). Raises
+    :class:`PdfParseError` for anything outside the subset or truncated.
+    """
+    objs, page_nums = _page_tree(data)
+    return [_page(objs, pn) for pn in page_nums]
+
+
+def parse_first_page(data: bytes) -> dict:
+    """Page 1 of :func:`parse_pdf`, without reading any later page: a
+    later page's missing objects or unreadable content stream raise
+    nothing here."""
+    objs, page_nums = _page_tree(data)
+    return _page(objs, page_nums[0])
 
 
 def tokens_in_region(

@@ -62,12 +62,16 @@ def assemble_lines(tokens: list[tuple[str, float, float, float, float]]) -> list
 
 
 def _close_line(toks: list[tuple[str, float, float, float, float]]) -> dict:
+    if len(toks) == 1:  # one shown string per line is the common layout
+        text, x0, y0, x1, y1 = toks[0]
+        return {"text": text, "x0": x0, "y0": y0, "x1": x1, "y1": y1}
+    texts, x0s, y0s, x1s, y1s = zip(*toks)
     return {
-        "text": " ".join(t[0] for t in toks),
-        "x0": min(t[1] for t in toks),
-        "y0": min(t[2] for t in toks),
-        "x1": max(t[3] for t in toks),
-        "y1": max(t[4] for t in toks),
+        "text": " ".join(texts),
+        "x0": min(x0s),
+        "y0": min(y0s),
+        "x1": max(x1s),
+        "y1": max(y1s),
     }
 
 

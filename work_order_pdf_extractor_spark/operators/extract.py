@@ -5,8 +5,10 @@ The reference fuses rasterize→crop→GPT per record across a 5-thread pool
 stage is ONE vectorized ``mapInPandas`` pass: Arrow record batches stream
 into Python once, ``core.extractor.extract_turn`` (pure, deterministic)
 runs per row inside the batch, and results stream back as Arrow — no
-per-row Python UDF, no serialization per field, and the crop predicate
-runs inside the tokenizer (projection pushdown into the UDF, SURVEY §4 O1).
+per-row Python UDF, no serialization per field. Only page 1 is tokenized,
+and the crop predicate keeps page 1's tokens inside the box before line
+assembly, in the same Python pass (projection pushdown into the UDF,
+SURVEY §4 O1).
 """
 
 from __future__ import annotations
