@@ -29,8 +29,9 @@ def _content_streams(data: bytes) -> list[bytes]:
     """The decoded page content streams of a PDF built by ``build_pdf``
     (every stream object that is neither an object stream nor an xref
     stream)."""
+    budget = pdfparse._InflateBudget()
     return [
-        pdfparse._stream_bytes(body)
+        pdfparse._stream_bytes(body, budget)
         for body in pdfparse._split_objects(data).values()
         if b"stream" in body and b"/ObjStm" not in body and b"/XRef" not in body
     ]

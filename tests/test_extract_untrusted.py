@@ -127,3 +127,32 @@ def test_flate_bomb_becomes_status_row():
     with deadline(2.0):
         row = extract_turn(base64.b64encode(data).decode(), "pdf_reader")
     assert row["status"] == STATUS_FAILED
+
+
+def _objstm(num: int, inflated: int) -> bytes:
+    """An object stream ``num`` whose Flate data inflates to ``inflated``
+    bytes: one object, ``num + 1000``, of non-blank filler."""
+    head = b"%d 0 " % (num + 1000)
+    comp = zlib.compress(head + b"1" * (inflated - len(head)), 9)
+    return (
+        b"%d 0 obj\n<< /Type /ObjStm /N 1 /First %d /Length %d /Filter /FlateDecode >>\n"
+        b"stream\n" % (num, len(head), len(comp))
+        + comp
+        + b"\nendstream\nendobj\n"
+    )
+
+
+def test_flate_bound_counts_every_stream_of_a_payload():
+    """The inflation bound is one budget per payload: an object stream that
+    inflates to exactly the bound parses, but twelve of them (~100 KB of
+    payload, ~100 MB inflated) are refused like a single bomb stream."""
+    bound = pdfparse.MAX_INFLATED_BYTES
+    data = pdfparse.build_pdf([[("text", 40, 760, 10, "Work Order No. : 22809891")]])
+    assert pdfparse.parse_pdf(data + _objstm(900, bound))[0]["tokens"]
+    bomb = data + b"".join(_objstm(900 + i, bound) for i in range(12))
+    assert 90_000 < len(bomb) < 130_000
+    with pytest.raises(pdfparse.PdfParseError, match="inflates past"):
+        pdfparse.parse_pdf(bomb)
+    with deadline(2.0):
+        row = extract_turn(base64.b64encode(bomb).decode(), "pdf_reader")
+    assert row["status"] == STATUS_FAILED

@@ -38,7 +38,7 @@ def test_xref_stream_resolution_is_real():
     # object: packed Catalog/Pages/Page/Font via type-2 entries, content
     # streams + ObjStm + XRef via recorded type-1 byte offsets
     modern = P.build_pdf([OPS1], xref_stream=True)
-    objs = P._objects_via_xref_stream(modern)
+    objs = P._objects_via_xref_stream(modern, P._InflateBudget())
     assert objs is not None
     assert {1, 2, 3, 4, 5} <= set(objs)  # catalog, pages, page, contents, font
     assert any(b"/Type /Catalog" in b for b in objs.values())
@@ -46,7 +46,7 @@ def test_xref_stream_resolution_is_real():
 
 
 def test_classic_file_returns_none_from_xref_stream_path():
-    assert P._objects_via_xref_stream(P.build_pdf([OPS1])) is None
+    assert P._objects_via_xref_stream(P.build_pdf([OPS1]), P._InflateBudget()) is None
 
 
 def test_recorded_offsets_match_reality():
@@ -80,7 +80,7 @@ def test_objstm_expansion_from_scan_path():
     # ...until the ObjStm is expanded
     for body in list(objs.values()):
         if b"/Type /ObjStm" in body:
-            P._expand_objstm(body, objs)
+            P._expand_objstm(body, objs, P._InflateBudget())
     assert any(b"/Type /Catalog" in b for b in objs.values())
 
 

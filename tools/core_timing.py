@@ -1,22 +1,21 @@
 #!/usr/bin/env python
-"""In-process ``extract_turn`` cost per payload family, best of N passes.
+"""In-process ``extract_turn`` cost per payload family, best of 5 passes.
 
-Generates a fixture (``fixtures.gen_transcripts``), runs ``extract_turn``
-over every turn of each family (``pdf`` = ``pdf_reader``, ``html`` =
-``browser``, ``plain`` = the rest) N times in this process, and prints one
-JSON line: the best pass's µs per turn for each family, the turn counts,
-the ``extraction_failed`` count and a sha256 over every output row. Two
-checkouts whose ``outputs_sha256`` agree extract the fixture identically.
+Generates the seed-1 ``small`` fixture (``fixtures.gen_transcripts``), runs
+``extract_turn`` over every turn of each family (``pdf`` = ``pdf_reader``,
+``html`` = ``browser``, ``plain`` = the rest) 5 times in this process, and
+prints one JSON line: the best pass's µs per turn for each family, the turn
+counts, the ``extraction_failed`` count and a sha256 over every output row.
+Two checkouts whose ``outputs_sha256`` agree extract the fixture identically.
 One pass times the whole family, so the figure is far steadier than a
 single timed call per turn; compare two checkouts by running them
 alternately, several times each.
 
-Usage: python tools/core_timing.py [--scale small] [--seed 1] [--passes 5]
+Usage: python tools/core_timing.py
 """
 
 from __future__ import annotations
 
-import argparse
 import hashlib
 import json
 import os
@@ -26,25 +25,21 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 FAMILIES = {"pdf": "pdf_reader", "html": "browser"}
+SCALE, SEED, PASSES = "small", 1, 5
 
 
 def main() -> None:
     from work_order_pdf_extractor_spark import fixtures
     from work_order_pdf_extractor_spark.core.extractor import STATUS_FAILED, extract_turn
 
-    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--scale", default="small")
-    ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--passes", type=int, default=5)
-    args = ap.parse_args()
-    turns = fixtures.gen_transcripts(args.scale, seed=args.seed)
+    turns = fixtures.gen_transcripts(SCALE, seed=SEED)
     fam = turns["tool"].map({t: f for f, t in FAMILIES.items()}).fillna("plain")
-    out: dict = {"scale": args.scale, "seed": args.seed, "passes": args.passes}
+    out: dict = {"scale": SCALE, "seed": SEED, "passes": PASSES}
     for f in ("pdf", "html", "plain"):
         rows = turns.loc[fam == f]
         pairs = list(zip(rows["text"], rows["tool"]))
         best = float("inf")
-        for _ in range(args.passes):
+        for _ in range(PASSES):
             t0 = time.perf_counter()
             for text, tool in pairs:
                 extract_turn(text, tool)

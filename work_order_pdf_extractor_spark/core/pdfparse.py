@@ -41,11 +41,22 @@ class PdfParseError(ValueError):
     """Raised when a payload is not a parseable member of the emitted subset."""
 
 
-# Largest stream a FlateDecode filter may inflate to (8 MiB, thousands of
-# times any fixture stream). Flate compresses a run of one byte ~1000:1, so
-# without a bound a 100 KB payload would inflate to ~100 MB inside a worker;
-# past it the payload is a parse error like any other.
+# Most bytes the FlateDecode streams of one payload may inflate to, all
+# together (8 MiB, thousands of times any fixture PDF). Flate compresses a run
+# of one byte ~1000:1, so without a bound a 100 KB payload would inflate to
+# ~100 MB inside a worker, whether as one stream or as many; past it the
+# payload is a parse error like any other.
 MAX_INFLATED_BYTES = 8 << 20
+
+
+class _InflateBudget:
+    """What is left of one payload's :data:`MAX_INFLATED_BYTES`. One parse
+    makes one and passes it to every :func:`_stream_bytes` call."""
+
+    __slots__ = ("left",)
+
+    def __init__(self) -> None:
+        self.left = MAX_INFLATED_BYTES
 
 
 # ---------------------------------------------------------------------------
@@ -288,7 +299,7 @@ def _split_objects(data: bytes) -> dict[int, bytes]:
     return objs
 
 
-def _stream_bytes(body: bytes) -> bytes:
+def _stream_bytes(body: bytes, budget: _InflateBudget) -> bytes:
     lm = _LENGTH_RE.search(body)
     if lm is None:
         raise PdfParseError("content object has no /Length")
@@ -307,13 +318,17 @@ def _stream_bytes(body: bytes) -> bytes:
     if b"/FlateDecode" in body[:sidx]:
         inflate = zlib.decompressobj()
         try:
-            raw = inflate.decompress(raw, MAX_INFLATED_BYTES + 1)
+            raw = inflate.decompress(raw, budget.left + 1)
         except zlib.error as e:
             raise PdfParseError(f"bad Flate stream: {e}") from e
-        if len(raw) > MAX_INFLATED_BYTES:
-            raise PdfParseError(f"Flate stream inflates past {MAX_INFLATED_BYTES} bytes")
+        if len(raw) > budget.left:
+            budget.left = 0  # spent: the xref-damage fallback inflates nothing more
+            raise PdfParseError(
+                f"Flate data inflates past {MAX_INFLATED_BYTES} bytes in one payload"
+            )
         if not inflate.eof:
             raise PdfParseError("bad Flate stream: incomplete or truncated stream")
+        budget.left -= len(raw)
     return raw
 
 
@@ -345,7 +360,7 @@ def _obj_at(data: bytes, off: int) -> tuple[int, bytes] | None:
     return int(m.group(1)), data[start:end]
 
 
-def _parse_objstm(body: bytes) -> dict[int, bytes]:
+def _parse_objstm(body: bytes, budget: _InflateBudget) -> dict[int, bytes]:
     """Parse a ``/Type /ObjStm`` object stream into ``{num: body}``:
     ``/N`` pairs of ``num offset`` in the header, object bodies
     concatenated after ``/First``."""
@@ -356,7 +371,7 @@ def _parse_objstm(body: bytes) -> dict[int, bytes]:
     if nm is None or fm is None:
         raise PdfParseError("ObjStm missing /N or /First")
     n, first = int(nm.group(1)), int(fm.group(1))
-    raw = _stream_bytes(body)
+    raw = _stream_bytes(body, budget)
     nums = raw[:first].split()
     if len(nums) < 2 * n:
         raise PdfParseError("ObjStm pair header shorter than /N")
@@ -371,14 +386,16 @@ def _parse_objstm(body: bytes) -> dict[int, bytes]:
     return out
 
 
-def _expand_objstm(body: bytes, objs: dict[int, bytes]) -> None:
+def _expand_objstm(body: bytes, objs: dict[int, bytes], budget: _InflateBudget) -> None:
     """Unpack an object stream into ``objs``. Objects already present
     (from a newer xref section) are not overwritten."""
-    for num, b in _parse_objstm(body).items():
+    for num, b in _parse_objstm(body, budget).items():
         objs.setdefault(num, b)
 
 
-def _objects_via_xref_stream(data: bytes) -> dict[int, bytes] | None:
+def _objects_via_xref_stream(
+    data: bytes, budget: _InflateBudget
+) -> dict[int, bytes] | None:
     """Resolve objects through a PDF 1.5 CROSS-REFERENCE STREAM: follow
     ``startxref`` to the ``/Type /XRef`` object, decode the ``/W``-column
     binary entries (type 1 = byte offset, type 2 = (object stream,
@@ -431,7 +448,7 @@ def _objects_via_xref_stream(data: bytes) -> dict[int, bytes] | None:
             ranges = list(zip(ix[0::2], ix[1::2]))
         else:
             ranges = [(0, size)]
-        raw = _stream_bytes(body)
+        raw = _stream_bytes(body, budget)
         rowlen = w1 + w2 + w3
         pos = 0
         for start, count in ranges:
@@ -466,7 +483,7 @@ def _objects_via_xref_stream(data: bytes) -> dict[int, bytes] | None:
         if stm is None:
             raise PdfParseError(f"type-2 entry references missing ObjStm {sn}")
         if sn not in parsed_stms:
-            parsed_stms[sn] = _parse_objstm(stm)
+            parsed_stms[sn] = _parse_objstm(stm, budget)
         if num not in parsed_stms[sn]:
             raise PdfParseError(f"ObjStm {sn} does not contain object {num}")
         objs[num] = parsed_stms[sn][num]
@@ -664,7 +681,9 @@ def tokenize_content(stream: bytes) -> list[tuple[str, float, float, float, floa
     return tokens
 
 
-def _page_tree(data: bytes) -> tuple[dict[int, bytes], list[int]]:
+def _page_tree(
+    data: bytes, budget: _InflateBudget
+) -> tuple[dict[int, bytes], list[int]]:
     """The objects of a PDF and its page object numbers in document order
     (the /Kids array order). Raises :class:`PdfParseError` for a payload
     with no pages."""
@@ -674,7 +693,7 @@ def _page_tree(data: bytes) -> tuple[dict[int, bytes], list[int]]:
     # most post-2004 PDFs use); classic files — or files whose xref is
     # damaged — fall back to the xref-independent object scan.
     try:
-        objs = _objects_via_xref_stream(data)
+        objs = _objects_via_xref_stream(data, budget)
     except PdfParseError:
         objs = None
     if objs is None:
@@ -683,7 +702,7 @@ def _page_tree(data: bytes) -> tuple[dict[int, bytes], list[int]]:
     # Catalog/Pages/Page objects live inside them, invisible to _OBJ_RE).
     for body in list(objs.values()):
         if b"/Type /ObjStm" in body or b"/Type/ObjStm" in body:
-            _expand_objstm(body, objs)
+            _expand_objstm(body, objs, budget)
     # Find the Pages node (has /Kids); fall back to scanning for /Type /Page.
     page_nums: list[int] = []
     for body in objs.values():
@@ -703,7 +722,7 @@ def _page_tree(data: bytes) -> tuple[dict[int, bytes], list[int]]:
     return objs, page_nums
 
 
-def _page(objs: dict[int, bytes], pn: int) -> dict:
+def _page(objs: dict[int, bytes], pn: int, budget: _InflateBudget) -> dict:
     """Size and positioned tokens of page object ``pn``."""
     body = objs.get(pn)
     if body is None:
@@ -716,7 +735,8 @@ def _page(objs: dict[int, bytes], pn: int) -> dict:
     cont = objs.get(int(cm.group(1)))
     if cont is None:
         raise PdfParseError(f"missing contents object {cm.group(1)!r}")
-    return {"width": w, "height": h, "tokens": tokenize_content(_stream_bytes(cont))}
+    tokens = tokenize_content(_stream_bytes(cont, budget))
+    return {"width": w, "height": h, "tokens": tokens}
 
 
 def parse_pdf(data: bytes) -> list[dict]:
@@ -726,16 +746,18 @@ def parse_pdf(data: bytes) -> list[dict]:
     in document page order (the /Kids array order). Raises
     :class:`PdfParseError` for anything outside the subset or truncated.
     """
-    objs, page_nums = _page_tree(data)
-    return [_page(objs, pn) for pn in page_nums]
+    budget = _InflateBudget()
+    objs, page_nums = _page_tree(data, budget)
+    return [_page(objs, pn, budget) for pn in page_nums]
 
 
 def parse_first_page(data: bytes) -> dict:
     """Page 1 of :func:`parse_pdf`, without reading any later page: a
     later page's missing objects or unreadable content stream raise
     nothing here."""
-    objs, page_nums = _page_tree(data)
-    return _page(objs, page_nums[0])
+    budget = _InflateBudget()
+    objs, page_nums = _page_tree(data, budget)
+    return _page(objs, page_nums[0], budget)
 
 
 def tokens_in_region(

@@ -62,9 +62,6 @@ def assemble_lines(tokens: list[tuple[str, float, float, float, float]]) -> list
 
 
 def _close_line(toks: list[tuple[str, float, float, float, float]]) -> dict:
-    if len(toks) == 1:  # one shown string per line is the common layout
-        text, x0, y0, x1, y1 = toks[0]
-        return {"text": text, "x0": x0, "y0": y0, "x1": x1, "y1": y1}
     texts, x0s, y0s, x1s, y1s = zip(*toks)
     return {
         "text": " ".join(texts),
