@@ -1,12 +1,9 @@
 """Incremental-ingest composition: disposition correctness on a
-hand-built corpus/batch, Bloom-prefilter plan shape, and crash-resumable
-bucket commits (the scale twin of the reference's destructive-rename
-idempotence, work_order_extractor.py:1769-1797)."""
+hand-built corpus/batch, Bloom-prefilter plan shape, and empty inputs (the
+scale twin of the reference's destructive-rename idempotence,
+work_order_extractor.py:1769-1797)."""
 
 from __future__ import annotations
-
-import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -76,48 +73,6 @@ def test_exact_verify_only_joins_maybes(spark, corpus, batch):
     assert "CartesianProduct" not in plan
 
 
-def test_checkpoint_resume_is_idempotent(spark, corpus, batch, tmp_path):
-    out = str(tmp_path / "ingest")
-    s1 = ingest.ingest_with_checkpoint(
-        spark, corpus, batch, out, n_buckets=4, run_id="r1"
-    )
-    assert s1["buckets_done"] > 0 and s1["buckets_skipped"] == 0
-    df1 = spark.read.parquet(os.path.join(out, "data")).toPandas()
-    assert len(df1) == 15
-
-    s2 = ingest.ingest_with_checkpoint(
-        spark, corpus, batch, out, n_buckets=4, run_id="r2"
-    )
-    assert s2["buckets_done"] == 0, "rerun re-dispositioned committed buckets"
-    df2 = spark.read.parquet(os.path.join(out, "data")).toPandas()
-    a = df1.sort_values("doc_id", ignore_index=True)
-    b = df2.sort_values("doc_id", ignore_index=True)
-    assert a.equals(b)
-
-
-def test_checkpoint_resume_after_crash(spark, corpus, batch, tmp_path):
-    out = str(tmp_path / "ingest2")
-    ingest.ingest_with_checkpoint(
-        spark, corpus, batch, out, n_buckets=4, run_id="r1"
-    )
-    dd = os.path.join(out, "data")
-    lost = sorted(os.listdir(dd))[:1]
-    for name in lost:
-        shutil.rmtree(os.path.join(dd, name))
-    for f in list(os.listdir(os.path.join(out, "_lineage"))):
-        if any(
-            f.startswith(f"bucket-{int(n.split('=')[1]):05d}") for n in lost
-        ):
-            os.remove(os.path.join(out, "_lineage", f))
-    s2 = ingest.ingest_with_checkpoint(
-        spark, corpus, batch, out, n_buckets=4, run_id="r2"
-    )
-    assert s2["buckets_done"] == len(lost)
-    df = spark.read.parquet(dd).toPandas()
-    assert len(df) == 15
-    assert set(df[df.disposition == "exact_dup"].doc_id) == set(range(100, 105))
-
-
 def test_empty_batch_is_a_noop(spark, corpus):
     empty = corpus.filter("doc_id < 0")
     out = ingest.incremental_ingest(corpus, empty).collect()
@@ -130,42 +85,3 @@ def test_empty_corpus_marks_everything_new(spark, corpus, batch):
     assert len(rows) == 15
     assert all(r.disposition == "new" for r in rows)
     assert all(not r.bloom_maybe for r in rows)
-
-
-def test_stream_ingest_dispositions_and_replay(spark, corpus, batch, tmp_path):
-    """The streaming twin: batches arriving as files get the same
-    dispositions as the batch job, and re-running over the same input
-    (simulating a foreachBatch replay after a lost checkpoint) rewrites
-    identical partitions instead of duplicating rows."""
-    from work_order_pdf_extractor_spark.streaming import incremental as S
-
-    ind = tmp_path / "stream_in"
-    ind.mkdir()
-    pdf = batch.toPandas()
-    pdf.iloc[:7].to_parquet(str(ind / "b0.parquet"), index=False)
-    pdf.iloc[7:].to_parquet(str(ind / "b1.parquet"), index=False)
-    out, ckpt = str(tmp_path / "sout"), str(tmp_path / "sckpt")
-    S.run_stream_ingest(
-        spark, corpus, str(ind), out, ckpt, max_files_per_batch=1
-    )
-    res = spark.read.parquet(out).toPandas()
-    assert len(res) == 15
-    batch_expect = {
-        r.doc_id: r.disposition
-        for r in __import__(
-            "work_order_pdf_extractor_spark.plans.ingest", fromlist=["ingest"]
-        ).incremental_ingest(corpus, batch).collect()
-    }
-    assert {r.doc_id: r.disposition for _, r in res.iterrows()} == batch_expect
-    assert res.batch_id.nunique() == 2
-
-    # replay: wipe the checkpoint, rerun over the same input — the
-    # dynamic-partition-overwrite sink must leave row counts unchanged
-    import shutil as _sh
-
-    _sh.rmtree(ckpt)
-    S.run_stream_ingest(
-        spark, corpus, str(ind), out, ckpt, max_files_per_batch=1
-    )
-    res2 = spark.read.parquet(out).toPandas()
-    assert len(res2) == 15

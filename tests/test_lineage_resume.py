@@ -6,9 +6,10 @@ import json
 import os
 import shutil
 
+import pandas as pd
 import pytest
 
-from work_order_pdf_extractor_spark.plans import ingest, lineage
+from work_order_pdf_extractor_spark.plans import lineage
 
 
 def _run(spark, transcripts_df, ref_orders_df, out_dir, **kw):
@@ -87,7 +88,7 @@ def test_crash_between_rename_and_lineage_repairs(spark, transcripts_df, ref_ord
 def test_lineage_rows_have_failure_counts(spark, transcripts_df, ref_orders_df, golden_pd, tmp_path):
     out = tmp_path / "ckpt4"
     s = _run(spark, transcripts_df, ref_orders_df, out, run_id="r1")
-    lin = lineage.read_lineage(spark, str(out)).toPandas()
+    lin = pd.DataFrame([json.loads(p.read_text()) for p in out.glob("_lineage/bucket-*.json")])
     assert int(lin.rows_out.sum()) == len(golden_pd)
     assert int(lin.n_failed.sum()) == int((golden_pd.status != "ok").sum())
     # the run's own counters, from observe() on the write job
@@ -144,32 +145,12 @@ def test_resume_with_another_bucket_count_raises(
         assert int(f.read()) == first
 
 
-def _ingest_run(spark, out_dir, run_id):
-    docs = spark.createDataFrame(
-        [(i, f"doc {i} alpha bravo charlie delta {i % 7}") for i in range(40)],
-        "doc_id long, text string",
-    )
-    return ingest.ingest_with_checkpoint(
-        spark, docs.filter("doc_id < 20"), docs, str(out_dir), n_buckets=8,
-        run_id=run_id,
-    )
-
-
-@pytest.mark.parametrize("job", ["extract", "ingest"])
-def test_lineage_leftovers_never_break_resume(
-    spark, transcripts_df, ref_orders_df, tmp_path, job
-):
+def test_lineage_leftovers_never_break_resume(spark, transcripts_df, ref_orders_df, tmp_path):
     """Only lineage FILE NAMES written by the commit protocol and data dirs
     mark a bucket done: a crashed append's ``.tmp``, a stray file and an
     empty lineage file must not make resume raise or miscount."""
     out = tmp_path / "ckpt5"
-
-    def run(run_id):
-        if job == "ingest":
-            return _ingest_run(spark, out, run_id)
-        return _run(spark, transcripts_df, ref_orders_df, out, run_id=run_id)
-
-    run("r1")
+    _run(spark, transcripts_df, ref_orders_df, out, run_id="r1")
     ld, dd = os.path.join(out, "_lineage"), os.path.join(out, "data")
     for b in (3, 5):  # lose both buckets, data and lineage
         shutil.rmtree(os.path.join(dd, f"bucket={b}"), ignore_errors=True)
@@ -184,7 +165,7 @@ def test_lineage_leftovers_never_break_resume(
 
     done = {int(n.split("=")[1]) for n in os.listdir(dd)} | {5}
     assert lineage.completed_buckets(spark, str(out)) == done
-    s2 = run("r2")
+    s2 = _run(spark, transcripts_df, ref_orders_df, out, run_id="r2")
     assert s2["buckets_skipped"] == len(done) and s2["buckets_done"] == 1
     assert os.path.isdir(os.path.join(dd, "bucket=3"))
     assert not os.path.exists(os.path.join(dd, "bucket=5"))

@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import base64
+import math
 
 import pandas as pd
 import pytest
@@ -14,7 +15,9 @@ from work_order_pdf_extractor_spark.operators.extract import split_pdf_pages
 
 
 def _pdf_turn(conv, idx, pages):
-    data = pdfparse.build_pdf(pages)
+    """A pdf_reader turn whose payload is ``pages`` (page ops for
+    ``build_pdf``, or the PDF bytes themselves)."""
+    data = pages if isinstance(pages, bytes) else pdfparse.build_pdf(pages)
     return (conv, idx, "tool", base64.b64encode(data).decode(), "pdf_reader",
             pd.Timestamp("2026-01-01"))
 
@@ -68,3 +71,27 @@ def test_extract_turn_reads_page_one_only(spark):
         )
     )
     assert split_pdf_pages(df).count() == 0
+
+
+def test_page_split_drops_tokens_at_non_finite_coordinates(spark):
+    """A token placed at y = inf (``1e999``) or at NaN (inf - inf) gives the
+    page no line to put it on. The page keeps its other text, as
+    ``extract_turn`` does, and the task does not die."""
+    data = pdfparse.build_pdf(
+        [[
+            ("text", 40, 760, 10, "Work Order No. : 22809891"),
+            ("text", 40, 70000, 10, "AT INF"),
+            ("textTd", 0, -70000, 10, "AT NAN"),
+        ]]
+    )
+    data = data.replace(b" 70000 Tm", b" 1e999 Tm").replace(b" -70000 Td", b" -1e999 Td")
+    ys = [t[2] for t in pdfparse.parse_pdf(data)[0]["tokens"]]
+    assert ys[0] == 760 and math.isinf(ys[1]) and math.isnan(ys[2])
+    turn = _pdf_turn("c1", 0, data)
+    assert extract_turn(turn[3], "pdf_reader")["extracted_text"] == "Work Order No. : 22809891"
+    df = spark.createDataFrame(
+        pd.DataFrame([turn], columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"])
+    )
+    out = split_pdf_pages(df).toPandas()
+    assert list(out.page_text) == ["Work Order No. : 22809891"]
+    assert list(out.n_tokens) == [3]

@@ -231,3 +231,23 @@ def test_pipeline_extracts_from_xref_stream_payloads(spark):
     assert len(out) == 1
     assert out[0].matched is True
     assert "22809891" in out[0].extracted_text
+
+
+def test_each_object_stream_is_parsed_once(monkeypatch):
+    """The xref-stream reader parses an /ObjStm to resolve its type-2
+    entries; the page tree's expansion of the same stream reuses that
+    parse instead of inflating it again."""
+    import base64
+
+    from work_order_pdf_extractor_spark import fixtures
+
+    turns = fixtures.gen_transcripts("tiny")
+    payloads = (base64.b64decode(t) for t in turns.loc[turns.tool == "pdf_reader", "text"])
+    data = next(d for d in payloads if b"/Type /XRef" in d and b"/Type /ObjStm" in d)
+    calls = []
+    parse = P._parse_objstm
+    monkeypatch.setattr(
+        P, "_parse_objstm", lambda body, budget: calls.append(1) or parse(body, budget)
+    )
+    assert P.parse_pdf(data)[0]["tokens"]
+    assert len(calls) == data.count(b"/Type /ObjStm") >= 1

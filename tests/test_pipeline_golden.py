@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
+from work_order_pdf_extractor_spark.core import fields
 from work_order_pdf_extractor_spark.plans import pipeline
 
 COMPARE_COLS = [
@@ -75,16 +76,15 @@ def test_spans_equality(golden_pd, result_pd):
 def test_out_name_noequip_rule(result_pd):
     # rename-on-match only: the reference renames matched files and moves
     # unmatched ones under their original name (work_order_extractor.py
-    # :1769-1797) — unmatched rows must keep out_name null
+    # :1769-1797) — unmatched rows must keep out_name null. The Spark
+    # column must follow the one definition of the rule, fields.output_name.
     renamed = result_pd[result_pd.work_order_number.notna() & result_pd.matched]
     assert len(renamed) > 0
-    assert (
-        renamed.apply(
-            lambda r: r.out_name
-            == f"CS-{r.work_order_number}-{r.equipment_number or 'NoEquip'}.pdf",
-            axis=1,
-        )
-    ).all()
+    expected = [
+        fields.output_name(wo, eq)
+        for wo, eq in zip(renamed.work_order_number, renamed.equipment_number)
+    ]
+    assert list(renamed.out_name) == expected
     not_renamed = result_pd[
         result_pd.work_order_number.isna() | ~result_pd.matched
     ]

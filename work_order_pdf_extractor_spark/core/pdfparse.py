@@ -51,12 +51,15 @@ MAX_INFLATED_BYTES = 8 << 20
 
 class _InflateBudget:
     """What is left of one payload's :data:`MAX_INFLATED_BYTES`. One parse
-    makes one and passes it to every :func:`_stream_bytes` call."""
+    makes one and passes it to every :func:`_stream_bytes` call. It also
+    holds the payload's object streams parsed so far, keyed by body, so
+    each ``/ObjStm`` is inflated, and charged, once (:func:`_objstm`)."""
 
-    __slots__ = ("left",)
+    __slots__ = ("left", "objstms")
 
     def __init__(self) -> None:
         self.left = MAX_INFLATED_BYTES
+        self.objstms: dict[bytes, dict[int, bytes]] = {}
 
 
 # ---------------------------------------------------------------------------
@@ -386,10 +389,18 @@ def _parse_objstm(body: bytes, budget: _InflateBudget) -> dict[int, bytes]:
     return out
 
 
+def _objstm(body: bytes, budget: _InflateBudget) -> dict[int, bytes]:
+    """:func:`_parse_objstm` of ``body``, parsed once per payload."""
+    members = budget.objstms.get(body)
+    if members is None:
+        members = budget.objstms[body] = _parse_objstm(body, budget)
+    return members
+
+
 def _expand_objstm(body: bytes, objs: dict[int, bytes], budget: _InflateBudget) -> None:
     """Unpack an object stream into ``objs``. Objects already present
     (from a newer xref section) are not overwritten."""
-    for num, b in _parse_objstm(body, budget).items():
+    for num, b in _objstm(body, budget).items():
         objs.setdefault(num, b)
 
 
@@ -483,7 +494,7 @@ def _objects_via_xref_stream(
         if stm is None:
             raise PdfParseError(f"type-2 entry references missing ObjStm {sn}")
         if sn not in parsed_stms:
-            parsed_stms[sn] = _parse_objstm(stm, budget)
+            parsed_stms[sn] = _objstm(stm, budget)
         if num not in parsed_stms[sn]:
             raise PdfParseError(f"ObjStm {sn} does not contain object {num}")
         objs[num] = parsed_stms[sn][num]

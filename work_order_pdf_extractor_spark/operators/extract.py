@@ -13,6 +13,7 @@ SURVEY §4 O1).
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterator
 
 import pandas as pd
@@ -124,6 +125,12 @@ def split_pdf_pages(df: DataFrame) -> DataFrame:
     the fan-out JVM-side (UDTF-shaped per SURVEY §2.9)."""
     from ..core import textnorm
 
+    def page_text(tokens: list[tuple]) -> str:
+        # a token at an infinite or NaN coordinate has no line to sit on
+        # (and makes assemble_lines raise); extract_turn's crop drops it too
+        finite = [t for t in tokens if all(map(math.isfinite, t[1:]))]
+        return textnorm.join_lines(textnorm.assemble_lines(finite))
+
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             pages_col = []
@@ -131,10 +138,7 @@ def split_pdf_pages(df: DataFrame) -> DataFrame:
                 pages = parse_pdf_payload(text) if tool == "pdf_reader" else None
                 pages_col.append(
                     [
-                        (
-                            i + 1, p["width"], p["height"], len(p["tokens"]),
-                            textnorm.join_lines(textnorm.assemble_lines(p["tokens"])),
-                        )
+                        (i + 1, p["width"], p["height"], len(p["tokens"]), page_text(p["tokens"]))
                         for i, p in enumerate(pages or ())
                     ]
                 )

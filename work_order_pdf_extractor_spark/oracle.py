@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import pandas as pd
 
-from .core import fields as field_rules
 from .core.extractor import extract_turn
 from .core.textnorm import _JAVA_WS, normalize_key
 
@@ -71,14 +70,3 @@ def extract_goldens(
     golden["turn_idx"] = golden["turn_idx"].astype("int32")
     return golden.sort_values(["conv_id", "turn_idx"], ignore_index=True)
 
-
-def output_names(golden: pd.DataFrame) -> pd.Series:
-    """Derived disposition names: ``CS-{wo}-{equip|NoEquip}.pdf`` for
-    MATCHED rows only (the reference renames on match, moves unmatched
-    files under their original name, :1769-1797)."""
-    return golden.apply(
-        lambda r: field_rules.output_name(r.work_order_number, r.equipment_number)
-        if r.matched
-        else None,
-        axis=1,
-    )

@@ -1,14 +1,12 @@
 """Incremental corpus ingest — the composed nightly job a 100-TB corpus
 operator actually runs: new batch → Bloom prefilter → exact verify for
-the maybes only → near-dup check against the corpus → disposition, plus
-a bucket-committed, crash-resumable variant reusing the lineage layout.
+the maybes only → near-dup check against the corpus → disposition.
 
 This is the scale-grade twin of the reference's destructive-rename
 idempotence (``work_order_extractor.py:1769-1797``): there, a processed
 file is renamed away so a rerun skips it; here, a batch document's fate
 is decided against the standing corpus with no full-corpus join in the
-common path and committed per bucket so any crash resumes without
-reprocessing.
+common path.
 
 Every stage is a shared operator: the Bloom bitmap and probe
 (``membership.bloom_build`` / ``bloom_probe``) over the canonical
@@ -18,19 +16,17 @@ and the corpus as the right — the same shingle → band-bucket candidate
 join → overlap-verify kernels the in-corpus near-dup queries run. The
 only plan decision made here is that the exact verify joins ONLY the
 ``bloom_maybe`` minority against the corpus canon (no false negatives ⇒
-skipping definite-news is exact), and the bucket commit goes through
-``plans.lineage``.
+skipping definite-news is exact).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators import dedup
 from ..operators.common import canon_text
 from ..operators.membership import bloom_build, bloom_probe
-from .lineage import run_bucketed
 
 
 def incremental_ingest(
@@ -38,7 +34,6 @@ def incremental_ingest(
     batch: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    persisted_out: list | None = None,
 ) -> DataFrame:
     """Disposition of every batch document against the corpus:
     ``(id, bloom_maybe, disposition)`` with disposition in
@@ -47,12 +42,8 @@ def incremental_ingest(
     ``new``. Fully deterministic — the DuckDB oracle replays every stage
     including the Bloom false positives.
 
-    The near-dup stage persists its two shingle tables. Callers that run
-    this repeatedly — the streaming foreachBatch twin above all — must
-    pass ``persisted_out`` (a list the persisted DataFrames are appended
-    to) and unpersist them once the returned plan has been consumed;
-    otherwise each invocation leaves cached shingle blocks behind for the
-    life of the session (LRU eviction masks the leak, but it is one)."""
+    The near-dup stage persists its two shingle tables for the life of
+    the session; each registry query calls this once per run."""
     corp_canon = corpus.select(canon_text(text_col).alias("canon"))
     bat = batch.select(id_col, text_col, canon_text(text_col).alias("canon"))
 
@@ -79,13 +70,7 @@ def incremental_ingest(
         flagged.filter(~F.col("exact_dup")).select(id_col), id_col, "left_semi"
     ).select(id_col, text_col)
     near_ids = (
-        dedup._lsh_verified_pairs(
-            survivors,
-            corpus,
-            text_col=text_col,
-            id_col=id_col,
-            persisted_out=persisted_out,
-        )
+        dedup._lsh_verified_pairs(survivors, corpus, text_col=text_col, id_col=id_col)
         .select(F.col("doc1").alias(id_col))
         .distinct()
         .withColumn("near_dup", F.lit(True))
@@ -99,42 +84,3 @@ def incremental_ingest(
         .otherwise(F.lit("new"))
         .alias("disposition"),
     )
-
-
-def ingest_with_checkpoint(
-    spark: SparkSession,
-    corpus: DataFrame,
-    batch: DataFrame,
-    out_dir: str,
-    n_buckets: int = 16,
-    id_col: str = "doc_id",
-    run_id: str | None = None,
-) -> dict:
-    """Crash-resumable ingest commit through the bucket-commit protocol of
-    ``plans.lineage`` (:func:`~.lineage.run_bucketed`): batch docs hash into
-    ``n_buckets`` stable buckets; one job dispositions every
-    not-yet-committed bucket; each bucket directory is atomically renamed
-    into the final layout, then its lineage row is appended. A fully
-    committed output makes rerun a no-op — the batch is never
-    re-dispositioned (the scale-grade version of the reference's
-    destructive-rename skip)."""
-    persisted: list = []
-    try:
-        return run_bucketed(
-            spark,
-            batch,
-            F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(n_buckets)).cast("int"),
-            out_dir,
-            n_buckets,
-            run_id,
-            lambda todo: incremental_ingest(
-                corpus, todo, id_col=id_col, persisted_out=persisted
-            ),
-            # one disposition row per batch document, so the output count is
-            # the true input count. Duplicates are a disposition, not a
-            # failure: they get their own field, and n_failed stays an honest 0.
-            {"n_dups": F.sum(F.when(F.col("disposition") == "new", 0).otherwise(1))},
-        )
-    finally:
-        for df in persisted:
-            df.unpersist()

@@ -29,8 +29,8 @@ Here the same guarantee is data-engineering-grade:
   bucket's lineage row from the committed parquet (the only case that
   reads committed data) and appends it.
 
-:func:`run_bucketed` is the protocol itself, shared with
-``plans.ingest.ingest_with_checkpoint``.
+:func:`run_with_checkpoint` runs this protocol around the extraction plan
+(``plans.pipeline.run_pipeline``).
 """
 
 from __future__ import annotations
@@ -40,7 +40,6 @@ import os
 import re
 import shutil
 import uuid
-from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -103,12 +102,6 @@ def _lineage_buckets(out_dir: str) -> set[int]:
     return {int(m.group(1)) for m in names if m}
 
 
-def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    if not _lineage_buckets(out_dir):
-        return None
-    return spark.read.json(os.path.join(_lineage_dir(out_dir), "bucket-*.json"))
-
-
 def completed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
     """Buckets with a lineage file or a committed data directory (listings
     only, no Spark job; ``spark`` is kept for callers)."""
@@ -125,92 +118,26 @@ def _append_lineage_row(out_dir: str, row: dict) -> None:
     os.replace(tmp, path)  # atomic on POSIX
 
 
-def _lineage_rows(
-    run_id: str, rows: DataFrame, buckets: list[int], aggs: dict
-) -> dict[int, dict]:
+def _lineage_rows(run_id: str, rows: DataFrame, buckets: list[int]) -> dict[int, dict]:
     """One lineage row per bucket, its counts aggregated from ``rows`` (the
-    bucket's written output): ``rows_out`` plus ``aggs`` (field name →
-    aggregate column). Every output row is one input row, so ``rows_in``
-    is ``rows_out``; fields ``aggs`` leaves out are 0."""
+    bucket's written output). Every output row is one input row, so
+    ``rows_in`` is ``rows_out``."""
     stats = {
-        int(r["bucket"]): r.asDict()
+        int(r["bucket"]): (r["rows_out"], r["n_failed"], r["input_fingerprint"])
         for r in rows.groupBy("bucket")
         .agg(
             F.count(F.lit(1)).alias("rows_out"),
-            *[c.alias(k) for k, c in aggs.items()],
+            F.sum(F.when(F.col("status") != "ok", 1).otherwise(0)).alias("n_failed"),
+            F.expr("bit_xor(row_fp)").alias("input_fingerprint"),
         )
         .collect()
     }
     out = {}
     for b in buckets:
-        s = {k: int(v or 0) for k, v in stats.get(b, {}).items()}
-        n = s.get("rows_out", 0)
-        out[b] = {"bucket": b, "rows_in": n, "rows_out": n, "n_failed": 0,
-                  "input_fingerprint": 0, **s, "run_id": run_id}
+        n, n_failed, fp = stats.get(b, (0, 0, 0))
+        out[b] = {"bucket": b, "rows_in": n, "rows_out": n, "n_failed": n_failed,
+                  "input_fingerprint": fp, "run_id": run_id}
     return out
-
-
-def run_bucketed(
-    spark: SparkSession,
-    rows: DataFrame,
-    bucket: F.Column,
-    out_dir: str,
-    n_buckets: int,
-    run_id: str | None,
-    plan: Callable[[DataFrame], DataFrame],
-    aggs: dict,
-) -> dict:
-    """Bucket-commit protocol: repair unrecorded buckets, then write
-    ``plan(rows of not-done buckets)`` to ``_tmp-<run_id>`` partitioned by
-    ``bucket``, read back per-bucket stats, rename each bucket directory
-    into ``data/`` and append its lineage row. ``plan`` is not called when
-    every bucket is already committed, so that rerun runs no Spark job.
-    Raises ``ValueError`` before any of that when ``out_dir`` was committed
-    with another ``n_buckets``."""
-    run_id = run_id or uuid.uuid4().hex[:12]
-    os.makedirs(out_dir, exist_ok=True)
-    _check_n_buckets(out_dir, n_buckets)
-    dd = _data_dir(out_dir)
-
-    # repair: record lineage for dirs present without rows (crash window)
-    unrecorded = sorted(_bucket_dirs(dd) - _lineage_buckets(out_dir))
-    if unrecorded:
-        committed = spark.read.option("basePath", dd).parquet(
-            *[os.path.join(dd, f"bucket={b}") for b in unrecorded]
-        )
-        for row in _lineage_rows(run_id, committed, unrecorded, aggs).values():
-            _append_lineage_row(out_dir, row)
-
-    done = completed_buckets(spark, out_dir)
-    done_now = 0
-    if not done.issuperset(range(n_buckets)):
-        # bucket ids are never NULL, so the negated isin (an InSet) equals
-        # the anti-join against the done set
-        todo = rows.where(~bucket.isin(sorted(done))) if done else rows
-        result = plan(todo).withColumn("bucket", bucket)
-        tmp_dir = os.path.join(out_dir, f"_tmp-{run_id}")
-        result.write.mode("overwrite").partitionBy("bucket").parquet(tmp_dir)
-        written = sorted(_bucket_dirs(tmp_dir))
-        if written:
-            # the schema is known, so the read-back infers nothing from footers
-            stats = spark.read.schema(result.schema).parquet(tmp_dir)
-            lineage_rows = _lineage_rows(run_id, stats, written, aggs)
-            os.makedirs(dd, exist_ok=True)
-            for b, row in lineage_rows.items():
-                final = os.path.join(dd, f"bucket={b}")
-                if os.path.exists(final):  # already committed by a racing/prior run
-                    continue
-                os.replace(os.path.join(tmp_dir, f"bucket={b}"), final)  # atomic rename first
-                _append_lineage_row(out_dir, row)
-                done_now += 1
-        shutil.rmtree(tmp_dir, ignore_errors=True)
-
-    return {
-        "run_id": run_id,
-        "buckets_total": len(completed_buckets(spark, out_dir)),
-        "buckets_skipped": len(done),
-        "buckets_done": done_now,
-    }
 
 
 def run_with_checkpoint(
@@ -222,37 +149,74 @@ def run_with_checkpoint(
     crop: tuple = DEFAULT_CROP,
     run_id: str | None = None,
 ) -> dict:
-    """Process all not-yet-committed buckets; returns a summary dict
-    ``{"run_id", "buckets_total", "buckets_skipped", "buckets_done",
-    "metrics"}``, ``metrics`` being this run's counters
-    (``files_processed``, ``successful``, ``failed``, ``matched``,
-    ``not_matched``). Safe to re-invoke after any crash; a fully committed
-    output is a no-op rerun (idempotency property test in the suite); a
-    rerun with another ``n_buckets`` raises ``ValueError``."""
-    obs: list[Observation] = []  # set only when the plan is built and run
+    """Process all not-yet-committed buckets: repair unrecorded buckets,
+    then write the extraction of every not-done bucket's rows to
+    ``_tmp-<run_id>`` partitioned by ``bucket``, read back per-bucket
+    stats, rename each bucket directory into ``data/`` and append its
+    lineage row.
 
-    def plan(todo: DataFrame) -> DataFrame:
-        obs.append(Observation())
-        # one job for every remaining bucket; salting happens inside run_pipeline
-        return run_pipeline(
-            todo, reference_orders, crop=crop, observation=obs[0]
-        ).withColumn(
-            # order-insensitive per-bucket input fingerprint (input-snapshot id)
-            "row_fp", F.xxhash64("conv_id", "turn_idx")
+    Returns a summary dict ``{"run_id", "buckets_total",
+    "buckets_skipped", "buckets_done", "metrics"}``, ``metrics`` being
+    this run's counters (``files_processed``, ``successful``, ``failed``,
+    ``matched``, ``not_matched``). Safe to re-invoke after any crash; a
+    fully committed output is a no-op rerun that runs no Spark job
+    (idempotency property test in the suite); a rerun with another
+    ``n_buckets`` raises ``ValueError`` before any of that."""
+    run_id = run_id or uuid.uuid4().hex[:12]
+    os.makedirs(out_dir, exist_ok=True)
+    _check_n_buckets(out_dir, n_buckets)
+    dd = _data_dir(out_dir)
+
+    # repair: record lineage for dirs present without rows (crash window)
+    unrecorded = sorted(_bucket_dirs(dd) - _lineage_buckets(out_dir))
+    if unrecorded:
+        committed = spark.read.option("basePath", dd).parquet(
+            *[os.path.join(dd, f"bucket={b}") for b in unrecorded]
         )
+        for row in _lineage_rows(run_id, committed, unrecorded).values():
+            _append_lineage_row(out_dir, row)
 
-    summary = run_bucketed(
-        spark, transcripts, bucket_col(n_buckets), out_dir, n_buckets, run_id,
-        plan,
-        {
-            "n_failed": F.sum(F.when(F.col("status") != "ok", 1).otherwise(0)),
-            "input_fingerprint": F.expr("bit_xor(row_fp)"),
-        },
-    )
-    counters = obs[0].get if obs else {}
-    # sums over zero rows are NULL: a run that processed nothing counted 0
-    summary["metrics"] = {k: int(counters.get(k) or 0) for k in _COUNTERS}
-    return summary
+    done = completed_buckets(spark, out_dir)
+    done_now = 0
+    counters = {}
+    if not done.issuperset(range(n_buckets)):
+        bucket = bucket_col(n_buckets)
+        # bucket ids are never NULL, so the negated isin (an InSet) equals
+        # the anti-join against the done set
+        todo = transcripts.where(~bucket.isin(sorted(done))) if done else transcripts
+        obs = Observation()
+        # one job for every remaining bucket; salting happens inside run_pipeline
+        result = (
+            run_pipeline(todo, reference_orders, crop=crop, observation=obs)
+            # order-insensitive per-bucket input fingerprint (input-snapshot id)
+            .withColumn("row_fp", F.xxhash64("conv_id", "turn_idx"))
+            .withColumn("bucket", bucket)
+        )
+        tmp_dir = os.path.join(out_dir, f"_tmp-{run_id}")
+        result.write.mode("overwrite").partitionBy("bucket").parquet(tmp_dir)
+        written = sorted(_bucket_dirs(tmp_dir))
+        if written:
+            # the schema is known, so the read-back infers nothing from footers
+            stats = spark.read.schema(result.schema).parquet(tmp_dir)
+            os.makedirs(dd, exist_ok=True)
+            for b, row in _lineage_rows(run_id, stats, written).items():
+                final = os.path.join(dd, f"bucket={b}")
+                if os.path.exists(final):  # already committed by a racing/prior run
+                    continue
+                os.replace(os.path.join(tmp_dir, f"bucket={b}"), final)  # atomic rename first
+                _append_lineage_row(out_dir, row)
+                done_now += 1
+        shutil.rmtree(tmp_dir, ignore_errors=True)
+        counters = obs.get
+
+    return {
+        "run_id": run_id,
+        "buckets_total": len(completed_buckets(spark, out_dir)),
+        "buckets_skipped": len(done),
+        "buckets_done": done_now,
+        # sums over zero rows are NULL: a run that processed nothing counted 0
+        "metrics": {k: int(counters.get(k) or 0) for k in _COUNTERS},
+    }
 
 
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -4196,9 +4196,8 @@ def q_incremental_ingest(spark, sf_dir):
     multiples of 10 arrive verbatim (exact dups when their base is in
     the corpus), the others carry one appended token (near dups of
     their base at 3-gram Jaccard (W-2)/(W-1)). The plan's persisted
-    shingle tables intentionally live for the session here (one harness
-    invocation per driver run); repeated callers pass persisted_out and
-    unpersist — see plans/ingest.py."""
+    shingle tables live for the session (one harness invocation per
+    driver run)."""
     from .plans import ingest
 
     docs = ld(spark, sf_dir, "documents")
@@ -4309,8 +4308,7 @@ def q_ingest_merge(spark, sf_dir):
     plans/bucketing.py); the Bloom rebuild is the same map-side-combined
     ``bit_or`` aggregate the prefilter uses. As with
     ``incremental_ingest``, the inner plan's persisted shingle tables
-    live for the session in this one-shot harness shape; repeated
-    callers pass persisted_out and unpersist."""
+    live for the session in this one-shot harness shape."""
     from .operators.common import canon_text
     from .operators.membership import K_DEFAULT, M_BITS_DEFAULT, bloom_build
     from .plans import ingest

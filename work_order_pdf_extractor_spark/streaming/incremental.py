@@ -16,8 +16,10 @@ rendition:
 - ``query.stop()`` = the reference's graceful stop flag (:1876-1882),
 - checkpointLocation = resume-where-you-left-off across restarts.
 
-Watermarks/event-time windows are intentionally absent: the ordering key is
-``(conv_id, turn_idx)``, not ``ts`` (SURVEY §2.8 table).
+This is the package's one streaming job (``main.py --incremental``), and
+``foreachBatch`` is its one sink. Watermarks, event-time windows and keyed
+streaming state are absent: the ordering key is ``(conv_id, turn_idx)``,
+not ``ts`` (SURVEY §2.8 table).
 """
 
 from __future__ import annotations
@@ -28,39 +30,6 @@ from pyspark.sql import functions as F
 from ..core.pdfparse import DEFAULT_CROP
 from ..plans.pipeline import run_pipeline
 from ..sources.transcripts import TRANSCRIPT_SCHEMA
-
-
-def _run_available_now(
-    spark: SparkSession,
-    schema,
-    input_dir: str,
-    checkpoint_dir: str,
-    max_files_per_batch: int | None,
-    sink,
-    plan=lambda stream: stream,
-):
-    """The one streaming harness: ``readStream`` of parquet arrivals in
-    ``input_dir`` with ``schema`` (at most ``max_files_per_batch`` files
-    per micro-batch when set) → ``plan`` → ``sink``, checkpointed in
-    ``checkpoint_dir``, run as ``trigger(availableNow=True)`` (process
-    the backlog, then stop) and awaited. ``sink`` is a foreachBatch
-    function ``(batch_df, batch_id)`` or a parquet output directory
-    (append mode). Returns the finished StreamingQuery."""
-    reader = spark.readStream.schema(schema).format("parquet")
-    if max_files_per_batch:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_batch)
-    w = plan(reader.load(input_dir)).writeStream
-    if callable(sink):
-        w = w.foreachBatch(sink)
-    else:
-        w = w.format("parquet").outputMode("append").option("path", sink)
-    q = (
-        w.option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
 
 
 def run_incremental(
@@ -98,53 +67,15 @@ def run_incremental(
             .parquet(out_dir)
         )
 
-    return _run_available_now(
-        spark, TRANSCRIPT_SCHEMA, input_dir, checkpoint_dir,
-        max_files_per_batch, process_batch,
+    reader = spark.readStream.schema(TRANSCRIPT_SCHEMA).format("parquet")
+    if max_files_per_batch:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_batch)
+    q = (
+        reader.load(input_dir)
+        .writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-
-
-DOC_SCHEMA = "doc_id bigint, text string"
-
-
-def run_stream_ingest(
-    spark: SparkSession,
-    corpus: DataFrame,
-    input_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    max_files_per_batch: int | None = None,
-):
-    """Streaming twin of ``plans.ingest.incremental_ingest``: document
-    batches arriving as parquet files are dispositioned against the
-    standing corpus per micro-batch (Bloom prefilter → exact verify for
-    maybes → near-dup check), with the same exactly-once sink discipline
-    as :func:`run_incremental` — each batch dynamically overwrites its
-    own ``batch_id`` partition, so a foreachBatch replay rewrites
-    identical rows instead of appending duplicates. This is the
-    continuous deployment shape of the nightly ingest job."""
-    from ..plans.ingest import incremental_ingest
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # collect the plan's persisted shingle tables and release them
-        # after the batch write — a long-lived stream must not accumulate
-        # one pair of cached DataFrames per micro-batch
-        persisted: list = []
-        result = incremental_ingest(
-            corpus, batch_df, persisted_out=persisted
-        ).withColumn("batch_id", F.lit(batch_id))
-        try:
-            (
-                result.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(out_dir)
-            )
-        finally:
-            for df in persisted:
-                df.unpersist()
-
-    return _run_available_now(
-        spark, DOC_SCHEMA, input_dir, checkpoint_dir,
-        max_files_per_batch, process_batch,
-    )
+    q.awaitTermination()
+    return q
